@@ -29,16 +29,6 @@ from pyspark.sql import functions as F
 
 from emdrive_spark.functions.ckpt import ckpt
 
-# tools A/B switch (interleaved same-session arms, the _SHJ_HINTS
-# precedent): True makes every spread() a no-op so a spread site can
-# be measured against its absence without a separate JVM.
-DISABLED = False
-
-# tools A/B switch for pin(): True degrades every pin() to a plain
-# ckpt() — the pre-r12 loop shape — so the layout pin can be measured
-# interleaved in one JVM.
-PIN_DISABLED = False
-
 
 def pin(df: DataFrame, *cols: str) -> DataFrame:
     """Hash-partition ``df`` on ``cols`` and persist it — the
@@ -59,7 +49,7 @@ def pin(df: DataFrame, *cols: str) -> DataFrame:
     a layout pin, NOT a cross-run cache: ``release()`` between
     reps/queries drops both the blocks and the cache registration, so
     every bench rep recomputes from the parquet inputs."""
-    if PIN_DISABLED or not cols:
+    if not cols:
         return ckpt(df)
     n = df.sparkSession.sparkContext.defaultParallelism
     out = df.repartition(n, *[F.col(c) for c in cols]).persist(
@@ -81,8 +71,6 @@ def spread(df: DataFrame, *cols: str) -> DataFrame:
     (``defaultParallelism``), optionally keyed on ``cols`` so a
     downstream key-shuffle can reuse the layout. Call it on the narrow
     pre-amplification frame, never on exploded/widened data."""
-    if DISABLED:
-        return df
     n = df.sparkSession.sparkContext.defaultParallelism
     if cols:
         return df.repartition(n, *[F.col(c) for c in cols])

@@ -906,10 +906,6 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ranks.select(F.col("node").alias("part_id"), F.col("rank").alias("pagerank"))
 
 
-_EDGES_VIA_JOIN = False  # tools A/B switch: True = the pre-r12 self-join build
-_HITS_UNPARTITIONED = False  # tools A/B switch: True = pre-r12 single-layout HITS
-
-
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared both-direction co-purchase edge list (src, dst),
     distinct, used by pagerank / triangles / kcore / LPA / BFS.
@@ -926,18 +922,6 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the collect_set buffer is flat — the same boundedness argument
     as dedup's _bucket_pairs, which measured 2.1x for the same shape
     swap on its key space."""
-    if _EDGES_VIA_JOIN:
-        li = (
-            load(spark, sf_dir, "lineitem")
-            .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
-            .distinct()
-        )
-        a, b = li.alias("a"), li.alias("b")
-        return (
-            a.join(b, (F.col("a.ok") == F.col("b.ok")) & (F.col("a.pk") != F.col("b.pk")))
-            .select(F.col("a.pk").alias("src"), F.col("b.pk").alias("dst"))
-            .distinct()
-        )
     baskets = (
         load(spark, sf_dir, "lineitem")
         .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
@@ -952,23 +936,7 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Which joins in the triangle machinery carry a SHUFFLE_HASH hint
-# (guide §3.1). Module-level so tools/ab_graph_hints.py can A/B hint
-# sets INTERLEAVED in one session (the ckpt_und precedent — this
-# host's co-tenant noise makes separate-JVM arms incomparable).
-# Shipped set: see the A/B notes inline below.
-_SHJ_HINTS: frozenset[str] = frozenset({"wedge", "closing"})
-
-# r12b A/B switch: True = adjacency-intersection triangle build (no
-# wedge materialization); False = the r12a wedge+closure SHJ build.
-_TRI_VIA_ADJ = True
-
-
-def _h(df: DataFrame, name: str) -> DataFrame:
-    return df.hint("shuffle_hash") if name in _SHJ_HINTS else df
-
-
-def _copurchase_triangles(spark: SparkSession, sf_dir: str, *, ckpt_und: bool = True):
+def _copurchase_triangles(spark: SparkSession, sf_dir: str):
     """Shared co-purchase triangle machinery: returns (und, deg, tri)
     where und is the both-direction edge list, deg the undirected
     degree table (checkpointed), and tri one row per triangle
@@ -983,53 +951,25 @@ def _copurchase_triangles(spark: SparkSession, sf_dir: str, *, ckpt_und: bool = 
     the deg ckpt, the oriented ckpt, and (for graph_edge_jaccard)
     the final action's canonical edge list — i.e. 2-3 full rebuilds
     of the most expensive shared frame. One materialization + block
-    reads is strictly less work at any scale; measured at sf0.1 in
-    tools/ab_ckpt_und.py (ckpt_und exists so the A/B stays
-    re-runnable)."""
-    und = _copurchase_edges(spark, sf_dir)
-    if ckpt_und:
-        und = ckpt(und)
+    reads is strictly less work at any scale; measured at sf0.1
+    (triangle 8.27 -> 6.02 s, edge_jaccard 8.72 -> 7.21 s; SCALING.md,
+    round-9 entry)."""
+    und = _copurchase_edges(spark, sf_dir).transform(ckpt)
     # Both directions are present, so out-degree here IS the undirected
     # degree, and deg's key set IS the node set.
     deg = und.groupBy("src").agg(F.count("*").alias("d")).transform(ckpt)
     ds = deg.select(F.col("src").alias("u_"), F.struct("d", "src").alias("ukey"))
     dd = deg.select(F.col("src").alias("v_"), F.struct("d", "src").alias("vkey"))
-    # Degree attach: the edge list (|E| rows) is the probe side, the
-    # degree table (|V| rows) the hinted SHUFFLE_HASH build side — the
-    # same big-probe/small-build asymmetry as the wedge joins below,
-    # and sort-merge would sort the edge list twice (once per attach).
+    # Degree attach: unhinted. A SHUFFLE_HASH hint on the |V|-row degree
+    # side measured slightly slower than leaving the strategy to the
+    # planner (OPTIMIZATION_r12.md, triangle machinery).
     oriented = (
-        und.join(_h(ds, "deg_attach"), und["src"] == ds["u_"])
-        .join(_h(dd, "deg_attach"), und["dst"] == dd["v_"])
+        und.join(ds, und["src"] == ds["u_"])
+        .join(dd, und["dst"] == dd["v_"])
         .filter(F.col("ukey") < F.col("vkey"))
         .select("src", "dst", "vkey")
         .transform(ckpt)
     )
-    if not _TRI_VIA_ADJ:
-        w1, w2 = oriented.alias("w1"), oriented.alias("w2")
-        # Pre-r12b arm (tools A/B): wedge self-join + closure join, both
-        # hinted SHUFFLE_HASH (guide §3.1 — the r12a change: sort-merge
-        # sorted the Sum outdeg^2 wedge stream, ~15M rows / ~390 MB at
-        # sf0.1, the fleet's largest exchange; SHJ builds the compact
-        # |E'| side and the wedges only probe. Measured
-        # graph_related_topk 9.24 -> 6.37 s, graph_triangle_count
-        # 5.97 -> 4.82 s; a session-wide AQE SMJ->SHJ conversion was
-        # rejected — it also converts the iterative family's small
-        # joins, 5-21% slower across all 7).
-        wedges = (
-            w1.join(_h(w2, "wedge"), F.col("w1.src") == F.col("w2.src"))
-            # strict < on the destination order key: each out-neighbor
-            # pair once, and the closing edge (if any) is oriented v->w
-            .filter(F.col("w1.vkey") < F.col("w2.vkey"))
-            .select(
-                F.col("w1.src").alias("tri_u"),
-                F.col("w1.dst").alias("v"),
-                F.col("w2.dst").alias("w"),
-            )
-        )
-        closing = oriented.select(F.col("src").alias("v"), F.col("dst").alias("w"))
-        tri = wedges.join(_h(closing, "closing"), ["v", "w"])
-        return und, deg, tri
     # r12b (guide §2.3 shuffle fewer bytes / §2.4 remove shuffles):
     # ADJACENCY INTERSECTION replaces the wedge machinery. The wedge
     # build materialized and SHUFFLED every open wedge (Sum outdeg^2
@@ -1102,18 +1042,16 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: edges are DEGREE-ORIENTED — each undirected edge
     points from its (degree, id)-smaller endpoint to the larger, the
     classic trick that bounds every out-degree by O(sqrt(m)) so the
-    wedge expansion is Sum outdeg^2 <= O(m^1.5) total work instead of
-    Sum deg^2, which a hub node would blow up. All three steps are
-    equality shuffles: wedges come from the oriented list self-joined
-    on its source, closure is an equi-join on the (v, w) endpoint
-    pair, and per-node counts are an explode + groupBy. No cartesian,
-    no driver state; the oriented list is localCheckpointed once and
-    reused by all three sides of the wedge/closure join. (A/B vs the
-    adjacency-array formulation — collect_list per source + in-row
-    array_intersect, the dedup_lsh_verified trick — measured parity
-    at sf0.1: 4.11 vs 3.91 s medians over 5 alternating reps; the
-    wedge join is kept for its flat per-row memory profile, no
-    collect_list buffers.) Orientation
+    enumeration is O(m^1.5) total work instead of Sum deg^2, which a
+    hub node would blow up. Every step is an equality shuffle: each
+    oriented edge attaches the out-neighbor lists of its two
+    endpoints (two shuffled-hash joins against the |V|-row adjacency
+    table), the triangles closing on that edge are the in-row
+    array_intersect of the two lists, and per-node counts are an
+    explode + groupBy. No cartesian, no driver state; the oriented
+    list and the adjacency table are localCheckpointed once (see
+    _copurchase_triangles; the wedge self-join this replaced shuffled
+    every open wedge — OPTIMIZATION_r12.md). Orientation
     compares (degree, id) STRUCTS, which Spark and any sane engine
     order lexicographically — no fragile packed-integer key, no id
     width assumption at 100 TB.
@@ -1354,18 +1292,18 @@ def graph_edge_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     du = deg.select(F.col("src").alias("u"), F.col("d").alias("du"))
     dv = deg.select(F.col("src").alias("v"), F.col("d").alias("dv"))
-    # Tail joins hinted SHUFFLE_HASH like the machinery above: canon
-    # and common are both edge-scale (sort-merge would sort each), and
-    # the degree attaches probe with the edge list against |V| builds.
+    # Tail joins unhinted: hinting them SHUFFLE_HASH measured slightly
+    # slower than the planner's own choice (OPTIMIZATION_r12.md,
+    # triangle machinery).
     joined = (
         canon.join(
-            _h(common, "jac_common"),
+            common,
             (canon["u"] == common["x"]) & (canon["v"] == common["y"]),
             "left",
         )
         .select("u", "v", F.coalesce("cnt", F.lit(0)).alias("cnt"))
-        .join(_h(du, "jac_deg"), "u")
-        .join(_h(dv, "jac_deg"), "v")
+        .join(du, "u")
+        .join(dv, "v")
     )
     return joined.select(
         "u",
@@ -1377,14 +1315,6 @@ def graph_edge_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _LPA_ROUNDS = 4  # synchronous rounds; communities stabilize by 3-4 on
 # the fixture (pytest pins round-3 == round-4 agreement rate)
-
-# tools A/B switch: True = eager per-round label checkpoint; False =
-# lazy (the whole loop fuses into the consumer's single action).
-# Measured (tools/ab_flag.py, interleaved): LPA neutral (5.42 vs
-# 5.43 s), modularity WORSE lazy (6.56 vs 5.80) — its three label
-# consumers replan the fused loop once per materialization boundary —
-# so eager stays.
-_LPA_EAGER_CKPT = True
 
 
 def _lpa_ctes() -> str:
@@ -1487,7 +1417,10 @@ def _lpa_edges_and_labels(spark: SparkSession, sf_dir: str):
             votes.groupBy("src")
             .agg(F.max(F.struct(F.col("c"), (-F.col("lbl")).alias("nl"))).alias("m"))
             .select(F.col("src").alias("node"), (-F.col("m.nl")).alias("lbl"))
-            .transform(ckpt, eager=_LPA_EAGER_CKPT)
+            # eager: a lazy per-round ckpt measured LPA-neutral (5.42 vs
+            # 5.43 s) but modularity slower (lazy 6.56 vs eager 5.80 s):
+            # its three label consumers replan the fused loop (CHANGES.md)
+            .transform(ckpt)
         )
     return edges, labels
 
@@ -1568,12 +1501,12 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .transform(ckpt)
     )
-    # r12 measured and REJECTED twice (tools/ab_pin.py): two layout
-    # pins (persist keeps partitioning, unlike the ckpt copies already
-    # rejected above) measured 2.98 -> 3.97 s wall / 8 -> 26 s cpu —
-    # the bipartite frame is small enough that its per-round exchange
-    # is cheaper than two columnar cache builds plus six cache scans.
-    sp_s = sp_p = sp
+    # r12 measured and REJECTED twice (OPTIMIZATION_r12.md, iterative
+    # loops): two layout pins (persist keeps partitioning, unlike the
+    # ckpt copies already rejected above) measured 2.98 -> 3.97 s wall /
+    # 8 -> 26 s cpu — the bipartite frame is small enough that its
+    # per-round exchange is cheaper than two columnar cache builds plus
+    # six cache scans.
     # r12 (guide §3.1, the LPA vote-join finding): unhinted, every
     # half-round's score join planned as a BroadcastHashJoin of the
     # |V|-sized hub/authority frame — 6 BroadcastExchange builds plus
@@ -1581,23 +1514,19 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exactly what a 100 TB graph cannot do. A SHUFFLE_HASH hint on
     # the score side makes every round a shuffled-hash join (edges
     # probe, scores build in O(|V|/partitions) per task) — strategy-
-    # stable instead of stats-dependent; interleaved A/B (tools/
-    # ab_hits_layout.py) measured 3.42 vs 3.83 s on quiet samples.
+    # stable instead of stats-dependent; an interleaved A/B measured
+    # 4.77 -> 4.18 s median (OPTIMIZATION_r12.md, graph_hits).
     # (Pre-partitioning the edge list per join key was tried and
     # rejected: localCheckpoint materializes to UnknownPartitioning,
     # so the layout is lost and the copies are pure overhead — see
     # plans/r12/graph_hits_round_join_after.txt Scan ExistingRDD.)
-    if _HITS_UNPARTITIONED:  # pre-r12 arm for tools/ab interleaving
-        hint = lambda df: df  # noqa: E731
-    else:
-        hint = lambda df: df.hint("shuffle_hash")  # noqa: E731
     hubs = sp.select("s").distinct().select(
         F.col("s").alias("node"), F.lit(_HITS_SCALE).cast("long").alias("h")
     )
     auths = None
     for _ in range(_HITS_ITERS):
         a_raw = (
-            sp_s.join(hint(hubs), sp_s["s"] == hubs["node"])
+            sp.join(hubs.hint("shuffle_hash"), sp["s"] == hubs["node"])
             .groupBy("p")
             .agg(F.sum("h").alias("a"))
             .transform(ckpt)  # |parts|-sized; truncates the round's lineage
@@ -1608,7 +1537,7 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(f"a DIV greatest({a_total} DIV {_HITS_SCALE}, 1)").alias("a"),
         )
         h_raw = (
-            sp_p.join(hint(auths), sp_p["p"] == auths["node"])
+            sp.join(auths.hint("shuffle_hash"), sp["p"] == auths["node"])
             .groupBy("s")
             .agg(F.sum("a").alias("h"))
             .transform(ckpt)  # |suppliers|-sized
@@ -2031,7 +1960,7 @@ def graph_related_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     triangle machinery's cost. The output is |V| x K rows — the
     precomputed serving table a product page reads by key. The scored
     edge frame is checkpointed before the both-direction union so
-    single execution of the wedge join is STRUCTURAL, not
+    single execution of the triangle build is STRUCTURAL, not
     AQE-exchange-reuse-dependent (r6 verdict item 4; A/B at sf0.1:
     14.3s ckpt vs 27.5s relying on reuse).
 

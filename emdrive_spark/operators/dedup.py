@@ -579,12 +579,12 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     member = band_members(corpus).transform(ckpt)
-    # r12 measured and REJECTED (tools/ab_pin.py): pinning member by
-    # doc_id + bkt (layout.pin) with shuffle_hash-hinted label sides
-    # ran 3.9 -> 4.3 s / cpu 31 -> 40 s — the per-round label frames
-    # here are small enough that AQE's broadcast already makes the
-    # member joins exchange-free, so the two columnar cache builds are
-    # pure overhead. Keep the ckpt shape.
+    # r12 measured and REJECTED (OPTIMIZATION_r12.md, iterative loops):
+    # pinning member by doc_id + bkt (layout.pin) with shuffle_hash-
+    # hinted label sides ran 3.9 -> 4.3 s / cpu 31 -> 40 s — the
+    # per-round label frames here are small enough that AQE's broadcast
+    # already makes the member joins exchange-free, so the two columnar
+    # cache builds are pure overhead. Keep the ckpt shape.
 
     labels = corpus.select("doc_id", F.col("doc_id").alias("component")).transform(ckpt)
     for _ in range(12):  # ceil(diameter/2) bound; dup clusters are shallow

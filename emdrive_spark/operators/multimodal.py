@@ -1295,12 +1295,6 @@ def mm_decode_resize_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# tools/ab_mm_spread.py sets this to True/False to FORCE the
-# pre-Python-stage spread() on every decode op, interleaved in one
-# session (the _SHJ_HINTS precedent); None = each op's own default.
-_SPREAD_DECODE: bool | None = None
-
-
 def _decode_phash_pipeline(
     spark: SparkSession,
     sf_dir: str,
@@ -1322,8 +1316,8 @@ def _decode_phash_pipeline(
     # file, i.e. the Python stage serializes onto one core. The shuffled
     # frame is the narrow (doc_id, text) projection — payload BYTES
     # still never shuffle; they are born inside the Python stage after
-    # the exchange. Per-op default (interleaved A/B at sf0.1,
-    # tools/ab_mm_spread.py, clean-steal samples): ON for
+    # the exchange. Per-op default (interleaved A/B at sf0.1, clean-steal
+    # samples; OPTIMIZATION_r12.md, image decode): ON for
     # palette/deep/resize (~1.3-1.5 ms/doc Python; 4.1->2.4 s,
     # 3.4->2.4 s, 4.1->2.4 s), OFF for ppm/8-bit-png (~0.3-0.7 ms/doc;
     # the exchange + 32-way fan-out costs more than it recovers, and
@@ -1331,7 +1325,7 @@ def _decode_phash_pipeline(
     # spread=True samples carry 2-15 s steal vs ~0 serial, so the cheap
     # decoders pay quota-throttling for parallelism they barely need).
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    if _SPREAD_DECODE if _SPREAD_DECODE is not None else spread_docs:
+    if spread_docs:
         docs = spread(docs)
 
     def hash_images(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -634,44 +634,6 @@ def embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # first N even vec_ids in vec_id order, so same data -> same codebooks.
 _PQ_TRAIN_CAP = 200_000
 
-# r13 (r12 verdict item 8): codebook constants enter the plan as single
-# array LITERALS (F.lit of nested Python lists — one Literal node each)
-# instead of F.expr-parsed "array(array(1.0D, ...))" strings. The two
-# ops were spending ~1 s/run of DRIVER time parsing + analyzing +
-# constant-folding ~3.5k-literal expression trees (16x64 coarse
-# centroids inlined twice, 8x16x8 residual books, 4x8x16 ADC tables) —
-# catalyst planning cost, not compute (OPTIMIZATION_r12.md's deferred
-# rationale). The surrounding transform/aggregate/zip_with lambdas are
-# built through the Python DSL, which constructs the IDENTICAL
-# expression nodes the SQL parser produced — same doubles (repr
-# round-trip == the float passed to lit), same fold order, same
-# first-match argmin — so results are byte-identical; the old arm is
-# kept below (_ann_pq_expr/_ann_ivf_pq_expr) under this flag and
-# tests/test_round13_opt.py pins exceptAll-equality of both arms.
-_PQ_VIA_LIT = True
-
-
-def _sq_dist_to(sub_col):
-    """Factory for the per-centroid squared-L2 lambda fed to
-    F.transform. A factory, NOT a defaulted two-arg lambda: F.transform
-    counts the lambda's parameters and would bind the array INDEX to a
-    second parameter (the documented F.transform gotcha)."""
-    return lambda c: F.aggregate(
-        F.zip_with(sub_col, c, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _dlit(vals) -> F.Column:
-    """1-D double-array constant as ONE Literal node."""
-    return F.lit([float(x) for x in vals])
-
-
-def _ddlit(rows) -> F.Column:
-    """2-D double-array constant as ONE Literal node."""
-    return F.lit([[float(x) for x in r] for r in rows])
-
 
 @register("ann_pq", oracle=None)  # approximate: PQ-compressed distances
 def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -703,85 +665,6 @@ def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     the one distributed scan an index build pays; serving reads 4-byte
     codes, so the working set is 64x smaller than the raw vectors and
     the exact rerank touches only the candidate ids."""
-    if not _PQ_VIA_LIT:
-        return _ann_pq_expr(spark, sf_dir)
-    import numpy as np
-
-    m, dsub, k_cent, n_cand, k = 8, 8, 16, 50, 10
-
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    sample = np.array(
-        emb.filter(F.col("vec_id") % 2 == 0)
-        .orderBy("vec_id")
-        .limit(_PQ_TRAIN_CAP)
-        .select("e")
-        .collect()
-    )[:, 0, :]
-    query = np.array(
-        emb.filter(F.col("vec_id") == 0).select("e").collect()[0][0]
-    )
-
-    def lloyd(pts: "np.ndarray") -> "np.ndarray":
-        # evenly-spaced deterministic seeding + 10 fixed iterations;
-        # an emptied cluster keeps its previous centroid
-        idx = np.linspace(0, len(pts) - 1, k_cent).astype(int)
-        cents = pts[idx].copy()
-        for _ in range(10):
-            d2 = ((pts[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-            assign = d2.argmin(axis=1)
-            for j in range(k_cent):
-                sel = pts[assign == j]
-                if len(sel):
-                    cents[j] = sel.mean(axis=0)
-        return cents
-
-    approx_terms = []
-    code_cols = []
-    for s in range(m):
-        cents = lloyd(sample[:, s * dsub : (s + 1) * dsub])
-        dists = F.transform(
-            _ddlit(cents), _sq_dist_to(F.slice("e", s * dsub + 1, dsub))
-        )
-        code = (
-            F.array_position(dists, F.array_min(dists)).cast("int").alias(f"c{s}")
-        )
-        code_cols.append(code)
-        adc = (
-            ((query[s * dsub : (s + 1) * dsub] - cents) ** 2).sum(axis=1)
-        )
-        # element_at is 1-based, matching array_position's 1-based code
-        approx_terms.append(F.element_at(_dlit(adc), F.col(f"c{s}")))
-
-    coded = emb.select("vec_id", "e", *code_cols)
-    approx = sum(approx_terms[1:], approx_terms[0])
-    cand = (
-        coded.select("vec_id", "e", approx.alias("pq_d2"))
-        .orderBy("pq_d2", "vec_id")
-        .limit(n_cand)
-    )
-    exact = F.aggregate(
-        F.zip_with("e", _dlit(query), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda a, v: a + v,
-    )
-    return (
-        cand.select(
-            "vec_id",
-            F.round("pq_d2", 6).alias("pq_d2"),
-            F.round(exact, 6).alias("l2_d2"),
-        )
-        .orderBy("l2_d2", "vec_id")
-        .limit(k)
-    )
-
-
-def _ann_pq_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The r12 arm of ann_pq: codebooks as F.expr-parsed literal
-    strings. Kept verbatim under ``_PQ_VIA_LIT = False`` so the
-    flag-arm equality test can pin that the Literal-node rewrite is
-    value-neutral; delete once a round's driver artifacts confirm."""
     import numpy as np
 
     m, dsub, k_cent, n_cand, k = 8, 8, 16, 50, 10
@@ -820,7 +703,10 @@ def _ann_pq_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
         cents = lloyd(sample[:, s * dsub : (s + 1) * dsub])
         # bare float literals parse as DECIMAL in Spark SQL — the D
         # suffix keeps every centroid/ADC constant a double so the
-        # distance folds never detour through decimal arithmetic
+        # distance folds never detour through decimal arithmetic.
+        # Strings, not F.lit(list): PySpark's lit expands a list into
+        # array(lit(x), ...), one py4j call per element, and measured
+        # 1.8-2.2x slower to build (OPTIMIZATION_r13.md).
         cent_lits = ", ".join(
             "array(" + ", ".join(f"{float(x)!r}D" for x in c) + ")" for c in cents
         )
@@ -894,108 +780,6 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     natural partition key for the persisted code table) and ADC reads
     4-byte codes — the working set per probe is nProbe/k_cells of a
     64x-compressed table."""
-    if not _PQ_VIA_LIT:
-        return _ann_ivf_pq_expr(spark, sf_dir)
-    import numpy as np
-
-    k_cells, n_probe, m, dsub, k_cent, n_cand, k = 16, 4, 8, 8, 16, 50, 10
-
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    sample = np.array(
-        emb.filter(F.col("vec_id") % 2 == 0)
-        .orderBy("vec_id")
-        .limit(_PQ_TRAIN_CAP)
-        .select("e")
-        .collect()
-    )[:, 0, :]
-    query = np.array(emb.filter(F.col("vec_id") == 0).select("e").collect()[0][0])
-
-    def lloyd(pts: "np.ndarray", n: int) -> "np.ndarray":
-        idx = np.linspace(0, len(pts) - 1, n).astype(int)
-        cents = pts[idx].copy()
-        for _ in range(10):
-            d2 = ((pts[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-            assign = d2.argmin(axis=1)
-            for j in range(n):
-                sel = pts[assign == j]
-                if len(sel):
-                    cents[j] = sel.mean(axis=0)
-        return cents
-
-    coarse = lloyd(sample, k_cells)
-    s_assign = ((sample[:, None, :] - coarse[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
-    residuals = sample - coarse[s_assign]
-    books = [lloyd(residuals[:, s * dsub : (s + 1) * dsub], k_cent) for s in range(m)]
-
-    coarse_lit = _ddlit(coarse)
-    # cell assignment: argmin L2 to the 16 coarse centroids (1-based)
-    cell_d = F.transform(coarse_lit, _sq_dist_to(F.col("e")))
-    assigned = emb.select(
-        "vec_id",
-        "e",
-        F.array_position(cell_d, F.array_min(cell_d)).cast("int").alias("cell"),
-    )
-    # residual = e - centroid[cell], then shared-codebook encode
-    res = F.zip_with(
-        "e", F.element_at(coarse_lit, F.col("cell")), lambda x, y: x - y
-    )
-    coded = assigned.select("vec_id", "e", "cell", res.alias("r"))
-    code_cols = []
-    for s in range(m):
-        dists = F.transform(
-            _ddlit(books[s]), _sq_dist_to(F.slice("r", s * dsub + 1, dsub))
-        )
-        code_cols.append(
-            F.array_position(dists, F.array_min(dists)).cast("int").alias(f"c{s}")
-        )
-    coded = coded.select("vec_id", "e", "cell", *code_cols)
-
-    # probe: the query's n_probe nearest cells, ADC tables per cell
-    qd = ((coarse - query) ** 2).sum(axis=1)
-    probe_cells = [int(i) + 1 for i in np.argsort(qd)[:n_probe]]  # 1-based
-    approx = None
-    for c1 in probe_cells:
-        qres = query - coarse[c1 - 1]
-        terms = []
-        for s in range(m):
-            adc = ((qres[s * dsub : (s + 1) * dsub] - books[s]) ** 2).sum(axis=1)
-            terms.append(F.element_at(_dlit(adc), F.col(f"c{s}")))
-        cell_sum = sum(terms[1:], terms[0])
-        approx = (
-            F.when(F.col("cell") == c1, cell_sum)
-            if approx is None
-            else approx.when(F.col("cell") == c1, cell_sum)
-        )
-    cand = (
-        coded.filter(F.col("cell").isin(probe_cells))
-        .select("vec_id", "e", "cell", approx.alias("pq_d2"))
-        .orderBy("pq_d2", "vec_id")
-        .limit(n_cand)
-    )
-    exact = F.aggregate(
-        F.zip_with("e", _dlit(query), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda a, v: a + v,
-    )
-    return (
-        cand.select(
-            "vec_id",
-            "cell",
-            F.round("pq_d2", 6).alias("pq_d2"),
-            F.round(exact, 6).alias("l2_d2"),
-        )
-        .orderBy("l2_d2", "vec_id")
-        .limit(k)
-    )
-
-
-def _ann_ivf_pq_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The r12 arm of ann_ivf_pq: centroids/books/ADC tables as
-    F.expr-parsed literal strings. Kept verbatim under
-    ``_PQ_VIA_LIT = False`` for the flag-arm equality test; delete once
-    a round's driver artifacts confirm."""
     import numpy as np
 
     k_cells, n_probe, m, dsub, k_cent, n_cand, k = 16, 4, 8, 8, 16, 50, 10

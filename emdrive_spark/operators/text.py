@@ -1093,11 +1093,6 @@ def text_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _BPE_ROUNDS = 6
 
-# tools A/B switch: True = eager per-round vocabulary checkpoint (two
-# driver jobs per round); False = lazy (blocks materialize inside the
-# next round's argmax job).
-_BPE_EAGER_CKPT = False
-
 
 def _bpe_merge_cte(i: int, src: str, extra_cols: str = "") -> str:
     """One merge-application CTE: apply round-i's chosen pair b{i} to
@@ -1199,7 +1194,7 @@ def _bpe_merge_word(w, l: str, r: str):
     per-round cost lives in the pair explode + aggregate, not this
     projection, and the r8 bench row that motivated it (3.57s) was
     ambient load: the same unchanged code's quiet median is ~2.0s
-    (tools/ab_bpe_prefilter.py; SCALING.md round-9 entry)."""
+    (SCALING.md round-9 entry)."""
     syms = F.filter(F.split(w, ";"), lambda s: F.length(s) > 0)
     folded = F.aggregate(
         syms,
@@ -1311,7 +1306,7 @@ def _bpe_train_loop(words: DataFrame):
             *carry,
             _bpe_merge_word(F.col("w"), best["l"], best["r"]).alias("w"),
             "freq",
-        ).transform(ckpt, eager=_BPE_EAGER_CKPT)
+        ).transform(ckpt, eager=False)
         # lazy ckpt (r12, guide §5 driver latency): still truncates
         # lineage so each round's plan stays one fold deep, but the
         # blocks materialize inside the NEXT round's argmax job instead

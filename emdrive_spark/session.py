@@ -88,32 +88,25 @@ def get_spark(app_name: str = _DEFAULT_APP, extra_conf: dict | None = None) -> S
         # classes per complex query, so any rotation of more than a
         # handful of queries evicts everything between a query's runs
         # and re-pays Janino compilation every time. Measured (r8,
-        # tools A/B, 6-query cold rotation at sf0.1): total 31.5 s at
+        # 6-query cold rotation at sf0.1; SCALING.md): total 31.5 s at
         # 100 entries vs 21.3 s at a large cache — a 32% session-level
         # win with identical plans. 2000 entries bounds the cache well
         # above the fleet's working set at single-digit-MB-per-class
         # worst-case cost; long-running production sessions (the 100 TB
-        # deployment shape) want exactly this. Env-overridable so
-        # cache-size effects can be bisected in a fresh JVM (static
-        # conf — it cannot change after session creation).
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "2000"),
-        )
-        # Shuffle/spill compression codec. Local default stays lz4: the
-        # r12 interleaved fresh-JVM A/B (tools/ab_codec.py) measured
-        # zstd 15-35% slower on the shuffle-heaviest ops at sf0.1
-        # (cleanest sample: graph_triangle_count 7.18 s vs the quiet
-        # lz4 record 5.32; graph_related_topk 8.06 vs 5.92) — on
+        # deployment shape) want exactly this. A measurement overrides
+        # this or any static conf through get_spark(extra_conf=...).
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
+        # Shuffle/spill compression codec lz4: an r12 interleaved
+        # fresh-JVM A/B (OPTIMIZATION_r12.md, "Not yet optimized")
+        # measured zstd 15-35% slower on the shuffle-heaviest ops at
+        # sf0.1 (cleanest sample: graph_triangle_count 7.18 s vs the
+        # quiet lz4 record 5.32; graph_related_topk 8.06 vs 5.92) — on
         # local[32] every shuffle byte moves through page cache, so
         # zstd's better ratio buys no transfer time and its extra CPU
         # is pure cost. On a real cluster shuffle crosses the NIC and
         # the ratio can win (guide §2.3: "no universal answer —
-        # measure"), hence env-overridable rather than hard-coded.
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),
-        )
+        # measure"); measure there with extra_conf.
+        .config("spark.io.compression.codec", "lz4")
         # Keep the UI off in headless runs.
         .config("spark.ui.enabled", "false")
         .config(

@@ -1,90 +1,18 @@
-"""Round-12 optimization pins: every structural rewrite must be
-value-neutral against its pre-r12 arm (the A/B switches stay in the
-code exactly so these equalities remain checkable), and the layout
-helpers must keep their contracts.
-
-The arms are compared with exceptAll BOTH directions (multiset
-equality — stricter than sorted-collect, catches duplicate-row
-drift)."""
+"""Round-12 optimization pins: the layout helpers must keep their
+contracts."""
 
 from __future__ import annotations
 
 import pytest
 
-from tests.conftest import SF_SMOKE
-
 from emdrive_spark.functions import layout
 from emdrive_spark.functions.ckpt import release
-from emdrive_spark.operators import analytics, text
-
-
-def _multiset_equal(a, b) -> bool:
-    return a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
 
 
 @pytest.fixture(autouse=True)
 def _clean_blocks(spark):
     yield
     release(spark)
-
-
-@pytest.mark.slow
-def test_pin_arm_value_neutral(spark):
-    """pin() vs the ckpt fallback produce identical rows for every
-    iterative op that uses the layout pin."""
-    from emdrive_spark.registry import queries
-
-    qs = queries()
-    for op in (
-        "graph_pagerank",
-        "graph_bfs_distance",
-        "graph_label_propagation",
-        "graph_modularity",
-    ):
-        try:
-            layout.PIN_DISABLED = True
-            old = qs[op](spark, SF_SMOKE)
-            layout.PIN_DISABLED = False
-            new = qs[op](spark, SF_SMOKE)
-            assert _multiset_equal(old, new), op
-        finally:
-            layout.PIN_DISABLED = False
-
-
-@pytest.mark.slow
-def test_triangle_adjacency_equals_wedge_build(spark):
-    """The r12b adjacency-intersection triangle frame is the identical
-    multiset to the wedge+closure build, for all three consumers."""
-    from emdrive_spark.registry import queries
-
-    qs = queries()
-    for op in ("graph_triangle_count", "graph_edge_jaccard", "graph_related_topk"):
-        try:
-            analytics._TRI_VIA_ADJ = False
-            old = qs[op](spark, SF_SMOKE)
-            analytics._TRI_VIA_ADJ = True
-            new = qs[op](spark, SF_SMOKE)
-            assert _multiset_equal(old, new), op
-        finally:
-            analytics._TRI_VIA_ADJ = True
-
-
-@pytest.mark.slow
-def test_bpe_lazy_ckpt_value_neutral(spark):
-    """Lazy per-round vocabulary checkpoints change job structure,
-    never the trained merges or the applied counts."""
-    from emdrive_spark.registry import queries
-
-    qs = queries()
-    for op in ("bpe_train_merges", "bpe_apply"):
-        try:
-            text._BPE_EAGER_CKPT = True
-            old = qs[op](spark, SF_SMOKE)
-            text._BPE_EAGER_CKPT = False
-            new = qs[op](spark, SF_SMOKE)
-            assert _multiset_equal(old, new), op
-        finally:
-            text._BPE_EAGER_CKPT = False
 
 
 def test_pin_reports_partitioning(spark):

@@ -184,46 +184,6 @@ def test_winnowing_oracle_rejects_mega_docs(spark, tmp_path):
         _docs_con(sf_dir).execute(spec.oracle).fetchall()
 
 
-# ------------------------------------------------ triangle-machinery ckpt
-
-
-def test_copurchase_triangles_ckpt_arm_is_value_neutral(spark):
-    """The round-9 perf change checkpoints the shared co-purchase edge
-    list before deg/oriented derive from it (2-3 rebuilds of a ~5s
-    frame saved per op at sf0.1 — tools/ab_ckpt_und.py). The knob must
-    stay value-neutral: both arms of every consumer produce identical
-    rows, so the A/B remains re-runnable and the ckpt can never become
-    load-bearing for correctness."""
-    import functools
-
-    from emdrive_spark.operators import analytics
-
-    shipped = analytics._copurchase_triangles
-    try:
-        results = {}
-        for arm in (True, False):
-            analytics._copurchase_triangles = functools.partial(
-                shipped, ckpt_und=arm
-            )
-            results[arm] = {
-                op: sorted(
-                    tuple(r)
-                    for r in getattr(analytics, op)(spark, SF_SMOKE).collect()
-                )
-                for op in (
-                    "graph_triangle_count",
-                    "graph_edge_jaccard",
-                    # third consumer of the shared machinery (r9 ADVICE:
-                    # it was covered only by the re-runnable tool probe)
-                    "graph_related_topk",
-                )
-            }
-        assert results[True] == results[False]
-        assert len(results[True]["graph_triangle_count"]) > 0
-    finally:
-        analytics._copurchase_triangles = shipped
-
-
 # ------------------------------------------------ pack on the BPE budget
 
 
