@@ -1197,7 +1197,8 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         # bit-for-bit while the fixpoint tail (rounds 6-8 on the
         # fixtures) costs one count over already-ckpt'd blocks instead
         # of two semi-joins + an aggregate + a checkpoint per round.
-        # Value-neutrality pinned in tests/test_round9_ops.py.
+        # Value-neutrality pinned by the graph_kcore oracle compare
+        # (tests/test_registry_oracle.py) and tests/test_graph.py.
         n = alive.count()
         if n == prev_n:
             break

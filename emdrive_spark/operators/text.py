@@ -251,18 +251,6 @@ def text_token_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
 _N_HASHES = 8
 
 
-def minhash_sig(sh, j: int):
-    """min over shingles of md5(f"{j}:" || shingle). NB: the lambda must
-    be single-arg — a two-arg lambda (e.g. the `j=j` default-capture
-    idiom) makes F.transform bind the array *index* column to the second
-    parameter, silently corrupting the prefix."""
-
-    def _hash(s):
-        return F.md5(F.concat(F.lit(f"{j}:"), s))
-
-    return F.array_min(F.transform(sh, _hash))
-
-
 def minhash_lane_sql(j: int) -> str:
     """DuckDB twin of lane j of minhash_sig_array: 8 hex chars carved
     out of the salt-(j//4) md5. Shared by every oracle that checks a
@@ -1004,7 +992,7 @@ def _winnow_ctes() -> str:
     CASE, so on an oversized doc BOTH sides raise instead of the
     oracle silently packing corrupted gk*2^20+pos fingerprints while
     the engine rejects (r8 ADVICE — the two sides now agree on the
-    invalid-input contract, pinned in tests/test_round9_ops.py). The
+    invalid-input contract, pinned in tests/test_text.py). The
     check sits in the per-DOC toks CTE, not the per-gram projection —
     one length test per document, same cost shape as the engine's
     guard (per-gram placement made the pin test pay ~2^20 O(n) array

@@ -77,11 +77,3 @@ def staging_dir(spark: SparkSession, *parts: str) -> str:
         _STAGING_CLEANUP_REGISTERED.add(root)
         atexit.register(shutil.rmtree, root, True)
     return os.path.join(root, *parts)
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register all tables as temp views so spark.sql() queries resolve,
-    mirroring the reference's system catalog bootstrap
-    (/root/reference/src/executor/mod.rs:64-71)."""
-    for name in TABLES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -1,15 +1,29 @@
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# The checkout this suite lives in: a copy of the repo must test its own
+# engine, not whichever checkout happens to sit at a fixed path.
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-from emdrive_spark.session import get_spark
+from emdrive_spark.engine import Engine  # noqa: E402
+from emdrive_spark.session import get_spark  # noqa: E402
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
+
+# A three-column table with a METRIC KEY, for the alias and catalog tests.
+CREATE_RT5 = """
+CREATE TABLE rt5 (
+    hash UINT8 METRIC KEY USING mtree(hamming),
+    url STRING(2048) PRIMARY KEY,
+    width UINT32
+)
+"""
 
 
 @pytest.fixture(scope="session")
@@ -17,3 +31,38 @@ def spark():
     s = get_spark("emdrive-tests")
     yield s
     s.stop()
+
+
+@pytest.fixture()
+def engine(spark):
+    return Engine(spark)
+
+
+def _rows(df):
+    """A DataFrame's rows as sorted tuples, for order-free equality."""
+    return sorted(tuple(r) for r in df.collect())
+
+
+def check_oracles(spark, tmp_path, tables, names):
+    """Write each pandas frame of ``tables`` as ``<table>.parquet`` under
+    ``tmp_path`` and require every registered op in ``names`` to match
+    its DuckDB oracle over that corpus. Returns the ops' outputs."""
+    import duckdb
+
+    import tools.verify_local as vl
+    from emdrive_spark import registry
+
+    con = duckdb.connect()
+    for table, pdf in tables.items():
+        path = tmp_path / f"{table}.parquet"
+        pdf.to_parquet(path)
+        con.execute(f"CREATE VIEW {table} AS SELECT * FROM '{path}'")
+    registry.load_all()
+    out = {}
+    for name in names:
+        spec = registry.REGISTRY[name]
+        sdf = spec.fn(spark, str(tmp_path)).toPandas()
+        odf = con.execute(spec.oracle).fetchdf()
+        assert not vl.compare(name, sdf, odf), (name, sdf, odf)
+        out[name] = sdf
+    return out

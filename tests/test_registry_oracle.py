@@ -10,12 +10,9 @@ import pytest
 from emdrive_spark import registry
 from emdrive_spark.sources.tables import TABLES, table_path
 
+from tools.verify_local import compare
+
 from .conftest import SF_SMOKE
-
-import sys
-
-sys.path.insert(0, "/root/repo")
-from tools.verify_local import compare  # noqa: E402
 
 registry.load_all()
 
@@ -64,7 +61,6 @@ def test_query_matches_oracle(spark, oracle_con, name):
 
 
 def test_entry_smoke(spark):
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as e
 
     df = e.entry(spark)
