@@ -18,7 +18,7 @@ When set, checkpoints go through ``DataFrame.checkpoint()`` against
 ``spark.graft.checkpointDir`` to choose it; defaults to a local tmp
 dir, which is only sensible for single-node runs). Results are
 identical either way — the flag changes WHERE blocks live, never what
-they contain (pinned by tests/test_layout.py equality tests).
+they contain (pinned by tests/test_round6_fixes.py equality tests).
 """
 
 from __future__ import annotations

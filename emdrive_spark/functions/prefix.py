@@ -42,7 +42,7 @@ def global_prefix_sum(
     than degrading it); on a preemption-heavy cluster set
     ``spark.graft.reliableCheckpoint=true`` and the same call routes
     through a reliable checkpoint dir (functions/ckpt.py, r5 verdict
-    item 4 — tested equal in tests/test_layout.py)."""
+    item 4 — tested equal in tests/test_round6_fixes.py)."""
     nparts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     part = (
         # No sortWithinPartitions here (r4 review): the window below

@@ -1198,7 +1198,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         # fixtures) costs one count over already-ckpt'd blocks instead
         # of two semi-joins + an aggregate + a checkpoint per round.
         # Value-neutrality pinned by the graph_kcore oracle compare
-        # (tests/test_registry_oracle.py) and tests/test_graph.py.
+        # (tests/test_registry_oracle.py) and tests/test_round5_fixes.py.
         n = alive.count()
         if n == prev_n:
             break

@@ -533,7 +533,7 @@ def embedding_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly zero and the 'diversified' ranking degenerates to vec_id
     order (r4 review). Not SQL-expressible (each step's argmax depends
     on the selected set), so rows-only; determinism + containment +
-    diversification are pinned in tests/test_similarity.py."""
+    diversification are pinned in tests/test_round3_fixes.py."""
     k, pool, lam = 10, 50, 0.5
     scored = _with_query_vector(spark, sf_dir).select(
         "vec_id",
@@ -654,7 +654,7 @@ def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec_id) with evenly-spaced deterministic seeding and fixed Lloyd
     iterations, then enter the plan as literals — per-row encode and
     ADC sums are fixed-order folds. No oracle because the codebook
-    cannot be re-derived in SQL; tests/test_similarity.py pins
+    cannot be re-derived in SQL; tests/test_round5_fixes.py pins
     recall@10 vs the exact top-10 instead (the ann_recall pattern).
 
     100 TB shape: training touches a bounded sample — a CONSTANT cap

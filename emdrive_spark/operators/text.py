@@ -992,7 +992,7 @@ def _winnow_ctes() -> str:
     CASE, so on an oversized doc BOTH sides raise instead of the
     oracle silently packing corrupted gk*2^20+pos fingerprints while
     the engine rejects (r8 ADVICE — the two sides now agree on the
-    invalid-input contract, pinned in tests/test_text.py). The
+    invalid-input contract, pinned in tests/test_round9_ops.py). The
     check sits in the per-DOC toks CTE, not the per-gram projection —
     one length test per document, same cost shape as the engine's
     guard (per-gram placement made the pin test pay ~2^20 O(n) array

@@ -16,15 +16,6 @@ from emdrive_spark.session import get_spark  # noqa: E402
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 
-# A three-column table with a METRIC KEY, for the alias and catalog tests.
-CREATE_RT5 = """
-CREATE TABLE rt5 (
-    hash UINT8 METRIC KEY USING mtree(hamming),
-    url STRING(2048) PRIMARY KEY,
-    width UINT32
-)
-"""
-
 
 @pytest.fixture(scope="session")
 def spark():
@@ -43,26 +34,18 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def check_oracles(spark, tmp_path, tables, names):
-    """Write each pandas frame of ``tables`` as ``<table>.parquet`` under
-    ``tmp_path`` and require every registered op in ``names`` to match
-    its DuckDB oracle over that corpus. Returns the ops' outputs."""
-    import duckdb
+def _write_documents(spark, path: str, texts: list[str]) -> None:
+    """A one-file ``documents`` table holding ``texts``, at ``path``."""
+    spark.createDataFrame(
+        [(i, t, "en", "synthetic", len(t)) for i, t in enumerate(texts)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    ).coalesce(1).write.mode("overwrite").parquet(path)
 
-    import tools.verify_local as vl
-    from emdrive_spark import registry
 
-    con = duckdb.connect()
-    for table, pdf in tables.items():
-        path = tmp_path / f"{table}.parquet"
-        pdf.to_parquet(path)
-        con.execute(f"CREATE VIEW {table} AS SELECT * FROM '{path}'")
-    registry.load_all()
-    out = {}
-    for name in names:
-        spec = registry.REGISTRY[name]
-        sdf = spec.fn(spark, str(tmp_path)).toPandas()
-        odf = con.execute(spec.oracle).fetchdf()
-        assert not vl.compare(name, sdf, odf), (name, sdf, odf)
-        out[name] = sdf
-    return out
+@pytest.fixture
+def reliable_ckpt(spark, tmp_path):
+    """Flip the session into reliable-checkpoint mode for one test."""
+    spark.conf.set("spark.graft.reliableCheckpoint", "true")
+    spark.conf.set("spark.graft.checkpointDir", str(tmp_path / "ckpt"))
+    yield spark
+    spark.conf.set("spark.graft.reliableCheckpoint", "false")

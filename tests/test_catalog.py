@@ -1,139 +1,21 @@
-"""The catalog: durable save/restore (the atomic directory swap and its
-crash windows, incremental saves, re-pointing live entries at the
-snapshot just written), the INSERT path (the known-empty fast path,
-lineage truncation, the write lock) and the typed rejection of values
-the storage type cannot hold."""
+"""The catalog's durable save/restore: the crash windows of save()'s
+atomic directory swap, a table left under ``<table>__old`` and a stale
+``<table>__tmp``."""
 
 from __future__ import annotations
 
 import os
 
-import pytest
-
 from emdrive_spark.engine import Engine
-from emdrive_spark.sql.errors import EmdriveValidationError
 
-from .conftest import CREATE_RT5
-
-
-# -- save / restore ------------------------------------------------------------
-
-
-def test_restore_insert_save_select_insert(spark, tmp_path):
-    """The r4 advisor's medium finding: a restored table's entry.df
-    scans the saved part-files, so the next save()'s atomic swap
-    deleted the very files that lineage references — every later
-    action on the table (SELECT, or the PK semi-join of the next
-    INSERT) threw FileNotFoundException until restart. save() now
-    re-points each entry at the snapshot it just wrote."""
-    root = str(tmp_path / "cat")
-    a = Engine(spark)
-    a.execute(CREATE_RT5)
-    a.execute("INSERT INTO rt5 (hash, url, width) VALUES (5, 'u1', 100)")
-    a.catalog.save(root)
-
-    b = Engine(spark)
-    assert b.catalog.restore(root) == 1
-    b.execute("INSERT INTO rt5 (hash, url, width) VALUES (9, 'u2', 300)")
-    b.catalog.save(root)  # pre-fix: deletes files b's lineage still reads
-    rows = b.execute("SELECT url, width FROM rt5 WHERE hash = 9").collect()
-    assert [(r["url"], r["width"]) for r in rows] == [("u2", 300)]
-    # the PK-uniqueness semi-join reads the table too — must not 500
-    b.execute("INSERT INTO rt5 (hash, url, width) VALUES (7, 'u3', 1)")
-    b.catalog.save(root)
-    assert b.execute("SELECT url FROM rt5").count() == 3
-
-    # and a second restore sees everything the saves persisted
-    c = Engine(spark)
-    c.catalog.restore(root)
-    assert c.execute("SELECT url FROM rt5").count() == 3
-
-
-def test_save_while_never_restored_still_queryable(engine, tmp_path):
-    """Same swap path for an in-memory (never restored) catalog: two
-    consecutive saves must not invalidate the live entry either."""
-    root = str(tmp_path / "cat2")
-    engine.execute(CREATE_RT5)
-    engine.execute("INSERT INTO rt5 (hash, url, width) VALUES (5, 'u1', 100)")
-    engine.catalog.save(root)
-    engine.catalog.save(root)  # second swap: reads snapshot 1, writes snapshot 2
-    assert engine.execute("SELECT url FROM rt5").count() == 1
-
-
-def test_incremental_save_skips_clean_tables(spark, tmp_path):
-    """save() rewrites only tables mutated since the last save to the
-    same root — per-statement durability is O(changed table), not
-    O(catalog). A different root forces a full pass."""
-    root = str(tmp_path / "cat3")
-    e = Engine(spark)
-    e.execute(CREATE_RT5)
-    e.execute(CREATE_RT5.replace("rt5", "rt5b"))
-    e.execute("INSERT INTO rt5 (hash, url, width) VALUES (5, 'u1', 100)")
-    e.execute("INSERT INTO rt5b (hash, url, width) VALUES (5, 'v1', 100)")
-    e.catalog.save(root)
-
-    def snapshot_files(tbl):
-        d = os.path.join(root, "main", tbl)
-        return sorted(os.path.join(d, f) for f in os.listdir(d) if f.startswith("part-"))
-
-    b_before = snapshot_files("rt5b")
-    e.execute("INSERT INTO rt5 (hash, url, width) VALUES (9, 'u2', 300)")
-    e.catalog.save(root)
-    # rt5b untouched -> identical part-files survive the save
-    assert snapshot_files("rt5b") == b_before
-    # rt5 was rewritten and the saved state is complete
-    f = Engine(spark)
-    f.catalog.restore(root)
-    assert f.execute("SELECT url FROM rt5").count() == 2
-    assert f.execute("SELECT url FROM rt5b").count() == 1
-
-    # a NEW root gets a full pass: both tables land there
-    root2 = str(tmp_path / "cat4")
-    e.catalog.save(root2)
-    g = Engine(spark)
-    g.catalog.restore(root2)
-    assert g.execute("SELECT url FROM rt5").count() == 2
-    assert g.execute("SELECT url FROM rt5b").count() == 1
-
-
-def test_failed_save_to_second_root_does_not_poison_first(spark, tmp_path, monkeypatch):
-    """Round-5 review (top finding): save(A); INSERT; save(B) clears
-    the dirty flag then dies on a later table; save(A) must NOT trust
-    the flag and skip the rewrite — that would publish a _catalog.json
-    at A whose snapshot misses the acknowledged INSERT. The skip now
-    keys on the per-entry saved_root, so the interrupted save(B) leaves
-    the entry pointing at B and save(A) rewrites it."""
-    root_a = str(tmp_path / "rootA")
-    root_b = str(tmp_path / "rootB")
-    e = Engine(spark)
-    e.execute(CREATE_RT5)
-    e.execute(CREATE_RT5.replace("rt5", "rt5z"))
-    e.execute("INSERT INTO rt5 (hash, url, width) VALUES (5, 'u1', 100)")
-    e.execute("INSERT INTO rt5z (hash, url, width) VALUES (5, 'z1', 100)")
-    e.catalog.save(root_a)
-    e.execute("INSERT INTO rt5 (hash, url, width) VALUES (9, 'u2', 300)")
-
-    # save(B): let rt5 write cleanly, then blow up on rt5z's write by
-    # making the metadata serialization of its entry fail mid-loop.
-    import emdrive_spark.catalog as cat
-
-    real_meta = cat._entry_meta
-
-    def exploding_meta(entry):
-        if entry.name == "rt5z":
-            raise RuntimeError("disk full (simulated)")
-        return real_meta(entry)
-
-    monkeypatch.setattr(cat, "_entry_meta", exploding_meta)
-    with pytest.raises(RuntimeError):
-        e.catalog.save(root_b)
-    monkeypatch.setattr(cat, "_entry_meta", real_meta)
-
-    # rt5 is clean but saved at B; save(A) must rewrite it at A.
-    e.catalog.save(root_a)
-    f = Engine(spark)
-    f.catalog.restore(root_a)
-    assert f.execute("SELECT url FROM rt5").count() == 2  # both inserts
+# A three-column table with a METRIC KEY.
+CREATE_RT5 = """
+CREATE TABLE rt5 (
+    hash UINT8 METRIC KEY USING mtree(hamming),
+    url STRING(2048) PRIMARY KEY,
+    width UINT32
+)
+"""
 
 
 # -- crash windows of save()'s directory swap ----------------------------------
@@ -187,101 +69,3 @@ def test_stale_tmp_dir_does_not_leak_into_save_or_restore(engine, spark, tmp_pat
 
     _leave_stale_tmp(path)
     assert _urls(spark, root) == ["u1", "u2", "u3", "u4"]
-
-
-# -- the INSERT path -------------------------------------------------------------
-
-
-def test_insert_batch_is_local_relation(engine):
-    """A VALUES batch lands as an Arrow-backed LocalTableScan, not a
-    parallelized python RDD: the RDD form schedules defaultParallelism
-    near-empty python tasks per downstream stage (~0.4 s/action on
-    local[32] vs ~0.07 s — the difference is the whole statement-latency
-    budget). Plan-pinned so a createDataFrame regression can't sneak
-    the scheduler overhead back in."""
-    engine.execute(CREATE_RT5)
-    engine.execute("INSERT INTO rt5 (hash, url, width) VALUES (3, 'u1', 10)")
-    plan = (
-        engine.catalog.get("rt5")
-        .df._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Scan ExistingRDD" not in plan, plan
-
-
-def test_pk_clash_still_caught_after_fast_path(engine):
-    """known_empty skips the semi-join only while the table provably
-    has no rows — the second INSERT must still catch a duplicate PK."""
-    engine.execute(CREATE_RT5)
-    engine.execute("INSERT INTO rt5 (hash, url, width) VALUES (3, 'u1', 10)")
-    with pytest.raises(EmdriveValidationError, match="already exists"):
-        engine.execute("INSERT INTO rt5 (hash, url, width) VALUES (4, 'u1', 11)")
-
-
-def test_insert_lineage_truncates(engine):
-    """Ingest loops must not accrete an unbounded Union plan: after the
-    checkpoint threshold the table's plan is a materialized scan, and
-    every row is still present with PK enforcement intact."""
-    engine.execute("CREATE TABLE ingest_loop (id UINT32 PRIMARY KEY, v UINT32)")
-    for i in range(34):
-        engine.execute(f"INSERT INTO ingest_loop (id, v) VALUES ({i}, {i * 2})")
-    df = engine.catalog.get("ingest_loop").df
-    analyzed = df._jdf.queryExecution().analyzed().toString()
-    assert "LogicalRDD" in analyzed or "Union" not in analyzed
-    assert engine.execute("SELECT id FROM ingest_loop").count() == 34
-    with pytest.raises(EmdriveValidationError, match="PRIMARY KEY"):
-        engine.execute("INSERT INTO ingest_loop (id, v) VALUES (5, 0)")
-
-
-def test_concurrent_inserts_lose_nothing(engine):
-    """INSERT is read-modify-write on the table DataFrame; without the
-    catalog write lock, concurrent HTTP inserts would silently drop
-    rows (last writer wins). 8 threads x 4 single-row inserts with
-    distinct PKs must all land, and PK uniqueness must still hold."""
-    import threading
-
-    engine.execute("CREATE TABLE conc_ins (id UINT32 PRIMARY KEY)")
-    errors = []
-
-    def worker(base: int) -> None:
-        try:
-            for i in range(4):
-                engine.execute(f"INSERT INTO conc_ins (id) VALUES ({base * 100 + i})")
-        except Exception as exc:  # pragma: no cover - failure path
-            errors.append(exc)
-
-    threads = [threading.Thread(target=worker, args=(b,)) for b in range(8)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    assert not errors
-    assert engine.execute("SELECT id FROM conc_ins").count() == 32
-
-
-# -- values the storage type cannot hold -----------------------------------------
-
-
-def test_insert_bad_value_is_validation_error(engine):
-    """A type-mismatched INSERT value must surface as the 400 validation
-    taxonomy, not an untyped 500 (r4 review)."""
-    engine.execute("CREATE TABLE r4_badval (id UINT32 PRIMARY KEY, at TIMESTAMP)")
-    with pytest.raises(EmdriveValidationError, match="Invalid value"):
-        engine.execute(
-            "INSERT INTO r4_badval (id, at) VALUES (1, 'not-a-timestamp')"
-        )
-
-
-def test_uint_decimal_overflow_rejected_at_insert(engine):
-    """A UINT128 value above the DECIMAL(38,0) storage ceiling is a
-    typed validation error AT INSERT TIME. Before this check the row
-    was accepted (the known-empty fast path skips the PK semi-join that
-    used to trip over it) and every later statement on the table threw
-    a runtime decimal overflow."""
-    engine.execute("CREATE TABLE rtof (id UINT32 PRIMARY KEY, big UINT128)")
-    with pytest.raises(EmdriveValidationError, match="DECIMAL"):
-        engine.execute(f"INSERT INTO rtof (id, big) VALUES (1, {(1 << 128) - 1})")
-    # max storable value round-trips; the table stays healthy
-    engine.execute(f"INSERT INTO rtof (id, big) VALUES (1, {10**38 - 1})")
-    assert engine.execute("SELECT id FROM rtof").count() == 1

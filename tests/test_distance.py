@@ -54,37 +54,3 @@ def test_metric_registry():
         raise AssertionError("expected ValueError")
     except ValueError:
         pass
-
-
-def test_hamming_wide_matches_python_popcount(spark):
-    pairs = [
-        (0, 0),
-        (2**64 - 1, 0),
-        (2**63, 2**63 - 1),
-        ((1 << 63) | 12345, 54321),
-    ]
-    df = spark.createDataFrame(
-        [(str(a), str(b)) for a, b in pairs], "a string, b string"
-    ).select(
-        F.col("a").cast("decimal(38,0)").alias("a"),
-        F.col("b").cast("decimal(38,0)").alias("b"),
-    )
-    got = [r["d"] for r in df.select(D.hamming_wide("a", "b").alias("d")).collect()]
-    want = [bin(a ^ b).count("1") for a, b in pairs]
-    assert got == want
-
-
-def test_hamming_binary_matches_python_popcount(spark):
-    pairs = [
-        (0, 0),
-        ((1 << 128) - 1, 0),
-        ((1 << 127) | 12345, 54321),
-        ((1 << 100) | 3, (1 << 100) | 1),
-    ]
-    df = spark.createDataFrame(
-        [(a.to_bytes(16, "big"), b.to_bytes(16, "big")) for a, b in pairs],
-        "a binary, b binary",
-    )
-    got = [r["d"] for r in df.select(D.hamming_binary("a", "b").alias("d")).collect()]
-    want = [bin(a ^ b).count("1") for a, b in pairs]
-    assert got == want

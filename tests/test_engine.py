@@ -2,9 +2,7 @@
 (/root/reference/README.md:43-78) executed for real — CREATE TABLE,
 INSERT with defaults/ULID/NOW, metric-distance SELECT with alias
 filter — plus the semantic guarantees the reference declares
-(non-nullable default, PK uniqueness, STRING(n)), the read-only guard
-of the GET path, full-range unsigned and BINARY hashes, `@` against
-aliases, and the SQL-queryable system views."""
+(non-nullable default, PK uniqueness, STRING(n))."""
 
 from __future__ import annotations
 
@@ -12,9 +10,7 @@ import pytest
 
 from emdrive_spark.engine import Engine
 from emdrive_spark.functions.generators import ulid
-from emdrive_spark.sql.errors import EmdriveError, EmdriveSyntaxError, EmdriveValidationError
-
-from .conftest import CREATE_RT5, SF_SMOKE
+from emdrive_spark.sql.errors import EmdriveValidationError
 
 CREATE = """
 CREATE TABLE photos_seen (
@@ -165,6 +161,8 @@ def test_ansi_passthrough_join_and_cte(engine):
 
 
 def test_ansi_passthrough_rejects_mutations(engine):
+    from emdrive_spark.sql.errors import EmdriveSyntaxError
+
     engine.execute("CREATE TABLE tm (id UINT32 PRIMARY KEY)")
     # DROP isn't emdrive grammar and isn't a query form → syntax error,
     # NOT silently executed by Spark
@@ -214,6 +212,8 @@ def test_hll_sketch_estimates_track_exact(spark):
     group directly."""
     from emdrive_spark import registry
     from emdrive_spark.sources.tables import load
+
+    from .conftest import SF_SMOKE
 
     registry.load_all()
     est = {
@@ -272,6 +272,8 @@ def test_order_by_desc_and_limit_zero(engine):
 def test_percentile_approx_tracks_exact(spark):
     from emdrive_spark import registry
 
+    from .conftest import SF_SMOKE
+
     registry.load_all()
     approx = {
         r["l_returnflag"]: (r["p50_approx"], r["p95_approx"])
@@ -299,6 +301,8 @@ def test_pca_explained_variance_contract(spark):
     from emdrive_spark import registry
     from emdrive_spark.sources.tables import load
 
+    from .conftest import SF_SMOKE
+
     registry.load_all()
     out = registry.REGISTRY["embedding_pca"].fn(spark, SF_SMOKE)
     row = out.first()
@@ -311,294 +315,3 @@ def test_pca_explained_variance_contract(spark):
     ev = list(model.explainedVariance)
     assert all(a >= b for a, b in zip(ev, ev[1:])), ev
     assert sum(ev) <= 1.000001
-
-
-# -- read-only scripts (the GET path) ---------------------------------------
-
-
-def test_read_only_script_rejects_smuggled_mutation(engine):
-    engine.execute_script(
-        "CREATE TABLE ro_guard (id UINT32 PRIMARY KEY);"
-        "INSERT INTO ro_guard (id) VALUES (1)"
-    )
-    with pytest.raises(EmdriveValidationError, match="read-only"):
-        engine.execute_script(
-            "SELECT id FROM ro_guard; INSERT INTO ro_guard (id) VALUES (2)",
-            read_only=True,
-        )
-    # nothing ran: the mutation was rejected before the first statement
-    assert engine.execute("SELECT id FROM ro_guard").count() == 1
-
-
-def test_read_only_allows_ansi_query_forms(engine):
-    # WITH/VALUES are read-only query forms the GET path must accept
-    assert engine.execute_script(
-        "WITH t AS (SELECT 1 AS x) SELECT x FROM t", read_only=True
-    ).collect()[0]["x"] == 1
-    assert engine.execute_script("VALUES (1), (2)", read_only=True).count() == 2
-
-
-def test_read_only_script_rejects_with_insert(engine):
-    # Spark's grammar allows DML after a CTE, so the guard cannot trust
-    # the head keyword
-    engine.execute_script(
-        "CREATE TABLE ro3_guard (id UINT32 PRIMARY KEY);"
-        "INSERT INTO ro3_guard (id) VALUES (1)"
-    )
-    with pytest.raises(EmdriveValidationError, match="read-only"):
-        engine.execute_script(
-            "WITH q AS (SELECT 2 AS id) INSERT INTO ro3_guard SELECT * FROM q",
-            read_only=True,
-        )
-    assert engine.execute("SELECT id FROM ro3_guard").count() == 1
-
-
-def test_passthrough_rejects_with_insert_even_readwrite(engine):
-    # the POST path also refuses CTE-prefixed DML: mutations must go
-    # through the dialect layer so PK/nullability contracts hold
-    engine.execute_script("CREATE TABLE ro3_guard2 (id UINT32 PRIMARY KEY)")
-    with pytest.raises(EmdriveError):
-        engine.execute("WITH q AS (SELECT 2 AS id) INSERT INTO ro3_guard2 SELECT * FROM q")
-    assert engine.execute("SELECT id FROM ro3_guard2").count() == 0
-
-
-def test_explain_and_show_are_read_only_queries(engine):
-    engine.execute_script("CREATE TABLE exp_demo (id UINT32 PRIMARY KEY)")
-    plan_rows = engine.execute_script(
-        "EXPLAIN SELECT id FROM exp_demo", read_only=True
-    ).collect()
-    assert plan_rows and "plan" in plan_rows[0].asDict().popitem()[0].lower() or plan_rows
-    cols = engine.execute_script("DESCRIBE exp_demo", read_only=True).collect()
-    assert any(r[0] == "id" for r in cols)
-    assert engine.execute_script("SHOW TABLES", read_only=True) is not None
-
-
-def test_explain_insert_is_rejected_read_only(engine):
-    from emdrive_spark.engine import is_query
-
-    assert not is_query("EXPLAIN INSERT INTO t VALUES (1)")
-    with pytest.raises(EmdriveValidationError, match="read-only"):
-        engine.execute_script("EXPLAIN INSERT INTO exp_demo VALUES (1)", read_only=True)
-
-
-# -- scripts, literals and full-range unsigned types ------------------------
-
-
-def test_semicolon_inside_string_roundtrip(engine):
-    engine.execute_script(
-        "CREATE TABLE semi (id UINT32 PRIMARY KEY, s STRING);"
-        "INSERT INTO semi (id, s) VALUES (1, 'a;b');"
-    )
-    rows = engine.execute("SELECT s FROM semi WHERE id = 1").collect()
-    assert rows[0]["s"] == "a;b"
-
-
-BIG64 = (1 << 63) + 12345  # beyond signed long
-BIG128 = (1 << 100) + 67890
-
-
-def test_uint64_roundtrip_above_signed_range(engine):
-    engine.execute_script(
-        "CREATE TABLE wide64 (id UINT32 PRIMARY KEY, h UINT64);"
-        f"INSERT INTO wide64 (id, h) VALUES (1, {BIG64});"
-    )
-    rows = engine.execute("SELECT h FROM wide64 WHERE id = 1").collect()
-    assert int(rows[0]["h"]) == BIG64
-
-
-def test_uint128_roundtrip(engine):
-    engine.execute_script(
-        "CREATE TABLE wide128 (id UINT32 PRIMARY KEY, h UINT128);"
-        f"INSERT INTO wide128 (id, h) VALUES (1, {BIG128});"
-    )
-    rows = engine.execute("SELECT h FROM wide128 WHERE id = 1").collect()
-    assert int(rows[0]["h"]) == BIG128
-
-
-def test_hamming_at_full_uint64_range(engine):
-    a = (1 << 63) | 0b1011
-    q = (1 << 63) | 0b0001  # same top bit → hamming = popcount(0b1010) = 2
-    engine.execute_script(
-        "CREATE TABLE hashes64 ("
-        " h UINT64 METRIC KEY USING mtree(hamming),"
-        " id UINT32 PRIMARY KEY);"
-        f"INSERT INTO hashes64 (h, id) VALUES ({a}, 1);"
-    )
-    rows = engine.execute(f"SELECT h @ {q} AS d FROM hashes64").collect()
-    assert rows[0]["d"] == 2
-    # differing top bit counts too
-    rows = engine.execute(f"SELECT h @ {0b0001} AS d FROM hashes64").collect()
-    assert rows[0]["d"] == 3  # top bit + 0b1010
-
-
-def test_hamming_at_uint128_range(engine):
-    a = (1 << 100) | 0b11
-    q = (1 << 100) | 0b01
-    engine.execute_script(
-        "CREATE TABLE hashes128 ("
-        " h UINT128 METRIC KEY USING mtree(hamming),"
-        " id UINT32 PRIMARY KEY);"
-        f"INSERT INTO hashes128 (h, id) VALUES ({a}, 1);"
-    )
-    rows = engine.execute(f"SELECT h @ {q} AS d FROM hashes128").collect()
-    assert rows[0]["d"] == 1
-    rows = engine.execute("SELECT h @ 1 AS d FROM hashes128").collect()
-    assert rows[0]["d"] == 2  # XOR clears bit 0 → bits 100 and 1 remain
-
-
-def test_hamming_binary_full_128_bit(engine):
-    a = (1 << 127) | 0b1011
-    q = (1 << 127) | 0b0001
-    engine.execute_script(
-        "CREATE TABLE hashes_bin ("
-        " h BINARY METRIC KEY USING mtree(hamming),"
-        " id UINT32 PRIMARY KEY);"
-        f"INSERT INTO hashes_bin (h, id) VALUES ({a}, 1);"
-    )
-    rows = engine.execute(f"SELECT h @ {q} AS d FROM hashes_bin").collect()
-    assert rows[0]["d"] == 2  # bits 3 and 1 differ; bit 127 matches
-    rows = engine.execute("SELECT h @ 1 AS d FROM hashes_bin").collect()
-    assert rows[0]["d"] == 3  # XOR clears bit 0 → bits 127, 3, 1 remain
-
-
-def test_binary_hash_roundtrip(engine):
-    v = (1 << 127) | 0xDEADBEEF
-    engine.execute_script(
-        "CREATE TABLE bin_rt (id UINT32 PRIMARY KEY, h BINARY);"
-        f"INSERT INTO bin_rt (id, h) VALUES (1, {v});"
-    )
-    rows = engine.execute("SELECT h FROM bin_rt WHERE id = 1").collect()
-    assert int.from_bytes(bytes(rows[0]["h"]), "big") == v
-
-
-def test_negative_literal_in_where(engine):
-    engine.execute_script(
-        "CREATE TABLE signed_t (id UINT32 PRIMARY KEY, x FLOAT64);"
-        "INSERT INTO signed_t (id, x) VALUES (1, 0.5), (2, 3.0);"
-    )
-    rows = engine.execute("SELECT id FROM signed_t WHERE x > -1").collect()
-    assert {r["id"] for r in rows} == {1, 2}
-
-
-def test_negative_value_on_unsigned_column_rejected(engine):
-    engine.execute("CREATE TABLE unsigned_t (id UINT32 PRIMARY KEY)")
-    with pytest.raises(EmdriveValidationError, match="unsigned"):
-        engine.execute("INSERT INTO unsigned_t (id) VALUES (-1)")
-
-
-def test_negative_default_float(engine):
-    engine.execute_script(
-        "CREATE TABLE neg_def (id UINT32 PRIMARY KEY, x FLOAT64 DEFAULT -1.5);"
-        "INSERT INTO neg_def (id) VALUES (1);"
-    )
-    assert engine.execute("SELECT x FROM neg_def").collect()[0]["x"] == -1.5
-
-
-def test_nullable_primary_key_rejected(engine):
-    with pytest.raises(EmdriveValidationError, match="must not be NULLABLE"):
-        engine.execute(
-            "CREATE TABLE r4_nullpk (id NULLABLE(UINT32) PRIMARY KEY, v UINT8)"
-        )
-
-
-# -- `@` and aliases ---------------------------------------------------------
-
-
-def test_at_distance_in_ansi_passthrough(engine):
-    engine.execute_script(
-        "CREATE TABLE ansi_hashes ("
-        " h UINT64 METRIC KEY USING mtree(hamming),"
-        " id UINT32 PRIMARY KEY);"
-        "INSERT INTO ansi_hashes (h, id) VALUES (0b11001111, 1), (0b00001011, 2);"
-    )
-    # this is NOT dialect SQL (expression in WHERE without alias, JOIN-free
-    # ANSI shape) — it falls through to spark.sql with the @ rewritten
-    rows = engine.execute(
-        "SELECT id, h @ 0b00001011 AS d FROM ansi_hashes WHERE h @ 0b00001011 <= 3 ORDER BY id"
-    ).collect()
-    assert [(r["id"], r["d"]) for r in rows] == [(1, 3), (2, 0)]
-
-
-def test_select_alias_cannot_clobber_base_column(engine):
-    """'SELECT <expr> AS <existing-col>, <existing-col>' must return the
-    expr under the alias AND the untouched base column (r4 review: the
-    old withColumn-by-alias destroyed the base column silently)."""
-    engine.execute("CREATE TABLE r4_alias (id UINT32 PRIMARY KEY, w UINT32)")
-    engine.execute("INSERT INTO r4_alias (id, w) VALUES (1, 100), (2, 200)")
-    out = engine.execute("SELECT w AS id, id FROM r4_alias ORDER BY id")
-    rows = out.collect()
-    assert out.columns == ["id", "id"]
-    # first output column carries w's values, second the real ids —
-    # ORDER BY id resolves to the ALIAS (alias-in-scope contract)
-    assert [(r[0], r[1]) for r in rows] == [(100, 1), (200, 2)]
-
-
-def test_alias_shadowing_metric_column_rejected(engine):
-    """`@` binds the DDL-declared METRIC KEY column while plain
-    comparisons bind a same-named alias (alias-shadows-base is the WHERE
-    contract) — one name meaning two columns inside one predicate is
-    rejected, not silently split (r4 advisor low)."""
-    engine.execute(CREATE_RT5)
-    engine.execute("INSERT INTO rt5 (hash, url, width) VALUES (3, 'u1', 10)")
-    with pytest.raises(EmdriveValidationError, match="shadows METRIC KEY"):
-        engine.execute("SELECT width AS hash FROM rt5 WHERE hash @ 0b1 < 4")
-    # non-shadowing aliases keep the README flagship behavior
-    rows = engine.execute(
-        "SELECT url, hash @ 0b00000001 AS distance FROM rt5 WHERE distance < 4"
-    ).collect()
-    assert [(r["url"], r["distance"]) for r in rows] == [("u1", 1)]
-
-
-def test_at_right_operand_sees_alias(engine):
-    """The right side of `@` resolves aliases like any other WHERE
-    reference (rename threading is symmetric, not left-only)."""
-    engine.execute(CREATE_RT5)
-    engine.execute("INSERT INTO rt5 (hash, url, width) VALUES (3, 'u1', 1)")
-    rows = engine.execute(
-        "SELECT url, width AS probe FROM rt5 WHERE hash @ probe = 1"
-    ).collect()
-    assert [(r["url"], r["probe"]) for r in rows] == [("u1", 1)]
-
-
-def test_alias_of_nonmetric_name_gets_accurate_at_error(engine):
-    """Round-5 review: an alias left of '@' that shadows NO metric
-    column must produce the accurate 'does not exist' error, not a
-    bogus 'shadows METRIC KEY column' message."""
-    engine.execute(CREATE_RT5)
-    with pytest.raises(EmdriveValidationError, match="does not exist"):
-        engine.execute("SELECT width AS d FROM rt5 WHERE d @ 3 < 4")
-    # and an alias shadowing a NON-metric column reports no-metric
-    with pytest.raises(EmdriveValidationError, match="METRIC KEY"):
-        engine.execute("SELECT url AS width FROM rt5 WHERE width @ 3 < 4")
-    # the true shadow case still rejects explicitly
-    with pytest.raises(EmdriveValidationError, match="shadows"):
-        engine.execute("SELECT url AS hash FROM rt5 WHERE hash @ 3 < 4")
-
-
-# -- system views -------------------------------------------------------------
-
-
-def test_system_tables_sql_queryable(engine):
-    engine.execute_script(
-        "CREATE TABLE sys_demo (id UINT32 PRIMARY KEY, "
-        "name NULLABLE(STRING), hash UINT64 METRIC KEY USING mtree(hamming))"
-    )
-    rows = {
-        r["table_name"]
-        for r in engine.execute(
-            "SELECT table_name FROM system_tables WHERE schema_name = 'main'"
-        ).collect()
-    }
-    assert "sys_demo" in rows
-    cols = engine.execute(
-        "SELECT column_name, primary_key, metric FROM system_columns "
-        "WHERE table_name = 'sys_demo' ORDER BY ordinal"
-    ).collect()
-    assert [c["column_name"] for c in cols] == ["id", "name", "hash"]
-    assert cols[0]["primary_key"] is True
-    assert cols[2]["metric"] == "hamming"
-
-
-def test_system_views_exist_before_first_ddl(spark):
-    eng = Engine(spark)
-    assert eng.execute("SELECT * FROM system_columns").columns[0] == "table_name"

@@ -1,105 +1,14 @@
-"""Physical-layout helpers shared by the operators: lineage-truncating
-checkpoints (`functions/ckpt.py`: local or reliable, and the `release()`
-that frees their blocks), `functions/layout.py` (`spread`, `pin`), the
-two-phase global prefix sum, and per-session staging directories."""
+"""Physical-layout helpers shared by the operators:
+`functions/layout.py`'s `pin` must keep its partitioning contract and
+`release()` must free what it pinned."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from emdrive_spark import registry
 from emdrive_spark.functions import layout
-from emdrive_spark.functions.ckpt import ckpt, release
-from emdrive_spark.functions.prefix import global_prefix_sum
-from emdrive_spark.sources.tables import load, staging_dir
-
-from .conftest import ROOT, SF_SMOKE, _rows
-
-
-# -- checkpoints -----------------------------------------------------------------
-
-
-@pytest.fixture
-def reliable_ckpt(spark, tmp_path):
-    """Flip the session into reliable-checkpoint mode for one test."""
-    spark.conf.set("spark.graft.reliableCheckpoint", "true")
-    spark.conf.set("spark.graft.checkpointDir", str(tmp_path / "ckpt"))
-    yield spark
-    spark.conf.set("spark.graft.reliableCheckpoint", "false")
-
-
-def _pagerank(spark):
-    return registry.queries()["graph_pagerank"](spark, SF_SMOKE)
-
-
-def _prefix_sum(spark):
-    df = spark.range(0, 1000).selectExpr("id", "id % 7 + 1 AS w")
-    return global_prefix_sum(spark, df, "id", "w", "off")
-
-
-def _hits(spark):
-    return registry.queries()["graph_hits"](spark, SF_SMOKE)
-
-
-@pytest.mark.parametrize(
-    "build", [_pagerank, _prefix_sum, _hits], ids=["pagerank", "prefix_sum", "hits"]
-)
-def test_reliable_checkpoint_matches_default(spark, reliable_ckpt, build):
-    """spark.graft.reliableCheckpoint=true must route every
-    lineage-truncation site through a reliable checkpoint dir
-    (recomputable on executor loss) and produce BYTE-IDENTICAL results
-    to the default localCheckpoint path — the flag changes where the
-    blocks live, never what they contain. Cases: the iterative graph
-    ops (graph_hits checkpoints each round's raw score frame before its
-    scalar collect) and the shared prefix-sum machinery, whose eager
-    checkpoint pins spark_partition_id across its two actions in both
-    modes, so offsets must agree exactly."""
-    spark.conf.set("spark.graft.reliableCheckpoint", "false")
-    base = _rows(build(spark))
-    spark.conf.set("spark.graft.reliableCheckpoint", "true")
-    flagged = _rows(build(spark))
-    assert flagged == base
-    assert len(base) > 0
-    # and the reliable path actually engaged (checkpoint dir was set)
-    assert spark.sparkContext.getCheckpointDir() is not None
-
-
-def test_release_drops_checkpoint_blocks_and_session_stays_usable(spark):
-    """VERDICT r6 item 3: release() must empty the persistent-RDD map
-    (the co-residence pressure source) and leave the session fully
-    usable for the NEXT query — including ops that checkpoint again."""
-    fn = registry.queries()["graph_pagerank"]
-    fn(spark, SF_SMOKE).collect()
-    held = spark.sparkContext._jsc.getPersistentRDDs().size()
-    assert held > 0  # the op really does pin blocks
-    n = release(spark)
-    assert n == held
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
-    # a fresh run of the same checkpoint-heavy op still works
-    assert len(fn(spark, SF_SMOKE).collect()) > 0
-
-
-def test_release_counts_manual_ckpt_frame(spark):
-    df = ckpt(spark.range(100).selectExpr("id", "id * 2 AS v"))
-    assert df.count() == 100
-    assert release(spark) >= 1
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
-
-
-# -- spread and pin ----------------------------------------------------------------
-
-
-def test_spread_widens_few_split_scan(spark):
-    """spread() must lift a single-split scan to full-cluster
-    parallelism (the fixture files have one row group each, so the
-    scan is 1 task and everything before the first exchange
-    serializes — see functions/layout.py)."""
-    d = load(spark, SF_SMOKE, "documents").select("doc_id", "text")
-    assert d.rdd.getNumPartitions() <= 2  # the premise: few-split scan
-    n = spark.sparkContext.defaultParallelism
-    assert layout.spread(d).rdd.getNumPartitions() == n
-    assert layout.spread(d, "doc_id").rdd.getNumPartitions() == n
+from emdrive_spark.functions.ckpt import release
 
 
 @pytest.fixture
@@ -140,74 +49,3 @@ def test_release_clears_layout_pins(spark):
     df2 = spark.range(0, 1000).select(F.col("id").alias("k"))
     plan = df2._jdf.queryExecution().optimizedPlan().toString()
     assert "InMemoryRelation" not in plan
-
-
-# -- global prefix sum ---------------------------------------------------------------
-
-
-def test_global_prefix_sum_matches_reference_randomized(spark):
-    """Randomized pin for both packers' shared core: for seeded random
-    (unique id, weight>=0) tables — sparse ids, zero weights, sizes
-    from 1 row (fewer rows than range partitions, so empty partitions
-    and NULL subtotals) to 10x the partition count — the two-phase
-    offset machinery must equal a plain Python exclusive prefix sum in
-    id order."""
-    import random
-
-    rng = random.Random(9)
-    for size in (1, 3, 17, 64, 320):
-        ids = rng.sample(range(10**9), size)
-        rows = [(i, rng.choice([0, 0, 1, 3, 97, 2048])) for i in ids]
-        df = spark.createDataFrame(rows, "id long, w long")
-        got = {
-            r["id"]: r["off"]
-            for r in global_prefix_sum(spark, df, "id", "w", "off").collect()
-        }
-        run = 0
-        for i, w in sorted(rows):
-            assert got[i] == run, f"size={size} id={i}"
-            run += w
-
-
-# -- staging directories ---------------------------------------------------------------
-
-
-def test_staging_dir_is_per_session(spark):
-    """Two concurrent gate/bench invocations must not share staged
-    paths: the path is keyed on the Spark applicationId, unique per
-    SparkSession (advisor r3: fixed /tmp path caused cross-run
-    clobbering)."""
-    p = staging_dir(spark, "x")
-    assert spark.sparkContext.applicationId in p
-    assert staging_dir(spark, "a", "b").endswith("/a/b")
-
-
-@pytest.mark.slow
-def test_staging_root_removed_at_exit():
-    """The per-session staging root must vanish when the process exits
-    (r4 review: leaked roots accrete under /tmp until the disk fills).
-    Runs a staging op in a subprocess and checks the root after exit."""
-    import os
-    import subprocess
-    import sys
-
-    code = (
-        "import sys; sys.path.insert(0, sys.argv[1])\n"
-        "from emdrive_spark.session import get_spark\n"
-        "from emdrive_spark import registry\n"
-        "registry.load_all()\n"
-        "s = get_spark('staging-exit-test')\n"
-        "registry.REGISTRY['source_csv_roundtrip'].fn(s, sys.argv[2]).count()\n"
-        "from emdrive_spark.sources.tables import staging_dir\n"
-        "print('ROOT=' + staging_dir(s))\n"
-        "s.stop()\n"
-    )
-    out = subprocess.run(
-        [sys.executable, "-c", code, ROOT, SF_SMOKE],
-        capture_output=True,
-        text=True,
-        timeout=300,
-    )
-    roots = [l[5:] for l in out.stdout.splitlines() if l.startswith("ROOT=")]
-    assert roots, out.stderr[-500:]
-    assert not os.path.exists(roots[0])

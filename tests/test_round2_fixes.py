@@ -15,16 +15,10 @@ from __future__ import annotations
 
 import pytest
 
-from emdrive_spark.engine import Engine
 from emdrive_spark.sql.errors import EmdriveValidationError
 from emdrive_spark.sql.tokenizer import split_statements
 
 from .conftest import SF_SMOKE
-
-
-@pytest.fixture()
-def engine(spark):
-    return Engine(spark)
 
 
 # -- read-only scripts ----------------------------------------------------

@@ -25,10 +25,7 @@ from emdrive_spark.engine import Engine, is_query, rewrite_at_distance
 from emdrive_spark.sql.errors import EmdriveError, EmdriveValidationError
 from emdrive_spark.sql.tokenizer import split_statements
 
-
-@pytest.fixture()
-def engine(spark):
-    return Engine(spark)
+from .conftest import ROOT
 
 
 # -- WITH-prefixed mutation guard ----------------------------------------
@@ -196,7 +193,7 @@ def test_sigterm_shuts_down_cleanly():
         stderr=subprocess.DEVNULL,
         text=True,
         env=env,
-        cwd="/root/repo",
+        cwd=ROOT,
     )
     try:
         line = ""
@@ -219,12 +216,9 @@ def test_sigterm_shuts_down_cleanly():
 
 
 def test_verify_local_compare_is_dtype_strict():
-    import sys
-
     import pandas as pd
 
-    sys.path.insert(0, "/root/repo/tools")
-    import verify_local
+    import tools.verify_local as verify_local
 
     a = pd.DataFrame({"k": [1, 2], "v": [1, 2]})
     b = pd.DataFrame({"k": [1, 2], "v": [1.0, 2.0]})  # numpy == says equal

@@ -35,8 +35,8 @@ def test_staging_root_removed_at_exit():
     import subprocess
     import sys
 
-    # Repo root / fixture dir via argv, not hardcoded (r4 advisor: the
-    # literal '/root/repo' broke any other checkout location).
+    # Repo root / fixture dir via argv, not hardcoded (r4 advisor: a
+    # fixed checkout path broke any other checkout location).
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     code = (
         "import sys; sys.path.insert(0, sys.argv[1])\n"

@@ -5,29 +5,14 @@ load gate."""
 
 from __future__ import annotations
 
-import json
-
 import pytest
 
 from emdrive_spark import registry
 
-SF_SMOKE = "/root/testdata/sf0.001"
+from .conftest import SF_SMOKE, _rows
 
 
 # ---------------------------------------------------------------- ckpt
-
-
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
-
-
-@pytest.fixture
-def reliable_ckpt(spark, tmp_path):
-    """Flip the session into reliable-checkpoint mode for one test."""
-    spark.conf.set("spark.graft.reliableCheckpoint", "true")
-    spark.conf.set("spark.graft.checkpointDir", str(tmp_path / "ckpt"))
-    yield spark
-    spark.conf.set("spark.graft.reliableCheckpoint", "false")
 
 
 def test_reliable_checkpoint_pagerank_matches_default(spark, reliable_ckpt):

@@ -11,19 +11,7 @@ import pytest
 from emdrive_spark import registry
 from emdrive_spark.functions.ckpt import ckpt, release
 
-SF_SMOKE = "/root/testdata/sf0.001"
-
-
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
-
-
-@pytest.fixture
-def reliable_ckpt(spark, tmp_path):
-    spark.conf.set("spark.graft.reliableCheckpoint", "true")
-    spark.conf.set("spark.graft.checkpointDir", str(tmp_path / "ckpt"))
-    yield spark
-    spark.conf.set("spark.graft.reliableCheckpoint", "false")
+from .conftest import SF_SMOKE, _rows
 
 
 # ----------------------------------------------------- graph_hits ckpt

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from emdrive_spark import registry
 from emdrive_spark.sources.tables import load
 
-SF_SMOKE = "/root/testdata/sf0.001"
+from .conftest import SF_SMOKE
 
 
 # ----------------------------------------------------- graph_adamic_adar

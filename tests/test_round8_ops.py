@@ -18,7 +18,7 @@ from emdrive_spark import registry
 from emdrive_spark.operators.text import _bpe_merge_word
 from emdrive_spark.sources.tables import load
 
-SF_SMOKE = "/root/testdata/sf0.001"
+from .conftest import SF_SMOKE, _write_documents
 
 
 # ------------------------------------------------------ BPE symbol-level merge
@@ -95,13 +95,6 @@ def test_bpe_merge_oracle_fold_matches_spark():
             [w, l, r, l, l, r],
         ).fetchone()[0]
         assert got == want, f"oracle merge({w!r}, {l!r}, {r!r}) = {got!r}, want {want!r}"
-
-
-def _write_documents(spark, path: str, texts: list[str]) -> None:
-    spark.createDataFrame(
-        [(i, t, "en", "synthetic", len(t)) for i, t in enumerate(texts)],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ).coalesce(1).write.mode("overwrite").parquet(path)
 
 
 def test_bpe_train_on_suffix_collision_corpus(spark, tmp_path):

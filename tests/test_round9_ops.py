@@ -1,29 +1,18 @@
 """Round-9 fixes and additions: pack_sequences_bpe (train -> tokenize
 -> PACK closed on the n_bpe budget), the exact BPE merge-fold
 prefilter, the dry-corpus BPE early-stop (r8 ADVICE — engine AND
-oracle), the oracle-side winnowing position bound (r8 ADVICE), and the
-doc-count pin that stops README/SURVEY totals drifting from the live
-registry (r8 verdict item 5)."""
+oracle) and the oracle-side winnowing position bound (r8 ADVICE). The
+round's doc-count pin lives in test_bench.py."""
 
 from __future__ import annotations
-
-import re
 
 import duckdb
 import pytest
 from pyspark.sql import functions as F
 
 from emdrive_spark import registry
-from emdrive_spark.registry import _ALIASES
 
-SF_SMOKE = "/root/testdata/sf0.001"
-
-
-def _write_documents(spark, path: str, texts: list[str]) -> None:
-    spark.createDataFrame(
-        [(i, t, "en", "synthetic", len(t)) for i, t in enumerate(texts)],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ).coalesce(1).write.mode("overwrite").parquet(path)
+from .conftest import SF_SMOKE, _write_documents
 
 
 def _docs_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -33,96 +22,6 @@ def _docs_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
         f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet/*.parquet'"
     )
     return con
-
-
-# ------------------------------------------------ doc counts pinned to code
-
-
-def test_readme_counts_match_registry():
-    """README and SURVEY state the registry size; both must equal the
-    live registry so the r7/r8 count drift cannot happen a third time
-    (r8 verdict item 5)."""
-    n_ops = len(registry.queries())
-    n_oracle = len(registry.oracle_sql())
-    n_alias = len(_ALIASES)
-
-    readme = open("/root/repo/README.md").read()
-    m = re.search(r"`queries\(\)` \((\d+)\s*\n?\s*ops\), `oracle_sql\(\)` \((\d+) DuckDB oracles\)", readme)
-    assert m, "README no longer states the queries()/oracle_sql() counts"
-    assert (int(m.group(1)), int(m.group(2))) == (n_ops, n_oracle), (
-        f"README says {m.groups()}, registry has ({n_ops}, {n_oracle})"
-    )
-
-    survey = open("/root/repo/SURVEY.md").read()
-    m = re.search(
-        r"Total: (\d+) registered queries \((\d+) distinct ops \+ (\d+) "
-        r"aliases\), (\d+) with\s*\n?full value-checked oracles, (\d+) rows-only",
-        survey,
-    )
-    assert m, "SURVEY §8 no longer states the registry totals"
-    got = tuple(int(x) for x in m.groups())
-    want = (n_ops, n_ops - n_alias, n_alias, n_oracle, n_ops - n_oracle)
-    assert got == want, f"SURVEY says {got}, registry has {want}"
-
-
-def test_bench_stdout_line_fits_driver_tail_cap():
-    """The driver keeps only the LAST 2000 chars of bench output and
-    json-parses the artifact of record from that window; the headline
-    line outgrew it at r6 (BENCH_r06..r08 all carry "parsed": null).
-    Pin the fix: the stdout payload trims its cheapest per-query rows
-    until the compact line fits, flags how many were elided, keeps
-    the expensive (signal-bearing) rows, and never mutates the full
-    payload that lands in BENCH_LOCAL.json."""
-    import importlib.util
-    import json as _json
-
-    spec = importlib.util.spec_from_file_location("bench", "/root/repo/bench.py")
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
-
-    qs = {f"op_with_a_realistic_name_{i:03d}": round(0.2 + i * 0.13, 3) for i in range(90)}
-    payload = {
-        "metric": "headline_queries_total",
-        "value": 123.456,
-        "unit": "sec",
-        "queries": qs,
-        "reps": 5,
-        "load_avg": [8.1, 8.39, 6.77],
-        "load_at_start": 0.28,
-        "noisy": False,
-        "sf": 0.1,
-    }
-    slim = bench._fit_tail_cap(payload)
-    line = _json.dumps(slim, separators=(",", ":"))
-    assert len(line) <= 2000 - 1  # newline margin inside the tail window
-    assert _json.loads(line)["value"] == 123.456
-    assert slim["queries_elided"] == 90 - len(slim["queries"])
-    # cheapest rows go first; the most expensive rows always survive
-    kept_min = min(slim["queries"].values())
-    elided_max = max(v for k, v in qs.items() if k not in slim["queries"])
-    assert elided_max <= kept_min
-    assert len(payload["queries"]) == 90  # full payload untouched
-
-    # an already-small payload passes through bit-identical
-    tiny = dict(payload, queries={"a": 1.0})
-    assert bench._fit_tail_cap(tiny) == tiny
-
-
-def test_bench_headline_names_exist_in_registry():
-    """Every bench.py HEADLINE entry must resolve in the live registry:
-    a rename/removal would otherwise surface only as a KeyError in the
-    driver's per-round bench run — the same silent-drift class as the
-    README/SURVEY counts, pinned the same way."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location("bench", "/root/repo/bench.py")
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
-    qs = registry.queries()
-    missing = [n for n in ("scan_full", *bench.HEADLINE) if n not in qs]
-    assert not missing, f"bench HEADLINE names absent from registry: {missing}"
-    dupes = [n for n in set(bench.HEADLINE) if bench.HEADLINE.count(n) > 1]
-    assert not dupes, f"bench HEADLINE has duplicate entries: {dupes}"
 
 
 # ------------------------------------------------ BPE dry-corpus early stop

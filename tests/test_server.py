@@ -1,12 +1,9 @@
 """HTTP endpoint round-trip — the reference's working query path
 (POST / with SQL body, /root/reference/src/server/mod.rs:101-113) and
-the GET read-only path (:114-122), including the error JSON taxonomy —
-plus request framing (400/408/413), launch config from the
-environment, durability across restarts and SIGTERM shutdown."""
+the GET read-only path (:114-122), including the error JSON taxonomy."""
 
 from __future__ import annotations
 
-import http.client
 import json
 import threading
 import urllib.parse
@@ -16,17 +13,12 @@ import pytest
 
 from emdrive_spark.server import serve
 
-from .conftest import ROOT
-
-
-def _start(httpd):
-    threading.Thread(target=httpd.serve_forever, daemon=True).start()
-    return httpd
-
 
 @pytest.fixture(scope="module")
 def endpoint(spark):
-    httpd = _start(serve(spark, host="127.0.0.1", port=18824))
+    httpd = serve(spark, host="127.0.0.1", port=18824)
+    t = threading.Thread(target=httpd.serve_forever, daemon=True)
+    t.start()
     yield "http://127.0.0.1:18824"
     httpd.shutdown()
 
@@ -130,7 +122,9 @@ def test_result_cap_413_and_at_cap_ok(spark, monkeypatch):
     the cap still returns 200 with every row — the limit is a guard,
     not a silent truncation."""
     monkeypatch.setenv("EMDRIVE_MAX_RESULT_ROWS", "5")
-    httpd = _start(serve(spark, host="127.0.0.1", port=18825))
+    httpd = serve(spark, host="127.0.0.1", port=18825)
+    t = threading.Thread(target=httpd.serve_forever, daemon=True)
+    t.start()
     url = "http://127.0.0.1:18825"
     try:
         values = ", ".join(f"({i})" for i in range(1, 11))
@@ -149,244 +143,3 @@ def test_result_cap_413_and_at_cap_ok(spark, monkeypatch):
         assert len(body["rows"]) == 5
     finally:
         httpd.shutdown()
-
-
-# -- launch config and durability ----------------------------------------------
-
-
-def test_config_from_env(monkeypatch):
-    from emdrive_spark.config import Config
-
-    monkeypatch.delenv("EMDRIVE_TCP_LISTEN_HOST", raising=False)
-    monkeypatch.delenv("EMDRIVE_TCP_LISTEN_PORT", raising=False)
-    monkeypatch.delenv("EMDRIVE_DATA_DIRECTORY", raising=False)
-    cfg = Config.from_env()
-    assert cfg.tcp_listen_host == "127.0.0.1"
-    assert cfg.tcp_listen_port == 8824  # reference default, config.rs:19
-    assert cfg.data_directory == "/var/lib/emdrive/data"
-
-    monkeypatch.setenv("EMDRIVE_TCP_LISTEN_HOST", "0.0.0.0")
-    monkeypatch.setenv("EMDRIVE_TCP_LISTEN_PORT", "19999")
-    monkeypatch.setenv("EMDRIVE_DATA_DIRECTORY", "/tmp/emdata")
-    cfg = Config.from_env()
-    assert (cfg.tcp_listen_host, cfg.tcp_listen_port, cfg.data_directory) == (
-        "0.0.0.0",
-        19999,
-        "/tmp/emdata",
-    )
-    # non-numeric port falls back to default (config.rs:66-74)
-    monkeypatch.setenv("EMDRIVE_TCP_LISTEN_PORT", "not-a-port")
-    assert Config.from_env().tcp_listen_port == 8824
-
-
-def test_server_boots_from_env_alone(spark, monkeypatch, tmp_path):
-    monkeypatch.setenv("EMDRIVE_TCP_LISTEN_HOST", "127.0.0.1")
-    monkeypatch.setenv("EMDRIVE_TCP_LISTEN_PORT", "18825")
-    monkeypatch.setenv("EMDRIVE_DATA_DIRECTORY", str(tmp_path / "data"))
-    httpd = serve(spark)  # host/port/data dir all from env
-    assert httpd.server_address[1] == 18825
-    _start(httpd)
-    try:
-        _, body, _ = _post("http://127.0.0.1:18825", "SELECT 1 AS one")
-        assert body["rows"] == [{"one": 1}]
-    finally:
-        httpd.shutdown()
-
-
-def test_server_persists_mutations_across_restart(spark, monkeypatch, tmp_path):
-    monkeypatch.setenv("EMDRIVE_DATA_DIRECTORY", str(tmp_path / "emdata"))
-
-    a = _start(serve(spark, host="127.0.0.1", port=18826))
-    try:
-        status, _, _ = _post(
-            "http://127.0.0.1:18826",
-            "CREATE TABLE durable_t (id UINT32 PRIMARY KEY, name STRING);"
-            "INSERT INTO durable_t (id, name) VALUES (1, 'survives'), (2, 'restart')",
-        )
-        assert status == 200
-    finally:
-        a.shutdown()
-
-    # fresh server process-equivalent: same env, new engine + catalog
-    b = _start(serve(spark, host="127.0.0.1", port=18827))
-    try:
-        q = urllib.parse.quote("SELECT name FROM durable_t WHERE id = 2")
-        with urllib.request.urlopen(f"http://127.0.0.1:18827/?query={q}") as resp:
-            body = json.loads(resp.read())
-        assert body["rows"] == [{"name": "restart"}]
-    finally:
-        b.shutdown()
-
-
-def test_system_tables_over_http(spark):
-    httpd = _start(serve(spark, host="127.0.0.1", port=18833))
-    try:
-        q = urllib.parse.quote("SELECT table_name FROM system_tables")
-        with urllib.request.urlopen(f"http://127.0.0.1:18833/?query={q}") as resp:
-            assert resp.status == 200
-            body = json.loads(resp.read())
-        assert body["column_names"] == ["table_name"]
-    finally:
-        httpd.shutdown()
-
-
-@pytest.mark.slow
-def test_sigterm_shuts_down_cleanly():
-    """SIGTERM to a served process → accept loop stops, Spark stops,
-    exit code 0 (reference src/server/mod.rs:140-145)."""
-    import os
-    import signal
-    import subprocess
-    import time
-
-    env = dict(os.environ, EMDRIVE_TCP_LISTEN_PORT="18841", PYTHONUNBUFFERED="1")
-    proc = subprocess.Popen(
-        ["python", "-m", "emdrive_spark.server"],
-        stdout=subprocess.PIPE,
-        stderr=subprocess.DEVNULL,
-        text=True,
-        env=env,
-        cwd=ROOT,
-    )
-    try:
-        line = ""
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            line = proc.stdout.readline()
-            if "listening on" in line:
-                break
-        assert "listening on" in line, "server never came up"
-        proc.send_signal(signal.SIGTERM)
-        out, _ = proc.communicate(timeout=60)
-        assert proc.returncode == 0
-        assert "stopped cleanly" in out
-    finally:
-        if proc.poll() is None:
-            proc.kill()
-
-
-# -- request framing: 400 / 408 / 413 ------------------------------------------
-
-
-def test_negative_content_length_is_typed_400(spark):
-    """int('-5') parses, and rfile.read(-5) reads to EOF — on keep-alive
-    that hangs the handler thread. The framing guard now rejects
-    negative lengths with the typed 400 (r4 advisor low)."""
-    httpd = _start(serve(spark, host="127.0.0.1", port=18831))
-    try:
-        conn = http.client.HTTPConnection("127.0.0.1", 18831, timeout=30)
-        conn.putrequest("POST", "/")
-        conn.putheader("Content-Length", "-5")
-        conn.endheaders()
-        resp = conn.getresponse()
-        body = json.loads(resp.read())
-        assert resp.status == 400
-        assert body["type"] == "validation"
-        assert "Content-Length" in body["message"]
-        conn.close()
-    finally:
-        httpd.shutdown()
-
-
-def test_stalled_body_read_times_out_with_408(spark):
-    """Round-5 review: a client promising more body bytes than it sends
-    must not pin the handler thread forever; the socket timeout turns
-    the stalled read into a typed 408."""
-    httpd = serve(spark, host="127.0.0.1", port=18832)
-    # shrink the read timeout for the test (class attr on the handler)
-    httpd.RequestHandlerClass.timeout = 2
-    _start(httpd)
-    try:
-        conn = http.client.HTTPConnection("127.0.0.1", 18832, timeout=30)
-        conn.putrequest("POST", "/")
-        conn.putheader("Content-Length", "1000")
-        conn.endheaders()
-        conn.send(b"SELECT")  # 6 of the promised 1000 bytes, then silence
-        resp = conn.getresponse()
-        body = json.loads(resp.read())
-        assert resp.status == 408
-        assert body["type"] == "validation"
-        conn.close()
-    finally:
-        httpd.shutdown()
-
-
-def test_oversized_content_length_rejected_413(spark):
-    """A Content-Length above the statement ceiling is refused up
-    front instead of buffering an arbitrary body."""
-    httpd = _start(serve(spark, host="127.0.0.1", port=18833))
-    try:
-        conn = http.client.HTTPConnection("127.0.0.1", 18833, timeout=30)
-        conn.putrequest("POST", "/")
-        conn.putheader("Content-Length", str(1 << 30))
-        conn.endheaders()
-        resp = conn.getresponse()
-        body = json.loads(resp.read())
-        assert resp.status == 413
-        assert body["type"] == "validation"
-        conn.close()
-    finally:
-        httpd.shutdown()
-
-
-def test_413_closes_keepalive_connection(spark):
-    """ADVICE r5: the 413 path never drains the oversized body, so
-    under HTTP/1.1 keep-alive the unread bytes would be parsed as the
-    next request line. The handler must close the connection instead —
-    a second request on the same socket gets EOF, not a desynced
-    response."""
-    httpd = serve(spark, host="127.0.0.1", port=18834)
-    old_proto = httpd.RequestHandlerClass.protocol_version
-    httpd.RequestHandlerClass.protocol_version = "HTTP/1.1"
-    _start(httpd)
-    try:
-        conn = http.client.HTTPConnection("127.0.0.1", 18834, timeout=30)
-        body = b"SELECT 1"
-        conn.putrequest("POST", "/")
-        conn.putheader("Content-Length", str(1 << 30))
-        conn.endheaders()
-        conn.send(body)  # unread bytes that must NOT become a request
-        resp = conn.getresponse()
-        assert resp.status == 413
-        resp.read()
-        # the server must have closed; a follow-up request cannot be
-        # answered from a desynced parse of the leftover body bytes
-        with pytest.raises(
-            (http.client.RemoteDisconnected, ConnectionError, BrokenPipeError)
-        ):
-            conn.putrequest("GET", "/?query=SELECT%201")
-            conn.endheaders()
-            conn.getresponse().read()
-        conn.close()
-    finally:
-        httpd.RequestHandlerClass.protocol_version = old_proto
-        httpd.shutdown()
-
-
-def test_respond_survives_client_that_stops_reading(spark, caplog):
-    """ADVICE r5: the socket timeout applies to writes too — a slow or
-    vanished reader must be logged and the handler exit cleanly, not
-    die on an uncaught TimeoutError/BrokenPipeError."""
-    import io
-    import logging
-
-    from emdrive_spark.engine import Engine
-    from emdrive_spark.server import make_handler
-
-    handler_cls = make_handler(Engine(spark))
-
-    class _FlakyWfile(io.BytesIO):
-        def write(self, data):  # headers are small; the body is not
-            if len(data) > 256:
-                raise BrokenPipeError("client went away")
-            return super().write(data)
-
-    h = handler_cls.__new__(handler_cls)
-    h.wfile = _FlakyWfile()
-    h.requestline = "POST / HTTP/1.0"
-    h.request_version = "HTTP/1.0"
-    h.close_connection = False
-    with caplog.at_level(logging.WARNING, logger="emdrive_spark.server"):
-        h._respond(200, "x" * 4096, 12, "01TESTULID0000000000000000")
-    assert h.close_connection is True
-    assert any("response write failed" in r.message for r in caplog.records)

@@ -1,18 +1,15 @@
 """Dialect-contract tests mirroring the reference's inline test intent
 (/root/reference/src/sql/tokenizer.rs:267-540, parser.rs:83-205,
-components.rs validation), plus quote- and comment-aware statement
-splitting, the read-only guard's `is_query` and the `@` rewrite for
-ANSI passthrough."""
+components.rs validation)."""
 
 from __future__ import annotations
 
 import pytest
 
-from emdrive_spark.engine import is_query, rewrite_at_distance
 from emdrive_spark.sql import ast
 from emdrive_spark.sql.errors import EmdriveSyntaxError, EmdriveValidationError
 from emdrive_spark.sql.parser import parse_statement
-from emdrive_spark.sql.tokenizer import split_statements, tokenize
+from emdrive_spark.sql.tokenizer import tokenize
 from emdrive_spark.types import parse_type
 
 
@@ -154,95 +151,3 @@ def test_parse_limit_rejects_non_integer():
         parse_statement("SELECT * FROM t LIMIT 2.5")
     with pytest.raises(EmdriveSyntaxError):
         parse_statement("SELECT * FROM t LIMIT x")
-
-
-# --- quote- and comment-aware statement splitting -----------------------------
-
-
-def test_split_statements_respects_string_literals():
-    parts = split_statements("INSERT INTO t (s) VALUES ('a;b'); SELECT 1")
-    assert len(parts) == 2
-    assert "'a;b'" in parts[0]
-
-
-def test_split_statements_ignores_semicolons_in_comments():
-    parts = split_statements("SELECT 1 -- trailing; comment\n; SELECT 2")
-    assert len(parts) == 2
-    parts = split_statements("SELECT 1 /* a;b */; SELECT 2")
-    assert len(parts) == 2
-    assert "/* a;b */" in parts[0]
-
-
-def test_split_statements_ignores_semicolons_in_double_quotes():
-    parts = split_statements('SELECT "a;b" AS s; SELECT 2')
-    assert len(parts) == 2
-    assert '"a;b"' in parts[0]
-
-
-def test_split_statements_doubled_single_quote():
-    # '' doubling: the ';' after it is still inside the string
-    parts = split_statements("SELECT 'it''s; fine' AS s; SELECT 2")
-    assert len(parts) == 2
-    assert "'it''s; fine'" in parts[0]
-
-
-# --- is_query: the read-only guard's head check -------------------------------
-
-
-def test_is_query_rejects_cte_prefixed_dml():
-    assert not is_query("WITH q AS (SELECT 1 AS x) INSERT INTO t SELECT * FROM q")
-    assert not is_query(
-        "WITH q AS (SELECT 1) INSERT OVERWRITE DIRECTORY '/tmp/x' SELECT * FROM q"
-    )
-    # keyword hidden behind a newline/comment still caught
-    assert not is_query("WITH q AS (SELECT 1)\n-- c\nINSERT INTO t SELECT * FROM q")
-
-
-def test_is_query_allows_genuine_with_queries():
-    assert is_query("WITH t AS (SELECT 1 AS x) SELECT x FROM t")
-    # mutation keywords inside string literals / comments are content
-    assert is_query("WITH t AS (SELECT 'INSERT INTO x' AS s) SELECT s FROM t")
-    assert is_query("WITH t AS (SELECT 1) /* INSERT */ SELECT * FROM t")
-    # identifiers merely containing a keyword are fine
-    assert is_query("WITH t AS (SELECT 1 AS insert_count) SELECT insert_count FROM t")
-    # leading comments no longer confuse the head check
-    assert is_query("-- note\nSELECT 1")
-
-
-# --- the `@` rewrite for ANSI passthrough -------------------------------------
-
-
-def test_at_rewrite_leaves_strings_alone():
-    sql = "SELECT 'a @ b' AS s, h @ 5 AS d FROM t"
-    out = rewrite_at_distance(sql)
-    assert "'a @ b'" in out
-    assert "emdrive_hamming(CAST(h AS DECIMAL(38,0)), CAST(5 AS DECIMAL(38,0)))" in out
-
-
-def test_at_rewrite_qualified_and_hex():
-    out = rewrite_at_distance("SELECT a.h @ 0xFF FROM t a")
-    assert "emdrive_hamming(CAST(a.h AS DECIMAL(38,0)), CAST(255 AS DECIMAL(38,0)))" in out
-
-
-def test_at_rewrite_skips_double_quoted_strings():
-    assert rewrite_at_distance('SELECT "a @ b" AS s FROM t') == 'SELECT "a @ b" AS s FROM t'
-
-
-def test_at_rewrite_skips_comments():
-    sql = "SELECT h FROM t -- x @ y\n WHERE 1=1"
-    assert rewrite_at_distance(sql) == sql
-    sql2 = "SELECT /* a @ b */ h FROM t"
-    assert rewrite_at_distance(sql2) == sql2
-
-
-def test_at_rewrite_still_rewrites_outside_masks():
-    out = rewrite_at_distance("SELECT hash @ 0b1010 AS d FROM t -- hash @ 1")
-    assert "emdrive_hamming" in out.split("--")[0]
-    assert "hash @ 1" in out.split("--")[1]
-
-
-def test_at_rewrite_handles_doubled_quote_escape():
-    sql = "SELECT 'it''s a @ b' AS s, h @ 3 AS d FROM t"
-    out = rewrite_at_distance(sql)
-    assert "'it''s a @ b'" in out
-    assert "emdrive_hamming" in out

@@ -85,41 +85,3 @@ def test_stateful_totals_tws_converges_to_batch(spark):
     got = {tuple(r) for r in final.collect()}
     want = {tuple(r) for r in batch.collect()}
     assert got == want
-
-
-def test_streaming_pins_utc_for_foreign_sessions(spark):
-    """events_stream must force a UTC session (advisor r2): in a
-    non-whole-window offset timezone (+05:45) the NTZ→LTZ→NTZ window
-    round-trip would shift window_start vs the batch/oracle answer."""
-    spark.conf.set("spark.sql.session.timeZone", "Asia/Kathmandu")
-    try:
-        S.events_stream(spark, SF_SMOKE)
-        assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-
-
-def test_stream_topk_converges_to_batch_leaderboard(spark):
-    """The streaming leaderboard driven to completion equals the batch
-    top-3-per-type answer with deterministic tiebreaks."""
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
-    from emdrive_spark import registry
-    from emdrive_spark.sources.tables import load
-
-    got = sorted(
-        tuple(r) for r in registry.queries()["stream_topk"](spark, SF_SMOKE).collect()
-    )
-    w = W.partitionBy("event_type").orderBy(F.col("n").desc(), F.col("user_id").asc())
-    want = sorted(
-        tuple(r)
-        for r in load(spark, SF_SMOKE, "events")
-        .groupBy("event_type", "user_id")
-        .agg(F.count("*").alias("n"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("event_type", "user_id", "n")
-        .collect()
-    )
-    assert got == want and len(got) > 0
