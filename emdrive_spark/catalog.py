@@ -6,8 +6,16 @@ Mirrors the reference's ``system.tables`` / ``system.columns`` bootstrap
 can't natively store: primary key, metric key + metric, defaults,
 emdrive nullability (SURVEY §1.1).
 
-Storage model: each table is a DataFrame registered as a temp view;
-appends replace the view (Spark DataFrames are immutable). On a real
+Storage model: each table is a DataFrame registered as a temp view
+under the table's name (Spark DataFrames are immutable, so a mutation
+swaps in a new frame and re-registers the view). An INSERT unions its
+VALUES batch onto the frame and marks the table pending; the next read
+through the catalog (``Catalog.scan``, ``Catalog.compact``, or the PK
+check of the next INSERT) first folds a pending table into one
+executor-side checkpoint of ``defaultParallelism`` partitions, so reads
+never plan over a Union of local relations and lineage stays at most
+checkpoint ∪ one batch. A durable catalog (``save``/``restore``) is
+never pending: its frames are parquet scans, already compact. On a real
 deployment the same class writes PK-sorted Parquet/Delta per table —
 the in-session dict is the unit-test surface, the layout contract
 (sorted by PK for min/max pruning) is what scales.
@@ -29,11 +37,6 @@ from emdrive_spark.types import EmdriveType
 
 DEFAULT_SCHEMA = "main"
 
-# INSERTs between lineage truncations (Catalog.insert) — high enough to
-# keep checkpoint cost off the common path, low enough that plan depth
-# stays bounded for ingest loops.
-_CHECKPOINT_EVERY_INSERTS = 32
-
 
 @dataclass
 class TableEntry:
@@ -41,7 +44,10 @@ class TableEntry:
     schema_name: str
     columns: tuple[ast.ColumnDef, ...]
     df: DataFrame
-    inserts: int = 0  # since last lineage truncation (see Catalog.insert)
+    # INSERTed into since df was last a single scan (checkpoint or
+    # parquet): df is a Union with local VALUES batches, which Catalyst
+    # would evaluate on the driver. Catalog reads compact it first.
+    pending: bool = False
     # Mutated since the last save() to the current save root. New and
     # inserted-into tables are dirty; restore() marks entries clean
     # (their on-disk snapshot IS the restore root). save() skips clean
@@ -208,8 +214,11 @@ class Catalog:
                     f"Duplicate PRIMARY KEY value in INSERT batch for table {stmt.table}."
                 )
             if not entry.known_empty:
+                # The semi-join is a read: it compacts a pending table
+                # first, which also keeps lineage at checkpoint ∪ one
+                # batch however long an ingest loop runs.
                 clashes = (
-                    batch.join(entry.df.select(pk), on=pk, how="left_semi")
+                    batch.join(self._compact(entry).select(pk), on=pk, how="left_semi")
                     .limit(1)
                     .count()
                 )
@@ -220,21 +229,50 @@ class Catalog:
 
             entry.df = entry.df.unionByName(batch)
             entry.known_empty = False
-            # Lineage hygiene: every INSERT stacks a Union node, so a
-            # long-lived table would accrete an unbounded plan (analyzer
-            # time grows per statement, eventually StackOverflow).
-            # Truncate the chain periodically — the checkpoint
-            # materializes only this table's rows, and the PK anti-join
-            # above already reads the data each INSERT anyway.
-            entry.inserts += 1
+            entry.pending = True
             entry.dirty = True  # next save() must rewrite this table
-            if entry.inserts % _CHECKPOINT_EVERY_INSERTS == 0:
-                entry.df = ckpt(entry.df)
             entry.df.createOrReplaceTempView(entry.name)
         # no refresh_system_views() here: the system relations expose
         # DDL metadata only — INSERT never changes them, and the hot
         # ingest path shouldn't pay two view rebuilds per statement.
         return len(py_rows)
+
+    # -- reads ----------------------------------------------------------
+
+    def scan(self, name: str) -> DataFrame:
+        """The table's frame for a read, compacted first if pending."""
+        entry = self.get(name)
+        with self._write_lock:
+            return self._compact(entry)
+
+    def compact(self) -> None:
+        """Compact every pending table — before a read that resolves
+        tables by their temp-view names (the ANSI passthrough)."""
+        with self._write_lock:
+            for entry in self.tables.values():
+                self._compact(entry)
+
+    def _compact(self, entry: TableEntry) -> DataFrame:
+        """Fold a pending table into one checkpoint and re-register its
+        view; a no-op otherwise. Caller holds ``_write_lock``: this is a
+        read-modify-write of entry.df, and an INSERT landing between
+        the read and the swap would be dropped.
+
+        Without it a table is the Union of every INSERT's local
+        relation, and Catalyst's ConvertToLocalRelation evaluates a
+        read's projection (the ``@`` distance included) on the driver,
+        interpreted, for every statement. The checkpoint puts the rows
+        in ``defaultParallelism`` executor partitions instead, so the
+        projection runs as a codegen Project in that many tasks. Its
+        blocks live as long as the frame: ``ckpt.release()`` drops them
+        too, so it must not be called in a session serving an
+        in-memory catalog."""
+        if entry.pending:
+            parallelism = self.spark.sparkContext.defaultParallelism
+            entry.df = ckpt(entry.df.repartition(parallelism))
+            entry.df.createOrReplaceTempView(entry.name)
+            entry.pending = False
+        return entry.df
 
     def _empty_frame(self, schema: T.StructType) -> DataFrame:
         """An empty table as ``LocalTableScan <empty>``, not a
@@ -268,8 +306,12 @@ class Catalog:
         workers at execution, and Catalyst can broadcast or
         constant-fold a local relation). Falls back to the row path if
         Arrow rejects a value shape; the caller's ValueError/TypeError
-        mapping handles bad user values identically either way."""
+        mapping handles bad user values identically either way. No rows
+        is an ``_empty_frame``."""
         import pandas as pd
+
+        if not py_rows:
+            return self._empty_frame(schema)
 
         try:
             pdf = pd.DataFrame(py_rows, columns=[f.name for f in schema.fields])
@@ -357,12 +399,13 @@ class Catalog:
                 # so the swap above just deleted the files it would
                 # scan — the next action (SELECT, or the PK semi-join
                 # of the next INSERT) threw FileNotFoundException.
-                # Re-reading also truncates the union lineage a string
-                # of INSERTs accretes, so save() doubles as the same
-                # checkpoint Catalog.insert applies periodically.
+                # Re-reading also replaces the Union of INSERT batches
+                # with one parquet scan, which is as compact as the
+                # checkpoint a read would otherwise take (_compact): a
+                # durable catalog never pays one.
                 e.df = self.spark.read.schema(spark_schema(e.columns)).parquet(path)
                 e.df.createOrReplaceTempView(e.name)
-                e.inserts = 0
+                e.pending = False
                 e.dirty = False
                 e.saved_root = root
                 meta[e.name] = _entry_meta(e)
@@ -425,9 +468,11 @@ class Catalog:
         catalog — the reference bootstraps these as REAL tables an SQL
         client reads (/root/reference/src/storage/system.rs:5-91,
         /root/reference/src/executor/mod.rs:64-71). Refreshed on every
-        CREATE/INSERT/restore so the views always reflect the live
-        catalog. (Temp-view names can't be dotted, so ``system.tables``
-        surfaces as ``system_tables``.)"""
+        CREATE TABLE and restore, the only mutations of the DDL
+        metadata they expose (INSERT leaves them as they are). Both are
+        local relations (``_values_batch``), so reading one schedules no
+        Python tasks. (Temp-view names can't be dotted, so
+        ``system.tables`` surfaces as ``system_tables``.)"""
         self.system_tables().createOrReplaceTempView("system_tables")
         self.system_columns().createOrReplaceTempView("system_columns")
 
@@ -436,9 +481,9 @@ class Catalog:
             {"schema_name": e.schema_name, "table_name": e.name}
             for e in self.tables.values()
         ]
-        return self.spark.createDataFrame(
-            rows, schema="schema_name string, table_name string"
-        ) if rows else self.spark.createDataFrame([], "schema_name string, table_name string")
+        return self._values_batch(
+            rows, T.StructType.fromDDL("schema_name string, table_name string")
+        )
 
     def system_columns(self) -> DataFrame:
         rows = []
@@ -462,11 +507,7 @@ class Catalog:
             "primary_key boolean, is_nullable boolean, metric_key boolean, "
             "metric string, default_expr string"
         )
-        return (
-            self.spark.createDataFrame(rows, schema=schema)
-            if rows
-            else self.spark.createDataFrame([], schema)
-        )
+        return self._values_batch(rows, T.StructType.fromDDL(schema))
 
 
 def _eval_value(expr: object) -> object:

@@ -213,6 +213,9 @@ class Engine:
                 "Only query statements may use the ANSI passthrough; "
                 "mutations must go through the emdrive dialect."
             )
+        # spark.sql resolves catalog tables by their temp views, so
+        # compact any pending one first (Catalog._compact).
+        self.catalog.compact()
         try:
             return self.spark.sql(rewrite_at_distance(sql))
         except Exception as exc:
@@ -246,7 +249,7 @@ class Engine:
     def _execute_select(self, stmt: ast.Select) -> DataFrame:
         stmt.validate()
         entry = self.catalog.get(stmt.table)
-        df = entry.df
+        df = self.catalog.scan(stmt.table)
         base_cols = [c.name for c in entry.columns]
 
         # Computed items land in RESERVED temp columns, renamed only in

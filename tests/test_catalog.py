@@ -1,10 +1,15 @@
 """The catalog's durable save/restore: the crash windows of save()'s
 atomic directory swap, a table left under ``<table>__old`` and a stale
-``<table>__tmp``."""
+``<table>__tmp``. And the compaction of an in-memory table before a
+read: exact under concurrent INSERTs, skipped on the durable path, and
+answers equal to a Python popcount."""
 
 from __future__ import annotations
 
 import os
+import random
+import sys
+import threading
 
 from emdrive_spark.engine import Engine
 
@@ -69,3 +74,105 @@ def test_stale_tmp_dir_does_not_leak_into_save_or_restore(engine, spark, tmp_pat
 
     _leave_stale_tmp(path)
     assert _urls(spark, root) == ["u1", "u2", "u3", "u4"]
+
+
+# -- compaction of an in-memory table before a read ----------------------------
+
+CREATE_PHOTOS = (
+    "CREATE TABLE photos (id UINT32 PRIMARY KEY, "
+    "hash UINT64 METRIC KEY USING mtree(hamming), url STRING(256))"
+)
+
+
+def _insert_sql(rows):
+    values = ", ".join(f"({i}, {h}, 'u{i}')" for i, h in rows)
+    return f"INSERT INTO photos (id, hash, url) VALUES {values}"
+
+
+def test_compaction_never_drops_a_concurrent_insert(engine):
+    """Writers INSERT disjoint id ranges while readers run kNN SELECTs,
+    each of which compacts the table it reads. A compaction that swapped
+    in a frame read before a concurrent INSERT landed would lose that
+    INSERT's rows. More threads than a small host has cores, switching
+    often."""
+    engine.execute(CREATE_PHOTOS)
+    writers, batches, per_batch = 4, 4, 5
+    errors = []
+    done = threading.Event()
+
+    def write(w):
+        try:
+            for b in range(batches):
+                base = (w * batches + b) * per_batch
+                engine.execute(_insert_sql((i, i * 7919) for i in range(base, base + per_batch)))
+        except Exception as exc:  # surfaced by the assert below
+            errors.append(exc)
+
+    def read():
+        try:
+            while not done.is_set():
+                engine.execute("SELECT id, hash @ 3 AS d FROM photos ORDER BY d LIMIT 5").collect()
+        except Exception as exc:
+            errors.append(exc)
+
+    readers = [threading.Thread(target=read) for _ in range(2)]
+    threads = [threading.Thread(target=write, args=(w,)) for w in range(writers)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-4)
+    try:
+        for t in readers + threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+        done.set()
+        for t in readers:
+            t.join(timeout=300)
+    finally:
+        done.set()
+        sys.setswitchinterval(interval)
+
+    assert not any(t.is_alive() for t in readers + threads)
+    assert not errors, errors
+    n = writers * batches * per_batch
+    assert engine.execute("SELECT COUNT(*) AS n FROM photos").collect()[0]["n"] == n
+    ids = {r["id"] for r in engine.execute("SELECT id FROM photos").collect()}
+    assert ids == set(range(n))
+
+
+def test_durable_path_reads_without_compaction(spark, tmp_path):
+    """With a data directory every INSERT is followed by save(), whose
+    parquet re-read is already compact: the next SELECT plans over the
+    parquet scan, with no checkpoint (LogicalRDD) in its plan."""
+    engine = Engine(spark, data_directory=str(tmp_path / "data"))
+    engine.execute(CREATE_PHOTOS)
+    engine.execute(_insert_sql([(1, 7), (2, 8)]))
+    engine.execute(_insert_sql([(3, 5)]))
+    df = engine.execute("SELECT id, hash @ 7 AS d FROM photos ORDER BY d LIMIT 10")
+    analyzed = df._jdf.queryExecution().analyzed().toString()
+    assert "LogicalRDD" not in analyzed, analyzed
+    assert "parquet" in analyzed.lower(), analyzed
+    assert [(r["id"], r["d"]) for r in df.collect()] == [(1, 0), (3, 1), (2, 4)]
+
+
+def test_knn_and_radius_over_inserts_match_popcount(engine):
+    """kNN and radius answers on a table built by several INSERTs equal
+    an exact Python popcount, hashes at and above 2**63 included."""
+    rng = random.Random(5)
+    hashes = [rng.getrandbits(64) for _ in range(57)] + [2**63, 2**64 - 1, 0]
+    rows = list(enumerate(hashes))
+    engine.execute(CREATE_PHOTOS)
+    for start in range(0, len(rows), 20):
+        engine.execute(_insert_sql(rows[start : start + 20]))
+
+    q = rng.getrandbits(64) | (1 << 63)
+    true_d = {i: bin(h ^ q).count("1") for i, h in rows}
+    knn = engine.execute(f"SELECT id, hash @ {q} AS d FROM photos ORDER BY d LIMIT 10").collect()
+    assert [r["d"] for r in knn] == sorted(true_d.values())[:10]
+    assert all(r["d"] == true_d[r["id"]] for r in knn)
+
+    radius = sorted(true_d.values())[15]
+    got = engine.execute(
+        f"SELECT id, hash @ {q} AS d FROM photos WHERE d < {radius}"
+    ).collect()
+    assert {r["id"] for r in got} == {i for i, d in true_d.items() if d < radius}
+    assert all(r["d"] == true_d[r["id"]] for r in got)

@@ -528,3 +528,47 @@ def test_fleet_scale_markers_all_triaged(spark):
         if extra:
             unexpected[name] = sorted(extra)
     assert not unexpected, f"untriaged scale markers: {unexpected}"
+
+
+# -- the served `@` scan over an in-memory table ---------------------------
+
+_PHOTOS = (
+    "CREATE TABLE photos (id UINT32 PRIMARY KEY, "
+    "hash UINT64 METRIC KEY USING mtree(hamming), url STRING(256))"
+)
+
+
+def _two_inserts(engine):
+    engine.execute(_PHOTOS)
+    engine.execute("INSERT INTO photos (id, hash, url) VALUES (1, 5, 'a'), (2, 9, 'b')")
+    engine.execute("INSERT INTO photos (id, hash, url) VALUES (3, 12, 'c')")
+
+
+def test_knn_over_inserts_is_codegen_over_checkpoint(engine):
+    """After two INSERTs the table is a Union of local relations; a read
+    compacts it into one checkpoint, so the `@` projection runs as a
+    whole-stage-codegen Project over the checkpoint scan in executor
+    tasks, not in a LocalTableScan that Catalyst computed on the driver."""
+    _two_inserts(engine)
+    df = engine.execute("SELECT id, hash @ 7 AS d FROM photos ORDER BY d LIMIT 10")
+    lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    project = next(i for i, ln in enumerate(lines) if "Project [" in ln and "bit_count" in ln)
+    assert "*(" in lines[project], lines
+    assert "Scan ExistingRDD" in lines[project + 1], lines
+    assert not any("LocalTableScan" in ln and "__emdrive_sel_" in ln for ln in lines), lines
+
+
+def test_compacted_table_has_default_parallelism_partitions(engine, spark):
+    _two_inserts(engine)
+    df = engine.catalog.scan("photos")
+    assert df.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+
+
+def test_system_columns_is_a_local_relation(engine):
+    """The system views plan as a LocalTableScan, not a parallelized
+    Python RDD split into defaultParallelism slices."""
+    _two_inserts(engine)
+    for view in ("system_columns", "system_tables"):
+        df = engine.execute(f"SELECT * FROM {view}")
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Scan ExistingRDD" not in plan, plan
