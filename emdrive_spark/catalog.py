@@ -8,14 +8,18 @@ emdrive nullability (SURVEY §1.1).
 
 Storage model: each table is a DataFrame registered as a temp view
 under the table's name (Spark DataFrames are immutable, so a mutation
-swaps in a new frame and re-registers the view). An INSERT unions its
-VALUES batch onto the frame and marks the table pending; the next read
-through the catalog (``Catalog.scan``, ``Catalog.compact``, or the PK
-check of the next INSERT) first folds a pending table into one
-executor-side checkpoint of ``defaultParallelism`` partitions, so reads
-never plan over a Union of local relations and lineage stays at most
-checkpoint ∪ one batch. A durable catalog (``save``/``restore``) is
-never pending: its frames are parquet scans, already compact. On a real
+swaps in a new frame and re-registers the view). The frame is at most
+two leaves: a compacted base (an executor-side checkpoint of
+``defaultParallelism`` partitions, or a parquet scan) and ONE local
+relation holding every row INSERTed since, which each INSERT rebuilds
+from the rows the entry keeps on the driver. Catalyst evaluates a
+read's projection over that local relation on the driver, with no
+Spark job; that is the cheaper read while the local rows are few, and
+the dearer one past ``_LOCAL_ROWS_MAX``. So the next read through the
+catalog (``Catalog.scan``, ``Catalog.compact``, or the PK check of the
+next INSERT) folds a table past that size into a new base (``_compact``).
+A durable catalog (``save``/``restore``) re-reads each table it writes
+as a parquet base, so it never compacts. On a real
 deployment the same class writes PK-sorted Parquet/Delta per table —
 the in-session dict is the unit-test surface, the layout contract
 (sorted by PK for min/max pruning) is what scales.
@@ -24,7 +28,7 @@ the in-session dict is the unit-test surface, the layout contract
 from __future__ import annotations
 
 import datetime as _dt
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -37,6 +41,15 @@ from emdrive_spark.types import EmdriveType
 
 DEFAULT_SCHEMA = "main"
 
+# Local rows past which a read compacts a table (Catalog._compact).
+# Over one local relation of n rows a kNN or radius read costs the
+# driver's interpreted projection, which grows with n; over a
+# checkpoint it costs a defaultParallelism-task job whatever n is. On
+# a 4-vCPU host the two cost the same near 2,000 rows (local ahead at
+# 500, checkpoint ahead at 4,000). Below it a table is never
+# compacted: CREATE, a small INSERT and a SELECT run no extra job.
+_LOCAL_ROWS_MAX = 2_000
+
 
 @dataclass
 class TableEntry:
@@ -44,10 +57,14 @@ class TableEntry:
     schema_name: str
     columns: tuple[ast.ColumnDef, ...]
     df: DataFrame
-    # INSERTed into since df was last a single scan (checkpoint or
-    # parquet): df is a Union with local VALUES batches, which Catalyst
-    # would evaluate on the driver. Catalog reads compact it first.
-    pending: bool = False
+    # df's compacted leaf (a checkpoint or a parquet scan); None while
+    # every row the table holds is in local_rows.
+    base: DataFrame | None = None
+    # Rows INSERTed since base was set, as the python values each
+    # INSERT rebuilds into ONE local relation: df is base ∪ that
+    # relation (or either alone), so lineage stays at two leaves
+    # however many INSERTs land.
+    local_rows: list[dict] = field(default_factory=list)
     # Mutated since the last save() to the current save root. New and
     # inserted-into tables are dirty; restore() marks entries clean
     # (their on-disk snapshot IS the restore root). save() skips clean
@@ -70,6 +87,12 @@ class TableEntry:
     # counting, so the flag can only ever skip a check that is
     # vacuously true.
     known_empty: bool = False
+
+    @property
+    def oversized(self) -> bool:
+        """More local rows than a driver-side read should evaluate:
+        the next read compacts the table (Catalog._compact)."""
+        return len(self.local_rows) > _LOCAL_ROWS_MAX
 
     @property
     def pk(self) -> ast.ColumnDef:
@@ -214,9 +237,9 @@ class Catalog:
                     f"Duplicate PRIMARY KEY value in INSERT batch for table {stmt.table}."
                 )
             if not entry.known_empty:
-                # The semi-join is a read: it compacts a pending table
-                # first, which also keeps lineage at checkpoint ∪ one
-                # batch however long an ingest loop runs.
+                # The semi-join is a read: it compacts an oversized
+                # table first, which also bounds the rows each INSERT
+                # rebuilds below however long an ingest loop runs.
                 clashes = (
                     batch.join(self._compact(entry).select(pk), on=pk, how="left_semi")
                     .limit(1)
@@ -227,9 +250,13 @@ class Catalog:
                         f"PRIMARY KEY value already exists in table {stmt.table}."
                     )
 
-            entry.df = entry.df.unionByName(batch)
+            local_rows = entry.local_rows + py_rows
+            df = self._values_batch(local_rows, schema) if entry.local_rows else batch
+            if entry.base is not None:
+                df = entry.base.unionByName(df)
+            entry.df = df  # one assignment: scan() reads it unlocked
+            entry.local_rows = local_rows
             entry.known_empty = False
-            entry.pending = True
             entry.dirty = True  # next save() must rewrite this table
             entry.df.createOrReplaceTempView(entry.name)
         # no refresh_system_views() here: the system relations expose
@@ -240,38 +267,46 @@ class Catalog:
     # -- reads ----------------------------------------------------------
 
     def scan(self, name: str) -> DataFrame:
-        """The table's frame for a read, compacted first if pending."""
+        """The table's frame for a read, compacted first if oversized."""
         entry = self.get(name)
+        if not entry.oversized:
+            # Unlocked: entry.df is swapped by one assignment, so this
+            # read waits neither for another table's compaction nor
+            # for save(). A racing INSERT can only make df larger.
+            return entry.df
         with self._write_lock:
             return self._compact(entry)
 
     def compact(self) -> None:
-        """Compact every pending table — before a read that resolves
+        """Compact every oversized table — before a read that resolves
         tables by their temp-view names (the ANSI passthrough)."""
-        with self._write_lock:
-            for entry in self.tables.values():
-                self._compact(entry)
+        oversized = [e for e in list(self.tables.values()) if e.oversized]
+        if oversized:
+            with self._write_lock:
+                for entry in oversized:
+                    self._compact(entry)
 
     def _compact(self, entry: TableEntry) -> DataFrame:
-        """Fold a pending table into one checkpoint and re-register its
-        view; a no-op otherwise. Caller holds ``_write_lock``: this is a
-        read-modify-write of entry.df, and an INSERT landing between
-        the read and the swap would be dropped.
+        """Fold an oversized table into one checkpoint, its new base,
+        and re-register its view; a no-op otherwise (re-checked here,
+        so a caller may test ``oversized`` unlocked). Caller holds
+        ``_write_lock``: this is a read-modify-write of entry.df, and an
+        INSERT landing between the read and the swap would be dropped.
 
-        Without it a table is the Union of every INSERT's local
-        relation, and Catalyst's ConvertToLocalRelation evaluates a
-        read's projection (the ``@`` distance included) on the driver,
-        interpreted, for every statement. The checkpoint puts the rows
-        in ``defaultParallelism`` executor partitions instead, so the
+        Past ``_LOCAL_ROWS_MAX`` local rows, Catalyst's
+        ConvertToLocalRelation evaluating a read's projection (the
+        ``@`` distance included) on the driver, interpreted, costs more
+        than a job. The checkpoint puts the rows in
+        ``defaultParallelism`` executor partitions instead, so the
         projection runs as a codegen Project in that many tasks. Its
         blocks live as long as the frame: ``ckpt.release()`` drops them
         too, so it must not be called in a session serving an
         in-memory catalog."""
-        if entry.pending:
+        if entry.oversized:
             parallelism = self.spark.sparkContext.defaultParallelism
-            entry.df = ckpt(entry.df.repartition(parallelism))
+            entry.df = entry.base = ckpt(entry.df.repartition(parallelism))
+            entry.local_rows = []
             entry.df.createOrReplaceTempView(entry.name)
-            entry.pending = False
         return entry.df
 
     def _empty_frame(self, schema: T.StructType) -> DataFrame:
@@ -399,13 +434,12 @@ class Catalog:
                 # so the swap above just deleted the files it would
                 # scan — the next action (SELECT, or the PK semi-join
                 # of the next INSERT) threw FileNotFoundException.
-                # Re-reading also replaces the Union of INSERT batches
-                # with one parquet scan, which is as compact as the
-                # checkpoint a read would otherwise take (_compact): a
-                # durable catalog never pays one.
-                e.df = self.spark.read.schema(spark_schema(e.columns)).parquet(path)
+                # The parquet scan is also the new base, and the local
+                # rows it now holds are dropped: a durable catalog
+                # never holds enough of them to compact (_compact).
+                e.df = e.base = self.spark.read.schema(spark_schema(e.columns)).parquet(path)
                 e.df.createOrReplaceTempView(e.name)
-                e.pending = False
+                e.local_rows = []
                 e.dirty = False
                 e.saved_root = root
                 meta[e.name] = _entry_meta(e)
@@ -451,6 +485,7 @@ class Catalog:
                     schema_name=t["schema_name"],
                     columns=columns,
                     df=df,
+                    base=df,
                     # the snapshot just read IS this root's current
                     # state — the next save() to the same root may
                     # skip it until a mutation re-dirties it

@@ -214,7 +214,7 @@ class Engine:
                 "mutations must go through the emdrive dialect."
             )
         # spark.sql resolves catalog tables by their temp views, so
-        # compact any pending one first (Catalog._compact).
+        # compact any oversized one first (Catalog._compact).
         self.catalog.compact()
         try:
             return self.spark.sql(rewrite_at_distance(sql))

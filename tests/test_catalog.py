@@ -2,7 +2,7 @@
 atomic directory swap, a table left under ``<table>__old`` and a stale
 ``<table>__tmp``. And the compaction of an in-memory table before a
 read: exact under concurrent INSERTs, skipped on the durable path, and
-answers equal to a Python popcount."""
+answers equal to a Python popcount whether or not it compacted."""
 
 from __future__ import annotations
 
@@ -11,6 +11,9 @@ import random
 import sys
 import threading
 
+import pytest
+
+from emdrive_spark import catalog
 from emdrive_spark.engine import Engine
 
 # A three-column table with a METRIC KEY.
@@ -76,6 +79,18 @@ def test_stale_tmp_dir_does_not_leak_into_save_or_restore(engine, spark, tmp_pat
     assert _urls(spark, root) == ["u1", "u2", "u3", "u4"]
 
 
+def test_insert_after_restore_keeps_restored_rows(engine, spark, tmp_path):
+    """A restored table's parquet scan is the base that every later
+    INSERT's rows are unioned onto, so none of the restored rows is lost."""
+    root = str(tmp_path / "cat")
+    _saved_rt5(engine, root)
+    fresh = Engine(spark)
+    fresh.catalog.restore(root)
+    fresh.execute("INSERT INTO rt5 (hash, url, width) VALUES (4, 'u4', 40)")
+    urls = sorted(r["url"] for r in fresh.execute("SELECT url FROM rt5").collect())
+    assert urls == ["u1", "u2", "u3", "u4"]
+
+
 # -- compaction of an in-memory table before a read ----------------------------
 
 CREATE_PHOTOS = (
@@ -89,12 +104,14 @@ def _insert_sql(rows):
     return f"INSERT INTO photos (id, hash, url) VALUES {values}"
 
 
-def test_compaction_never_drops_a_concurrent_insert(engine):
+def test_compaction_never_drops_a_concurrent_insert(engine, monkeypatch):
     """Writers INSERT disjoint id ranges while readers run kNN SELECTs,
     each of which compacts the table it reads. A compaction that swapped
     in a frame read before a concurrent INSERT landed would lose that
     INSERT's rows. More threads than a small host has cores, switching
-    often."""
+    often, and a local-row limit low enough that every other read
+    compacts."""
+    monkeypatch.setattr(catalog, "_LOCAL_ROWS_MAX", 7)
     engine.execute(CREATE_PHOTOS)
     writers, batches, per_batch = 4, 4, 5
     errors = []
@@ -137,12 +154,15 @@ def test_compaction_never_drops_a_concurrent_insert(engine):
     assert engine.execute("SELECT COUNT(*) AS n FROM photos").collect()[0]["n"] == n
     ids = {r["id"] for r in engine.execute("SELECT id FROM photos").collect()}
     assert ids == set(range(n))
+    assert engine.catalog.get("photos").base is not None  # it did compact
 
 
-def test_durable_path_reads_without_compaction(spark, tmp_path):
+def test_durable_path_reads_without_compaction(spark, tmp_path, monkeypatch):
     """With a data directory every INSERT is followed by save(), whose
     parquet re-read is already compact: the next SELECT plans over the
-    parquet scan, with no checkpoint (LogicalRDD) in its plan."""
+    parquet scan, with no checkpoint (LogicalRDD) in its plan, even
+    where an in-memory table of one row would be compacted."""
+    monkeypatch.setattr(catalog, "_LOCAL_ROWS_MAX", 0)
     engine = Engine(spark, data_directory=str(tmp_path / "data"))
     engine.execute(CREATE_PHOTOS)
     engine.execute(_insert_sql([(1, 7), (2, 8)]))
@@ -154,9 +174,13 @@ def test_durable_path_reads_without_compaction(spark, tmp_path):
     assert [(r["id"], r["d"]) for r in df.collect()] == [(1, 0), (3, 1), (2, 4)]
 
 
-def test_knn_and_radius_over_inserts_match_popcount(engine):
+@pytest.mark.parametrize("compacted", [False, True])
+def test_knn_and_radius_over_inserts_match_popcount(engine, monkeypatch, compacted):
     """kNN and radius answers on a table built by several INSERTs equal
-    an exact Python popcount, hashes at and above 2**63 included."""
+    an exact Python popcount, hashes at and above 2**63 included: read
+    as one local relation, and compacted past a lowered limit."""
+    if compacted:
+        monkeypatch.setattr(catalog, "_LOCAL_ROWS_MAX", 10)
     rng = random.Random(5)
     hashes = [rng.getrandbits(64) for _ in range(57)] + [2**63, 2**64 - 1, 0]
     rows = list(enumerate(hashes))
@@ -176,3 +200,4 @@ def test_knn_and_radius_over_inserts_match_popcount(engine):
     ).collect()
     assert {r["id"] for r in got} == {i for i, d in true_d.items() if d < radius}
     assert all(r["d"] == true_d[r["id"]] for r in got)
+    assert (engine.catalog.get("photos").base is not None) == compacted

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import pytest
 
-from emdrive_spark import registry
+from emdrive_spark import catalog, registry
 from emdrive_spark.plans.topk_planner import plan_topk
 from emdrive_spark.sources.tables import load
 
@@ -538,28 +538,53 @@ _PHOTOS = (
 )
 
 
-def _two_inserts(engine):
+def _insert(engine, ids):
+    values = ", ".join(f"({i}, {i * 2654435761 % 2**64}, 'u{i}')" for i in ids)
+    engine.execute(f"INSERT INTO photos (id, hash, url) VALUES {values}")
+
+
+def _two_inserts(engine, per_insert=2):
     engine.execute(_PHOTOS)
-    engine.execute("INSERT INTO photos (id, hash, url) VALUES (1, 5, 'a'), (2, 9, 'b')")
-    engine.execute("INSERT INTO photos (id, hash, url) VALUES (3, 12, 'c')")
+    _insert(engine, range(per_insert))
+    _insert(engine, range(per_insert, 2 * per_insert))
+
+
+def _knn_plan_lines(engine):
+    df = engine.execute("SELECT id, hash @ 7 AS d FROM photos ORDER BY d LIMIT 10")
+    return df._jdf.queryExecution().executedPlan().toString().splitlines()
 
 
 def test_knn_over_inserts_is_codegen_over_checkpoint(engine):
-    """After two INSERTs the table is a Union of local relations; a read
-    compacts it into one checkpoint, so the `@` projection runs as a
-    whole-stage-codegen Project over the checkpoint scan in executor
-    tasks, not in a LocalTableScan that Catalyst computed on the driver."""
-    _two_inserts(engine)
-    df = engine.execute("SELECT id, hash @ 7 AS d FROM photos ORDER BY d LIMIT 10")
-    lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    """Two INSERTs of more local rows together than a driver-side read
+    should evaluate: the read compacts them into one checkpoint, so the
+    `@` projection runs as a whole-stage-codegen Project over the
+    checkpoint scan in executor tasks, not in a LocalTableScan that
+    Catalyst computed on the driver."""
+    _two_inserts(engine, catalog._LOCAL_ROWS_MAX // 2 + 1)
+    lines = _knn_plan_lines(engine)
     project = next(i for i, ln in enumerate(lines) if "Project [" in ln and "bit_count" in ln)
     assert "*(" in lines[project], lines
     assert "Scan ExistingRDD" in lines[project + 1], lines
     assert not any("LocalTableScan" in ln and "__emdrive_sel_" in ln for ln in lines), lines
 
 
-def test_compacted_table_has_default_parallelism_partitions(engine, spark):
+def test_small_table_reads_as_one_local_relation(engine):
+    """Two small INSERTs stay one local relation on the driver, which
+    Catalyst projects with no job; compacting them would add a shuffle
+    and checkpoint job plus a defaultParallelism-task read job to every
+    CREATE, INSERT, SELECT sequence over a few rows."""
     _two_inserts(engine)
+    entry = engine.catalog.get("photos")
+    analyzed = entry.df._jdf.queryExecution().analyzed().toString()
+    assert "Union" not in analyzed, analyzed
+    lines = _knn_plan_lines(engine)
+    assert entry.base is None and len(entry.local_rows) == 4
+    assert not any("Scan ExistingRDD" in ln for ln in lines), lines
+    assert any("LocalTableScan" in ln and "__emdrive_sel_" in ln for ln in lines), lines
+
+
+def test_compacted_table_has_default_parallelism_partitions(engine, spark):
+    _two_inserts(engine, catalog._LOCAL_ROWS_MAX // 2 + 1)
     df = engine.catalog.scan("photos")
     assert df.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
 
