@@ -77,8 +77,10 @@ def is_query(sql: str) -> bool:
 #
 # The dialect layer compiles `@` itself; raw ANSI queries get a textual
 # rewrite `X @ Y` → `emdrive_hamming(X, Y)` (a Spark SQL scalar UDF
-# registered per session, exact decimal limb-split popcount — same
-# arithmetic as functions.distance.hamming_wide). Operands are
+# registered per session whose body is functions.distance.
+# hamming_wide_sql: popcount over the two 64-bit halves of each
+# DECIMAL(38,0) operand, each half a signed long by the 2⁶³-offset
+# identity — the dialect's UINT128 arithmetic). Operands are
 # identifiers or numeric literals; 0b/0x literals (the README's hash
 # idiom, not ANSI) are converted to decimal. String literals are never
 # touched (the rewrite splits on quotes first).
@@ -117,26 +119,17 @@ def rewrite_at_distance(sql: str) -> str:
 
 
 def _hamming_sql_udf_ddl() -> str:
-    """4-limb exact decimal popcount as a SQL scalar UDF (covers the
-    full ≤128-bit-in-38-digits range; pmod/exact-division identical to
-    hamming_wide — floor(x/2³²) alone could round across an integer
-    boundary)."""
-
-    def limbs(var: str) -> list[str]:
-        d = f"CAST({var} AS DECIMAL(38,0))"
-        out = []
-        for _ in range(4):
-            lo = f"pmod({d}, 4294967296)"
-            out.append(f"CAST({lo} AS BIGINT)")
-            d = f"CAST(({d} - {lo}) / 4294967296 AS DECIMAL(38,0))"
-        return out
-
-    body = " + ".join(
-        f"bit_count({xa} ^ {xb})" for xa, xb in zip(limbs("a"), limbs("b"))
-    )
+    """``emdrive_hamming(a, b)``: exact popcount of a XOR b over the full
+    DECIMAL(38,0) range, as a SQL scalar UDF. The body is
+    ``D.hamming_wide_sql`` — hamming_wide's UINT128 formula (exact
+    ``pmod``/division split into 64-bit halves, the low half offset by
+    2⁶³ into a signed long), so a UINT64 or UINT128 value gets the same
+    distance through raw ANSI SQL as through the dialect. A negative
+    operand compares by its bits modulo 2¹²⁸."""
     return (
         "CREATE OR REPLACE TEMPORARY FUNCTION emdrive_hamming("
-        "a DECIMAL(38,0), b DECIMAL(38,0)) RETURNS BIGINT RETURN " + body
+        "a DECIMAL(38,0), b DECIMAL(38,0)) RETURNS BIGINT RETURN "
+        + D.hamming_wide_sql("a", "b")
     )
 
 
@@ -405,10 +398,10 @@ class Engine:
                 return D.hamming_binary(left, right)
             right = self._compile(entry, expr.right, extra_cols, rename)
             if cdef.etype.base in ("UINT64", "UINT128"):
-                # decimal-backed hashes: limb-split popcount — a plain
-                # cast("long") overflows for values ≥ 2⁶³.
+                # decimal-backed hashes: a plain cast("long") overflows
+                # for values ≥ 2⁶³, so offset by 2⁶³ first (hamming_wide).
                 return D.hamming_wide(
-                    left, right, nlimbs=4 if cdef.etype.base == "UINT128" else 2
+                    left, right, bits=128 if cdef.etype.base == "UINT128" else 64
                 )
             return metric_fn(left.cast("long"), right.cast("long")).cast("long")
         right = self._compile(entry, expr.right, extra_cols, rename)

@@ -14,6 +14,8 @@ All functions take/return ``pyspark.sql.Column``.
 
 from __future__ import annotations
 
+from decimal import Decimal
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -30,41 +32,75 @@ def hamming(a: Column | str, b: Column | int) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
 
-def hamming_wide(a: Column, b: Column, nlimbs: int = 2) -> Column:
+# The offset identity behind hamming_wide and hamming_wide_sql: for u in
+# [0, 2⁶⁴), u − 2⁶³ lies in [−2⁶³, 2⁶³) and so casts to a signed long
+# exactly, and its bit pattern is u's with the top bit flipped.
+_TWO63 = 2**63
+_TWO64 = 2**64
+
+
+def _offset_long(u: Column) -> Column:
+    """u in [0, 2⁶⁴) as the signed long holding its 64 bits, top bit
+    flipped: one exact decimal subtract and one cast."""
+    return (u - F.lit(Decimal(_TWO63))).cast("long")
+
+
+def hamming_wide(a: Column | str, b: Column | str, bits: int = 64) -> Column:
     """Hamming distance over the FULL unsigned 64/128-bit range.
 
     UINT64/UINT128 columns are stored as DECIMAL (types.py) because
     values ≥ 2⁶³ overflow Spark's signed long — a plain ``cast("long")``
     before popcount throws CAST_OVERFLOW on exactly the perceptual-hash
-    values the reference's METRIC KEY is for. Split each operand into
-    32-bit limbs with EXACT decimal arithmetic — ``pmod`` is an exact
-    remainder, and (d - lo) / 2³² divides evenly so the quotient's
-    decimal rounding is a no-op (naive floor(d / 2³²) could round
-    5.9999… up across the integer boundary) — then popcount the XOR of
-    each limb pair and sum. Bit-identical to wide popcount; all codegen
-    arithmetic, fused into the scan like every other metric here.
+    values the reference's METRIC KEY is for. Instead, for u in
+    [0, 2⁶⁴), ``CAST(u − 2⁶³ AS BIGINT)`` never overflows and holds u's
+    bits with the top one flipped; the flip cancels in an XOR, so
 
-    nlimbs: 2 for UINT64, 4 for UINT128 (values beyond DECIMAL(38,0) —
-    above ~10³⁸ — are the documented BinaryType edge, types.py)."""
+        bit_count(CAST(a − 2⁶³ AS BIGINT) ^ CAST(b − 2⁶³ AS BIGINT))
+            = popcount(a XOR b).
+
+    A row then costs one exact decimal subtract and one cast, fused into
+    the scan's codegen like every other metric here.
+
+    bits=64 (UINT64): ``a`` is the METRIC KEY column, in [0, 2⁶⁴) by its
+    type. ``b`` is reduced with ``pmod(b, 2⁶⁴)`` first, so an operand
+    outside that range (a negative or ≥ 2⁶⁴ literal) compares by its low
+    64 bits; for a literal the whole ``b`` side constant-folds.
+
+    bits=128 (UINT128, DECIMAL(38,0)): each operand d splits into two
+    64-bit halves, ``lo = pmod(d, 2⁶⁴)`` and the exact quotient
+    ``hi = (d − lo) / 2⁶⁴`` (it divides evenly, so the decimal
+    division's rounding is a no-op; floor(d / 2⁶⁴) could round across
+    an integer boundary). |d| < 10³⁸ < 2¹²⁷, so hi fits a signed long as
+    is and lo takes the offset: the distance is popcount over d mod 2¹²⁸,
+    the bit pattern of a negative d included. Values beyond
+    DECIMAL(38,0) (above ~10³⁸) are the documented BinaryType edge,
+    types.py."""
     a = F.col(a) if isinstance(a, str) else a
     b = F.col(b) if isinstance(b, str) else b
-    two32 = F.lit(4294967296).cast("decimal(38,0)")
+    b = b.cast("decimal(38,0)")
+    if bits == 64:
+        b = F.pmod(b, F.lit(Decimal(_TWO64)))
+        return F.bit_count(_offset_long(a).bitwiseXOR(_offset_long(b))).cast("long")
 
-    def limbs(c: Column) -> list[Column]:
-        d = c.cast("decimal(38,0)")
-        out = []
-        for _ in range(nlimbs):
-            lo = F.pmod(d, two32)
-            out.append(lo.cast("long"))
-            d = ((d - lo) / two32).cast("decimal(38,0)")
-        return out
+    def halves(d: Column) -> tuple[Column, Column]:
+        lo = F.pmod(d, F.lit(Decimal(_TWO64)))
+        return ((d - lo) / F.lit(Decimal(_TWO64))).cast("long"), _offset_long(lo)
 
-    pairs = zip(limbs(a), limbs(b))
-    total = None
-    for x, y in pairs:
-        term = F.bit_count(x.bitwiseXOR(y))
-        total = term if total is None else total + term
-    return total.cast("long")
+    (ha, la), (hb, lb) = halves(a.cast("decimal(38,0)")), halves(b)
+    return (F.bit_count(ha.bitwiseXOR(hb)) + F.bit_count(la.bitwiseXOR(lb))).cast("long")
+
+
+def hamming_wide_sql(a: str, b: str) -> str:
+    """hamming_wide's UINT128 arithmetic as Spark SQL text over two
+    DECIMAL(38,0) expressions: the body of the raw-ANSI ``@`` function
+    (engine.py), so both paths compute one formula."""
+
+    def halves(d: str) -> tuple[str, str]:
+        lo = f"pmod({d}, {_TWO64})"
+        return f"CAST(({d} - {lo}) / {_TWO64} AS BIGINT)", f"CAST({lo} - {_TWO63} AS BIGINT)"
+
+    (ha, la), (hb, lb) = halves(a), halves(b)
+    return f"bit_count({ha} ^ {hb}) + bit_count({la} ^ {lb})"
 
 
 def hamming_binary(a: Column, b: Column, nbytes: int = 16) -> Column:

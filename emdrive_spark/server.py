@@ -56,7 +56,9 @@ def _rows_json(df, max_rows: int) -> str:
     # reference serializes everything, encoding.rs:327-338, which is
     # fine for its single-node page store and an OOM for ours). One
     # sentinel row past the cap distinguishes at-the-limit from over
-    # it.
+    # it. CollectLimit's first job covers the session's parallelism in
+    # partitions (session.py), so over a compacted table this is one
+    # job holding at most parallelism × (cap + 1) rows.
     if max_rows > 0:
         rows = df.limit(max_rows + 1).collect()
         if len(rows) > max_rows:

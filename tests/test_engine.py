@@ -12,6 +12,8 @@ from emdrive_spark.engine import Engine
 from emdrive_spark.functions.generators import ulid
 from emdrive_spark.sql.errors import EmdriveValidationError
 
+from .test_distance import _EDGES64, _EDGES128
+
 CREATE = """
 CREATE TABLE photos_seen (
     hash UINT8 METRIC KEY USING mtree(hamming),
@@ -158,6 +160,25 @@ def test_ansi_passthrough_join_and_cte(engine):
         "SELECT id, v + w AS s FROM j"
     ).collect()
     assert [(r["id"], r["s"]) for r in rows] == [(1, 17)]
+
+
+@pytest.mark.parametrize("htype, edges", [("UINT64", _EDGES64), ("UINT128", _EDGES128)])
+def test_ansi_at_matches_dialect_at_by_value(engine, monkeypatch, htype, edges):
+    """`@` through the raw-ANSI rewrite (emdrive_hamming) gives the
+    dialect's distances, and Python's, at every edge value."""
+    engine.execute_script(
+        f"CREATE TABLE ah (h {htype} METRIC KEY USING mtree(hamming), id UINT32 PRIMARY KEY);"
+        "INSERT INTO ah (h, id) VALUES " + ", ".join(f"({h}, {i})" for i, h in enumerate(edges)) + ";"
+    )
+    passthrough, ansi_calls = engine._ansi_passthrough, []
+    monkeypatch.setattr(engine, "_ansi_passthrough", lambda sql: ansi_calls.append(sql) or passthrough(sql))
+    for q in edges:
+        want = {i: bin(h ^ q).count("1") for i, h in enumerate(edges)}
+        dialect = engine.execute(f"SELECT id, h @ {q} AS d FROM ah").collect()
+        ansi = engine.execute(f"SELECT id, h @ {q} AS d FROM ah GROUP BY id, h").collect()
+        assert {r["id"]: r["d"] for r in dialect} == want, q
+        assert {r["id"]: r["d"] for r in ansi} == want, q
+    assert len(ansi_calls) == len(edges)
 
 
 def test_ansi_passthrough_rejects_mutations(engine):

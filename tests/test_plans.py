@@ -8,6 +8,7 @@ import pytest
 
 from emdrive_spark import catalog, registry
 from emdrive_spark.plans.topk_planner import plan_topk
+from emdrive_spark.server import _rows_json
 from emdrive_spark.sources.tables import load
 
 from .conftest import SF_SMOKE
@@ -549,8 +550,12 @@ def _two_inserts(engine, per_insert=2):
     _insert(engine, range(per_insert, 2 * per_insert))
 
 
+_KNN_SQL = "SELECT id, hash @ 7 AS d FROM photos ORDER BY d LIMIT 10"
+_RADIUS_SQL = "SELECT id, hash @ 7 AS d FROM photos WHERE d < 40"
+
+
 def _knn_plan_lines(engine):
-    df = engine.execute("SELECT id, hash @ 7 AS d FROM photos ORDER BY d LIMIT 10")
+    df = engine.execute(_KNN_SQL)
     return df._jdf.queryExecution().executedPlan().toString().splitlines()
 
 
@@ -566,6 +571,56 @@ def test_knn_over_inserts_is_codegen_over_checkpoint(engine):
     assert "*(" in lines[project], lines
     assert "Scan ExistingRDD" in lines[project + 1], lines
     assert not any("LocalTableScan" in ln and "__emdrive_sel_" in ln for ln in lines), lines
+
+
+def test_knn_distance_is_one_offset_xor(engine):
+    """The compacted kNN's codegen Project computes `@` as one bit_count
+    over an offset long per operand, with no per-row pmod or decimal
+    division (the 32-bit limb split those were)."""
+    _two_inserts(engine, catalog._LOCAL_ROWS_MAX // 2 + 1)
+    line = next(ln for ln in _knn_plan_lines(engine) if "Project [" in ln and "bit_count" in ln)
+    assert "*(" in line, line
+    assert line.count("bit_count(") == 1, line
+    assert "pmod" not in line and " / " not in line, line
+
+
+def _served_jobs(engine, spark, sql: str, group: str) -> int:
+    """Spark jobs one served statement runs: Engine.execute, then the
+    server's capped collect, after a first read that may compact."""
+    _rows_json(engine.execute(sql), 10_000)
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        _rows_json(engine.execute(sql), 10_000)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize(
+    "per_insert, radius_jobs",
+    # a LocalTableScan answers a capped collect on the driver, with no job
+    [(20, 0), (catalog._LOCAL_ROWS_MAX // 2 + 1, 1)],
+    ids=["local", "compacted"],
+)
+def test_served_statement_runs_one_job(engine, spark, per_insert, radius_jobs):
+    """A served kNN runs one Spark job, and a radius statement at most
+    one: its capped collect (CollectLimit) scans every partition of a
+    compacted table in its first job, so it needs no second one."""
+    _two_inserts(engine, per_insert)
+    assert _served_jobs(engine, spark, _KNN_SQL, f"knn-{per_insert}") == 1
+    assert _served_jobs(engine, spark, _RADIUS_SQL, f"radius-{per_insert}") == radius_jobs
+
+
+@pytest.mark.xfail(
+    strict=True,
+    reason="a table of no more rows than the LIMIT loses the limit in the "
+    "optimizer (EliminateLimits), so the kNN plans as a global range-"
+    "partitioned sort: a sampling job, a shuffle job and a result job",
+)
+def test_knn_over_table_within_its_limit_runs_one_job(engine, spark):
+    _two_inserts(engine)
+    assert _served_jobs(engine, spark, _KNN_SQL, "knn-within-limit") == 1
 
 
 def test_small_table_reads_as_one_local_relation(engine):

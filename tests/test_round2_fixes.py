@@ -4,7 +4,7 @@
   script must not mutate through a read-only entry point)
 - quote-aware script splitting (';' inside a string literal is content)
 - full-range UINT64/UINT128: INSERT/SELECT round-trip above 2⁶³ and
-  limb-split hamming that a plain cast("long") would overflow
+  wide hamming that a plain cast("long") would overflow
 - unary-minus literals
 - env-var launch config (reference /root/reference/src/config.rs:40-48)
 - dedup_embedding candidate gating: bit-identical to the brute-force
@@ -118,28 +118,6 @@ def test_hamming_at_uint128_range(engine):
     assert rows[0]["d"] == 1
     rows = engine.execute("SELECT h @ 1 AS d FROM hashes128").collect()
     assert rows[0]["d"] == 2  # XOR clears bit 0 → bits 100 and 1 remain
-
-
-def test_hamming_wide_matches_python_popcount(spark):
-    from pyspark.sql import functions as F
-
-    from emdrive_spark.functions.distance import hamming_wide
-
-    pairs = [
-        (0, 0),
-        (2**64 - 1, 0),
-        (2**63, 2**63 - 1),
-        ((1 << 63) | 12345, 54321),
-    ]
-    df = spark.createDataFrame(
-        [(str(a), str(b)) for a, b in pairs], "a string, b string"
-    ).select(
-        F.col("a").cast("decimal(38,0)").alias("a"),
-        F.col("b").cast("decimal(38,0)").alias("b"),
-    )
-    got = [r["d"] for r in df.select(hamming_wide("a", "b").alias("d")).collect()]
-    want = [bin(a ^ b).count("1") for a, b in pairs]
-    assert got == want
 
 
 # -- unary minus ----------------------------------------------------------
