@@ -57,8 +57,8 @@ def _rows_json(df, max_rows: int) -> str:
     # fine for its single-node page store and an OOM for ours). One
     # sentinel row past the cap distinguishes at-the-limit from over
     # it. CollectLimit's first job covers the session's parallelism in
-    # partitions (session.py), so over a compacted table this is one
-    # job holding at most parallelism × (cap + 1) rows.
+    # partitions (serve()), so over a compacted table this is one job
+    # holding at most parallelism × (cap + 1) rows.
     if max_rows > 0:
         rows = df.limit(max_rows + 1).collect()
         if len(rows) > max_rows:
@@ -247,6 +247,15 @@ def serve(
         from emdrive_spark.session import get_spark
 
         spark = get_spark("emdrive-server")
+    # _rows_json's capped collect plans as CollectLimit, which scans
+    # spark.sql.limit.initialNumPartitions partitions (default 1) in a
+    # first job and the rest in a second when that falls short of the
+    # cap. Starting at the session's parallelism, the width of a
+    # compacted table, scans it in one job. Set on the served session
+    # only, so batch callers' take()/head() keep Spark's default.
+    spark.conf.set(
+        "spark.sql.limit.initialNumPartitions", str(spark.sparkContext.defaultParallelism)
+    )
     engine = Engine(spark, data_directory=data_directory if explicit else None)
     # Restore ONLY when durability is engaged (r4 review): restoring
     # from the implicit default path while _persist() is a no-op would

@@ -135,14 +135,4 @@ def get_spark(app_name: str = _DEFAULT_APP, extra_conf: dict | None = None) -> S
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    # A capped collect (server._rows_json's df.limit(cap + 1)) plans as
-    # CollectLimit, which scans spark.sql.limit.initialNumPartitions
-    # partitions (default 1) in a first job and the rest in a second when
-    # that falls short of the cap: every radius statement ran two jobs.
-    # Starting at the session's parallelism, the width of a compacted
-    # table, scans it in one job; the cap stays in the plan, so that
-    # job brings at most parallelism × (cap + 1) rows to the driver.
-    limit_parts = "spark.sql.limit.initialNumPartitions"
-    if limit_parts not in (extra_conf or {}):
-        spark.conf.set(limit_parts, str(spark.sparkContext.defaultParallelism))
     return spark

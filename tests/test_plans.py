@@ -8,7 +8,7 @@ import pytest
 
 from emdrive_spark import catalog, registry
 from emdrive_spark.plans.topk_planner import plan_topk
-from emdrive_spark.server import _rows_json
+from emdrive_spark.server import _rows_json, serve
 from emdrive_spark.sources.tables import load
 
 from .conftest import SF_SMOKE
@@ -584,6 +584,16 @@ def test_knn_distance_is_one_offset_xor(engine):
     assert "pmod" not in line and " / " not in line, line
 
 
+@pytest.fixture
+def served(spark):
+    """The test session as server.serve() sets it up, restored after."""
+    key = "spark.sql.limit.initialNumPartitions"
+    before = spark.conf.get(key)
+    serve(spark, host="127.0.0.1", port=0).server_close()
+    yield
+    spark.conf.set(key, before)
+
+
 def _served_jobs(engine, spark, sql: str, group: str) -> int:
     """Spark jobs one served statement runs: Engine.execute, then the
     server's capped collect, after a first read that may compact."""
@@ -603,7 +613,7 @@ def _served_jobs(engine, spark, sql: str, group: str) -> int:
     [(20, 0), (catalog._LOCAL_ROWS_MAX // 2 + 1, 1)],
     ids=["local", "compacted"],
 )
-def test_served_statement_runs_one_job(engine, spark, per_insert, radius_jobs):
+def test_served_statement_runs_one_job(engine, spark, served, per_insert, radius_jobs):
     """A served kNN runs one Spark job, and a radius statement at most
     one: its capped collect (CollectLimit) scans every partition of a
     compacted table in its first job, so it needs no second one."""
@@ -618,7 +628,7 @@ def test_served_statement_runs_one_job(engine, spark, per_insert, radius_jobs):
     "optimizer (EliminateLimits), so the kNN plans as a global range-"
     "partitioned sort: a sampling job, a shuffle job and a result job",
 )
-def test_knn_over_table_within_its_limit_runs_one_job(engine, spark):
+def test_knn_over_table_within_its_limit_runs_one_job(engine, spark, served):
     _two_inserts(engine)
     assert _served_jobs(engine, spark, _KNN_SQL, "knn-within-limit") == 1
 
