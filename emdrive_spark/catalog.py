@@ -18,11 +18,17 @@ Spark job; that is the cheaper read while the local rows are few, and
 the dearer one past ``_LOCAL_ROWS_MAX``. So the next read through the
 catalog (``Catalog.scan``, ``Catalog.compact``, or the PK check of the
 next INSERT) folds a table past that size into a new base (``_compact``).
-A durable catalog (``save``/``restore``) re-reads each table it writes
-as a parquet base, so it never compacts. On a real
-deployment the same class writes PK-sorted Parquet/Delta per table —
-the in-session dict is the unit-test surface, the layout contract
-(sorted by PK for min/max pruning) is what scales.
+
+A durable catalog (``save``/``restore``) keeps the same two leaves. On
+disk a table is base files plus delta files: ``save()`` appends the
+local rows not yet on disk as one ``delta-<ulid>.parquet`` (written on
+the driver by pyarrow, no Spark job), so a durable INSERT writes
+O(batch) bytes, like the reference writing the page it touches. Once
+the local rows pass ``_LOCAL_ROWS_MAX`` the next save *folds*: it
+rewrites base + deltas as ``defaultParallelism`` PK-range-partitioned,
+PK-sorted files (the layout contract: parquet min/max stats make PK
+lookups prune like the reference's B+tree) and reads them back as the
+new base, so a durable table never compacts.
 """
 
 from __future__ import annotations
@@ -31,6 +37,7 @@ import datetime as _dt
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from emdrive_spark.functions.ckpt import ckpt
@@ -49,6 +56,14 @@ DEFAULT_SCHEMA = "main"
 # 500, checkpoint ahead at 4,000). Below it a table is never
 # compacted: CREATE, a small INSERT and a SELECT run no extra job.
 _LOCAL_ROWS_MAX = 2_000
+
+# Batch keys past which the PK check against a table's base is a
+# semi-join, not an IN list (Catalog._pk_taken). Over a 20,000-row
+# parquet base on a 4-vCPU host, in a served session: 50 keys 84 ms
+# (IN, one job) against 141 ms (semi-join, two jobs), 1,000 keys 124
+# against 145 ms, 2,000 keys 188 against 137 ms; past the crossing the
+# optimizer's passes over the IN list cost more than the build job.
+_PK_IN_LIST_MAX = 1_000
 
 
 @dataclass
@@ -80,10 +95,15 @@ class TableEntry:
     # _catalog.json pointing at a stale snapshot (silent loss of
     # acknowledged inserts; round-5 review finding).
     saved_root: str | None = None
+    # How many of local_rows are on disk at saved_root as delta files
+    # beside the files base reads; None while base is not exactly those
+    # files (never saved, restored from base + deltas, or compacted), so
+    # the next save() of a mutation folds instead of appending.
+    flushed: int | None = None
     # True only while the table PROVABLY has no rows (fresh CREATE,
     # nothing inserted). Lets the first INSERT skip the PK-uniqueness
-    # semi-join — a whole Spark job spent proving a 0-row table has no
-    # clashing keys. Conservative: restore() clears it without
+    # probe of the base (_pk_taken) — a Spark job spent proving a 0-row
+    # table has no clashing keys. Conservative: restore() clears it without
     # counting, so the flag can only ever skip a check that is
     # vacuously true.
     known_empty: bool = False
@@ -91,7 +111,8 @@ class TableEntry:
     @property
     def oversized(self) -> bool:
         """More local rows than a driver-side read should evaluate:
-        the next read compacts the table (Catalog._compact)."""
+        the next read compacts the table (Catalog._compact), and the
+        next save() of a durable one folds it (Catalog._fold)."""
         return len(self.local_rows) > _LOCAL_ROWS_MAX
 
     @property
@@ -201,63 +222,59 @@ class Catalog:
         for col in stmt.columns:
             entry.column(col)  # raises on unknown column
 
-        # Bad user values (a non-ISO timestamp string, a string where an
-        # int belongs) raise plain ValueError/TypeError from coercion or
-        # createDataFrame — map them into the 400 validation taxonomy
-        # instead of leaking a 500 with PySpark internals (r4 review).
-        try:
-            py_rows = [
-                self._materialize_row(entry, stmt.columns, row) for row in stmt.rows
-            ]
-            schema = spark_schema(entry.columns)
-            batch = self._values_batch(py_rows, schema)
-        except EmdriveValidationError:
-            raise
-        except (ValueError, TypeError) as exc:
-            raise EmdriveValidationError(
-                f"Invalid value in INSERT for table {stmt.table}: "
-                f"{str(exc).splitlines()[0]}"
-            ) from exc
-
+        schema = spark_schema(entry.columns)
+        pk = entry.pk.name
         # Everything from the PK-clash check through the entry.df swap
         # must be one critical section: the check is check-then-act and
         # the swap is read-modify-write — a concurrent INSERT between
         # them would either slip a duplicate PK through or have its
         # rows silently dropped by the last writer.
         with self._write_lock:
+            # The check below is a read: it compacts an oversized table
+            # first, which also bounds the rows each INSERT rebuilds
+            # however long an in-memory ingest loop runs.
+            self._compact(entry)
+            # Bad user values (a non-ISO timestamp string, a string where
+            # an int belongs) raise plain ValueError/TypeError from
+            # coercion or createDataFrame — map them into the 400
+            # validation taxonomy instead of leaking a 500 with PySpark
+            # internals. The table's local rows and the
+            # batch become ONE local relation, the INSERT's only
+            # createDataFrame (each costs ~18 ms of driver time).
+            try:
+                py_rows = [
+                    self._materialize_row(entry, stmt.columns, row) for row in stmt.rows
+                ]
+                local_rows = entry.local_rows + py_rows
+                df = self._values_batch(local_rows, schema)
+            except EmdriveValidationError:
+                raise
+            except (ValueError, TypeError) as exc:
+                raise EmdriveValidationError(
+                    f"Invalid value in INSERT for table {stmt.table}: "
+                    f"{str(exc).splitlines()[0]}"
+                ) from exc
+
             # PK uniqueness (reference enforces exactly-one-PK at DDL,
             # components.rs:164-169; uniqueness is the B+tree key
             # contract). Within-batch check driver-side (batch is a
-            # VALUES list, small); against existing data via left-anti
-            # join — distributed, no collect, scales to any table size.
-            pk = entry.pk.name
+            # VALUES list, small); against existing data by _pk_taken.
             pk_vals = [r[pk] for r in py_rows]
             if len(set(pk_vals)) != len(pk_vals):
                 raise EmdriveValidationError(
                     f"Duplicate PRIMARY KEY value in INSERT batch for table {stmt.table}."
                 )
-            if not entry.known_empty:
-                # The semi-join is a read: it compacts an oversized
-                # table first, which also bounds the rows each INSERT
-                # rebuilds below however long an ingest loop runs.
-                clashes = (
-                    batch.join(self._compact(entry).select(pk), on=pk, how="left_semi")
-                    .limit(1)
-                    .count()
+            if not entry.known_empty and self._pk_taken(entry, pk_vals, df):
+                raise EmdriveValidationError(
+                    f"PRIMARY KEY value already exists in table {stmt.table}."
                 )
-                if clashes:
-                    raise EmdriveValidationError(
-                        f"PRIMARY KEY value already exists in table {stmt.table}."
-                    )
 
-            local_rows = entry.local_rows + py_rows
-            df = self._values_batch(local_rows, schema) if entry.local_rows else batch
             if entry.base is not None:
                 df = entry.base.unionByName(df)
             entry.df = df  # one assignment: scan() reads it unlocked
             entry.local_rows = local_rows
             entry.known_empty = False
-            entry.dirty = True  # next save() must rewrite this table
+            entry.dirty = True  # next save() must write the new rows
             entry.df.createOrReplaceTempView(entry.name)
         # no refresh_system_views() here: the system relations expose
         # DDL metadata only — INSERT never changes them, and the hot
@@ -306,8 +323,41 @@ class Catalog:
             parallelism = self.spark.sparkContext.defaultParallelism
             entry.df = entry.base = ckpt(entry.df.repartition(parallelism))
             entry.local_rows = []
+            entry.flushed = None  # the base is no longer a saved snapshot
             entry.df.createOrReplaceTempView(entry.name)
         return entry.df
+
+    def _pk_taken(self, entry: TableEntry, keys: list, local: DataFrame) -> bool:
+        """Whether any of ``keys``, a batch's distinct PK values, is
+        already in the table. ``local`` is the local relation of the
+        table's local rows plus the batch. Caller holds ``_write_lock``.
+
+        Against the local rows (at most ``_LOCAL_ROWS_MAX``) it is a set
+        lookup on the driver. Against the base it is one probe that
+        stops at the first hit: a filter ``pk IN (keys)`` over the base,
+        the literals rendered into one SQL string, so building it is one
+        py4j call however many keys (``Column.isin`` makes one call per
+        literal: 5 s for a 10,000-row batch). A semi-join with ``local``
+        answers the same (no local row is in the base, so only the
+        batch's keys can match) but broadcasts that LocalTableScan in
+        a job of its own, so it is kept for keys that have no exact SQL
+        literal (``_sql_literal``) and for batches past
+        ``_PK_IN_LIST_MAX``, where optimizing the IN list costs more
+        than that job."""
+        pk = entry.pk.name
+        held = {r[pk] for r in entry.local_rows}
+        if any(k in held for k in keys):
+            return True
+        if entry.base is None:
+            return False
+        base_keys = entry.base.select(pk)
+        if len(keys) <= _PK_IN_LIST_MAX:
+            literals = [_sql_literal(k, entry.pk.etype.spark_type) for k in keys]
+            if None not in literals:
+                name = pk.replace("`", "``")
+                in_list = F.expr(f"`{name}` IN ({', '.join(literals)})")
+                return bool(base_keys.where(in_list).limit(1).collect())
+        return bool(base_keys.join(local.select(pk), pk, "left_semi").limit(1).collect())
 
     def _empty_frame(self, schema: T.StructType) -> DataFrame:
         """An empty table as ``LocalTableScan <empty>``, not a
@@ -380,34 +430,29 @@ class Catalog:
     # filesystem.rs:11-15; blank-file bootstrap write.rs:12-38) --------
 
     def save(self, root: str) -> None:
-        """Persist every table as PK-sorted Parquet at
-        ``<root>/<schema>/<table>/`` plus a ``_catalog.json`` with the
-        DDL metadata Spark can't store (PK, metric, defaults, emdrive
-        nullability). PK-sorting is the layout contract: Parquet
-        min/max row-group stats make PK equality lookups prune like the
-        reference's B+tree.
+        """Persist every table under ``<root>/<schema>/<table>/`` plus a
+        ``_catalog.json`` with the DDL metadata Spark can't store (PK,
+        metric, defaults, emdrive nullability). A table's directory
+        holds base files and delta files, and each table takes one of
+        three paths:
 
-        Runs UNDER the catalog write lock (r4 review: an unlocked save
-        racing a concurrent INSERT read a pre-union entry.df and
-        persisted a snapshot missing acknowledged rows; two concurrent
-        saves also corrupted each other's overwrite jobs and the json).
-        Crash tolerance: each table writes to a __tmp dir swapped in
-        only after the write commits — the old mode('overwrite') deleted
-        committed data BEFORE rewriting, so a crash mid-save lost every
-        previously persisted row; restore() falls back to the __old dir
-        if a crash lands in the tiny rename window — and the metadata
-        json is published via temp-file + os.replace (atomic).
+        - Skip: it is clean and its last write or restore was at this
+          root (``saved_root``, per entry: a save to another root that
+          failed midway must not let this root trust its dirty flags).
+        - Append: its base reads exactly this root's base files
+          (``flushed`` is set) and its local rows are within
+          ``_LOCAL_ROWS_MAX``. The local rows not yet on disk become one
+          delta file (``_append_delta``): O(batch) bytes, no Spark job.
+        - Fold, otherwise: a new table, another root, the first save of
+          a mutation after ``restore()`` or ``_compact``, or past the
+          limit. Base + deltas are rewritten as one new base
+          (``_fold``).
 
-        Incremental: a table that is clean AND whose last successful
-        write landed at THIS root (``entry.saved_root == root``) is
-        skipped — its on-disk snapshot is already current — so a
-        server persisting after every statement pays O(changed table)
-        per INSERT, not O(catalog). The skip keys on the per-entry
-        root, not a catalog-level "last root": a save to a different
-        root that clears dirty flags and then fails midway leaves
-        those entries pointing at the half-written root, so the next
-        save to the original root rewrites them instead of trusting a
-        stale snapshot."""
+        Runs UNDER the catalog write lock (an unlocked save racing a
+        concurrent INSERT read a pre-union entry.df and persisted a
+        snapshot missing acknowledged rows; two concurrent saves also
+        corrupted each other's writes and the json). The metadata json
+        is published via temp-file + os.replace (atomic)."""
         import json
         import os
         import shutil
@@ -416,30 +461,16 @@ class Catalog:
             meta = {}
             for e in self.tables.values():
                 path = os.path.join(root, e.schema_name, e.name)
-                if not e.dirty and e.saved_root == root and os.path.exists(path):
+                at_root = e.saved_root == root and os.path.exists(path)
+                if at_root and not e.dirty:
                     meta[e.name] = _entry_meta(e)
                     continue
-                tmp, old = path + "__tmp", path + "__old"
-                shutil.rmtree(tmp, ignore_errors=True)
-                e.df.sortWithinPartitions(e.pk.name).write.mode("overwrite").parquet(tmp)
-                shutil.rmtree(old, ignore_errors=True)
-                if os.path.exists(path):
-                    os.rename(path, old)
-                os.rename(tmp, path)
-                shutil.rmtree(old, ignore_errors=True)
-                # Re-point the live entry at the snapshot just written
-                # (r4 advisor, medium): a restored table's entry.df has
-                # lineage over the OLD part-files at this path
-                # (InMemoryFileIndex caches leaf files at restore time),
-                # so the swap above just deleted the files it would
-                # scan — the next action (SELECT, or the PK semi-join
-                # of the next INSERT) threw FileNotFoundException.
-                # The parquet scan is also the new base, and the local
-                # rows it now holds are dropped: a durable catalog
-                # never holds enough of them to compact (_compact).
-                e.df = e.base = self.spark.read.schema(spark_schema(e.columns)).parquet(path)
-                e.df.createOrReplaceTempView(e.name)
-                e.local_rows = []
+                # what a crash mid-fold leaves; never read or published
+                shutil.rmtree(path + "__tmp", ignore_errors=True)
+                if at_root and e.flushed is not None and not e.oversized:
+                    self._append_delta(e, path)
+                else:
+                    self._fold(e, path)
                 e.dirty = False
                 e.saved_root = root
                 meta[e.name] = _entry_meta(e)
@@ -449,13 +480,75 @@ class Catalog:
                 json.dump(meta, f, indent=2)
             os.replace(tmp_json, os.path.join(root, "_catalog.json"))
 
+    def _append_delta(self, e: TableEntry, path: str) -> None:
+        """Write the local rows not yet on disk as ``delta-<ulid>.parquet``
+        in the table's directory. pyarrow writes it on the driver with
+        the table's exact arrow schema (``_empty_frame``'s), under a
+        hidden ``.delta-<ulid>.tmp`` name that Spark's reader skips, and
+        ``os.rename`` publishes it atomically. Deletes no file, so a
+        read planned over the live frame never loses one."""
+        import os
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        rows = e.local_rows[e.flushed :]
+        if rows:
+            tag = ulid()
+            tmp = os.path.join(path, f".delta-{tag}.tmp")
+            schema = to_arrow_schema(spark_schema(e.columns))
+            pq.write_table(pa.Table.from_pylist(rows, schema=schema), tmp)
+            os.rename(tmp, os.path.join(path, f"delta-{tag}.parquet"))
+        e.flushed = len(e.local_rows)
+
+    def _fold(self, e: TableEntry, path: str) -> None:
+        """Rewrite the whole table as its new base: ``defaultParallelism``
+        files, range-partitioned and sorted by PK (the layout contract:
+        parquet min/max row-group stats make PK lookups prune like the
+        reference's B+tree), written to ``<table>__tmp`` and swapped in
+        only after the write commits, so a crash mid-write loses no
+        committed row; ``restore()`` takes the table back from
+        ``<table>__old`` if a crash lands between the two renames.
+
+        The live entry is re-pointed at the files just written, listed
+        one by one: its old lineage scanned files the swap deleted, and
+        a base read from an explicit list never picks up the delta files
+        appended beside it later, so no row is read twice."""
+        import os
+        import shutil
+
+        tmp, old = path + "__tmp", path + "__old"
+        pk = e.pk.name
+        parallelism = self.spark.sparkContext.defaultParallelism
+        (
+            e.df.repartitionByRange(parallelism, pk)
+            .sortWithinPartitions(pk)
+            .write.mode("overwrite")
+            .parquet(tmp)
+        )
+        shutil.rmtree(old, ignore_errors=True)
+        if os.path.exists(path):
+            os.rename(path, old)
+        os.rename(tmp, path)
+        shutil.rmtree(old, ignore_errors=True)
+        files = sorted(os.path.join(path, f) for f in os.listdir(path) if f.startswith("part-"))
+        e.df = e.base = self.spark.read.schema(spark_schema(e.columns)).parquet(*files)
+        e.df.createOrReplaceTempView(e.name)
+        e.local_rows = []
+        e.flushed = 0
+
     def restore(self, root: str) -> int:
         """Load a saved catalog: re-register every table (schema from
         the metadata file — nullability/PK/metric survive the
-        round-trip, which plain Parquet alone would lose). Runs under
-        the write lock (it mutates self.tables); if a crash interrupted
-        save() between its two directory renames, the table's data
-        survives under ``<table>__old`` and is swapped back here."""
+        round-trip, which plain Parquet alone would lose). Each table's
+        base is a scan of its whole directory, base and delta files
+        (hidden ``.delta-*.tmp`` files a crash mid-append left are
+        skipped by Spark's reader), so the first save of a mutation
+        after a restore folds. Runs under the write lock (it mutates
+        self.tables); if a crash interrupted a fold between its two
+        directory renames, the table's data survives under
+        ``<table>__old`` and is swapped back here."""
         import json
         import os
 
@@ -621,6 +714,23 @@ def _coerce(cdef: ast.ColumnDef, value: object) -> object:
         # a README/code discrepancy, we follow the README. SURVEY §1.2)
         return _dt.datetime.fromisoformat(value)
     return value
+
+
+def _sql_literal(value: object, dtype: T.DataType) -> str | None:
+    """``value`` of a ``dtype`` column as an exact Spark SQL literal, or
+    None for a type this does not render: it covers the integral,
+    DECIMAL(p, 0), STRING and BINARY types a primary key takes. A string
+    goes as its UTF-8 bytes in hex, so no quoting or escape rule of the
+    SQL parser touches it."""
+    if isinstance(dtype, T.IntegralType):
+        return str(int(value))
+    if isinstance(dtype, T.DecimalType) and dtype.scale == 0:
+        return f"{int(value)}BD"
+    if isinstance(dtype, T.StringType):
+        return f"CAST(X'{value.encode().hex()}' AS STRING)"
+    if isinstance(dtype, T.BinaryType):
+        return f"X'{bytes(value).hex()}'"
+    return None
 
 
 def _default_to_json(expr: ast.Expr | None) -> dict | None:

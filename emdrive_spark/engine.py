@@ -189,9 +189,12 @@ class Engine:
 
     def _persist(self) -> None:
         """Durability hook: with a configured data directory, every
-        successful mutation rewrites the saved catalog (small per-table
-        PK-sorted parquet + metadata json — the moral equivalent of the
-        reference flushing pages on write)."""
+        successful mutation is saved there before it is acknowledged.
+        An INSERT appends its rows as one delta file beside the table's
+        base files, and a table past ``_LOCAL_ROWS_MAX`` unfolded rows
+        is folded into a new PK-sorted base (``Catalog.save``) — the
+        moral equivalent of the reference flushing the pages a write
+        touches."""
         if self.data_directory:
             self.catalog.save(self.data_directory)
 

@@ -1,8 +1,11 @@
-"""The catalog's durable save/restore: the crash windows of save()'s
-atomic directory swap, a table left under ``<table>__old`` and a stale
-``<table>__tmp``. And the compaction of an in-memory table before a
-read: exact under concurrent INSERTs, skipped on the durable path, and
-answers equal to a Python popcount whether or not it compacted."""
+"""The catalog's durable save/restore: the crash windows of a fold's
+atomic directory swap (a table left under ``<table>__old``, a stale
+``<table>__tmp``) and of an append (a stale hidden ``.delta-*.tmp``),
+restores of base + delta files, and the types a delta file carries. The
+PK check against the base, the local rows and the batch. Reads racing
+appends. And the compaction of an in-memory table before a read: exact
+under concurrent INSERTs, skipped on the durable path, and answers
+equal to a Python popcount whether or not it compacted."""
 
 from __future__ import annotations
 
@@ -13,8 +16,11 @@ import threading
 
 import pytest
 
+from pyspark.sql import types as T
+
 from emdrive_spark import catalog
 from emdrive_spark.engine import Engine
+from emdrive_spark.sql.errors import EmdriveValidationError
 
 # A three-column table with a METRIC KEY.
 CREATE_RT5 = """
@@ -201,3 +207,234 @@ def test_knn_and_radius_over_inserts_match_popcount(engine, monkeypatch, compact
     assert {r["id"] for r in got} == {i for i, d in true_d.items() if d < radius}
     assert all(r["d"] == true_d[r["id"]] for r in got)
     assert (engine.catalog.get("photos").base is not None) == compacted
+
+
+# -- delta files: crash windows, folds and type fidelity ------------------------
+
+
+def _rt5_files(path, prefix):
+    return sorted(f for f in os.listdir(path) if f.startswith(prefix))
+
+
+def _append_rows(engine, root, rows):
+    """One INSERT of ``(hash, url, width)`` rows, then save() at ``root``."""
+    values = ", ".join(f"({h}, '{u}', {w})" for h, u, w in rows)
+    engine.execute(f"INSERT INTO rt5 (hash, url, width) VALUES {values}")
+    engine.catalog.save(root)
+
+
+def test_stale_hidden_delta_tmp_is_ignored_and_gone_after_fold(engine, spark, tmp_path):
+    """A crash mid-append leaves a hidden ``.delta-<ulid>.tmp``: restore()
+    reads past it, and the next fold's directory swap removes it."""
+    root = str(tmp_path / "cat")
+    path = _saved_rt5(engine, root)
+    _append_rows(engine, root, [(4, "u4", 40)])
+    assert len(_rt5_files(path, "delta-")) == 1
+    with open(os.path.join(path, ".delta-01STALE0000000000000000000.tmp"), "wb") as f:
+        f.write(b"not parquet")
+    assert _urls(spark, root) == ["u1", "u2", "u3", "u4"]
+
+    fresh = Engine(spark)
+    fresh.catalog.restore(root)
+    _append_rows(fresh, root, [(5, "u5", 50)])  # first save after restore folds
+    assert not [f for f in os.listdir(path) if "delta" in f]
+    assert _urls(spark, root) == ["u1", "u2", "u3", "u4", "u5"]
+
+
+def test_restore_of_base_and_deltas_returns_every_row_then_folds(engine, spark, tmp_path):
+    """Each INSERT after a fold is one delta file beside the base; a
+    restore reads base + every delta, and its first save folds them."""
+    root = str(tmp_path / "cat")
+    path = _saved_rt5(engine, root)
+    base = _rt5_files(path, "part-")
+    for i in range(4, 8):
+        _append_rows(engine, root, [(i, f"u{i}", 10 * i)])
+    assert len(_rt5_files(path, "delta-")) == 4
+    assert _rt5_files(path, "part-") == base  # appends rewrite no base file
+    assert _urls(spark, root) == [f"u{i}" for i in range(1, 8)]
+
+    fresh = Engine(spark)
+    fresh.catalog.restore(root)
+    assert fresh.catalog.get("rt5").flushed is None
+    fresh.catalog.save(root)  # clean: skipped, nothing rewritten
+    assert len(_rt5_files(path, "delta-")) == 4
+    _append_rows(fresh, root, [(8, "u8", 80)])
+    assert not _rt5_files(path, "delta-") and _rt5_files(path, "part-") != base
+    assert fresh.catalog.get("rt5").flushed == 0
+    assert _urls(spark, root) == [f"u{i}" for i in range(1, 9)]
+    # the live entry reads the folded base and keeps appending to it
+    _append_rows(fresh, root, [(9, "u9", 90)])
+    assert len(_rt5_files(path, "delta-")) == 1
+    assert fresh.execute("SELECT COUNT(*) AS n FROM rt5").collect()[0]["n"] == 9
+    assert _urls(spark, root) == [f"u{i}" for i in range(1, 10)]
+
+
+def test_save_to_second_root_after_appends_is_complete(engine, spark, tmp_path):
+    """After appends at one root, save() to another root writes a whole
+    snapshot there (a fold), not the latest delta alone; the first root
+    stays complete and takes a fold on its next save."""
+    root_a, root_b = str(tmp_path / "a"), str(tmp_path / "b")
+    _saved_rt5(engine, root_a)
+    _append_rows(engine, root_a, [(4, "u4", 40)])
+    _append_rows(engine, root_a, [(5, "u5", 50)])
+    engine.execute("INSERT INTO rt5 (hash, url, width) VALUES (6, 'u6', 60)")
+    engine.catalog.save(root_b)
+    every = ["u1", "u2", "u3", "u4", "u5", "u6"]
+    assert _urls(spark, root_b) == every
+    assert not _rt5_files(os.path.join(root_b, "main", "rt5"), "delta-")
+    assert _urls(spark, root_a) == every[:5]
+    engine.catalog.save(root_a)
+    assert _urls(spark, root_a) == every
+
+
+def test_compacted_durable_table_folds_on_next_save(engine, spark, tmp_path, monkeypatch):
+    """A read that compacts a durable table between an INSERT and its
+    save() folds the unsaved rows into a checkpoint base; the next save
+    must then rewrite the table, not append an empty delta."""
+    monkeypatch.setattr(catalog, "_LOCAL_ROWS_MAX", 3)
+    root = str(tmp_path / "cat")
+    engine.execute(CREATE_RT5)
+    engine.catalog.save(root)
+    _append_rows(engine, root, [(1, "u1", 10), (2, "u2", 20)])
+    engine.execute("INSERT INTO rt5 (hash, url, width) VALUES (3, 'u3', 30), (4, 'u4', 40)")
+    engine.execute("SELECT url FROM rt5").collect()  # compacts: 4 local rows > 3
+    assert engine.catalog.get("rt5").local_rows == []
+    engine.catalog.save(root)
+    assert _urls(spark, root) == ["u1", "u2", "u3", "u4"]
+
+
+CREATE_TYPES = """
+CREATE TABLE typed (
+    id UINT32 PRIMARY KEY,
+    u8 UINT8, u16 UINT16, u64 UINT64, u128 UINT128,
+    maybe NULLABLE(UINT32), note NULLABLE(STRING(8)),
+    label STRING(16), digest BINARY,
+    made TIMESTAMP, seen TIMESTAMP
+)
+"""
+
+
+def test_delta_file_types_round_trip(spark, tmp_path):
+    """Every emdrive type a delta file carries reads back through
+    restore() equal, by value and Spark dtype, to the live table the
+    INSERT built in memory: the unsigned widths at their maxima, NULLs,
+    strings, binary hashes, and timestamps from NOW() and from an ISO
+    literal at microseconds."""
+    root = str(tmp_path / "cat")
+    engine = Engine(spark, data_directory=root)
+    engine.execute(CREATE_TYPES)
+    cols = "id, u8, u16, u64, u128, maybe, note, label, digest, made, seen"
+    engine.execute(
+        f"INSERT INTO typed ({cols}) VALUES "
+        f"(1, 255, 65535, {2**64 - 1}, {10**38 - 1}, NULL, NULL, 'it\\'s', "
+        f"{2**128 - 1}, NOW(), '2024-02-29T23:59:59.123456'), "
+        f"(2, 0, 0, 0, 0, {2**32 - 1}, 'n', '', 0, NOW(), '1970-01-01T00:00:00.000001')"
+    )
+    path = os.path.join(root, "main", "typed")
+    assert _rt5_files(path, "delta-"), "the rows must have been appended"
+    live = engine.execute(f"SELECT {cols} FROM typed")
+    fresh = Engine(spark)
+    fresh.catalog.restore(root)
+    restored = fresh.execute(f"SELECT {cols} FROM typed")
+    assert restored.dtypes == live.dtypes
+    assert sorted(map(tuple, restored.collect())) == sorted(map(tuple, live.collect()))
+    row = {r["id"]: r for r in restored.collect()}[1]
+    assert row["u64"] == 2**64 - 1 and row["u128"] == 10**38 - 1
+    assert row["maybe"] is None and row["note"] is None
+    assert row["digest"] == b"\xff" * 16
+    assert row["seen"].microsecond == 123456
+
+
+# -- the PK check: local rows on the driver, the base in one probe ---------------
+
+
+@pytest.mark.parametrize("durable", [False, True], ids=["in_memory", "durable"])
+@pytest.mark.parametrize("in_list_max", [catalog._PK_IN_LIST_MAX, 0], ids=["in_list", "semi_join"])
+def test_pk_clash_against_base_local_and_batch(spark, tmp_path, monkeypatch, durable, in_list_max):
+    """A key already in the base, one in the not-yet-folded local rows
+    (a delta file on the durable path) and a key twice in one batch
+    each raise the typed 400, through either form of the base probe,
+    and leave the table as it was."""
+    monkeypatch.setattr(catalog, "_LOCAL_ROWS_MAX", 3)
+    monkeypatch.setattr(catalog, "_PK_IN_LIST_MAX", in_list_max)
+    engine = Engine(spark, data_directory=str(tmp_path / "data") if durable else None)
+    engine.execute(CREATE_PHOTOS)
+    engine.execute(_insert_sql([(i, i) for i in range(4)]))  # past the limit
+    engine.execute(_insert_sql([(10, 1), (11, 2)]))  # folds the first four
+    entry = engine.catalog.get("photos")
+    assert entry.base is not None and len(entry.local_rows) == 2
+    for clash, message in [
+        ([(20, 0), (2, 0)], "already exists"),  # base
+        ([(21, 0), (11, 0)], "already exists"),  # local rows
+        ([(22, 0), (22, 1)], "Duplicate PRIMARY KEY"),  # the batch itself
+    ]:
+        with pytest.raises(EmdriveValidationError, match=message):
+            engine.execute(_insert_sql(clash))
+    ids = sorted(r["id"] for r in engine.execute("SELECT id FROM photos").collect())
+    assert ids == [0, 1, 2, 3, 10, 11]
+
+
+def _q(text):
+    """A dialect string literal: backslash escapes, as the tokenizer reads them."""
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def test_pk_in_list_literals_are_exact(engine, spark, monkeypatch):
+    """String keys reach the base probe as hex literals, so quotes,
+    backslashes, newlines and non-ASCII text clash exactly and only
+    with themselves; binary and UINT64 literals read back as the value."""
+    monkeypatch.setattr(catalog, "_LOCAL_ROWS_MAX", 0)  # every check probes the base
+    engine.execute("CREATE TABLE keyed (k STRING(32) PRIMARY KEY, n UINT8)")
+    keys = ["it's", "a\\b", "a\\nb", "a\nb", "é😀", "%_"]
+    engine.execute("INSERT INTO keyed (k, n) VALUES " + ", ".join(f"({_q(k)}, 0)" for k in keys))
+    for k in keys:
+        with pytest.raises(EmdriveValidationError, match="already exists"):
+            engine.execute(f"INSERT INTO keyed (k, n) VALUES ({_q(k)}, 1)")
+    near = ["its", "a\\\\b", "ab", "é", "%"]
+    engine.execute("INSERT INTO keyed (k, n) VALUES " + ", ".join(f"({_q(k)}, 2)" for k in near))
+    got = sorted(r["k"] for r in engine.execute("SELECT k FROM keyed").collect())
+    assert got == sorted(keys + near)
+    for value, dtype in [("a'b\\", T.StringType()), (b"\x00'", T.BinaryType()), (2**64 - 1, T.DecimalType(20, 0))]:
+        assert spark.sql(f"SELECT {catalog._sql_literal(value, dtype)} AS v").collect()[0]["v"] == value
+
+
+# -- reads racing appends --------------------------------------------------------
+
+
+def test_reads_racing_appends_never_fail(spark, tmp_path, monkeypatch):
+    """A reader running kNN while durable 50-row INSERTs land sees no
+    error: an append deletes no file, so a read planned over the frame
+    before it still finds every file it lists. The local-row limit is
+    raised so no fold (which does delete the old base) lands."""
+    monkeypatch.setattr(catalog, "_LOCAL_ROWS_MAX", 10**6)
+    root = str(tmp_path / "data")
+    engine = Engine(spark, data_directory=root)
+    engine.execute(CREATE_PHOTOS)
+    inserts, per_insert = 12, 50
+    errors, reads = [], []
+    done = threading.Event()
+
+    def read():
+        try:
+            while not done.is_set():
+                rows = engine.execute("SELECT id, hash @ 3 AS d FROM photos ORDER BY d LIMIT 5").collect()
+                reads.append(len(rows))
+        except Exception as exc:  # surfaced by the assert below
+            errors.append(exc)
+
+    reader = threading.Thread(target=read)
+    reader.start()
+    try:
+        for b in range(inserts):
+            ids = range(b * per_insert, (b + 1) * per_insert)
+            engine.execute(_insert_sql((i, i * 7919) for i in ids))
+    finally:
+        done.set()
+        reader.join(timeout=300)
+    assert not reader.is_alive()
+    assert not errors, errors
+    assert len(reads) > 1
+    path = os.path.join(root, "main", "photos")
+    assert len([f for f in os.listdir(path) if f.startswith("delta-")]) == inserts
+    n = inserts * per_insert
+    assert engine.execute("SELECT COUNT(*) AS n FROM photos").collect()[0]["n"] == n

@@ -4,9 +4,13 @@ broadcast, top-k, no Python in hot paths)."""
 
 from __future__ import annotations
 
+import os
+
+import pyarrow.parquet as pq
 import pytest
 
 from emdrive_spark import catalog, registry
+from emdrive_spark.engine import Engine
 from emdrive_spark.plans.topk_planner import plan_topk
 from emdrive_spark.server import _rows_json, serve
 from emdrive_spark.sources.tables import load
@@ -652,6 +656,59 @@ def test_compacted_table_has_default_parallelism_partitions(engine, spark):
     _two_inserts(engine, catalog._LOCAL_ROWS_MAX // 2 + 1)
     df = engine.catalog.scan("photos")
     assert df.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+
+
+def _part_files(root):
+    path = os.path.join(root, "main", "photos")
+    return sorted(f for f in os.listdir(path) if f.startswith("part-"))
+
+
+def test_durable_insert_runs_one_job(spark, served, tmp_path):
+    """A served durable 50-row INSERT runs one Spark job: the PK probe
+    of the parquet base. The batch's keys reach it as an IN list, not
+    as a semi-join whose LocalTableScan build side is broadcast in a job
+    of its own, and the delta file is written by pyarrow on the driver."""
+    root = str(tmp_path / "data")
+    engine = Engine(spark, data_directory=root)
+    engine.execute(_PHOTOS)
+    _insert(engine, range(catalog._LOCAL_ROWS_MAX + 1))  # folds into a base
+    _insert(engine, range(5_000, 5_050))  # first append, untimed
+    base_files = _part_files(root)
+    sc = spark.sparkContext
+    sc.setJobGroup("durable-insert", "durable-insert")
+    try:
+        _insert(engine, range(6_000, 6_050))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("durable-insert")) == 1
+    assert _part_files(root) == base_files  # appended, not rewritten
+
+
+def test_fold_leaves_default_parallelism_files(spark, tmp_path):
+    """A save past the local-row limit folds base + deltas into exactly
+    defaultParallelism PK-range-partitioned files, the partition count
+    of a compacted in-memory table."""
+    root = str(tmp_path / "data")
+    engine = Engine(spark, data_directory=root)
+    engine.execute(_PHOTOS)
+    _insert(engine, range(100))
+    _insert(engine, range(100, 200))
+    assert len(_part_files(root)) == 1  # CREATE's empty base; two deltas
+    _insert(engine, range(200, catalog._LOCAL_ROWS_MAX + 1))
+    n = spark.sparkContext.defaultParallelism
+    assert len(_part_files(root)) == n
+    assert not [f for f in os.listdir(os.path.join(root, "main", "photos")) if "delta" in f]
+    df = engine.catalog.scan("photos")
+    assert df.rdd.getNumPartitions() == n
+    assert df.count() == catalog._LOCAL_ROWS_MAX + 1
+    # the layout contract: each file sorted by PK, the files' PK ranges disjoint
+    ranges = []
+    for f in _part_files(root):
+        ids = pq.read_table(os.path.join(root, "main", "photos", f), columns=["id"])["id"].to_pylist()
+        assert ids == sorted(ids)
+        ranges.append((ids[0], ids[-1]))
+    ranges.sort()
+    assert all(hi < lo for (_, hi), (lo, _) in zip(ranges, ranges[1:])), ranges
 
 
 def test_system_columns_is_a_local_relation(engine):
