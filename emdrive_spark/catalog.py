@@ -26,9 +26,14 @@ the driver by pyarrow, no Spark job), so a durable INSERT writes
 O(batch) bytes, like the reference writing the page it touches. Once
 the local rows pass ``_LOCAL_ROWS_MAX`` the next save *folds*: it
 rewrites base + deltas as ``defaultParallelism`` PK-range-partitioned,
-PK-sorted files (the layout contract: parquet min/max stats make PK
-lookups prune like the reference's B+tree) and reads them back as the
-new base, so a durable table never compacts.
+PK-sorted files and reads them back as the new base, so a durable table
+never compacts.
+
+The PK check of an INSERT prunes like the reference's B+tree descent:
+each entry keeps its base's PK ``[min, max]`` (read from the fold's
+parquet footers, or widened by a compaction's local rows), and a batch
+key outside it needs no probe of the base, so an INSERT of fresh
+ascending keys (the time-ordered ``ULID()`` default) runs no Spark job.
 """
 
 from __future__ import annotations
@@ -57,12 +62,14 @@ DEFAULT_SCHEMA = "main"
 # compacted: CREATE, a small INSERT and a SELECT run no extra job.
 _LOCAL_ROWS_MAX = 2_000
 
-# Batch keys past which the PK check against a table's base is a
-# semi-join, not an IN list (Catalog._pk_taken). Over a 20,000-row
-# parquet base on a 4-vCPU host, in a served session: 50 keys 84 ms
-# (IN, one job) against 141 ms (semi-join, two jobs), 1,000 keys 124
-# against 145 ms, 2,000 keys 188 against 137 ms; past the crossing the
-# optimizer's passes over the IN list cost more than the build job.
+# Batch keys inside the base's PK range past which the PK check against
+# the base is a semi-join, not an IN list (Catalog._pk_taken). Measured
+# with keys inside that range (keys outside it are dropped first and
+# probe nothing), over a 20,000-row parquet base on a 4-vCPU host, in a
+# served session: 50 keys 84 ms (IN, one job) against 141 ms
+# (semi-join, two jobs), 1,000 keys 124 against 145 ms, 2,000 keys 188
+# against 137 ms; past the crossing the optimizer's passes over the IN
+# list cost more than the build job.
 _PK_IN_LIST_MAX = 1_000
 
 
@@ -100,13 +107,14 @@ class TableEntry:
     # files (never saved, restored from base + deltas, or compacted), so
     # the next save() of a mutation folds instead of appending.
     flushed: int | None = None
-    # True only while the table PROVABLY has no rows (fresh CREATE,
-    # nothing inserted). Lets the first INSERT skip the PK-uniqueness
-    # probe of the base (_pk_taken) — a Spark job spent proving a 0-row
-    # table has no clashing keys. Conservative: restore() clears it without
-    # counting, so the flag can only ever skip a check that is
-    # vacuously true.
-    known_empty: bool = False
+    # [min, max] of base's primary key, () while base holds no rows (or
+    # there is none), None when not known: a restored base, a key type
+    # whose Python order is not Spark's (_ordered_key), a parquet row
+    # group without min/max statistics. _pk_taken probes the base only
+    # for batch keys inside it. Set by _fold from the footers of the
+    # files it wrote and widened by _compact with the local rows it
+    # folds in, so it is exact, never stale.
+    pk_range: tuple | None = None
 
     @property
     def oversized(self) -> bool:
@@ -198,12 +206,10 @@ class Catalog:
                 raise EmdriveValidationError(f"Table {stmt.name} already exists.")
             df = self._empty_frame(spark_schema(stmt.columns))
             entry = TableEntry(
-                name=stmt.name,
-                schema_name=self.schema_name,
-                columns=stmt.columns,
-                df=df,
-                known_empty=True,
+                name=stmt.name, schema_name=self.schema_name, columns=stmt.columns, df=df
             )
+            if _ordered_key(entry.pk.etype.spark_type):
+                entry.pk_range = ()  # no rows yet
             self.tables[stmt.name] = entry
             df.createOrReplaceTempView(stmt.name)
             self.refresh_system_views()
@@ -264,7 +270,7 @@ class Catalog:
                 raise EmdriveValidationError(
                     f"Duplicate PRIMARY KEY value in INSERT batch for table {stmt.table}."
                 )
-            if not entry.known_empty and self._pk_taken(entry, pk_vals, df):
+            if self._pk_taken(entry, pk_vals, df):
                 raise EmdriveValidationError(
                     f"PRIMARY KEY value already exists in table {stmt.table}."
                 )
@@ -273,7 +279,6 @@ class Catalog:
                 df = entry.base.unionByName(df)
             entry.df = df  # one assignment: scan() reads it unlocked
             entry.local_rows = local_rows
-            entry.known_empty = False
             entry.dirty = True  # next save() must write the new rows
             entry.df.createOrReplaceTempView(entry.name)
         # no refresh_system_views() here: the system relations expose
@@ -321,6 +326,9 @@ class Catalog:
         in-memory catalog."""
         if entry.oversized:
             parallelism = self.spark.sparkContext.defaultParallelism
+            pk = entry.pk.name
+            # the checkpoint is base ∪ local rows, so this is exact
+            entry.pk_range = _widen(entry.pk_range, [r[pk] for r in entry.local_rows])
             entry.df = entry.base = ckpt(entry.df.repartition(parallelism))
             entry.local_rows = []
             entry.flushed = None  # the base is no longer a saved snapshot
@@ -333,23 +341,31 @@ class Catalog:
         table's local rows plus the batch. Caller holds ``_write_lock``.
 
         Against the local rows (at most ``_LOCAL_ROWS_MAX``) it is a set
-        lookup on the driver. Against the base it is one probe that
-        stops at the first hit: a filter ``pk IN (keys)`` over the base,
+        lookup on the driver. Against the base, keys outside the base's
+        PK range (``TableEntry.pk_range``) are dropped first: they cannot
+        be there, so a batch of keys all above the base's largest, or a
+        base with no rows, runs no Spark job. The keys left go to one
+        probe that stops at the first hit: a filter ``pk IN (keys)``,
         the literals rendered into one SQL string, so building it is one
         py4j call however many keys (``Column.isin`` makes one call per
         literal: 5 s for a 10,000-row batch). A semi-join with ``local``
         answers the same (no local row is in the base, so only the
         batch's keys can match) but broadcasts that LocalTableScan in
         a job of its own, so it is kept for keys that have no exact SQL
-        literal (``_sql_literal``) and for batches past
-        ``_PK_IN_LIST_MAX``, where optimizing the IN list costs more
-        than that job."""
+        literal (``_sql_literal``) and for more than ``_PK_IN_LIST_MAX``
+        keys left, where optimizing the IN list costs more than that
+        job."""
         pk = entry.pk.name
         held = {r[pk] for r in entry.local_rows}
         if any(k in held for k in keys):
             return True
         if entry.base is None:
             return False
+        rng = entry.pk_range
+        if rng is not None:
+            keys = [k for k in keys if rng and rng[0] <= k <= rng[1]]
+            if not keys:
+                return False
         base_keys = entry.base.select(pk)
         if len(keys) <= _PK_IN_LIST_MAX:
             literals = [_sql_literal(k, entry.pk.etype.spark_type) for k in keys]
@@ -506,7 +522,8 @@ class Catalog:
         """Rewrite the whole table as its new base: ``defaultParallelism``
         files, range-partitioned and sorted by PK (the layout contract:
         parquet min/max row-group stats make PK lookups prune like the
-        reference's B+tree), written to ``<table>__tmp`` and swapped in
+        reference's B+tree, and the base's PK range is read from those
+        footers on the driver), written to ``<table>__tmp`` and swapped in
         only after the write commits, so a crash mid-write loses no
         committed row; ``restore()`` takes the table back from
         ``<table>__old`` if a crash lands between the two renames.
@@ -537,6 +554,7 @@ class Catalog:
         e.df.createOrReplaceTempView(e.name)
         e.local_rows = []
         e.flushed = 0
+        e.pk_range = _footer_pk_range(files, pk, e.pk.etype.spark_type)
 
     def restore(self, root: str) -> int:
         """Load a saved catalog: re-register every table (schema from
@@ -545,7 +563,8 @@ class Catalog:
         base is a scan of its whole directory, base and delta files
         (hidden ``.delta-*.tmp`` files a crash mid-append left are
         skipped by Spark's reader), so the first save of a mutation
-        after a restore folds. Runs under the write lock (it mutates
+        after a restore folds; its PK range is not known until then.
+        Runs under the write lock (it mutates
         self.tables); if a crash interrupted a fold between its two
         directory renames, the table's data survives under
         ``<table>__old`` and is swapped back here."""
@@ -731,6 +750,48 @@ def _sql_literal(value: object, dtype: T.DataType) -> str | None:
     if isinstance(dtype, T.BinaryType):
         return f"X'{bytes(value).hex()}'"
     return None
+
+
+def _ordered_key(dtype: T.DataType) -> bool:
+    """Whether keys of a ``dtype`` column compare in Python as Spark and
+    parquet's min/max statistics order them: the types ``_sql_literal``
+    renders. Ints and Decimals compare by value, str by code point (the
+    order of its UTF-8 bytes, Spark's UTF8_BINARY), bytes unsigned."""
+    return isinstance(dtype, (T.IntegralType, T.StringType, T.BinaryType)) or (
+        isinstance(dtype, T.DecimalType) and dtype.scale == 0
+    )
+
+
+def _widen(rng: tuple | None, keys: list) -> tuple | None:
+    """The PK range ``rng`` grown to hold ``keys`` (None stays None)."""
+    if rng is None or not keys:
+        return rng
+    lo, hi = min(keys), max(keys)
+    return (min(lo, rng[0]), max(hi, rng[1])) if rng else (lo, hi)
+
+
+def _footer_pk_range(files: list[str], pk: str, dtype: T.DataType) -> tuple | None:
+    """``[min, max]`` of column ``pk`` over parquet ``files`` from their
+    footers' row-group statistics, read on the driver: () for no rows,
+    None if a ``dtype`` key is not ``_ordered_key`` or a row group holding
+    rows has no min/max (parquet-mr leaves them out for long strings)."""
+    import pyarrow.parquet as pq
+
+    if not _ordered_key(dtype):
+        return None
+    rng: tuple = ()
+    for f in files:
+        meta = pq.read_metadata(f)
+        col = meta.schema.names.index(pk)
+        for i in range(meta.num_row_groups):
+            group = meta.row_group(i)
+            if group.num_rows == 0:
+                continue
+            stats = group.column(col).statistics
+            if stats is None or not stats.has_min_max:
+                return None
+            rng = _widen(rng, [stats.min, stats.max])
+    return rng
 
 
 def _default_to_json(expr: ast.Expr | None) -> dict | None:

@@ -29,6 +29,17 @@ def engine(spark):
     return Engine(spark)
 
 
+def spark_jobs(spark, group: str, run) -> int:
+    """Spark jobs that ``run()`` starts, counted under job group ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def _rows(df):
     """A DataFrame's rows as sorted tuples, for order-free equality."""
     return sorted(tuple(r) for r in df.collect())

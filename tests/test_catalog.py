@@ -2,7 +2,8 @@
 atomic directory swap (a table left under ``<table>__old``, a stale
 ``<table>__tmp``) and of an append (a stale hidden ``.delta-*.tmp``),
 restores of base + delta files, and the types a delta file carries. The
-PK check against the base, the local rows and the batch. Reads racing
+PK check against the base, the local rows and the batch, and its
+pruning by the base's PK range at each key type's edges. Reads racing
 appends. And the compaction of an in-memory table before a read: exact
 under concurrent INSERTs, skipped on the durable path, and answers
 equal to a Python popcount whether or not it compacted."""
@@ -21,6 +22,8 @@ from pyspark.sql import types as T
 from emdrive_spark import catalog
 from emdrive_spark.engine import Engine
 from emdrive_spark.sql.errors import EmdriveValidationError
+
+from .conftest import spark_jobs
 
 # A three-column table with a METRIC KEY.
 CREATE_RT5 = """
@@ -396,6 +399,120 @@ def test_pk_in_list_literals_are_exact(engine, spark, monkeypatch):
     assert got == sorted(keys + near)
     for value, dtype in [("a'b\\", T.StringType()), (b"\x00'", T.BinaryType()), (2**64 - 1, T.DecimalType(20, 0))]:
         assert spark.sql(f"SELECT {catalog._sql_literal(value, dtype)} AS v").collect()[0]["v"] == value
+
+
+# -- the base's PK range: keys outside it skip the probe ---------------------------
+
+
+def _keyed_insert(engine, keys):
+    values = ", ".join(f"({k}, 0)" for k in keys)
+    engine.execute(f"INSERT INTO keyed (k, n) VALUES {values}")
+
+
+def _keyed_base(spark, tmp_path, monkeypatch, durable, ktype, keys):
+    """Table ``keyed`` whose base holds ``keys`` (SQL literals) and no
+    local row: the durable save folds them, in memory a read compacts."""
+    monkeypatch.setattr(catalog, "_LOCAL_ROWS_MAX", len(keys) - 1)
+    engine = Engine(spark, data_directory=str(tmp_path / "data") if durable else None)
+    engine.execute(f"CREATE TABLE keyed (k {ktype} PRIMARY KEY, n UINT8)")
+    _keyed_insert(engine, keys)
+    engine.catalog.compact()
+    entry = engine.catalog.get("keyed")
+    assert entry.base is not None and not entry.local_rows
+    return engine, entry
+
+
+def _stored_keys(engine):
+    return [r["k"] for r in engine.execute("SELECT k FROM keyed").collect()]
+
+
+_FF16 = "0x" + "ff" * 16
+
+
+@pytest.mark.parametrize("durable", [False, True], ids=["in_memory", "durable"])
+@pytest.mark.parametrize(
+    "ktype, base, outside",
+    [
+        ("UINT32", ["10", "20", "30"], ["9", "31"]),
+        ("UINT64", ["5", str(2**63), str(2**64 - 1)], ["4"]),
+        ("UINT128", ["5", str(2**64), str(10**38 - 1)], ["4"]),
+        # code-point order, which is UTF-8 byte order (Spark's
+        # UTF8_BINARY) and not UTF-16's: there U+1F600 sorts below U+FFFF
+        ("STRING(8)", ["'é'", "'\uffff'", "'😀'"], ["'è'", "'😁'", "'😀a'"]),
+        # unsigned bytes: 0xff... is the largest key, not a negative one
+        ("BINARY", ["1", "0x" + "80" + "00" * 15, _FF16], ["0"]),
+    ],
+    ids=["uint32", "uint64", "uint128", "string", "binary"],
+)
+def test_pk_range_edges_clash_and_keys_outside_pass(
+    spark, tmp_path, monkeypatch, durable, ktype, base, outside
+):
+    """The base's PK range holds its exact min and max (from the fold's
+    parquet footers on the durable path, from the compacted rows in
+    memory), in the order Spark compares keys: a key equal to either
+    edge raises the typed 400, and the keys just outside are accepted."""
+    engine, entry = _keyed_base(spark, tmp_path, monkeypatch, durable, ktype, base)
+    stored = _stored_keys(engine)
+    assert entry.pk_range == (min(stored), max(stored))
+    for edge in (base[0], base[-1]):
+        with pytest.raises(EmdriveValidationError, match="already exists"):
+            _keyed_insert(engine, [edge])
+    for key in outside:
+        _keyed_insert(engine, [key])
+    assert len(_stored_keys(engine)) == len(base) + len(outside)
+
+
+def test_empty_durable_base_prunes_every_key(spark, tmp_path):
+    """A durable CREATE folds an empty base, whose footers hold no row
+    group: its PK range is empty, so the first INSERT runs no Spark job,
+    and a later clash is still caught among the local rows."""
+    engine = Engine(spark, data_directory=str(tmp_path / "data"))
+    engine.execute(CREATE_PHOTOS)
+    entry = engine.catalog.get("photos")
+    assert entry.base is not None and entry.pk_range == ()
+    assert spark_jobs(spark, "empty-base", lambda: engine.execute(_insert_sql([(1, 1), (2, 2)]))) == 0
+    with pytest.raises(EmdriveValidationError, match="already exists"):
+        engine.execute(_insert_sql([(2, 3)]))
+
+
+def test_restored_table_catches_a_clash_at_its_max_key(engine, spark, tmp_path, monkeypatch):
+    """A restore reads base + delta files, so it keeps no PK range, not
+    even the live entry's, which never saw the delta rows: a key at the
+    restored table's max, held only in a delta file, still clashes, in
+    the engine that saved it and in a fresh one. The first save of a
+    mutation folds and sets the range again."""
+    monkeypatch.setattr(catalog, "_LOCAL_ROWS_MAX", 2)
+    root = str(tmp_path / "data")
+    saver = Engine(spark, data_directory=root)
+    saver.execute(CREATE_PHOTOS)
+    saver.execute(_insert_sql([(0, 0), (1, 1), (2, 2)]))  # folds
+    saver.execute(_insert_sql([(7, 7)]))  # a delta file
+    assert saver.catalog.get("photos").pk_range == (0, 2)
+    for e in (saver, engine):
+        e.catalog.restore(root)
+        assert e.catalog.get("photos").pk_range is None
+        for key in (7, 2):
+            with pytest.raises(EmdriveValidationError, match="already exists"):
+                e.execute(_insert_sql([(key, 0)]))
+    saver.execute(_insert_sql([(8, 8)]))  # the first save after restore folds
+    assert saver.catalog.get("photos").pk_range == (0, 8)
+
+
+def test_base_without_footer_stats_falls_back_to_the_probe(spark, tmp_path, monkeypatch):
+    """parquet-mr writes no min/max for a row group whose min and max
+    together pass 4 KiB, so a base of long string keys (2,201 UTF-8
+    bytes each) has no known PK range: every key goes to the probe, and
+    clashes at its edges are caught."""
+    long = [c + "é" * 1100 for c in "abc"]
+    engine, entry = _keyed_base(
+        spark, tmp_path, monkeypatch, True, "STRING(2048)", [f"'{k}'" for k in long]
+    )
+    assert entry.pk_range is None
+    for key in (long[0], long[-1]):
+        with pytest.raises(EmdriveValidationError, match="already exists"):
+            _keyed_insert(engine, [f"'{key}'"])
+    _keyed_insert(engine, [f"'{'d' + 'é' * 1100}'"])
+    assert len(_stored_keys(engine)) == 4
 
 
 # -- reads racing appends --------------------------------------------------------

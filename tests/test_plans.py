@@ -4,6 +4,7 @@ broadcast, top-k, no Python in hot paths)."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pyarrow.parquet as pq
@@ -12,10 +13,10 @@ import pytest
 from emdrive_spark import catalog, registry
 from emdrive_spark.engine import Engine
 from emdrive_spark.plans.topk_planner import plan_topk
-from emdrive_spark.server import _rows_json, serve
+from emdrive_spark.server import ResultTooLarge, _rows_json, serve
 from emdrive_spark.sources.tables import load
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, spark_jobs
 
 registry.load_all()
 
@@ -591,24 +592,27 @@ def test_knn_distance_is_one_offset_xor(engine):
 @pytest.fixture
 def served(spark):
     """The test session as server.serve() sets it up, restored after."""
-    key = "spark.sql.limit.initialNumPartitions"
-    before = spark.conf.get(key)
+    keys = ["spark.sql.limit.initialNumPartitions", "spark.sql.optimizer.excludedRules"]
+    before = {key: spark.conf.get(key, None) for key in keys}
     serve(spark, host="127.0.0.1", port=0).server_close()
     yield
-    spark.conf.set(key, before)
+    for key, value in before.items():
+        if value is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, value)
 
 
 def _served_jobs(engine, spark, sql: str, group: str) -> int:
     """Spark jobs one served statement runs: Engine.execute, then the
     server's capped collect, after a first read that may compact."""
     _rows_json(engine.execute(sql), 10_000)
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        _rows_json(engine.execute(sql), 10_000)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return spark_jobs(spark, group, lambda: _rows_json(engine.execute(sql), 10_000))
+
+
+def _stages(spark, group: str) -> int:
+    tracker = spark.sparkContext.statusTracker()
+    return sum(len(tracker.getJobInfo(j).stageIds) for j in tracker.getJobIdsForGroup(group))
 
 
 @pytest.mark.parametrize(
@@ -618,23 +622,51 @@ def _served_jobs(engine, spark, sql: str, group: str) -> int:
     ids=["local", "compacted"],
 )
 def test_served_statement_runs_one_job(engine, spark, served, per_insert, radius_jobs):
-    """A served kNN runs one Spark job, and a radius statement at most
-    one: its capped collect (CollectLimit) scans every partition of a
-    compacted table in its first job, so it needs no second one."""
+    """A served kNN runs one Spark job of one stage, and a radius
+    statement at most one job: its capped collect (CollectLimit) scans
+    every partition of a compacted table in its first job, so it needs
+    no second one. The kNN's own LIMIT bounds it within the row cap, so
+    no CollectLimit goes over its TakeOrderedAndProject, which would
+    shuffle the top-k rows into one partition in a second stage."""
     _two_inserts(engine, per_insert)
     assert _served_jobs(engine, spark, _KNN_SQL, f"knn-{per_insert}") == 1
+    assert _stages(spark, f"knn-{per_insert}") == 1
     assert _served_jobs(engine, spark, _RADIUS_SQL, f"radius-{per_insert}") == radius_jobs
 
 
-@pytest.mark.xfail(
-    strict=True,
-    reason="a table of no more rows than the LIMIT loses the limit in the "
-    "optimizer (EliminateLimits), so the kNN plans as a global range-"
-    "partitioned sort: a sampling job, a shuffle job and a result job",
-)
 def test_knn_over_table_within_its_limit_runs_one_job(engine, spark, served):
+    """A kNN over a table of no more rows than its LIMIT keeps the
+    limit in a served session (EliminateLimits is excluded there), so it
+    plans as TakeOrderedAndProject, one job, not as a global
+    range-partitioned sort: a sampling job, a shuffle job and a result
+    job."""
     _two_inserts(engine)
     assert _served_jobs(engine, spark, _KNN_SQL, "knn-within-limit") == 1
+    plan = engine.execute(_KNN_SQL)._jdf.queryExecution().executedPlan().toString()
+    assert "TakeOrderedAndProject" in plan and "rangepartitioning" not in plan, plan
+
+
+def _served_rows(engine, sql: str, cap: int = 10_000) -> list[tuple]:
+    return [tuple(r.values()) for r in json.loads(_rows_json(engine.execute(sql), cap))["rows"]]
+
+
+def test_nested_limits_return_the_right_rows_when_served(engine, served):
+    """With EliminateLimits excluded, limits stay nested and each still
+    cuts: a user LIMIT within the server's result cap, a user LIMIT past
+    it under the cap's own limit (20 rows fit a cap of 30, not one of
+    15), and an ANSI passthrough's two LIMITs."""
+    _two_inserts(engine, 10)
+    dist = {i: bin((i * 2654435761 % 2**64) ^ 7).count("1") for i in range(20)}
+    knn = _served_rows(engine, "SELECT id, hash @ 7 AS d FROM photos ORDER BY d LIMIT 5")
+    assert [d for _, d in knn] == sorted(dist.values())[:5]
+    assert all(dist[i] == d for i, d in knn)
+    over = "SELECT id, hash @ 7 AS d FROM photos ORDER BY d LIMIT 50"
+    assert sorted(_served_rows(engine, over)) == sorted(dist.items())
+    assert sorted(_served_rows(engine, over, cap=30)) == sorted(dist.items())
+    with pytest.raises(ResultTooLarge):
+        _served_rows(engine, over, cap=15)
+    nested = "SELECT id FROM (SELECT id FROM photos ORDER BY id LIMIT 8) AS t ORDER BY id DESC LIMIT 3"
+    assert _served_rows(engine, nested) == [(7,), (6,), (5,)]
 
 
 def test_small_table_reads_as_one_local_relation(engine):
@@ -663,25 +695,43 @@ def _part_files(root):
     return sorted(f for f in os.listdir(path) if f.startswith("part-"))
 
 
-def test_durable_insert_runs_one_job(spark, served, tmp_path):
-    """A served durable 50-row INSERT runs one Spark job: the PK probe
-    of the parquet base. The batch's keys reach it as an IN list, not
-    as a semi-join whose LocalTableScan build side is broadcast in a job
-    of its own, and the delta file is written by pyarrow on the driver."""
-    root = str(tmp_path / "data")
+def _durable_insert_jobs(spark, root, base_ids, first_ids, timed_ids) -> int:
+    """Spark jobs of one served durable 50-row INSERT of ``timed_ids``
+    after a fold of ``base_ids`` into the base and a first, untimed
+    append of ``first_ids``; the base files must not be rewritten."""
     engine = Engine(spark, data_directory=root)
     engine.execute(_PHOTOS)
-    _insert(engine, range(catalog._LOCAL_ROWS_MAX + 1))  # folds into a base
-    _insert(engine, range(5_000, 5_050))  # first append, untimed
+    _insert(engine, base_ids)  # past the local-row limit: folds into a base
+    _insert(engine, first_ids)
     base_files = _part_files(root)
-    sc = spark.sparkContext
-    sc.setJobGroup("durable-insert", "durable-insert")
-    try:
-        _insert(engine, range(6_000, 6_050))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup("durable-insert")) == 1
+    jobs = spark_jobs(spark, "durable-insert", lambda: _insert(engine, timed_ids))
     assert _part_files(root) == base_files  # appended, not rewritten
+    return jobs
+
+
+def test_durable_insert_above_base_range_runs_no_job(spark, served, tmp_path):
+    """A served durable 50-row INSERT of keys above the base's PK range
+    runs no Spark job: the range read from the fold's parquet footers
+    rules out every key, and the delta file is written by pyarrow on
+    the driver."""
+    n = catalog._LOCAL_ROWS_MAX + 1
+    jobs = _durable_insert_jobs(
+        spark, str(tmp_path / "data"), range(n), range(5_000, 5_050), range(6_000, 6_050)
+    )
+    assert jobs == 0
+
+
+def test_durable_insert_runs_one_job(spark, served, tmp_path):
+    """A served durable 50-row INSERT of absent keys inside the base's
+    PK range (odd keys over a base of even ones) runs one Spark job: the
+    PK probe of the parquet base. The keys reach it as an IN list, not
+    as a semi-join whose LocalTableScan build side is broadcast in a job
+    of its own."""
+    n = catalog._LOCAL_ROWS_MAX + 1
+    jobs = _durable_insert_jobs(
+        spark, str(tmp_path / "data"), range(0, 2 * n, 2), range(101, 201, 2), range(1, 101, 2)
+    )
+    assert jobs == 1
 
 
 def test_fold_leaves_default_parallelism_files(spark, tmp_path):

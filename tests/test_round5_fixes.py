@@ -124,8 +124,8 @@ def test_uint_decimal_overflow_rejected_at_insert(engine_factory):
 
 
 def test_pk_clash_still_caught_after_fast_path(engine_factory):
-    """known_empty skips the semi-join only while the table provably
-    has no rows — the second INSERT must still catch a duplicate PK."""
+    """The first INSERT into an empty table probes no base; the second
+    INSERT must still catch a duplicate PK among the local rows."""
     e = engine_factory()
     e.execute(CREATE)
     e.execute("INSERT INTO rt5 (hash, url, width) VALUES (3, 'u1', 10)")
