@@ -108,11 +108,12 @@ class TableEntry:
     # the next save() of a mutation folds instead of appending.
     flushed: int | None = None
     # [min, max] of base's primary key, () while base holds no rows (or
-    # there is none), None when not known: a restored base, a key type
-    # whose Python order is not Spark's (_ordered_key), a parquet row
-    # group without min/max statistics. _pk_taken probes the base only
-    # for batch keys inside it. Set by _fold from the footers of the
-    # files it wrote and widened by _compact with the local rows it
+    # there is none), None when not known: a restored base, a base with
+    # rows whose key type has a Python order that is not Spark's
+    # (_ordered_key), a parquet row group without min/max statistics.
+    # _pk_taken probes the base only for batch keys inside it. Set by
+    # _fold from the footers of the files it wrote (None from before its
+    # swap until then) and widened by _compact with the local rows it
     # folds in, so it is exact, never stale.
     pk_range: tuple | None = None
 
@@ -206,10 +207,12 @@ class Catalog:
                 raise EmdriveValidationError(f"Table {stmt.name} already exists.")
             df = self._empty_frame(spark_schema(stmt.columns))
             entry = TableEntry(
-                name=stmt.name, schema_name=self.schema_name, columns=stmt.columns, df=df
+                name=stmt.name,
+                schema_name=self.schema_name,
+                columns=stmt.columns,
+                df=df,
+                pk_range=(),  # no rows yet
             )
-            if _ordered_key(entry.pk.etype.spark_type):
-                entry.pk_range = ()  # no rows yet
             self.tables[stmt.name] = entry
             df.createOrReplaceTempView(stmt.name)
             self.refresh_system_views()
@@ -328,7 +331,10 @@ class Catalog:
             parallelism = self.spark.sparkContext.defaultParallelism
             pk = entry.pk.name
             # the checkpoint is base ∪ local rows, so this is exact
-            entry.pk_range = _widen(entry.pk_range, [r[pk] for r in entry.local_rows])
+            if _ordered_key(entry.pk.etype.spark_type):
+                entry.pk_range = _widen(entry.pk_range, [r[pk] for r in entry.local_rows])
+            else:
+                entry.pk_range = None
             entry.df = entry.base = ckpt(entry.df.repartition(parallelism))
             entry.local_rows = []
             entry.flushed = None  # the base is no longer a saved snapshot
@@ -538,6 +544,10 @@ class Catalog:
         tmp, old = path + "__tmp", path + "__old"
         pk = e.pk.name
         parallelism = self.spark.sparkContext.defaultParallelism
+        # unknown until the new footers are read: if that read fails,
+        # the old range must not stand for a base holding the rows folded
+        # in, which are then no longer local rows either
+        e.pk_range = None
         (
             e.df.repartitionByRange(parallelism, pk)
             .sortWithinPartitions(pk)
@@ -773,12 +783,12 @@ def _widen(rng: tuple | None, keys: list) -> tuple | None:
 def _footer_pk_range(files: list[str], pk: str, dtype: T.DataType) -> tuple | None:
     """``[min, max]`` of column ``pk`` over parquet ``files`` from their
     footers' row-group statistics, read on the driver: () for no rows,
-    None if a ``dtype`` key is not ``_ordered_key`` or a row group holding
-    rows has no min/max (parquet-mr leaves them out for long strings)."""
+    whatever the key type; None if rows are held and a ``dtype`` key is
+    not ``_ordered_key``, or a row group holding rows has no min/max
+    (parquet-mr leaves them out for long strings)."""
     import pyarrow.parquet as pq
 
-    if not _ordered_key(dtype):
-        return None
+    ordered = _ordered_key(dtype)
     rng: tuple = ()
     for f in files:
         meta = pq.read_metadata(f)
@@ -787,6 +797,8 @@ def _footer_pk_range(files: list[str], pk: str, dtype: T.DataType) -> tuple | No
             group = meta.row_group(i)
             if group.num_rows == 0:
                 continue
+            if not ordered:
+                return None
             stats = group.column(col).statistics
             if stats is None or not stats.has_min_max:
                 return None

@@ -58,19 +58,11 @@ def _rows_json(df, max_rows: int) -> str:
     # sentinel row past the cap distinguishes at-the-limit from over
     # it. CollectLimit's first job covers the session's parallelism in
     # partitions (serve()), so over a compacted table this is one job
-    # holding at most parallelism × (cap + 1) rows. A plan already
-    # bounded within the cap (a kNN's LIMIT, a small local relation) is
-    # collected as it is: serve() keeps nested limits apart, and a
-    # CollectLimit over a kNN's TakeOrderedAndProject would shuffle its
-    # top-k rows into one partition, a second stage per statement.
+    # holding at most parallelism × (cap + 1) rows.
     if max_rows > 0:
-        bound = df._jdf.queryExecution().analyzed().maxRows()
-        if bound.isDefined() and bound.get() <= max_rows:
-            rows = df.collect()
-        else:
-            rows = df.limit(max_rows + 1).collect()
-            if len(rows) > max_rows:
-                raise ResultTooLarge(max_rows)
+        rows = df.limit(max_rows + 1).collect()
+        if len(rows) > max_rows:
+            raise ResultTooLarge(max_rows)
     else:  # cap disabled — reference-faithful unbounded collect
         rows = df.collect()
     return json.dumps(
@@ -263,16 +255,6 @@ def serve(
     # only, so batch callers' take()/head() keep Spark's default.
     spark.conf.set(
         "spark.sql.limit.initialNumPartitions", str(spark.sparkContext.defaultParallelism)
-    )
-    # EliminateLimits drops a LIMIT over a relation it knows holds no
-    # more rows (a kNN over a table of <= LIMIT rows), which turns the
-    # kNN's TakeOrderedAndProject into a global range-partitioned sort:
-    # a sampling job, a shuffle job and a result job instead of one.
-    # Nested limits then stay nested, which returns the same rows
-    # (_rows_json adds no cap over a plan its own LIMIT bounds).
-    spark.conf.set(
-        "spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.EliminateLimits",
     )
     engine = Engine(spark, data_directory=data_directory if explicit else None)
     # Restore ONLY when durability is engaged (r4 review): restoring

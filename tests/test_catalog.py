@@ -462,17 +462,74 @@ def test_pk_range_edges_clash_and_keys_outside_pass(
     assert len(_stored_keys(engine)) == len(base) + len(outside)
 
 
-def test_empty_durable_base_prunes_every_key(spark, tmp_path):
+_EMPTY_BASE_CASES = [
+    (CREATE_PHOTOS, _insert_sql([(1, 1), (2, 2)]), _insert_sql([(2, 3)]), "photos"),
+    # a key type whose Python order is not Spark's: no range once rows
+    # are held, but an empty base still prunes every key
+    (
+        "CREATE TABLE events (at TIMESTAMP PRIMARY KEY, n UINT8)",
+        "INSERT INTO events (at, n) VALUES ('2024-01-01T00:00:00', 1), ('2024-01-02T00:00:00', 2)",
+        "INSERT INTO events (at, n) VALUES ('2024-01-02T00:00:00', 3)",
+        "events",
+    ),
+]
+
+
+@pytest.mark.parametrize(
+    "create, first, clash, table", _EMPTY_BASE_CASES, ids=["uint32", "timestamp"]
+)
+def test_empty_durable_base_prunes_every_key(spark, tmp_path, create, first, clash, table):
     """A durable CREATE folds an empty base, whose footers hold no row
-    group: its PK range is empty, so the first INSERT runs no Spark job,
-    and a later clash is still caught among the local rows."""
+    group: its PK range is empty whatever the key type, so the first
+    INSERT runs no Spark job, and a later clash is still caught among
+    the local rows."""
+    engine = Engine(spark, data_directory=str(tmp_path / "data"))
+    engine.execute(create)
+    entry = engine.catalog.get(table)
+    assert entry.base is not None and entry.pk_range == ()
+    assert spark_jobs(spark, f"empty-base-{table}", lambda: engine.execute(first)) == 0
+    with pytest.raises(EmdriveValidationError, match="already exists"):
+        engine.execute(clash)
+
+
+def test_timestamp_key_base_with_rows_has_no_range(spark, tmp_path, monkeypatch):
+    """Once a fold or a compaction puts rows of an unordered key type
+    (TIMESTAMP) in the base, the range is unknown and every key goes to
+    the probe, on the durable path and in memory."""
+    monkeypatch.setattr(catalog, "_LOCAL_ROWS_MAX", 1)
+    values = "('2024-01-01T00:00:00', 1), ('2024-01-02T00:00:00', 2)"
+    for data in (str(tmp_path / "data"), None):
+        engine = Engine(spark, data_directory=data)
+        engine.execute("CREATE TABLE events (at TIMESTAMP PRIMARY KEY, n UINT8)")
+        engine.execute(f"INSERT INTO events (at, n) VALUES {values}")
+        engine.catalog.compact()
+        entry = engine.catalog.get("events")
+        assert entry.base is not None and not entry.local_rows and entry.pk_range is None
+        with pytest.raises(EmdriveValidationError, match="already exists"):
+            engine.execute("INSERT INTO events (at, n) VALUES ('2024-01-02T00:00:00', 3)")
+
+
+def test_fold_that_cannot_read_its_footers_keeps_no_stale_range(spark, tmp_path, monkeypatch):
+    """A fold drops the old PK range before it swaps in the new base. If
+    reading the new footers then fails, the range is unknown, not the
+    old, narrower one over a base that now also holds the folded rows
+    (no longer local rows), so a clash with one of them is still caught."""
+    monkeypatch.setattr(catalog, "_LOCAL_ROWS_MAX", 2)
     engine = Engine(spark, data_directory=str(tmp_path / "data"))
     engine.execute(CREATE_PHOTOS)
+    engine.execute(_insert_sql([(0, 0), (1, 1), (2, 2)]))  # folds
+    assert engine.catalog.get("photos").pk_range == (0, 2)
+
+    def unreadable(*args):
+        raise OSError("footer read failed")
+
+    monkeypatch.setattr(catalog, "_footer_pk_range", unreadable)
+    with pytest.raises(OSError, match="footer read failed"):
+        engine.execute(_insert_sql([(5, 5), (6, 6), (7, 7)]))  # folds, then fails
     entry = engine.catalog.get("photos")
-    assert entry.base is not None and entry.pk_range == ()
-    assert spark_jobs(spark, "empty-base", lambda: engine.execute(_insert_sql([(1, 1), (2, 2)]))) == 0
+    assert entry.pk_range is None and not entry.local_rows
     with pytest.raises(EmdriveValidationError, match="already exists"):
-        engine.execute(_insert_sql([(2, 3)]))
+        engine.execute(_insert_sql([(7, 0)]))
 
 
 def test_restored_table_catches_a_clash_at_its_max_key(engine, spark, tmp_path, monkeypatch):
