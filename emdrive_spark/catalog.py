@@ -27,7 +27,10 @@ O(batch) bytes, like the reference writing the page it touches. Once
 the local rows pass ``_LOCAL_ROWS_MAX`` the next save *folds*: it
 rewrites base + deltas as ``defaultParallelism`` PK-range-partitioned,
 PK-sorted files and reads them back as the new base, so a durable table
-never compacts.
+never compacts. Both a fold and ``restore()`` load a table's directory
+one way (``Catalog._load``): the base files are the base, and the delta
+files' rows are the local rows, so a restored table is in the state
+its last save left it in, and its next INSERT appends.
 
 The PK check of an INSERT prunes like the reference's B+tree descent:
 each entry keeps its base's PK ``[min, max]`` (read from the fold's
@@ -87,34 +90,27 @@ class TableEntry:
     # relation (or either alone), so lineage stays at two leaves
     # however many INSERTs land.
     local_rows: list[dict] = field(default_factory=list)
-    # Mutated since the last save() to the current save root. New and
-    # inserted-into tables are dirty; restore() marks entries clean
-    # (their on-disk snapshot IS the restore root). save() skips clean
-    # tables, so per-statement durability cost is O(changed table), not
-    # O(whole catalog) — the difference between a server whose INSERT
-    # latency is constant and one that rewrites every table per write.
-    dirty: bool = True
-    # Root of THIS entry's last successful write/restore. The skip in
-    # save() requires saved_root == root, not just a clean dirty flag:
-    # a save to a DIFFERENT root that clears dirty flags and then
-    # throws midway must not let a later save to the original root
-    # trust those flags and skip rewriting — that would publish a
-    # _catalog.json pointing at a stale snapshot (silent loss of
-    # acknowledged inserts; round-5 review finding).
+    # Root of THIS entry's last successful write or restore: the files
+    # flushed counts are at this root only, so a save to any other root
+    # folds. A save to a different root that throws midway leaves the
+    # entries it wrote pointing at that root, so a later save to the
+    # original root rewrites them instead of skipping them (a skip there
+    # would publish a _catalog.json over a snapshot missing
+    # acknowledged inserts).
     saved_root: str | None = None
     # How many of local_rows are on disk at saved_root as delta files
     # beside the files base reads; None while base is not exactly those
-    # files (never saved, restored from base + deltas, or compacted), so
-    # the next save() of a mutation folds instead of appending.
+    # files (never saved at this root, or compacted), so the next save()
+    # folds. The table is clean at saved_root when all of them are.
     flushed: int | None = None
     # [min, max] of base's primary key, () while base holds no rows (or
-    # there is none), None when not known: a restored base, a base with
-    # rows whose key type has a Python order that is not Spark's
-    # (_ordered_key), a parquet row group without min/max statistics.
-    # _pk_taken probes the base only for batch keys inside it. Set by
-    # _fold from the footers of the files it wrote (None from before its
-    # swap until then) and widened by _compact with the local rows it
-    # folds in, so it is exact, never stale.
+    # there is none), None when not known: a base with rows whose key
+    # type has a Python order that is not Spark's (_ordered_key), a
+    # parquet row group without min/max statistics. _pk_taken probes the
+    # base only for batch keys inside it. Set by _load from the footers
+    # of the base files (None from before a fold's swap until then) and
+    # widened by _compact with the local rows it folds in, so it is
+    # exact, never stale.
     pk_range: tuple | None = None
 
     @property
@@ -282,7 +278,6 @@ class Catalog:
                 df = entry.base.unionByName(df)
             entry.df = df  # one assignment: scan() reads it unlocked
             entry.local_rows = local_rows
-            entry.dirty = True  # next save() must write the new rows
             entry.df.createOrReplaceTempView(entry.name)
         # no refresh_system_views() here: the system relations expose
         # DDL metadata only — INSERT never changes them, and the hot
@@ -458,17 +453,16 @@ class Catalog:
         holds base files and delta files, and each table takes one of
         three paths:
 
-        - Skip: it is clean and its last write or restore was at this
-          root (``saved_root``, per entry: a save to another root that
-          failed midway must not let this root trust its dirty flags).
+        - Skip: it is clean at this root. Its last write or restore was
+          here (``saved_root``) and every local row is on disk
+          (``flushed``).
         - Append: its base reads exactly this root's base files
           (``flushed`` is set) and its local rows are within
           ``_LOCAL_ROWS_MAX``. The local rows not yet on disk become one
           delta file (``_append_delta``): O(batch) bytes, no Spark job.
-        - Fold, otherwise: a new table, another root, the first save of
-          a mutation after ``restore()`` or ``_compact``, or past the
-          limit. Base + deltas are rewritten as one new base
-          (``_fold``).
+        - Fold, otherwise: a new table, another root, a table that
+          ``_compact`` replaced, or past the limit. Base + deltas are
+          rewritten as one new base (``_fold``).
 
         Runs UNDER the catalog write lock (an unlocked save racing a
         concurrent INSERT read a pre-union entry.df and persisted a
@@ -484,7 +478,7 @@ class Catalog:
             for e in self.tables.values():
                 path = os.path.join(root, e.schema_name, e.name)
                 at_root = e.saved_root == root and os.path.exists(path)
-                if at_root and not e.dirty:
+                if at_root and e.flushed == len(e.local_rows):
                     meta[e.name] = _entry_meta(e)
                     continue
                 # what a crash mid-fold leaves; never read or published
@@ -493,7 +487,6 @@ class Catalog:
                     self._append_delta(e, path)
                 else:
                     self._fold(e, path)
-                e.dirty = False
                 e.saved_root = root
                 meta[e.name] = _entry_meta(e)
             os.makedirs(root, exist_ok=True)
@@ -534,10 +527,8 @@ class Catalog:
         committed row; ``restore()`` takes the table back from
         ``<table>__old`` if a crash lands between the two renames.
 
-        The live entry is re-pointed at the files just written, listed
-        one by one: its old lineage scanned files the swap deleted, and
-        a base read from an explicit list never picks up the delta files
-        appended beside it later, so no row is read twice."""
+        The live entry is then loaded from the files just written
+        (``_load``): its old lineage scanned files the swap deleted."""
         import os
         import shutil
 
@@ -559,22 +550,50 @@ class Catalog:
             os.rename(path, old)
         os.rename(tmp, path)
         shutil.rmtree(old, ignore_errors=True)
-        files = sorted(os.path.join(path, f) for f in os.listdir(path) if f.startswith("part-"))
-        e.df = e.base = self.spark.read.schema(spark_schema(e.columns)).parquet(*files)
+        self._load(e, path)
+
+    def _load(self, e: TableEntry, path: str) -> None:
+        """Point ``e`` at the table saved in ``path``, in the state its
+        saves left: the base reads the ``part-*`` files, listed one by
+        one, so it never picks up a delta file appended beside them
+        later; the local rows are the rows of the ``delta-*.parquet``
+        files, read on the driver by pyarrow in name (ULID) order, all
+        of them on disk (``flushed``); the PK range is read from the
+        base files' footers. Hidden ``.delta-*.tmp`` files that a crash
+        mid-append left are not read. An append happens only within
+        ``_LOCAL_ROWS_MAX``, so the delta rows are bounded."""
+        import os
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        names = sorted(os.listdir(path))
+        files = [os.path.join(path, f) for f in names if f.startswith("part-")]
+        deltas = [os.path.join(path, f) for f in names if f.startswith("delta-")]
+        schema = spark_schema(e.columns)
+        # pyarrow reads a TIMESTAMP back tz-aware (UTC), where an
+        # INSERT's rows hold it naive; the two never compare equal, so
+        # the PK check's set lookup would miss a clash
+        naive = pa.schema(
+            f.with_type(pa.timestamp("us")) if pa.types.is_timestamp(f.type) else f
+            for f in to_arrow_schema(schema)
+        )
+        local_rows = [r for d in deltas for r in pq.read_table(d).cast(naive).to_pylist()]
+        e.base = self.spark.read.schema(schema).parquet(*files)
+        e.df = e.base.unionByName(self._values_batch(local_rows, schema)) if local_rows else e.base
         e.df.createOrReplaceTempView(e.name)
-        e.local_rows = []
-        e.flushed = 0
-        e.pk_range = _footer_pk_range(files, pk, e.pk.etype.spark_type)
+        e.local_rows = local_rows
+        e.flushed = len(local_rows)
+        e.pk_range = _footer_pk_range(files, e.pk.name, e.pk.etype.spark_type)
 
     def restore(self, root: str) -> int:
         """Load a saved catalog: re-register every table (schema from
         the metadata file — nullability/PK/metric survive the
-        round-trip, which plain Parquet alone would lose). Each table's
-        base is a scan of its whole directory, base and delta files
-        (hidden ``.delta-*.tmp`` files a crash mid-append left are
-        skipped by Spark's reader), so the first save of a mutation
-        after a restore folds; its PK range is not known until then.
-        Runs under the write lock (it mutates
+        round-trip, which plain Parquet alone would lose). Each table is
+        loaded as a fold loads it (``_load``), so it is clean at
+        ``root``: a save there skips it until an INSERT, which then
+        appends. Runs under the write lock (it mutates
         self.tables); if a crash interrupted a fold between its two
         directory renames, the table's data survives under
         ``<table>__old`` and is swapped back here."""
@@ -601,21 +620,15 @@ class Catalog:
                 path = os.path.join(root, t["schema_name"], name)
                 if not os.path.exists(path) and os.path.exists(path + "__old"):
                     os.rename(path + "__old", path)
-                df = self.spark.read.schema(spark_schema(columns)).parquet(path)
                 entry = TableEntry(
                     name=name,
                     schema_name=t["schema_name"],
                     columns=columns,
-                    df=df,
-                    base=df,
-                    # the snapshot just read IS this root's current
-                    # state — the next save() to the same root may
-                    # skip it until a mutation re-dirties it
-                    dirty=False,
+                    df=None,  # set by _load
                     saved_root=root,
                 )
+                self._load(entry, path)
                 self.tables[name] = entry
-                df.createOrReplaceTempView(name)
             self.refresh_system_views()
         return len(meta)
 

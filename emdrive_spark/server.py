@@ -34,6 +34,8 @@ from emdrive_spark.sql.errors import EmdriveError
 
 DEFAULT_HOST = "127.0.0.1"
 DEFAULT_PORT = 8824  # the reference's default (config.rs:14-22)
+# The session conf serve() sets while it serves (see serve()).
+_LIMIT_PARTITIONS = "spark.sql.limit.initialNumPartitions"
 
 
 class ResultTooLarge(Exception):
@@ -247,15 +249,6 @@ def serve(
         from emdrive_spark.session import get_spark
 
         spark = get_spark("emdrive-server")
-    # _rows_json's capped collect plans as CollectLimit, which scans
-    # spark.sql.limit.initialNumPartitions partitions (default 1) in a
-    # first job and the rest in a second when that falls short of the
-    # cap. Starting at the session's parallelism, the width of a
-    # compacted table, scans it in one job. Set on the served session
-    # only, so batch callers' take()/head() keep Spark's default.
-    spark.conf.set(
-        "spark.sql.limit.initialNumPartitions", str(spark.sparkContext.defaultParallelism)
-    )
     engine = Engine(spark, data_directory=data_directory if explicit else None)
     # Restore ONLY when durability is engaged (r4 review): restoring
     # from the implicit default path while _persist() is a no-op would
@@ -269,6 +262,16 @@ def serve(
     )
     httpd.engine = engine  # type: ignore[attr-defined]
     httpd.data_directory = data_directory  # type: ignore[attr-defined]
+    # _rows_json's capped collect plans as CollectLimit, which scans
+    # spark.sql.limit.initialNumPartitions partitions (default 1) in a
+    # first job and the rest in a second when that falls short of the
+    # cap. Starting at the session's parallelism, the width of a
+    # compacted table, scans it in one job. Set on the served session
+    # only while it serves (server_close() puts the caller's value
+    # back), so batch callers' take()/head() keep their own.
+    httpd.served_session = spark
+    httpd.prior_limit_partitions = spark.conf.get(_LIMIT_PARTITIONS, None)
+    spark.conf.set(_LIMIT_PARTITIONS, str(spark.sparkContext.defaultParallelism))
     return httpd
 
 
@@ -281,6 +284,20 @@ class _DrainingHTTPServer(ThreadingHTTPServer):
 
     daemon_threads = False
     block_on_close = True
+    # the session serve() set _LIMIT_PARTITIONS on, and the conf's value
+    # before that (None: unset)
+    served_session: SparkSession | None = None
+    prior_limit_partitions: str | None = None
+
+    def server_close(self) -> None:
+        """Drain, then put back the conf serve() set on the session."""
+        super().server_close()
+        if self.served_session is None:  # a failed bind closes before serve() sets it
+            return
+        if self.prior_limit_partitions is None:
+            self.served_session.conf.unset(_LIMIT_PARTITIONS)
+        else:
+            self.served_session.conf.set(_LIMIT_PARTITIONS, self.prior_limit_partitions)
 
 
 def install_shutdown_handlers(server: ThreadingHTTPServer) -> None:

@@ -2,7 +2,6 @@ from __future__ import annotations
 
 import os
 import sys
-from contextlib import contextmanager
 
 import pytest
 
@@ -18,48 +17,11 @@ SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 
 
-# Session confs that server.serve() sets on the session it is given and
-# leaves set, and their values when the test session started (None:
-# unset), recorded by the ``spark`` fixture.
-_SERVED_CONFS = ("spark.sql.limit.initialNumPartitions",)
-_started: dict = {}
-
-
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("emdrive-tests")
-    _started["confs"] = {key: s.conf.get(key, None) for key in _SERVED_CONFS}
-    _started["spark"] = s
     yield s
     s.stop()
-
-
-def _set_confs(spark, values: dict) -> None:
-    for key, value in values.items():
-        if value is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, value)
-
-
-@contextmanager
-def served_confs_restored(spark):
-    """Put back, on leaving, the confs that server.serve() sets."""
-    before = {key: spark.conf.get(key, None) for key in _SERVED_CONFS}
-    try:
-        yield
-    finally:
-        _set_confs(spark, before)
-
-
-@pytest.fixture(scope="module", autouse=True)
-def _served_confs_reset_per_module():
-    """Reset the confs server.serve() leaves on the shared session after
-    each module, so no module's plans depend on which module served on
-    that session before it."""
-    yield
-    if "spark" in _started:
-        _set_confs(_started["spark"], _started["confs"])
 
 
 @pytest.fixture()

@@ -1,12 +1,14 @@
 """The catalog's durable save/restore: the crash windows of a fold's
 atomic directory swap (a table left under ``<table>__old``, a stale
 ``<table>__tmp``) and of an append (a stale hidden ``.delta-*.tmp``),
-restores of base + delta files, and the types a delta file carries. The
-PK check against the base, the local rows and the batch, and its
-pruning by the base's PK range at each key type's edges. Reads racing
-appends. And the compaction of an in-memory table before a read: exact
-under concurrent INSERTs, skipped on the durable path, and answers
-equal to a Python popcount whether or not it compacted."""
+saves across engines and roots (skips of clean tables, a failed save
+to another root), restores into the state the saves left (base files
+as the base, delta rows as local rows), and the types a delta file
+carries. The PK check against the base, the local rows and the batch,
+and its pruning by the base's PK range at each key type's edges. Reads
+racing appends. And the compaction of an in-memory table before a
+read: exact under concurrent INSERTs, skipped on the durable path, and
+answers equal to a Python popcount whether or not it compacted."""
 
 from __future__ import annotations
 
@@ -98,6 +100,118 @@ def test_insert_after_restore_keeps_restored_rows(engine, spark, tmp_path):
     fresh.execute("INSERT INTO rt5 (hash, url, width) VALUES (4, 'u4', 40)")
     urls = sorted(r["url"] for r in fresh.execute("SELECT url FROM rt5").collect())
     assert urls == ["u1", "u2", "u3", "u4"]
+
+
+# -- save() and restore() across engines and roots ------------------------------
+
+
+def test_restore_insert_save_select_insert(spark, tmp_path):
+    """A restored table's base scans the saved files, so a save that
+    deleted them would leave every later action on the table (a SELECT,
+    or the PK probe of the next INSERT) failing with
+    FileNotFoundException until restart. Saves after a restore keep the
+    live entry readable, and a second restore sees every saved row."""
+    root = str(tmp_path / "cat")
+    a = Engine(spark)
+    a.execute(CREATE_RT5)
+    a.execute("INSERT INTO rt5 (hash, url, width) VALUES (5, 'u1', 100)")
+    a.catalog.save(root)
+
+    b = Engine(spark)
+    assert b.catalog.restore(root) == 1
+    b.execute("INSERT INTO rt5 (hash, url, width) VALUES (9, 'u2', 300)")
+    b.catalog.save(root)
+    rows = b.execute("SELECT url, width FROM rt5 WHERE hash = 9").collect()
+    assert [(r["url"], r["width"]) for r in rows] == [("u2", 300)]
+    # the PK check of the next INSERT reads the table too
+    b.execute("INSERT INTO rt5 (hash, url, width) VALUES (7, 'u3', 1)")
+    b.catalog.save(root)
+    assert b.execute("SELECT url FROM rt5").count() == 3
+
+    c = Engine(spark)
+    c.catalog.restore(root)
+    assert c.execute("SELECT url FROM rt5").count() == 3
+
+
+def test_save_while_never_restored_still_queryable(spark, tmp_path):
+    """Two consecutive saves of a never-restored catalog leave the live
+    entry readable: the first folds and re-points it at the new files,
+    the second skips it."""
+    root = str(tmp_path / "cat2")
+    a = Engine(spark)
+    a.execute(CREATE_RT5)
+    a.execute("INSERT INTO rt5 (hash, url, width) VALUES (5, 'u1', 100)")
+    a.catalog.save(root)
+    a.catalog.save(root)
+    assert a.execute("SELECT url FROM rt5").count() == 1
+
+
+def test_incremental_save_skips_clean_tables(spark, tmp_path):
+    """save() writes only tables with rows not yet on disk at the same
+    root, so per-statement durability is O(changed table), not
+    O(catalog). A different root takes a full pass."""
+    root = str(tmp_path / "cat3")
+    e = Engine(spark)
+    e.execute(CREATE_RT5)
+    e.execute(CREATE_RT5.replace("rt5", "rt5b"))
+    e.execute("INSERT INTO rt5 (hash, url, width) VALUES (5, 'u1', 100)")
+    e.execute("INSERT INTO rt5b (hash, url, width) VALUES (5, 'v1', 100)")
+    e.catalog.save(root)
+
+    def table_files(tbl):
+        return sorted(os.listdir(os.path.join(root, "main", tbl)))
+
+    b_before = table_files("rt5b")
+    e.execute("INSERT INTO rt5 (hash, url, width) VALUES (9, 'u2', 300)")
+    e.catalog.save(root)
+    assert table_files("rt5b") == b_before  # rt5b untouched
+    f = Engine(spark)
+    f.catalog.restore(root)
+    assert f.execute("SELECT url FROM rt5").count() == 2
+    assert f.execute("SELECT url FROM rt5b").count() == 1
+
+    root2 = str(tmp_path / "cat4")
+    e.catalog.save(root2)
+    g = Engine(spark)
+    g.catalog.restore(root2)
+    assert g.execute("SELECT url FROM rt5").count() == 2
+    assert g.execute("SELECT url FROM rt5b").count() == 1
+
+
+def test_failed_save_to_second_root_does_not_poison_first(spark, tmp_path, monkeypatch):
+    """save(A); INSERT; save(B) writes the table at B, then dies on a
+    later table. The table's rows are then all on disk, but at B, so
+    save(A) must not skip it: that would publish a _catalog.json at A
+    whose snapshot misses the acknowledged INSERT. The skip keys on the
+    per-entry saved_root, which the interrupted save(B) left at B, so
+    save(A) rewrites the table."""
+    root_a = str(tmp_path / "rootA")
+    root_b = str(tmp_path / "rootB")
+    e = Engine(spark)
+    e.execute(CREATE_RT5)
+    e.execute(CREATE_RT5.replace("rt5", "rt5z"))
+    e.execute("INSERT INTO rt5 (hash, url, width) VALUES (5, 'u1', 100)")
+    e.execute("INSERT INTO rt5z (hash, url, width) VALUES (5, 'z1', 100)")
+    e.catalog.save(root_a)
+    e.execute("INSERT INTO rt5 (hash, url, width) VALUES (9, 'u2', 300)")
+
+    # save(B): rt5 writes cleanly, then rt5z's metadata fails mid-loop
+    real_meta = catalog._entry_meta
+
+    def exploding_meta(entry):
+        if entry.name == "rt5z":
+            raise RuntimeError("disk full (simulated)")
+        return real_meta(entry)
+
+    monkeypatch.setattr(catalog, "_entry_meta", exploding_meta)
+    with pytest.raises(RuntimeError):
+        e.catalog.save(root_b)
+    monkeypatch.setattr(catalog, "_entry_meta", real_meta)
+
+    e.catalog.save(root_a)
+    f = Engine(spark)
+    f.catalog.restore(root_a)
+    assert f.execute("SELECT url FROM rt5").count() == 2  # both inserts
 
 
 # -- compaction of an in-memory table before a read ----------------------------
@@ -226,7 +340,7 @@ def _append_rows(engine, root, rows):
     engine.catalog.save(root)
 
 
-def test_stale_hidden_delta_tmp_is_ignored_and_gone_after_fold(engine, spark, tmp_path):
+def test_stale_hidden_delta_tmp_is_ignored_and_gone_after_fold(engine, spark, tmp_path, monkeypatch):
     """A crash mid-append leaves a hidden ``.delta-<ulid>.tmp``: restore()
     reads past it, and the next fold's directory swap removes it."""
     root = str(tmp_path / "cat")
@@ -239,14 +353,18 @@ def test_stale_hidden_delta_tmp_is_ignored_and_gone_after_fold(engine, spark, tm
 
     fresh = Engine(spark)
     fresh.catalog.restore(root)
-    _append_rows(fresh, root, [(5, "u5", 50)])  # first save after restore folds
+    monkeypatch.setattr(catalog, "_LOCAL_ROWS_MAX", 1)
+    _append_rows(fresh, root, [(5, "u5", 50)])  # two local rows: the save folds
     assert not [f for f in os.listdir(path) if "delta" in f]
     assert _urls(spark, root) == ["u1", "u2", "u3", "u4", "u5"]
 
 
-def test_restore_of_base_and_deltas_returns_every_row_then_folds(engine, spark, tmp_path):
-    """Each INSERT after a fold is one delta file beside the base; a
-    restore reads base + every delta, and its first save folds them."""
+def test_restore_of_base_and_deltas_returns_every_row_then_folds(engine, spark, tmp_path, monkeypatch):
+    """Each INSERT after a fold is one delta file beside the base. A
+    restore loads the state those saves left: the base files as its
+    base, with their PK range, and every delta row once, as local rows
+    already on disk. So its first save is skipped, its next INSERT
+    appends a delta, and a save past the local-row limit folds."""
     root = str(tmp_path / "cat")
     path = _saved_rt5(engine, root)
     base = _rt5_files(path, "part-")
@@ -258,18 +376,24 @@ def test_restore_of_base_and_deltas_returns_every_row_then_folds(engine, spark, 
 
     fresh = Engine(spark)
     fresh.catalog.restore(root)
-    assert fresh.catalog.get("rt5").flushed is None
+    entry = fresh.catalog.get("rt5")
+    assert entry.flushed == len(entry.local_rows) == 4
+    assert entry.pk_range == ("u1", "u3")
     fresh.catalog.save(root)  # clean: skipped, nothing rewritten
     assert len(_rt5_files(path, "delta-")) == 4
     _append_rows(fresh, root, [(8, "u8", 80)])
-    assert not _rt5_files(path, "delta-") and _rt5_files(path, "part-") != base
-    assert fresh.catalog.get("rt5").flushed == 0
+    assert len(_rt5_files(path, "delta-")) == 5 and _rt5_files(path, "part-") == base
+    assert entry.flushed == 5
     assert _urls(spark, root) == [f"u{i}" for i in range(1, 9)]
-    # the live entry reads the folded base and keeps appending to it
+    # past the limit the save folds, and the live entry keeps appending
+    monkeypatch.setattr(catalog, "_LOCAL_ROWS_MAX", 5)
     _append_rows(fresh, root, [(9, "u9", 90)])
+    assert not _rt5_files(path, "delta-") and _rt5_files(path, "part-") != base
+    assert entry.flushed == 0
+    _append_rows(fresh, root, [(10, "u10", 100)])
     assert len(_rt5_files(path, "delta-")) == 1
-    assert fresh.execute("SELECT COUNT(*) AS n FROM rt5").collect()[0]["n"] == 9
-    assert _urls(spark, root) == [f"u{i}" for i in range(1, 10)]
+    assert fresh.execute("SELECT COUNT(*) AS n FROM rt5").collect()[0]["n"] == 10
+    assert _urls(spark, root) == sorted(f"u{i}" for i in range(1, 11))
 
 
 def test_save_to_second_root_after_appends_is_complete(engine, spark, tmp_path):
@@ -339,6 +463,7 @@ def test_delta_file_types_round_trip(spark, tmp_path):
     fresh = Engine(spark)
     fresh.catalog.restore(root)
     restored = fresh.execute(f"SELECT {cols} FROM typed")
+    assert fresh.catalog.get("typed").local_rows == engine.catalog.get("typed").local_rows
     assert restored.dtypes == live.dtypes
     assert sorted(map(tuple, restored.collect())) == sorted(map(tuple, live.collect()))
     row = {r["id"]: r for r in restored.collect()}[1]
@@ -533,11 +658,11 @@ def test_fold_that_cannot_read_its_footers_keeps_no_stale_range(spark, tmp_path,
 
 
 def test_restored_table_catches_a_clash_at_its_max_key(engine, spark, tmp_path, monkeypatch):
-    """A restore reads base + delta files, so it keeps no PK range, not
-    even the live entry's, which never saw the delta rows: a key at the
-    restored table's max, held only in a delta file, still clashes, in
-    the engine that saved it and in a fresh one. The first save of a
-    mutation folds and sets the range again."""
+    """A restore takes the base's PK range from its footers and the
+    delta files' rows as local rows, so a key at the restored table's
+    max, held only in a delta file, still clashes, as does one at the
+    base's max, in the engine that saved it and in a fresh one. The
+    next save appends and leaves the range as it was."""
     monkeypatch.setattr(catalog, "_LOCAL_ROWS_MAX", 2)
     root = str(tmp_path / "data")
     saver = Engine(spark, data_directory=root)
@@ -547,12 +672,33 @@ def test_restored_table_catches_a_clash_at_its_max_key(engine, spark, tmp_path, 
     assert saver.catalog.get("photos").pk_range == (0, 2)
     for e in (saver, engine):
         e.catalog.restore(root)
-        assert e.catalog.get("photos").pk_range is None
+        assert e.catalog.get("photos").pk_range == (0, 2)
         for key in (7, 2):
             with pytest.raises(EmdriveValidationError, match="already exists"):
                 e.execute(_insert_sql([(key, 0)]))
-    saver.execute(_insert_sql([(8, 8)]))  # the first save after restore folds
-    assert saver.catalog.get("photos").pk_range == (0, 8)
+    saver.execute(_insert_sql([(8, 8)]))  # two local rows: appended
+    path = os.path.join(root, "main", "photos")
+    assert len([f for f in os.listdir(path) if f.startswith("delta-")]) == 2
+    assert saver.catalog.get("photos").pk_range == (0, 2)
+
+
+@pytest.mark.parametrize("durable", [False, True], ids=["in_memory", "durable"])
+def test_restored_timestamp_key_in_a_delta_clashes(spark, tmp_path, durable):
+    """A TIMESTAMP key held only in a delta file clashes after a restore
+    into an in-memory or a durable engine: the restored local rows hold
+    the same naive datetimes an INSERT builds, though pyarrow reads a
+    timestamp back tz-aware."""
+    root = str(tmp_path / "data")
+    at = "'2024-01-02T03:04:05.678901'"
+    saver = Engine(spark, data_directory=root)
+    saver.execute("CREATE TABLE events (at TIMESTAMP PRIMARY KEY, n UINT8)")
+    saver.execute(f"INSERT INTO events (at, n) VALUES ({at}, 1)")
+    assert _rt5_files(os.path.join(root, "main", "events"), "delta-")
+    engine = Engine(spark, data_directory=root if durable else None)
+    engine.catalog.restore(root)
+    with pytest.raises(EmdriveValidationError, match="already exists"):
+        engine.execute(f"INSERT INTO events (at, n) VALUES ({at}, 2)")
+    assert engine.execute("SELECT COUNT(*) AS n FROM events").collect()[0]["n"] == 1
 
 
 def test_base_without_footer_stats_falls_back_to_the_probe(spark, tmp_path, monkeypatch):

@@ -15,7 +15,7 @@ from emdrive_spark.plans.topk_planner import plan_topk
 from emdrive_spark.server import _rows_json, serve
 from emdrive_spark.sources.tables import load
 
-from .conftest import SF_SMOKE, served_confs_restored, spark_jobs
+from .conftest import SF_SMOKE, spark_jobs
 
 registry.load_all()
 
@@ -590,10 +590,12 @@ def test_knn_distance_is_one_offset_xor(engine):
 
 @pytest.fixture
 def served(spark):
-    """The test session as server.serve() sets it up, restored after."""
-    with served_confs_restored(spark):
-        serve(spark, host="127.0.0.1", port=0).server_close()
+    """The test session as server.serve() sets it up, until teardown."""
+    httpd = serve(spark, host="127.0.0.1", port=0)
+    try:
         yield
+    finally:
+        httpd.server_close()
 
 
 def _served_jobs(engine, spark, sql: str, group: str) -> int:
@@ -665,14 +667,18 @@ def _part_files(root):
     return sorted(f for f in os.listdir(path) if f.startswith("part-"))
 
 
-def _durable_insert_jobs(spark, root, base_ids, first_ids, timed_ids) -> int:
+def _durable_insert_jobs(spark, root, base_ids, first_ids, timed_ids, restart=False) -> int:
     """Spark jobs of one served durable 50-row INSERT of ``timed_ids``
     after a fold of ``base_ids`` into the base and a first, untimed
-    append of ``first_ids``; the base files must not be rewritten."""
+    append of ``first_ids`` (then a restore into a new engine, if
+    ``restart``); the base files must not be rewritten."""
     engine = Engine(spark, data_directory=root)
     engine.execute(_PHOTOS)
     _insert(engine, base_ids)  # past the local-row limit: folds into a base
     _insert(engine, first_ids)
+    if restart:
+        engine = Engine(spark, data_directory=root)
+        engine.catalog.restore(root)
     base_files = _part_files(root)
     jobs = spark_jobs(spark, "durable-insert", lambda: _insert(engine, timed_ids))
     assert _part_files(root) == base_files  # appended, not rewritten
@@ -687,6 +693,23 @@ def test_durable_insert_above_base_range_runs_no_job(spark, served, tmp_path):
     n = catalog._LOCAL_ROWS_MAX + 1
     jobs = _durable_insert_jobs(
         spark, str(tmp_path / "data"), range(n), range(5_000, 5_050), range(6_000, 6_050)
+    )
+    assert jobs == 0
+
+
+def test_durable_insert_after_restore_runs_no_job(spark, served, tmp_path):
+    """The first served durable INSERT after a restart, of keys above
+    the base's PK range, runs no Spark job either: the restore reads
+    the range from the base files' footers and the delta rows as local
+    rows, so the INSERT appends a delta."""
+    n = catalog._LOCAL_ROWS_MAX + 1
+    jobs = _durable_insert_jobs(
+        spark,
+        str(tmp_path / "data"),
+        range(n),
+        range(5_000, 5_050),
+        range(6_000, 6_050),
+        restart=True,
     )
     assert jobs == 0
 

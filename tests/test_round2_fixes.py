@@ -197,6 +197,7 @@ def test_server_boots_from_env_alone(spark, monkeypatch, tmp_path):
         assert body["rows"] == [{"one": 1}]
     finally:
         httpd.shutdown()
+        httpd.server_close()
 
 
 # -- dedup_embedding gating -----------------------------------------------
@@ -370,6 +371,7 @@ def test_server_persists_mutations_across_restart(spark, monkeypatch, tmp_path):
         )
     finally:
         a.shutdown()
+        a.server_close()
 
     # fresh server process-equivalent: same env, new engine + catalog
     b = run(18827)
@@ -380,3 +382,4 @@ def test_server_persists_mutations_across_restart(spark, monkeypatch, tmp_path):
         assert body["rows"] == [{"name": "restart"}]
     finally:
         b.shutdown()
+        b.server_close()

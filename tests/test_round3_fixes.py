@@ -172,6 +172,7 @@ def test_system_tables_over_http(spark):
         assert body["column_names"] == ["table_name"]
     finally:
         httpd.shutdown()
+        httpd.server_close()
 
 
 # -- graceful shutdown ----------------------------------------------------

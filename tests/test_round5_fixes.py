@@ -1,6 +1,6 @@
 """Round-5 advisor fixes, pinned as regressions (ADVICE.md r4):
-restored-table durability across save(), negative Content-Length
-framing, and alias-shadows-METRIC-KEY rejection for `@`."""
+negative Content-Length framing and alias-shadows-METRIC-KEY rejection
+for `@`."""
 
 from __future__ import annotations
 
@@ -16,48 +16,6 @@ CREATE TABLE rt5 (
     width UINT32
 )
 """
-
-
-def test_restore_insert_save_select_insert(engine_factory, tmp_path):
-    """The r4 advisor's medium finding: a restored table's entry.df
-    scans the saved part-files, so the next save()'s atomic swap
-    deleted the very files that lineage references — every later
-    action on the table (SELECT, or the PK semi-join of the next
-    INSERT) threw FileNotFoundException until restart. save() now
-    re-points each entry at the snapshot it just wrote."""
-    root = str(tmp_path / "cat")
-    a = engine_factory()
-    a.execute(CREATE)
-    a.execute("INSERT INTO rt5 (hash, url, width) VALUES (5, 'u1', 100)")
-    a.catalog.save(root)
-
-    b = engine_factory()
-    assert b.catalog.restore(root) == 1
-    b.execute("INSERT INTO rt5 (hash, url, width) VALUES (9, 'u2', 300)")
-    b.catalog.save(root)  # pre-fix: deletes files b's lineage still reads
-    rows = b.execute("SELECT url, width FROM rt5 WHERE hash = 9").collect()
-    assert [(r["url"], r["width"]) for r in rows] == [("u2", 300)]
-    # the PK-uniqueness semi-join reads the table too — must not 500
-    b.execute("INSERT INTO rt5 (hash, url, width) VALUES (7, 'u3', 1)")
-    b.catalog.save(root)
-    assert b.execute("SELECT url FROM rt5").count() == 3
-
-    # and a second restore sees everything the saves persisted
-    c = engine_factory()
-    c.catalog.restore(root)
-    assert c.execute("SELECT url FROM rt5").count() == 3
-
-
-def test_save_while_never_restored_still_queryable(engine_factory, tmp_path):
-    """Same swap path for an in-memory (never restored) catalog: two
-    consecutive saves must not invalidate the live entry either."""
-    root = str(tmp_path / "cat2")
-    a = engine_factory()
-    a.execute(CREATE)
-    a.execute("INSERT INTO rt5 (hash, url, width) VALUES (5, 'u1', 100)")
-    a.catalog.save(root)
-    a.catalog.save(root)  # second swap: reads snapshot 1, writes snapshot 2
-    assert a.execute("SELECT url FROM rt5").count() == 1
 
 
 def test_alias_shadowing_metric_column_rejected(engine_factory):
@@ -133,44 +91,6 @@ def test_pk_clash_still_caught_after_fast_path(engine_factory):
         e.execute("INSERT INTO rt5 (hash, url, width) VALUES (4, 'u1', 11)")
 
 
-def test_incremental_save_skips_clean_tables(engine_factory, tmp_path):
-    """save() rewrites only tables mutated since the last save to the
-    same root — per-statement durability is O(changed table), not
-    O(catalog). A different root forces a full pass."""
-    import os
-
-    root = str(tmp_path / "cat3")
-    e = engine_factory()
-    e.execute(CREATE)
-    e.execute(CREATE.replace("rt5", "rt5b"))
-    e.execute("INSERT INTO rt5 (hash, url, width) VALUES (5, 'u1', 100)")
-    e.execute("INSERT INTO rt5b (hash, url, width) VALUES (5, 'v1', 100)")
-    e.catalog.save(root)
-
-    def snapshot_files(tbl):
-        d = os.path.join(root, "main", tbl)
-        return sorted(os.path.join(d, f) for f in os.listdir(d) if f.startswith("part-"))
-
-    b_before = snapshot_files("rt5b")
-    e.execute("INSERT INTO rt5 (hash, url, width) VALUES (9, 'u2', 300)")
-    e.catalog.save(root)
-    # rt5b untouched -> identical part-files survive the save
-    assert snapshot_files("rt5b") == b_before
-    # rt5 was rewritten and the saved state is complete
-    f = engine_factory()
-    f.catalog.restore(root)
-    assert f.execute("SELECT url FROM rt5").count() == 2
-    assert f.execute("SELECT url FROM rt5b").count() == 1
-
-    # a NEW root gets a full pass: both tables land there
-    root2 = str(tmp_path / "cat4")
-    e.catalog.save(root2)
-    g = engine_factory()
-    g.catalog.restore(root2)
-    assert g.execute("SELECT url FROM rt5").count() == 2
-    assert g.execute("SELECT url FROM rt5b").count() == 1
-
-
 @pytest.fixture()
 def engine_factory(spark):
     def make() -> Engine:
@@ -205,6 +125,7 @@ def test_negative_content_length_is_typed_400(spark):
         conn.close()
     finally:
         httpd.shutdown()
+        httpd.server_close()
 
 
 def test_edit_dedup_hybrid_paths_equal_selfjoin(spark, monkeypatch):
@@ -227,46 +148,6 @@ def test_edit_dedup_hybrid_paths_equal_selfjoin(spark, monkeypatch):
     all_hot = run()
     assert all_small == all_hot
     assert len(all_small) > 0  # perturbed twins must survive the verifier
-
-
-def test_failed_save_to_second_root_does_not_poison_first(engine_factory, tmp_path, monkeypatch):
-    """Round-5 review (top finding): save(A); INSERT; save(B) clears
-    the dirty flag then dies on a later table; save(A) must NOT trust
-    the flag and skip the rewrite — that would publish a _catalog.json
-    at A whose snapshot misses the acknowledged INSERT. The skip now
-    keys on the per-entry saved_root, so the interrupted save(B) leaves
-    the entry pointing at B and save(A) rewrites it."""
-    root_a = str(tmp_path / "rootA")
-    root_b = str(tmp_path / "rootB")
-    e = engine_factory()
-    e.execute(CREATE)
-    e.execute(CREATE.replace("rt5", "rt5z"))
-    e.execute("INSERT INTO rt5 (hash, url, width) VALUES (5, 'u1', 100)")
-    e.execute("INSERT INTO rt5z (hash, url, width) VALUES (5, 'z1', 100)")
-    e.catalog.save(root_a)
-    e.execute("INSERT INTO rt5 (hash, url, width) VALUES (9, 'u2', 300)")
-
-    # save(B): let rt5 write cleanly, then blow up on rt5z's write by
-    # making the metadata serialization of its entry fail mid-loop.
-    import emdrive_spark.catalog as cat
-
-    real_meta = cat._entry_meta
-
-    def exploding_meta(entry):
-        if entry.name == "rt5z":
-            raise RuntimeError("disk full (simulated)")
-        return real_meta(entry)
-
-    monkeypatch.setattr(cat, "_entry_meta", exploding_meta)
-    with pytest.raises(RuntimeError):
-        e.catalog.save(root_b)
-    monkeypatch.setattr(cat, "_entry_meta", real_meta)
-
-    # rt5 is clean but saved at B; save(A) must rewrite it at A.
-    e.catalog.save(root_a)
-    f = engine_factory()
-    f.catalog.restore(root_a)
-    assert f.execute("SELECT url FROM rt5").count() == 2  # both inserts
 
 
 def test_alias_of_nonmetric_name_gets_accurate_at_error(engine_factory):
@@ -313,6 +194,7 @@ def test_stalled_body_read_times_out_with_408(spark, monkeypatch):
         conn.close()
     finally:
         httpd.shutdown()
+        httpd.server_close()
 
 
 def test_oversized_content_length_rejected_413(spark):
@@ -339,6 +221,7 @@ def test_oversized_content_length_rejected_413(spark):
         conn.close()
     finally:
         httpd.shutdown()
+        httpd.server_close()
 
 
 def test_spread_widens_few_split_scan(spark):

@@ -104,6 +104,7 @@ def test_413_closes_keepalive_connection(spark):
     finally:
         httpd.RequestHandlerClass.protocol_version = old_proto
         httpd.shutdown()
+        httpd.server_close()
 
 
 def test_respond_survives_client_that_stops_reading(spark, caplog):

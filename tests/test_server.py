@@ -11,7 +11,7 @@ import urllib.request
 
 import pytest
 
-from emdrive_spark.server import serve
+from emdrive_spark.server import _LIMIT_PARTITIONS, serve
 
 
 @pytest.fixture(scope="module")
@@ -19,8 +19,11 @@ def endpoint(spark):
     httpd = serve(spark, host="127.0.0.1", port=18824)
     t = threading.Thread(target=httpd.serve_forever, daemon=True)
     t.start()
-    yield "http://127.0.0.1:18824"
-    httpd.shutdown()
+    try:
+        yield "http://127.0.0.1:18824"
+    finally:
+        httpd.shutdown()
+        httpd.server_close()
 
 
 def _post(url: str, sql: str):
@@ -143,3 +146,32 @@ def test_result_cap_413_and_at_cap_ok(spark, monkeypatch):
         assert len(body["rows"]) == 5
     finally:
         httpd.shutdown()
+        httpd.server_close()
+
+
+
+def _put_limit_partitions(spark, value) -> None:
+    if value is None:
+        spark.conf.unset(_LIMIT_PARTITIONS)
+    else:
+        spark.conf.set(_LIMIT_PARTITIONS, value)
+
+
+@pytest.mark.parametrize("caller_set", [True, False], ids=["set", "unset"])
+def test_server_close_puts_back_the_callers_conf(spark, caller_set):
+    """serve() starts the capped collect at the session's parallelism
+    while it serves; server_close() puts back the caller's value of that
+    conf, or unsets it if the caller had not set it."""
+    parallelism = spark.sparkContext.defaultParallelism
+    prior = str(parallelism + 1) if caller_set else None
+    before = spark.conf.get(_LIMIT_PARTITIONS, None)
+    try:
+        _put_limit_partitions(spark, prior)
+        httpd = serve(spark, host="127.0.0.1", port=0)
+        try:
+            assert spark.conf.get(_LIMIT_PARTITIONS, None) == str(parallelism)
+        finally:
+            httpd.server_close()
+        assert spark.conf.get(_LIMIT_PARTITIONS, None) == prior
+    finally:
+        _put_limit_partitions(spark, before)
