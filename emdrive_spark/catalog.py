@@ -11,13 +11,17 @@ under the table's name (Spark DataFrames are immutable, so a mutation
 swaps in a new frame and re-registers the view). The frame is at most
 two leaves: a compacted base (an executor-side checkpoint of
 ``defaultParallelism`` partitions, or a parquet scan) and ONE local
-relation holding every row INSERTed since, which each INSERT rebuilds
-from the rows the entry keeps on the driver. Catalyst evaluates a
-read's projection over that local relation on the driver, with no
-Spark job; that is the cheaper read while the local rows are few, and
-the dearer one past ``_LOCAL_ROWS_MAX``. So the next read through the
-catalog (``Catalog.scan``, ``Catalog.compact``, or the PK check of the
-next INSERT) folds a table past that size into a new base (``_compact``).
+relation holding every row INSERTed since. The entry keeps those rows
+on the driver as one Arrow table in the table's Arrow schema, and an
+INSERT converts its values into it once: the PK check compares in it,
+the local relation is built from it, and a durable save writes its
+tail as a delta file, so the three never disagree on a value.
+Catalyst evaluates a read's projection over that local relation on the
+driver, with no Spark job; that is the cheaper read while the local
+rows are few, and the dearer one past ``_LOCAL_ROWS_MAX``. So the next
+read through the catalog (``Catalog.scan``, ``Catalog.compact``, or the
+PK check of the next INSERT) folds a table past that size into a new
+base (``_compact``).
 
 A durable catalog (``save``/``restore``) keeps the same two leaves. On
 disk a table is base files plus delta files: ``save()`` appends the
@@ -42,11 +46,15 @@ ascending keys (the time-ordered ``ULID()`` default) runs no Spark job.
 from __future__ import annotations
 
 import datetime as _dt
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from emdrive_spark.functions.ckpt import ckpt
 from emdrive_spark.functions.generators import ulid
@@ -82,14 +90,15 @@ class TableEntry:
     schema_name: str
     columns: tuple[ast.ColumnDef, ...]
     df: DataFrame
+    # Rows INSERTed since base was set, as ONE single-chunk Arrow table
+    # in the table's Arrow schema (to_arrow_schema(spark_schema(...))),
+    # which each INSERT extends and builds into ONE local relation: df
+    # is base ∪ that relation (or either alone), so lineage stays at
+    # two leaves however many INSERTs land.
+    local_rows: pa.Table
     # df's compacted leaf (a checkpoint or a parquet scan); None while
     # every row the table holds is in local_rows.
     base: DataFrame | None = None
-    # Rows INSERTed since base was set, as the python values each
-    # INSERT rebuilds into ONE local relation: df is base ∪ that
-    # relation (or either alone), so lineage stays at two leaves
-    # however many INSERTs land.
-    local_rows: list[dict] = field(default_factory=list)
     # Root of THIS entry's last successful write or restore: the files
     # flushed counts are at this root only, so a save to any other root
     # folds. A save to a different root that throws midway leaves the
@@ -98,10 +107,11 @@ class TableEntry:
     # would publish a _catalog.json over a snapshot missing
     # acknowledged inserts).
     saved_root: str | None = None
-    # How many of local_rows are on disk at saved_root as delta files
-    # beside the files base reads; None while base is not exactly those
-    # files (never saved at this root, or compacted), so the next save()
-    # folds. The table is clean at saved_root when all of them are.
+    # How many of local_rows (a prefix) are on disk at saved_root as
+    # delta files beside the files base reads; None while base is not
+    # exactly those files (never saved at this root, or compacted), so
+    # the next save() folds. The table is clean at saved_root when all
+    # of them are.
     flushed: int | None = None
     # [min, max] of base's primary key, () while base holds no rows (or
     # there is none), None when not known: a base with rows whose key
@@ -201,12 +211,15 @@ class Catalog:
                 if stmt.if_not_exists:
                     return
                 raise EmdriveValidationError(f"Table {stmt.name} already exists.")
-            df = self._empty_frame(spark_schema(stmt.columns))
+            schema = spark_schema(stmt.columns)
+            rows = to_arrow_schema(schema).empty_table()
+            df = self._local_frame(rows, schema)
             entry = TableEntry(
                 name=stmt.name,
                 schema_name=self.schema_name,
                 columns=stmt.columns,
                 df=df,
+                local_rows=rows,
                 pk_range=(),  # no rows yet
             )
             self.tables[stmt.name] = entry
@@ -239,19 +252,18 @@ class Catalog:
             # first, which also bounds the rows each INSERT rebuilds
             # however long an in-memory ingest loop runs.
             self._compact(entry)
-            # Bad user values (a non-ISO timestamp string, a string where
-            # an int belongs) raise plain ValueError/TypeError from
-            # coercion or createDataFrame — map them into the 400
-            # validation taxonomy instead of leaking a 500 with PySpark
-            # internals. The table's local rows and the
-            # batch become ONE local relation, the INSERT's only
-            # createDataFrame (each costs ~18 ms of driver time).
+            # The batch is converted once, before anything mutates, into
+            # the table's Arrow schema. Bad user values (a non-ISO
+            # timestamp string, a string where an int belongs) raise
+            # plain ValueError/TypeError from coercion or that
+            # conversion (ArrowInvalid and ArrowTypeError subclass them)
+            # — map them into the 400 validation taxonomy instead of
+            # leaking a 500 with pyarrow internals.
             try:
-                py_rows = [
-                    self._materialize_row(entry, stmt.columns, row) for row in stmt.rows
-                ]
-                local_rows = entry.local_rows + py_rows
-                df = self._values_batch(local_rows, schema)
+                batch = pa.Table.from_pylist(
+                    [self._materialize_row(entry, stmt.columns, row) for row in stmt.rows],
+                    schema=entry.local_rows.schema,
+                )
             except EmdriveValidationError:
                 raise
             except (ValueError, TypeError) as exc:
@@ -262,14 +274,18 @@ class Catalog:
 
             # PK uniqueness (reference enforces exactly-one-PK at DDL,
             # components.rs:164-169; uniqueness is the B+tree key
-            # contract). Within-batch check driver-side (batch is a
-            # VALUES list, small); against existing data by _pk_taken.
-            pk_vals = [r[pk] for r in py_rows]
-            if len(set(pk_vals)) != len(pk_vals):
+            # contract). Within the batch in Arrow, which compares
+            # TIMESTAMPs as instants; against existing data by _pk_taken.
+            keys = batch.column(pk)
+            if pc.count_distinct(keys).as_py() != len(keys):
                 raise EmdriveValidationError(
                     f"Duplicate PRIMARY KEY value in INSERT batch for table {stmt.table}."
                 )
-            if self._pk_taken(entry, pk_vals, df):
+            # The table's local rows and the batch become ONE local
+            # relation, the INSERT's only createDataFrame.
+            local_rows = pa.concat_tables([entry.local_rows, batch]).combine_chunks()
+            df = self._local_frame(local_rows, schema)
+            if self._pk_taken(entry, keys, df):
                 raise EmdriveValidationError(
                     f"PRIMARY KEY value already exists in table {stmt.table}."
                 )
@@ -282,7 +298,7 @@ class Catalog:
         # no refresh_system_views() here: the system relations expose
         # DDL metadata only — INSERT never changes them, and the hot
         # ingest path shouldn't pay two view rebuilds per statement.
-        return len(py_rows)
+        return batch.num_rows
 
     # -- reads ----------------------------------------------------------
 
@@ -327,41 +343,41 @@ class Catalog:
             pk = entry.pk.name
             # the checkpoint is base ∪ local rows, so this is exact
             if _ordered_key(entry.pk.etype.spark_type):
-                entry.pk_range = _widen(entry.pk_range, [r[pk] for r in entry.local_rows])
+                entry.pk_range = _widen(entry.pk_range, entry.local_rows.column(pk).to_pylist())
             else:
                 entry.pk_range = None
             entry.df = entry.base = ckpt(entry.df.repartition(parallelism))
-            entry.local_rows = []
+            entry.local_rows = entry.local_rows.slice(0, 0)
             entry.flushed = None  # the base is no longer a saved snapshot
             entry.df.createOrReplaceTempView(entry.name)
         return entry.df
 
-    def _pk_taken(self, entry: TableEntry, keys: list, local: DataFrame) -> bool:
+    def _pk_taken(self, entry: TableEntry, keys: pa.ChunkedArray, local: DataFrame) -> bool:
         """Whether any of ``keys``, a batch's distinct PK values, is
         already in the table. ``local`` is the local relation of the
         table's local rows plus the batch. Caller holds ``_write_lock``.
 
-        Against the local rows (at most ``_LOCAL_ROWS_MAX``) it is a set
-        lookup on the driver. Against the base, keys outside the base's
-        PK range (``TableEntry.pk_range``) are dropped first: they cannot
-        be there, so a batch of keys all above the base's largest, or a
-        base with no rows, runs no Spark job. The keys left go to one
-        probe that stops at the first hit: a filter ``pk IN (keys)``,
-        the literals rendered into one SQL string, so building it is one
-        py4j call however many keys (``Column.isin`` makes one call per
-        literal: 5 s for a 10,000-row batch). A semi-join with ``local``
-        answers the same (no local row is in the base, so only the
-        batch's keys can match) but broadcasts that LocalTableScan in
-        a job of its own, so it is kept for keys that have no exact SQL
-        literal (``_sql_literal``) and for more than ``_PK_IN_LIST_MAX``
-        keys left, where optimizing the IN list costs more than that
-        job."""
+        Against the local rows (at most ``_LOCAL_ROWS_MAX``) it is an
+        Arrow ``is_in`` on the driver. Against the base, keys outside
+        the base's PK range (``TableEntry.pk_range``) are dropped first:
+        they cannot be there, so a batch of keys all above the base's
+        largest, or a base with no rows, runs no Spark job. The keys left
+        go to one probe that stops at the first hit: a filter ``pk IN
+        (keys)``, the literals rendered into one SQL string, so building
+        it is one py4j call however many keys (``Column.isin`` makes one
+        call per literal: 5 s for a 10,000-row batch). A semi-join with
+        ``local`` answers the same (no local row is in the base, so only
+        the batch's keys can match) but broadcasts that LocalTableScan
+        in a job of its own, so it is kept for keys that have no exact
+        SQL literal (``_sql_literal``) and for more than
+        ``_PK_IN_LIST_MAX`` keys left, where optimizing the IN list
+        costs more than that job."""
         pk = entry.pk.name
-        held = {r[pk] for r in entry.local_rows}
-        if any(k in held for k in keys):
+        if pc.any(pc.is_in(keys, value_set=entry.local_rows.column(pk))).as_py():
             return True
         if entry.base is None:
             return False
+        keys = keys.to_pylist()
         rng = entry.pk_range
         if rng is not None:
             keys = [k for k in keys if rng and rng[0] <= k <= rng[1]]
@@ -376,50 +392,19 @@ class Catalog:
                 return bool(base_keys.where(in_list).limit(1).collect())
         return bool(base_keys.join(local.select(pk), pk, "left_semi").limit(1).collect())
 
-    def _empty_frame(self, schema: T.StructType) -> DataFrame:
-        """An empty table as ``LocalTableScan <empty>``, not a
-        parallelized empty RDD: ``createDataFrame([], schema)`` plans as
-        Scan ExistingRDD with defaultParallelism empty python slices,
-        and the CREATE-time frame rides under every later union — so
-        each statement on the table would schedule 32 no-op python
-        tasks per stage forever. An empty pyarrow table with the exact
-        arrow schema keeps declared nullability and adds zero tasks."""
-        try:
-            import pyarrow as pa
-            from pyspark.sql.pandas.types import to_arrow_schema
-
-            arrow_schema = to_arrow_schema(schema)
-            tbl = pa.Table.from_arrays(
-                [pa.array([], type=f.type) for f in arrow_schema],
-                schema=arrow_schema,
-            )
-            return self.spark.createDataFrame(tbl, schema=schema)
-        except Exception:  # exotic type arrow can't express — RDD path
-            return self.spark.createDataFrame([], schema=schema)
-
-    def _values_batch(self, py_rows: list[dict], schema: T.StructType) -> DataFrame:
-        """A VALUES batch as a LOCAL relation. A list-of-rows
-        createDataFrame parallelizes 3 literal rows across
-        defaultParallelism RDD slices, so every later statement
-        touching the table schedules 32 near-empty PYTHON tasks per
-        stage — measured at ~0.4 s per action on local[32], pure
-        scheduler + python-worker overhead. The pandas path converts
-        through Arrow into a LocalTableScan (~0.07 s, no python
-        workers at execution, and Catalyst can broadcast or
-        constant-fold a local relation). Falls back to the row path if
-        Arrow rejects a value shape; the caller's ValueError/TypeError
-        mapping handles bad user values identically either way. No rows
-        is an ``_empty_frame``."""
-        import pandas as pd
-
-        if not py_rows:
-            return self._empty_frame(schema)
-
-        try:
-            pdf = pd.DataFrame(py_rows, columns=[f.name for f in schema.fields])
-            return self.spark.createDataFrame(pdf, schema=schema)
-        except (ValueError, TypeError, KeyError):
-            return self.spark.createDataFrame(py_rows, schema=schema)
+    def _local_frame(self, rows: pa.Table, schema: T.StructType) -> DataFrame:
+        """``rows`` as a local relation (``LocalTableScan``): every local
+        relation the catalog builds (a table's local rows, its empty
+        CREATE-time frame, the system relations) is built here, from an
+        Arrow table in ``schema``'s Arrow schema, which keeps declared
+        nullability. A list-of-rows ``createDataFrame`` would plan as
+        Scan ExistingRDD with defaultParallelism python slices, and the
+        frame rides under every later statement on the table, each of
+        which would then schedule that many near-empty python tasks per
+        stage (~0.4 s per action on local[32]). ``rows`` is one chunk:
+        Spark converts each chunk as its own batch, and a table of 40
+        chunks (one per INSERT) takes twice as long to build."""
+        return self.spark.createDataFrame(rows, schema=schema)
 
     def _materialize_row(
         self, entry: TableEntry, columns: tuple[str, ...], row: tuple
@@ -497,23 +482,20 @@ class Catalog:
 
     def _append_delta(self, e: TableEntry, path: str) -> None:
         """Write the local rows not yet on disk as ``delta-<ulid>.parquet``
-        in the table's directory. pyarrow writes it on the driver with
-        the table's exact arrow schema (``_empty_frame``'s), under a
-        hidden ``.delta-<ulid>.tmp`` name that Spark's reader skips, and
-        ``os.rename`` publishes it atomically. Deletes no file, so a
-        read planned over the live frame never loses one."""
+        in the table's directory: the slice of ``local_rows`` past
+        ``flushed``, the same arrays the live local relation was built
+        from, so any row the live table holds can be written. pyarrow
+        writes it on the driver under a hidden ``.delta-<ulid>.tmp``
+        name that Spark's reader skips, and ``os.rename`` publishes it
+        atomically. Deletes no file, so a read planned over the live
+        frame never loses one."""
         import os
 
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        rows = e.local_rows[e.flushed :]
+        rows = e.local_rows.slice(e.flushed)
         if rows:
             tag = ulid()
             tmp = os.path.join(path, f".delta-{tag}.tmp")
-            schema = to_arrow_schema(spark_schema(e.columns))
-            pq.write_table(pa.Table.from_pylist(rows, schema=schema), tmp)
+            pq.write_table(rows, tmp)
             os.rename(tmp, os.path.join(path, f"delta-{tag}.parquet"))
         e.flushed = len(e.local_rows)
 
@@ -556,32 +538,25 @@ class Catalog:
         """Point ``e`` at the table saved in ``path``, in the state its
         saves left: the base reads the ``part-*`` files, listed one by
         one, so it never picks up a delta file appended beside them
-        later; the local rows are the rows of the ``delta-*.parquet``
-        files, read on the driver by pyarrow in name (ULID) order, all
-        of them on disk (``flushed``); the PK range is read from the
-        base files' footers. Hidden ``.delta-*.tmp`` files that a crash
-        mid-append left are not read. An append happens only within
+        later; the local rows are the delta files' tables, read on the
+        driver by pyarrow in name (ULID) order in the table's Arrow
+        schema and combined into one chunk, all of them on disk
+        (``flushed``); the PK range is read from the base files'
+        footers. Hidden ``.delta-*.tmp`` files that a crash mid-append
+        left are not read. An append happens only within
         ``_LOCAL_ROWS_MAX``, so the delta rows are bounded."""
         import os
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
 
         names = sorted(os.listdir(path))
         files = [os.path.join(path, f) for f in names if f.startswith("part-")]
         deltas = [os.path.join(path, f) for f in names if f.startswith("delta-")]
         schema = spark_schema(e.columns)
-        # pyarrow reads a TIMESTAMP back tz-aware (UTC), where an
-        # INSERT's rows hold it naive; the two never compare equal, so
-        # the PK check's set lookup would miss a clash
-        naive = pa.schema(
-            f.with_type(pa.timestamp("us")) if pa.types.is_timestamp(f.type) else f
-            for f in to_arrow_schema(schema)
-        )
-        local_rows = [r for d in deltas for r in pq.read_table(d).cast(naive).to_pylist()]
+        arrow = to_arrow_schema(schema)
+        local_rows = pa.concat_tables(
+            [arrow.empty_table(), *(pq.read_table(d, schema=arrow) for d in deltas)]
+        ).combine_chunks()
         e.base = self.spark.read.schema(schema).parquet(*files)
-        e.df = e.base.unionByName(self._values_batch(local_rows, schema)) if local_rows else e.base
+        e.df = e.base.unionByName(self._local_frame(local_rows, schema)) if local_rows else e.base
         e.df.createOrReplaceTempView(e.name)
         e.local_rows = local_rows
         e.flushed = len(local_rows)
@@ -624,7 +599,8 @@ class Catalog:
                     name=name,
                     schema_name=t["schema_name"],
                     columns=columns,
-                    df=None,  # set by _load
+                    df=None,  # set by _load, as is local_rows
+                    local_rows=None,
                     saved_root=root,
                 )
                 self._load(entry, path)
@@ -640,7 +616,7 @@ class Catalog:
         /root/reference/src/executor/mod.rs:64-71). Refreshed on every
         CREATE TABLE and restore, the only mutations of the DDL
         metadata they expose (INSERT leaves them as they are). Both are
-        local relations (``_values_batch``), so reading one schedules no
+        local relations (``_local_frame``), so reading one schedules no
         Python tasks. (Temp-view names can't be dotted, so
         ``system.tables`` surfaces as ``system_tables``.)"""
         self.system_tables().createOrReplaceTempView("system_tables")
@@ -651,9 +627,7 @@ class Catalog:
             {"schema_name": e.schema_name, "table_name": e.name}
             for e in self.tables.values()
         ]
-        return self._values_batch(
-            rows, T.StructType.fromDDL("schema_name string, table_name string")
-        )
+        return self._system_frame(rows, "schema_name string, table_name string")
 
     def system_columns(self) -> DataFrame:
         rows = []
@@ -677,7 +651,11 @@ class Catalog:
             "primary_key boolean, is_nullable boolean, metric_key boolean, "
             "metric string, default_expr string"
         )
-        return self._values_batch(rows, T.StructType.fromDDL(schema))
+        return self._system_frame(rows, schema)
+
+    def _system_frame(self, rows: list[dict], ddl: str) -> DataFrame:
+        schema = T.StructType.fromDDL(ddl)
+        return self._local_frame(pa.Table.from_pylist(rows, schema=to_arrow_schema(schema)), schema)
 
 
 def _eval_value(expr: object) -> object:
@@ -702,7 +680,13 @@ def _coerce(cdef: ast.ColumnDef, value: object) -> object:
     et: EmdriveType = cdef.etype
     if value is None:
         return None
-    if et.base.startswith("UINT") and isinstance(value, (int, bool)):
+    if et.base.startswith("UINT"):
+        # Arrow would truncate a float into an integer column (3.5
+        # stored as 3)
+        if not isinstance(value, int):
+            raise EmdriveValidationError(
+                f"Column {cdef.name} is {et.base}; got {value!r}, not an integer."
+            )
         value = int(value)
         if value < 0:
             raise EmdriveValidationError(
@@ -750,11 +734,22 @@ def _coerce(cdef: ast.ColumnDef, value: object) -> object:
                 f"for column {cdef.name}."
             )
         return value
-    if et.base == "TIMESTAMP" and isinstance(value, str):
+    if et.base == "TIMESTAMP":
         # ISO-8601 literal, stored at µs precision (declared semantics,
         # README.md:15; the reference code truncates to seconds —
-        # a README/code discrepancy, we follow the README. SURVEY §1.2)
-        return _dt.datetime.fromisoformat(value)
+        # a README/code discrepancy, we follow the README. SURVEY §1.2).
+        if isinstance(value, str):
+            value = _dt.datetime.fromisoformat(value)
+        if not isinstance(value, _dt.datetime):
+            # Arrow would read a number as microseconds since the epoch
+            raise EmdriveValidationError(
+                f"Column {cdef.name} is TIMESTAMP; got {value!r}, not an ISO-8601 string."
+            )
+        # Stored naive in UTC, as NOW() is: a UTC offset is folded into
+        # the instant, where Arrow would drop it
+        if value.tzinfo is not None:
+            value = value.astimezone(_dt.timezone.utc).replace(tzinfo=None)
+        return value
     return value
 
 

@@ -25,6 +25,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 # Same id also rides the X-Request-Id response header.
 log = logging.getLogger("emdrive_spark.server")
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 from emdrive_spark.config import Config
@@ -32,8 +33,6 @@ from emdrive_spark.engine import Engine
 from emdrive_spark.functions.generators import ulid
 from emdrive_spark.sql.errors import EmdriveError
 
-DEFAULT_HOST = "127.0.0.1"
-DEFAULT_PORT = 8824  # the reference's default (config.rs:14-22)
 # The session conf serve() sets while it serves (see serve()).
 _LIMIT_PARTITIONS = "spark.sql.limit.initialNumPartitions"
 
@@ -121,13 +120,7 @@ def make_handler(engine: Engine, max_result_rows: int | None = None):
                 # are user-input problems → 400 validation, like the
                 # engine's own eager wrapping.
                 first = str(exc).strip().splitlines()[0] if str(exc).strip() else repr(exc)
-                try:
-                    from pyspark.errors import AnalysisException
-
-                    is_analysis = isinstance(exc, AnalysisException)
-                except ImportError:  # pragma: no cover
-                    is_analysis = False
-                if is_analysis:
+                if isinstance(exc, AnalysisException):
                     body = json.dumps({"type": "validation", "message": first})
                     code = 400
                 else:

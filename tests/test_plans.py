@@ -11,7 +11,6 @@ import pytest
 
 from emdrive_spark import catalog, registry
 from emdrive_spark.engine import Engine
-from emdrive_spark.plans.topk_planner import plan_topk
 from emdrive_spark.server import _rows_json, serve
 from emdrive_spark.sources.tables import load
 
@@ -113,25 +112,6 @@ def test_knn_join_broadcasts_queries(spark):
     plan = _plan(spark, "knn_join")
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
-
-
-def test_topk_planner_both_paths(spark):
-    emb = load(spark, SF_SMOKE, "embeddings")
-    q = emb.head()["embedding"]
-    q = [float(x) for x in q]
-    exact = plan_topk(emb, q, 5)
-    assert exact.strategy == "exact"  # small table → exact
-    rows_exact = exact.df.collect()
-    assert len(rows_exact) == 5
-    assert rows_exact[0]["dist"] == 0.0  # the query vector itself
-    lsh = plan_topk(emb, q, 5, force="lsh")
-    assert lsh.strategy == "lsh"
-    rows_lsh = lsh.df.collect()
-    assert len(rows_lsh) == 5
-    # LSH with these settings recalls the exact neighbor set here
-    assert {r["vec_id"] for r in rows_lsh} == {r["vec_id"] for r in rows_exact}
-    forced = plan_topk(emb, q, 5, row_estimate=100_000_000)
-    assert forced.strategy == "lsh"
 
 
 def test_compaction_reduces_file_count(spark):

@@ -47,50 +47,6 @@ def test_at_right_operand_sees_alias(engine_factory):
     assert [(r["url"], r["probe"]) for r in rows] == [("u1", 1)]
 
 
-def test_insert_batch_is_local_relation(engine_factory):
-    """A VALUES batch lands as an Arrow-backed LocalTableScan, not a
-    parallelized python RDD: the RDD form schedules defaultParallelism
-    near-empty python tasks per downstream stage (~0.4 s/action on
-    local[32] vs ~0.07 s — the difference is the whole statement-latency
-    budget). Plan-pinned so a createDataFrame regression can't sneak
-    the scheduler overhead back in."""
-    e = engine_factory()
-    e.execute(CREATE)
-    e.execute("INSERT INTO rt5 (hash, url, width) VALUES (3, 'u1', 10)")
-    plan = (
-        e.catalog.get("rt5")
-        .df._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Scan ExistingRDD" not in plan, plan
-
-
-def test_uint_decimal_overflow_rejected_at_insert(engine_factory):
-    """A UINT128 value above the DECIMAL(38,0) storage ceiling is a
-    typed validation error AT INSERT TIME. Before this check the row
-    was accepted (the known-empty fast path skips the PK semi-join that
-    used to trip over it) and every later statement on the table threw
-    a runtime decimal overflow."""
-    e = engine_factory()
-    e.execute("CREATE TABLE rtof (id UINT32 PRIMARY KEY, big UINT128)")
-    with pytest.raises(EmdriveValidationError, match="DECIMAL"):
-        e.execute(f"INSERT INTO rtof (id, big) VALUES (1, {(1 << 128) - 1})")
-    # max storable value round-trips; the table stays healthy
-    e.execute(f"INSERT INTO rtof (id, big) VALUES (1, {10**38 - 1})")
-    assert e.execute("SELECT id FROM rtof").count() == 1
-
-
-def test_pk_clash_still_caught_after_fast_path(engine_factory):
-    """The first INSERT into an empty table probes no base; the second
-    INSERT must still catch a duplicate PK among the local rows."""
-    e = engine_factory()
-    e.execute(CREATE)
-    e.execute("INSERT INTO rt5 (hash, url, width) VALUES (3, 'u1', 10)")
-    with pytest.raises(EmdriveValidationError, match="already exists"):
-        e.execute("INSERT INTO rt5 (hash, url, width) VALUES (4, 'u1', 11)")
-
-
 @pytest.fixture()
 def engine_factory(spark):
     def make() -> Engine:
