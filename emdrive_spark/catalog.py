@@ -46,7 +46,9 @@ ascending keys (the time-ordered ``ULID()`` default) runs no Spark job.
 from __future__ import annotations
 
 import datetime as _dt
+import math
 from dataclasses import dataclass
+from decimal import Decimal
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -281,15 +283,14 @@ class Catalog:
                 raise EmdriveValidationError(
                     f"Duplicate PRIMARY KEY value in INSERT batch for table {stmt.table}."
                 )
+            if self._pk_taken(entry, keys):
+                raise EmdriveValidationError(
+                    f"PRIMARY KEY value already exists in table {stmt.table}."
+                )
             # The table's local rows and the batch become ONE local
             # relation, the INSERT's only createDataFrame.
             local_rows = pa.concat_tables([entry.local_rows, batch]).combine_chunks()
             df = self._local_frame(local_rows, schema)
-            if self._pk_taken(entry, keys, df):
-                raise EmdriveValidationError(
-                    f"PRIMARY KEY value already exists in table {stmt.table}."
-                )
-
             if entry.base is not None:
                 df = entry.base.unionByName(df)
             entry.df = df  # one assignment: scan() reads it unlocked
@@ -352,10 +353,9 @@ class Catalog:
             entry.df.createOrReplaceTempView(entry.name)
         return entry.df
 
-    def _pk_taken(self, entry: TableEntry, keys: pa.ChunkedArray, local: DataFrame) -> bool:
+    def _pk_taken(self, entry: TableEntry, keys: pa.ChunkedArray) -> bool:
         """Whether any of ``keys``, a batch's distinct PK values, is
-        already in the table. ``local`` is the local relation of the
-        table's local rows plus the batch. Caller holds ``_write_lock``.
+        already in the table. Caller holds ``_write_lock``.
 
         Against the local rows (at most ``_LOCAL_ROWS_MAX``) it is an
         Arrow ``is_in`` on the driver. Against the base, keys outside
@@ -366,10 +366,10 @@ class Catalog:
         (keys)``, the literals rendered into one SQL string, so building
         it is one py4j call however many keys (``Column.isin`` makes one
         call per literal: 5 s for a 10,000-row batch). A semi-join with
-        ``local`` answers the same (no local row is in the base, so only
-        the batch's keys can match) but broadcasts that LocalTableScan
-        in a job of its own, so it is kept for keys that have no exact
-        SQL literal (``_sql_literal``) and for more than
+        a one-column local relation of those keys answers the same but
+        broadcasts that LocalTableScan in a job of its own, so it is
+        kept for keys that have no exact SQL literal (``_sql_literal``)
+        and for more than
         ``_PK_IN_LIST_MAX`` keys left, where optimizing the IN list
         costs more than that job."""
         pk = entry.pk.name
@@ -385,23 +385,27 @@ class Catalog:
                 return False
         base_keys = entry.base.select(pk)
         if len(keys) <= _PK_IN_LIST_MAX:
-            literals = [_sql_literal(k, entry.pk.etype.spark_type) for k in keys]
+            literals = [_sql_literal(k) for k in keys]
             if None not in literals:
                 name = pk.replace("`", "``")
                 in_list = F.expr(f"`{name}` IN ({', '.join(literals)})")
                 return bool(base_keys.where(in_list).limit(1).collect())
-        return bool(base_keys.join(local.select(pk), pk, "left_semi").limit(1).collect())
+        schema = spark_schema((entry.pk,))
+        batch_keys = pa.Table.from_pylist([{pk: k} for k in keys], schema=to_arrow_schema(schema))
+        probe = self._local_frame(batch_keys, schema)
+        return bool(base_keys.join(probe, pk, "left_semi").limit(1).collect())
 
     def _local_frame(self, rows: pa.Table, schema: T.StructType) -> DataFrame:
         """``rows`` as a local relation (``LocalTableScan``): every local
         relation the catalog builds (a table's local rows, its empty
-        CREATE-time frame, the system relations) is built here, from an
-        Arrow table in ``schema``'s Arrow schema, which keeps declared
-        nullability. A list-of-rows ``createDataFrame`` would plan as
-        Scan ExistingRDD with defaultParallelism python slices, and the
-        frame rides under every later statement on the table, each of
-        which would then schedule that many near-empty python tasks per
-        stage (~0.4 s per action on local[32]). ``rows`` is one chunk:
+        CREATE-time frame, a PK probe's batch keys, the system
+        relations) is built here, from an Arrow table in ``schema``'s
+        Arrow schema, which keeps declared nullability. A list-of-rows
+        ``createDataFrame`` would plan as Scan ExistingRDD with
+        defaultParallelism python slices, and the frame rides under
+        every later statement on the table, each of which would then
+        schedule that many near-empty python tasks per stage (~0.4 s per
+        action on local[32]). ``rows`` is one chunk:
         Spark converts each chunk as its own batch, and a table of 40
         chunks (one per INSERT) takes twice as long to build."""
         return self.spark.createDataFrame(rows, schema=schema)
@@ -698,8 +702,6 @@ def _coerce(cdef: ast.ColumnDef, value: object) -> object:
                 f"Value {value} out of range for {et.base} column {cdef.name}."
             )
         if et.base in {"UINT64", "UINT128"}:
-            import decimal
-
             if value >= 10**38:
                 # DECIMAL(38,0) storage ceiling (types.py documented
                 # edge: UINT128 max exceeds it). Reject at INSERT time
@@ -712,7 +714,7 @@ def _coerce(cdef: ast.ColumnDef, value: object) -> object:
                     f"the DECIMAL(38,0) storage range (< 1e38); store "
                     f"hash-style 128-bit values in a BINARY column instead."
                 )
-            return decimal.Decimal(value)
+            return Decimal(value)
         return value
     if et.base == "BINARY" and isinstance(value, int) and not isinstance(value, bool):
         # integer hash literal (0x... / 0b...) → 16-byte big-endian, the
@@ -753,28 +755,40 @@ def _coerce(cdef: ast.ColumnDef, value: object) -> object:
     return value
 
 
-def _sql_literal(value: object, dtype: T.DataType) -> str | None:
-    """``value`` of a ``dtype`` column as an exact Spark SQL literal, or
-    None for a type this does not render: it covers the integral,
-    DECIMAL(p, 0), STRING and BINARY types a primary key takes. A string
-    goes as its UTF-8 bytes in hex, so no quoting or escape rule of the
-    SQL parser touches it."""
-    if isinstance(dtype, T.IntegralType):
-        return str(int(value))
-    if isinstance(dtype, T.DecimalType) and dtype.scale == 0:
+def _sql_literal(value: object) -> str | None:
+    """``value`` as an exact Spark SQL literal of its type, or None for
+    a type this does not render (a datetime): the one renderer of the
+    dialect's literals and of a PK probe's keys.
+
+    - None is NULL, and a bool TRUE or FALSE.
+    - An int is a BIGINT-range integer literal; beyond that range it is
+      an exact DECIMAL(38,0), the type of the widest emdrive integers.
+    - A Decimal (a UINT64 or UINT128 key) is a ``BD`` literal.
+    - A float is a DOUBLE literal of its shortest round-trip form.
+    - A string is its UTF-8 bytes in hex, so no quoting or escape rule of
+      the SQL parser touches it; bytes are a hex binary literal."""
+    if value is None:
+        return "NULL"
+    if isinstance(value, bool):
+        return "TRUE" if value else "FALSE"
+    if isinstance(value, int):
+        return str(value) if -(2**63) <= value < 2**63 else f"CAST({value}BD AS DECIMAL(38,0))"
+    if isinstance(value, Decimal):
         return f"{int(value)}BD"
-    if isinstance(dtype, T.StringType):
+    if isinstance(value, float):
+        return f"{value!r}D" if math.isfinite(value) else f"CAST('{value}' AS DOUBLE)"
+    if isinstance(value, str):
         return f"CAST(X'{value.encode().hex()}' AS STRING)"
-    if isinstance(dtype, T.BinaryType):
-        return f"X'{bytes(value).hex()}'"
+    if isinstance(value, bytes):
+        return f"X'{value.hex()}'"
     return None
 
 
 def _ordered_key(dtype: T.DataType) -> bool:
     """Whether keys of a ``dtype`` column compare in Python as Spark and
-    parquet's min/max statistics order them: the types ``_sql_literal``
-    renders. Ints and Decimals compare by value, str by code point (the
-    order of its UTF-8 bytes, Spark's UTF8_BINARY), bytes unsigned."""
+    parquet's min/max statistics order them. Ints and Decimals compare
+    by value, str by code point (the order of its UTF-8 bytes, Spark's
+    UTF8_BINARY), bytes unsigned."""
     return isinstance(dtype, (T.IntegralType, T.StringType, T.BinaryType)) or (
         isinstance(dtype, T.DecimalType) and dtype.scale == 0
     )

@@ -7,20 +7,24 @@ implemented (the reference's is a hardcoded stub, executor/mod.rs:83-88).
 
 SELECT semantics follow the README's declared behavior, notably that a
 WHERE may reference a SELECT alias (``SELECT ..., hash @ q AS distance
-... WHERE distance < 4``, README.md:67-78): select expressions are
-computed first (withColumn), the filter applies after, then the output
-projects the requested columns — all lazily, so Catalyst still pushes
-eligible predicates to the scan.
+... WHERE distance < 4``, README.md:67-78). A dialect SELECT compiles to
+ONE Spark SQL text over the table's temp view: the computed items in a
+subquery, the filter, order and limit outside it, then the output
+projection. One ``spark.sql`` call plans it, where a chain of DataFrame
+calls would pay a py4j round trip and a re-analysis per call; Catalyst
+still pushes eligible predicates to the scan. Literals render through
+``catalog._sql_literal`` and ``@`` through ``functions.distance.
+hamming_sql``, the generator the raw-ANSI ``emdrive_hamming`` shares.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, SparkSession
 
-from emdrive_spark.catalog import Catalog, TableEntry
+from emdrive_spark.catalog import Catalog, TableEntry, _sql_literal
 from emdrive_spark.functions import distance as D
-from emdrive_spark.functions.generators import now_expr, ulid_expr
+from emdrive_spark.functions.generators import NOW_SQL, ULID_SQL
 from emdrive_spark.sql import ast
 from emdrive_spark.sql.errors import EmdriveSyntaxError, EmdriveValidationError
 from emdrive_spark.sql.parser import parse_statement
@@ -75,25 +79,27 @@ def is_query(sql: str) -> bool:
 
 # --- `@` in raw ANSI SQL (SURVEY hard-parts: the rewrite shim) -----------
 #
-# The dialect layer compiles `@` itself; raw ANSI queries get a textual
-# rewrite `X @ Y` → `emdrive_hamming(X, Y)` (a Spark SQL scalar UDF
-# registered per session whose body is functions.distance.
-# hamming_wide_sql: popcount over the two 64-bit halves of each
-# DECIMAL(38,0) operand, each half a signed long by the 2⁶³-offset
-# identity — the dialect's UINT128 arithmetic). Operands are
-# identifiers or numeric literals; 0b/0x literals (the README's hash
-# idiom, not ANSI) are converted to decimal. String literals are never
-# touched (the rewrite splits on quotes first).
+# The dialect compiles `@` itself; raw ANSI queries get a textual
+# rewrite `X @ Y` → `emdrive_hamming(X, Y)`, a Spark SQL scalar UDF
+# registered per session whose body is the dialect's own `@` formula
+# (functions.distance.hamming_sql over two DECIMAL(38,0) operands), so
+# both paths compare an integer by its value mod 2¹²⁸. Operands are
+# identifiers or numeric literals, the right one optionally negative;
+# 0b/0x literals (the README's hash idiom, not ANSI) are converted to
+# decimal. String literals are never touched (the rewrite splits on
+# quotes first).
 
-_AT_OPERAND = r"(?:[A-Za-z_][A-Za-z_0-9]*(?:\.[A-Za-z_][A-Za-z_0-9]*)?|0[bB][01]+|0[xX][0-9A-Fa-f]+|\d+)"
-_AT_RE = _re.compile(rf"({_AT_OPERAND})\s*@\s*({_AT_OPERAND})")
+_AT_NUMBER = r"(?:0[bB][01]+|0[xX][0-9A-Fa-f]+|\d+)"
+_AT_OPERAND = rf"(?:[A-Za-z_][A-Za-z_0-9]*(?:\.[A-Za-z_][A-Za-z_0-9]*)?|{_AT_NUMBER})"
+_AT_RE = _re.compile(rf"({_AT_OPERAND})\s*@\s*({_AT_OPERAND}|-{_AT_NUMBER})")
 
 
 def _conv_literal(tok: str) -> str:
-    if _re.fullmatch(r"0[bB][01]+", tok):
-        return str(int(tok[2:], 2))
-    if _re.fullmatch(r"0[xX][0-9A-Fa-f]+", tok):
-        return str(int(tok[2:], 16))
+    sign, mag = ("-", tok[1:]) if tok.startswith("-") else ("", tok)
+    if _re.fullmatch(r"0[bB][01]+", mag):
+        return sign + str(int(mag[2:], 2))
+    if _re.fullmatch(r"0[xX][0-9A-Fa-f]+", mag):
+        return sign + str(int(mag[2:], 16))
     return tok
 
 
@@ -119,17 +125,16 @@ def rewrite_at_distance(sql: str) -> str:
 
 
 def _hamming_sql_udf_ddl() -> str:
-    """``emdrive_hamming(a, b)``: exact popcount of a XOR b over the full
-    DECIMAL(38,0) range, as a SQL scalar UDF. The body is
-    ``D.hamming_wide_sql`` — hamming_wide's UINT128 formula (exact
-    ``pmod``/division split into 64-bit halves, the low half offset by
-    2⁶³ into a signed long), so a UINT64 or UINT128 value gets the same
-    distance through raw ANSI SQL as through the dialect. A negative
-    operand compares by its bits modulo 2¹²⁸."""
+    """``emdrive_hamming(a, b)``: popcount of a XOR b over 128 bits, as
+    a SQL scalar UDF over two DECIMAL(38,0) operands. The body is the
+    dialect's ``@`` generator, ``D.hamming_sql``, so a UINT64 or UINT128
+    value, or any integer operand, gets the same distance through raw
+    ANSI SQL as through the dialect: each operand compares by its value
+    mod 2¹²⁸, the bits of a negative one included."""
     return (
         "CREATE OR REPLACE TEMPORARY FUNCTION emdrive_hamming("
         "a DECIMAL(38,0), b DECIMAL(38,0)) RETURNS BIGINT RETURN "
-        + D.hamming_wide_sql("a", "b")
+        + D.hamming_sql("a", "DECIMAL", "b")
     )
 
 
@@ -243,172 +248,142 @@ class Engine:
     # -- SELECT ----------------------------------------------------------
 
     def _execute_select(self, stmt: ast.Select) -> DataFrame:
+        """The statement as ONE Spark SQL text over the table's view,
+        planned by one ``spark.sql`` call:
+
+            SELECT <outputs> FROM (SELECT * FROM (SELECT *, <expr_i> AS
+            __emdrive_sel_i FROM `t`) WHERE … ORDER BY … LIMIT n)
+
+        Computed items land in RESERVED temp columns, renamed only in the
+        outer projection, so ``SELECT name AS id, id`` keeps the base
+        ``id``. WHERE and ORDER BY resolve an alias to its temp column
+        (alias shadows a same-named base column there; alias-in-WHERE is
+        the README's feature, README.md:71). They run below the outer
+        projection, so an ORDER BY key outside the outputs needs no
+        extra projection, and ORDER BY + LIMIT plans as
+        TakeOrderedAndProject over one codegen Project (per-partition
+        heap, k rows to the driver merge), the exact top-k primitive a
+        distance search needs."""
         stmt.validate()
         entry = self.catalog.get(stmt.table)
-        df = self.catalog.scan(stmt.table)
-        base_cols = [c.name for c in entry.columns]
-
-        # Computed items land in RESERVED temp columns, renamed only in
-        # the final projection (r4 review): writing the alias directly
-        # with withColumn clobbered a same-named base column, so
-        # `SELECT name AS id, id FROM t` silently returned name's values
-        # for both outputs. alias_src maps output name -> temp column;
-        # WHERE/ORDER BY resolve aliases through it (alias shadows a
-        # same-named base column there — alias-in-WHERE is the feature).
-        alias_src: dict[str, str] = {}
-        if not stmt.items:  # SELECT *
-            out_names = base_cols
-            sel_exprs = [F.col(c) for c in base_cols]
-        else:
-            out_names = []
-            sel_exprs = []
-            for i, item in enumerate(stmt.items):
-                name = item.alias or _auto_name(item.expr, i)
-                if isinstance(item.expr, ast.Ident) and item.expr.name == name:
-                    sel_exprs.append(F.col(name))
-                else:
-                    tmp = f"__emdrive_sel_{i}"
-                    df = df.withColumn(tmp, self._compile(entry, item.expr))
-                    alias_src[name] = tmp
-                    sel_exprs.append(F.col(tmp).alias(name))
-                out_names.append(name)
-
+        self.catalog.scan(entry.name)  # compacts an oversized table first
+        scope = _Scope(entry)
+        computed, outputs, aliases = [], [], {}
+        items = stmt.items or [ast.SelectItem(ast.Ident(c.name)) for c in entry.columns]  # SELECT *
+        for i, item in enumerate(items):
+            name = item.alias or _auto_name(item.expr, i)
+            sql = scope.compile(item.expr)
+            if not (isinstance(item.expr, ast.Ident) and item.expr.name == name):
+                tmp = f"__emdrive_sel_{i}"
+                computed.append(f"{sql} AS {tmp}")
+                aliases[name] = (tmp, item.expr)
+                sql = f"{tmp} AS {_quote(name)}"
+            outputs.append(sql)
+        scope.aliases = aliases
+        rows = _quote(entry.name)
+        if computed:
+            rows = f"(SELECT *, {', '.join(computed)} FROM {rows})"
+        rows = f"SELECT * FROM {rows}"
         if stmt.where is not None:
-            # aliases are visible to WHERE (README.md:71)
-            df = df.filter(
-                self._compile(
-                    entry, stmt.where, extra_cols=out_names, rename=alias_src
-                )
-            )
+            rows += f" WHERE {scope.compile(stmt.where)}"
         if stmt.order_by:
-            # aliases in scope here too; ORDER BY + LIMIT plans as
-            # TakeOrderedAndProject (per-partition heap, k rows to the
-            # driver merge) — the exact top-k primitive the README's
-            # distance search needs, never a global sort.
-            sort_cols = []
-            for o in stmt.order_by:
-                c = self._compile(
-                    entry, o.expr, extra_cols=out_names, rename=alias_src
-                )
-                sort_cols.append(c.asc() if o.asc else c.desc())
-            df = df.orderBy(*sort_cols)
+            rows += " ORDER BY " + ", ".join(
+                scope.compile(o.expr) + (" ASC NULLS FIRST" if o.asc else " DESC NULLS LAST")
+                for o in stmt.order_by
+            )
         if stmt.limit is not None:
-            df = df.limit(stmt.limit)
-        return df.select(*sel_exprs)
+            rows += f" LIMIT {stmt.limit}"
+        try:
+            return self.spark.sql(f"SELECT {', '.join(outputs)} FROM ({rows})")
+        except AnalysisException as exc:  # a type mismatch, say
+            raise EmdriveValidationError(str(exc).split("\n")[0]) from exc
 
-    def _compile(
-        self,
-        entry: TableEntry,
-        expr: ast.Expr,
-        extra_cols: list[str] | None = None,
-        rename: dict[str, str] | None = None,
-    ) -> Column:
+
+def _quote(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+class _Scope:
+    """Compiles dialect expressions over one table to Spark SQL text.
+    ``aliases`` maps an output name to its temp column and expression:
+    empty while the SELECT items compile (they see the base columns
+    only), set before WHERE and ORDER BY."""
+
+    def __init__(self, entry: TableEntry):
+        self.entry = entry
+        self.aliases: dict[str, tuple[str, ast.Expr]] = {}
+
+    def compile(self, expr: ast.Expr) -> str:
         if isinstance(expr, ast.Const):
-            v = expr.value
-            if isinstance(v, int) and not isinstance(v, bool) and not (-(2**63) <= v < 2**63):
-                # beyond signed-long range (UINT64/UINT128 hashes):
-                # F.lit would overflow py4j's long — carry it as an
-                # exact decimal literal instead.
-                return F.expr(f"CAST('{v}' AS DECIMAL(38,0))")
-            return F.lit(v)
+            return _sql_literal(expr.value)
         if isinstance(expr, ast.Ident):
-            known = {c.name for c in entry.columns} | set(extra_cols or ())
-            if expr.name not in known:
-                raise EmdriveValidationError(
-                    f"Column {expr.name!r} does not exist in table {entry.name}."
-                )
-            if rename and expr.name in rename:
-                return F.col(rename[expr.name])
-            return F.col(expr.name)
+            if expr.name in self.aliases:
+                return self.aliases[expr.name][0]
+            return _quote(self.entry.column(expr.name).name)  # raises on unknown
         if isinstance(expr, ast.FuncCall):
             if expr.name == "ULID":
-                return ulid_expr()
+                return ULID_SQL
             if expr.name == "NOW":
-                return now_expr()
+                return NOW_SQL
             raise EmdriveValidationError(f"Unknown function {expr.name}().")
         if isinstance(expr, ast.BinOp):
             if expr.op == "@":
-                return self._compile_distance(entry, expr, extra_cols, rename)
-            left = self._compile(entry, expr.left, extra_cols, rename)
-            right = self._compile(entry, expr.right, extra_cols, rename)
-            ops = {
-                "=": lambda a, b: a == b,
-                "!=": lambda a, b: a != b,
-                "<": lambda a, b: a < b,
-                ">": lambda a, b: a > b,
-                "<=": lambda a, b: a <= b,
-                ">=": lambda a, b: a >= b,
-                "AND": lambda a, b: a & b,
-                "OR": lambda a, b: a | b,
-            }
-            return ops[expr.op](left, right)
+                return self._distance(expr)
+            return f"({self.compile(expr.left)} {expr.op} {self.compile(expr.right)})"
         raise EmdriveValidationError(f"Unsupported expression {expr!r}.")
 
-    def _compile_distance(
-        self,
-        entry: TableEntry,
-        expr: ast.BinOp,
-        extra_cols: list[str] | None = None,
-        rename: dict[str, str] | None = None,
-    ) -> Column:
+    def _distance(self, expr: ast.BinOp) -> str:
         """``col @ operand`` — distance under the column's METRIC KEY
         metric (README.md:67-78). The metric comes from the DDL
-        declaration; a ``@`` on a column without one is a validation
-        error (matches the README contract that ``@`` is defined by the
-        metric index)."""
+        declaration; ``@`` is defined only for a column declared with
+        the hamming metric."""
         if not isinstance(expr.left, ast.Ident):
             raise EmdriveValidationError(
                 "Left side of @ must be a METRIC KEY column."
             )
-        if rename and expr.left.name in rename:
+        name = expr.left.name
+        if name in self.aliases:
             # Alias-shadows-base is the documented WHERE contract for
             # plain comparisons, but `@` binds a DDL-declared METRIC KEY
             # column — an aliased expression has no metric, so silently
             # binding the base here while `<`/`=` next to it bind the
             # alias would make the same name mean two columns in one
-            # predicate (r4 advisor). Reject explicitly — but ONLY when
-            # the name really is a declared metric column (round-5
-            # review: an alias that matches no column, or a non-metric
-            # one, must fall through to the accurate "does not exist" /
-            # "has no METRIC KEY" errors, not a bogus shadow message).
-            shadowed = next(
-                (c for c in entry.columns if c.name == expr.left.name), None
-            )
+            # predicate. Reject explicitly — but ONLY when the name
+            # really is a declared metric column: an alias that matches
+            # no column, or a non-metric one, falls through to the
+            # accurate "does not exist" / "has no METRIC KEY" errors.
+            shadowed = next((c for c in self.entry.columns if c.name == name), None)
             if shadowed is not None and shadowed.metric is not None:
                 raise EmdriveValidationError(
-                    f"Alias {expr.left.name!r} shadows METRIC KEY column "
-                    f"{expr.left.name!r}; '@' binds the declared metric column, "
+                    f"Alias {name!r} shadows METRIC KEY column "
+                    f"{name!r}; '@' binds the declared metric column, "
                     f"so rename the alias or drop it from the SELECT list."
                 )
-        cdef = entry.column(expr.left.name)
+        cdef = self.entry.column(name)
         if cdef.metric is None:
             raise EmdriveValidationError(
                 f"Column {cdef.name!r} has no METRIC KEY; @ is not defined for it."
             )
-        metric_fn = D.resolve(cdef.metric)
-        left = F.col(cdef.name)
-        if cdef.metric == "hamming":
-            if cdef.etype.base == "BINARY":
-                # binary-backed hashes (wider than DECIMAL(38,0) holds
-                # exactly — the UINT128-max edge, types.py): an integer
-                # literal operand becomes its 16-byte big-endian form.
-                if isinstance(expr.right, ast.Const) and isinstance(
-                    expr.right.value, int
-                ):
-                    right = F.lit(expr.right.value.to_bytes(16, "big"))
-                else:
-                    right = self._compile(entry, expr.right, extra_cols, rename)
-                return D.hamming_binary(left, right)
-            right = self._compile(entry, expr.right, extra_cols, rename)
-            if cdef.etype.base in ("UINT64", "UINT128"):
-                # decimal-backed hashes: a plain cast("long") overflows
-                # for values ≥ 2⁶³, so offset by 2⁶³ first (hamming_wide).
-                return D.hamming_wide(
-                    left, right, bits=128 if cdef.etype.base == "UINT128" else 64
-                )
-            return metric_fn(left.cast("long"), right.cast("long")).cast("long")
-        right = self._compile(entry, expr.right, extra_cols, rename)
-        return metric_fn(left, right)
+        if cdef.metric != "hamming":
+            raise EmdriveValidationError(
+                f"Column {cdef.name!r} has METRIC KEY metric {cdef.metric!r}; "
+                f"@ is defined only for the hamming metric."
+            )
+        right = expr.right
+        if isinstance(right, ast.Const) and type(right.value) is int:
+            return D.hamming_sql(_quote(cdef.name), cdef.etype.base, right.value)
+        return D.hamming_sql(
+            _quote(cdef.name), cdef.etype.base, self.compile(right), self._storage(right)
+        )
+
+    def _storage(self, expr: ast.Expr) -> str:
+        """The emdrive type name of an ``@`` operand's values: a column's
+        (through an alias of one, too), else DECIMAL."""
+        if isinstance(expr, ast.Ident) and expr.name in self.aliases:
+            expr = self.aliases[expr.name][1]  # an item: it sees base columns only
+        if isinstance(expr, ast.Ident):
+            return self.entry.column(expr.name).etype.base
+        return "DECIMAL"
 
 
 def _auto_name(expr: ast.Expr, i: int) -> str:

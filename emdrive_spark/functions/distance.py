@@ -2,19 +2,21 @@
 
 The reference declares a ``@`` distance operator evaluated against a
 table's METRIC KEY under a named metric (hamming)
-(/root/reference/README.md:26-32,67-78); only the keyword is tokenized
-(/root/reference/src/sql/tokenizer.rs:70). We realize the full family as
-*native Column expressions* so every distance stays inside whole-stage
-codegen — no Python in the hot path. That is the property that lets a
+(reference README.md:26-32,67-78); only the keyword is tokenized
+(reference src/sql/tokenizer.rs:70). Every distance here is a
+native Spark expression, so it stays inside whole-stage codegen — no
+Python in the hot path. That is the property that lets a
 distance-threshold scan or a brute-force top-k run at 100 TB: the metric
 is just arithmetic fused into the scan.
 
-All functions take/return ``pyspark.sql.Column``.
+``@`` is one SQL-text generator, ``hamming_sql``, per storage type of
+its operands: the dialect compiles a SELECT into one Spark SQL text
+around it, and the raw-ANSI ``emdrive_hamming`` function (engine.py) is
+its body, so both compute one formula. The batch operators use the
+Column builders below (``hamming``, ``l2``, ``dot``, ``cosine_*``).
 """
 
 from __future__ import annotations
-
-from decimal import Decimal
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -32,98 +34,80 @@ def hamming(a: Column | str, b: Column | int) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
 
-# The offset identity behind hamming_wide and hamming_wide_sql: for u in
-# [0, 2⁶⁴), u − 2⁶³ lies in [−2⁶³, 2⁶³) and so casts to a signed long
-# exactly, and its bit pattern is u's with the top bit flipped.
+# The offset identity: for u in [0, 2⁶⁴), u − 2⁶³ lies in [−2⁶³, 2⁶³)
+# and so casts to a signed long exactly, and its bit pattern is u's with
+# the top bit flipped.
 _TWO63 = 2**63
 _TWO64 = 2**64
+_TWO128 = 2**128
+_SMALL = ("UINT8", "UINT16", "UINT32")
 
 
-def _offset_long(u: Column) -> Column:
-    """u in [0, 2⁶⁴) as the signed long holding its 64 bits, top bit
-    flipped: one exact decimal subtract and one cast."""
-    return (u - F.lit(Decimal(_TWO63))).cast("long")
+def _long(u: int) -> str:
+    """u in [0, 2⁶⁴) as the signed-long SQL literal holding its bits."""
+    return str(u - _TWO64 if u >= _TWO63 else u)
 
 
-def hamming_wide(a: Column | str, b: Column | str, bits: int = 64) -> Column:
-    """Hamming distance over the FULL unsigned 64/128-bit range.
+def _halves(x: str, storage: str) -> tuple[str | None, str, int]:
+    """SQL text of the two 64-bit halves of ``x``, a value of a
+    ``storage`` column, each as a signed long: ``(hi, lo, flip)``, hi
+    None for a type whose values are below 2⁶⁴, and ``flip`` the bits
+    ``lo`` holds flipped.
 
-    UINT64/UINT128 columns are stored as DECIMAL (types.py) because
-    values ≥ 2⁶³ overflow Spark's signed long — a plain ``cast("long")``
-    before popcount throws CAST_OVERFLOW on exactly the perceptual-hash
-    values the reference's METRIC KEY is for. Instead, for u in
-    [0, 2⁶⁴), ``CAST(u − 2⁶³ AS BIGINT)`` never overflows and holds u's
-    bits with the top one flipped; the flip cancels in an XOR, so
-
-        bit_count(CAST(a − 2⁶³ AS BIGINT) ^ CAST(b − 2⁶³ AS BIGINT))
-            = popcount(a XOR b).
-
-    A row then costs one exact decimal subtract and one cast, fused into
-    the scan's codegen like every other metric here.
-
-    bits=64 (UINT64): ``a`` is the METRIC KEY column, in [0, 2⁶⁴) by its
-    type. ``b`` is reduced with ``pmod(b, 2⁶⁴)`` first, so an operand
-    outside that range (a negative or ≥ 2⁶⁴ literal) compares by its low
-    64 bits; for a literal the whole ``b`` side constant-folds.
-
-    bits=128 (UINT128, DECIMAL(38,0)): each operand d splits into two
-    64-bit halves, ``lo = pmod(d, 2⁶⁴)`` and the exact quotient
-    ``hi = (d − lo) / 2⁶⁴`` (it divides evenly, so the decimal
-    division's rounding is a no-op; floor(d / 2⁶⁴) could round across
-    an integer boundary). |d| < 10³⁸ < 2¹²⁷, so hi fits a signed long as
-    is and lo takes the offset: the distance is popcount over d mod 2¹²⁸,
-    the bit pattern of a negative d included. Values beyond
-    DECIMAL(38,0) (above ~10³⁸) are the documented BinaryType edge,
-    types.py."""
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    b = b.cast("decimal(38,0)")
-    if bits == 64:
-        b = F.pmod(b, F.lit(Decimal(_TWO64)))
-        return F.bit_count(_offset_long(a).bitwiseXOR(_offset_long(b))).cast("long")
-
-    def halves(d: Column) -> tuple[Column, Column]:
-        lo = F.pmod(d, F.lit(Decimal(_TWO64)))
-        return ((d - lo) / F.lit(Decimal(_TWO64))).cast("long"), _offset_long(lo)
-
-    (ha, la), (hb, lb) = halves(a.cast("decimal(38,0)")), halves(b)
-    return (F.bit_count(ha.bitwiseXOR(hb)) + F.bit_count(la.bitwiseXOR(lb))).cast("long")
+    - UINT8–32: the value itself.
+    - UINT64 (DECIMAL(20,0)): ``CAST(x − 2⁶³ AS BIGINT)``, which never
+      overflows, with the top bit flipped — one exact subtract and one
+      cast per row.
+    - BINARY: the first 16 bytes as 32 hex digits, left-zero-padded (a
+      shorter value compares as the big-endian integer it holds), each
+      half of 16 digits read as a signed long by ``conv``.
+    - any other value, as DECIMAL(38,0): ``lo = pmod(d, 2⁶⁴)`` and the
+      exact quotient ``hi = (d − lo) / 2⁶⁴`` (it divides evenly, so the
+      decimal division's rounding is a no-op). |d| < 10³⁸ < 2¹²⁷, so hi
+      fits a signed long as is and lo takes the offset: the halves of d
+      mod 2¹²⁸, the bit pattern of a negative d included."""
+    if storage in _SMALL:
+        return None, f"CAST({x} AS BIGINT)", 0
+    if storage == "UINT64":
+        return None, f"CAST({x} - {_TWO63} AS BIGINT)", _TWO63
+    if storage == "BINARY":
+        digits = f"lpad(hex({x}), 32, '0')"
+        return (
+            f"CAST(conv(substr({digits}, 1, 16), 16, -10) AS BIGINT)",
+            f"CAST(conv(substr({digits}, 17, 16), 16, -10) AS BIGINT)",
+            0,
+        )
+    d = f"CAST({x} AS DECIMAL(38,0))"
+    lo = f"pmod({d}, {_TWO64})"
+    return f"CAST(({d} - {lo}) / {_TWO64} AS BIGINT)", f"CAST({lo} - {_TWO63} AS BIGINT)", _TWO63
 
 
-def hamming_wide_sql(a: str, b: str) -> str:
-    """hamming_wide's UINT128 arithmetic as Spark SQL text over two
-    DECIMAL(38,0) expressions: the body of the raw-ANSI ``@`` function
-    (engine.py), so both paths compute one formula."""
+def hamming_sql(a: str, a_storage: str, b: str | int, b_storage: str = "DECIMAL") -> str:
+    """Spark SQL text of ``a @ b``: the popcount of a XOR b over 128
+    bits, as a BIGINT. ``a`` is SQL text of a ``a_storage`` value (an
+    emdrive type name, see ``_halves``); ``b`` is SQL text of a
+    ``b_storage`` value or a Python int. Both compare by their value mod
+    2¹²⁸.
 
-    def halves(d: str) -> tuple[str, str]:
-        lo = f"pmod({d}, {_TWO64})"
-        return f"CAST(({d} - {lo}) / {_TWO64} AS BIGINT)", f"CAST({lo} - {_TWO63} AS BIGINT)"
-
-    (ha, la), (hb, lb) = halves(a), halves(b)
-    return f"bit_count({ha} ^ {hb}) + bit_count({la} ^ {lb})"
-
-
-def hamming_binary(a: Column, b: Column, nbytes: int = 16) -> Column:
-    """Hamming distance between fixed-width BINARY hash columns — the
-    storage type for hashes wider than DECIMAL(38,0) can hold exactly
-    (UINT128 max has 39 digits; types.py documents BinaryType as the
-    edge's home). Spark has no bitwise ops on binary, so: hex-encode,
-    carve 8-hex-char (32-bit) chunks, conv to long, XOR, popcount, sum.
-    All codegen string/int ops, fused into the scan like every metric
-    here. Inputs shorter than nbytes compare as left-zero-padded (hex
-    lpad), matching big-endian integer semantics."""
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    nchunks = (nbytes + 3) // 4
-    ah = F.lpad(F.hex(a), nbytes * 2, "0")
-    bh = F.lpad(F.hex(b), nbytes * 2, "0")
-    total = None
-    for c in range(nchunks):
-        xa = F.conv(F.substring(ah, 1 + 8 * c, 8), 16, 10).cast("long")
-        xb = F.conv(F.substring(bh, 1 + 8 * c, 8), 16, 10).cast("long")
-        term = F.bit_count(xa.bitwiseXOR(xb))
-        total = term if total is None else total + term
-    return total.cast("long")
+    An int ``b`` is reduced here and folds into constants, so over a
+    UINT64 column the distance is one ``bit_count(CAST(a − 2⁶³ AS
+    BIGINT) ^ c)`` (plus the constant popcount of b's high half when
+    that is not 0)."""
+    a_hi, a_lo, a_flip = _halves(a, a_storage)
+    if isinstance(b, int):
+        q = b % _TWO128
+        lo = f"bit_count({a_lo} ^ {_long((q % _TWO64) ^ a_flip)})"
+        if a_hi is not None:
+            hi = f"bit_count({a_hi} ^ {_long(q // _TWO64)})"
+        else:
+            hi = str(bin(q // _TWO64).count("1")) if q >= _TWO64 else None
+    else:
+        b_hi, b_lo, b_flip = _halves(b, b_storage)
+        flip = a_flip ^ b_flip
+        lo = f"bit_count({a_lo} ^ {b_lo}{f' ^ {_long(flip)}' if flip else ''})"
+        his = [h for h in (a_hi, b_hi) if h is not None]
+        hi = f"bit_count({' ^ '.join(his)})" if his else None
+    return f"CAST({lo}{f' + {hi}' if hi else ''} AS BIGINT)"
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -161,21 +145,3 @@ def cosine_similarity(a: Column, b: Column) -> Column:
 
 def cosine_distance(a: Column, b: Column) -> Column:
     return F.lit(1.0) - cosine_similarity(a, b)
-
-
-METRICS = {
-    "hamming": hamming,
-    "l2": l2,
-    "euclidean": l2,
-    "cosine": cosine_distance,
-    "dot": dot,
-}
-
-
-def resolve(metric: str):
-    """Metric registry — mirrors the reference's 'metrics pluggable per
-    index' design (/root/reference/README.md:28-32)."""
-    try:
-        return METRICS[metric.lower()]
-    except KeyError:
-        raise ValueError(f"unknown metric {metric!r}; known: {sorted(METRICS)}") from None

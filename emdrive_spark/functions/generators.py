@@ -5,8 +5,9 @@ ULID = 48-bit ms timestamp + 80 random bits, Crockford base32
 (README.md:115-117 recommends it as the PK generator). Two paths:
 - ``ulid()``: driver-side generation for INSERT ... VALUES row batches
   (small by construction).
-- ``ulid_expr()``: a distributed Column expression for bulk backfills —
-  pure built-in functions (unix_millis + rand), no Python in the loop.
+- ``ULID_SQL``: distributed generation as Spark SQL text, for a
+  SELECT and for bulk backfills (``ulid_expr()``) — pure built-in
+  functions (unix_millis + rand), no Python in the loop.
 """
 
 from __future__ import annotations
@@ -39,29 +40,28 @@ def ulid(ms: int | None = None, entropy: bytes | None = None) -> str:
     return _b32(ms, 10) + _b32(rand80, 16)
 
 
-def now_expr() -> Column:
-    """NOW() → current UTC timestamp (functions.rs:19)."""
-    return F.current_timestamp()
+# NOW() as Spark SQL text (functions.rs:19): the current UTC timestamp.
+NOW_SQL = "current_timestamp()"
+
+
+def _b32_sql(x: str, width: int) -> str:
+    """SQL text of the non-negative BIGINT ``x`` as ``width`` Crockford
+    base32 digits: ``conv`` writes base 32 in 0-9A-V, which
+    ``translate`` maps onto the Crockford alphabet."""
+    digits = f"lpad(conv({x}, 10, 32), {width}, '0')"
+    return f"translate({digits}, '0123456789ABCDEFGHIJKLMNOPQRSTUV', '{_CROCKFORD}')"
+
+
+# ULID() as Spark SQL text: 10 base32 digits of unix millis, then 16
+# from two 40-bit rand() draws. The time prefix keeps ULIDs sortable;
+# the entropy is rand()'s (fine for IDs, not for crypto).
+_RAND40 = f"CAST(rand() * {1 << 40} AS BIGINT)"
+ULID_SQL = (
+    f"concat({_b32_sql('unix_millis(current_timestamp())', 10)}, "
+    f"{_b32_sql(_RAND40, 8)}, {_b32_sql(_RAND40, 8)})"
+)
 
 
 def ulid_expr() -> Column:
-    """Distributed ULID generation as a Column: 10 base32 chars of
-    unix-millis + 16 chars from two 40-bit rand() draws. Monotonic
-    time prefix preserved; entropy quality is rand()'s (fine for IDs,
-    not for crypto)."""
-    millis = F.unix_millis(F.current_timestamp())
-    alphabet = F.lit(_CROCKFORD)
-
-    def b32(col: Column, width: int) -> Column:
-        parts = [
-            alphabet.substr(
-                (F.shiftrightunsigned(col, 5 * i).bitwiseAND(F.lit(31)) + 1).cast("int"),
-                F.lit(1),
-            )
-            for i in range(width - 1, -1, -1)
-        ]
-        return F.concat(*parts)
-
-    r1 = (F.rand() * F.lit(float(1 << 40))).cast("long")
-    r2 = (F.rand() * F.lit(float(1 << 40))).cast("long")
-    return F.concat(b32(millis, 10), b32(r1, 8), b32(r2, 8))
+    """Distributed ULID generation as a Column (``ULID_SQL``)."""
+    return F.expr(ULID_SQL)

@@ -24,8 +24,6 @@ import warnings
 
 import pytest
 
-from pyspark.sql import types as T
-
 from emdrive_spark import catalog, types
 from emdrive_spark.engine import Engine
 from emdrive_spark.sql.errors import EmdriveValidationError
@@ -527,8 +525,8 @@ def test_pk_in_list_literals_are_exact(engine, spark, monkeypatch):
     engine.execute("INSERT INTO keyed (k, n) VALUES " + ", ".join(f"({_q(k)}, 2)" for k in near))
     got = sorted(r["k"] for r in engine.execute("SELECT k FROM keyed").collect())
     assert got == sorted(keys + near)
-    for value, dtype in [("a'b\\", T.StringType()), (b"\x00'", T.BinaryType()), (2**64 - 1, T.DecimalType(20, 0))]:
-        assert spark.sql(f"SELECT {catalog._sql_literal(value, dtype)} AS v").collect()[0]["v"] == value
+    for value in ["a'b\\", b"\x00'", 2**64 - 1, -(2**63), 10**38 - 1, 3.5, 1e300, True, None]:
+        assert spark.sql(f"SELECT {catalog._sql_literal(value)} AS v").collect()[0]["v"] == value
 
 
 # -- INSERT values: one Arrow conversion feeds the check, the relation, the disk ----
@@ -576,6 +574,22 @@ def test_pk_clash_still_caught_after_fast_path(engine):
     engine.execute("INSERT INTO rt5 (hash, url, width) VALUES (3, 'u1', 10)")
     with pytest.raises(EmdriveValidationError, match="already exists"):
         engine.execute("INSERT INTO rt5 (hash, url, width) VALUES (4, 'u1', 11)")
+
+
+def test_pk_clash_with_a_local_row_builds_no_local_relation(engine, monkeypatch):
+    """A clash against a local row is found in Arrow before the INSERT
+    builds its local relation: no createDataFrame, and the table is left
+    as it was."""
+    engine.execute(CREATE_RT5)
+    engine.execute("INSERT INTO rt5 (hash, url, width) VALUES (3, 'u1', 10), (5, 'u2', 12)")
+    frames = []
+    build = engine.catalog._local_frame
+    monkeypatch.setattr(engine.catalog, "_local_frame", lambda *a: frames.append(a) or build(*a))
+    with pytest.raises(EmdriveValidationError, match="already exists"):
+        engine.execute("INSERT INTO rt5 (hash, url, width) VALUES (4, 'u3', 11), (6, 'u2', 13)")
+    assert frames == []
+    rows = engine.execute("SELECT url, width FROM rt5").collect()
+    assert sorted((r["url"], r["width"]) for r in rows) == [("u1", 10), ("u2", 12)]
 
 
 @pytest.mark.parametrize(

@@ -12,7 +12,7 @@ from emdrive_spark.engine import Engine
 from emdrive_spark.functions.generators import ulid
 from emdrive_spark.sql.errors import EmdriveValidationError
 
-from .test_distance import _EDGES64, _EDGES128
+from .test_distance import _EDGES64, _EDGES128, _OUT_OF_RANGE
 
 CREATE = """
 CREATE TABLE photos_seen (
@@ -172,13 +172,14 @@ def test_ansi_at_matches_dialect_at_by_value(engine, monkeypatch, htype, edges):
     )
     passthrough, ansi_calls = engine._ansi_passthrough, []
     monkeypatch.setattr(engine, "_ansi_passthrough", lambda sql: ansi_calls.append(sql) or passthrough(sql))
-    for q in edges:
-        want = {i: bin(h ^ q).count("1") for i, h in enumerate(edges)}
+    operands = edges + _OUT_OF_RANGE  # the latter compare mod 2¹²⁸ on both paths
+    for q in operands:
+        want = {i: bin(h ^ (q % 2**128)).count("1") for i, h in enumerate(edges)}
         dialect = engine.execute(f"SELECT id, h @ {q} AS d FROM ah").collect()
         ansi = engine.execute(f"SELECT id, h @ {q} AS d FROM ah GROUP BY id, h").collect()
         assert {r["id"]: r["d"] for r in dialect} == want, q
         assert {r["id"]: r["d"] for r in ansi} == want, q
-    assert len(ansi_calls) == len(edges)
+    assert len(ansi_calls) == len(operands)
 
 
 def test_ansi_passthrough_rejects_mutations(engine):
@@ -280,6 +281,24 @@ def test_knn_topk_through_sql_surface(engine):
     assert "TakeOrderedAndProject" in plan
 
 
+def test_select_is_one_sql_text(engine, monkeypatch):
+    """A kNN and a radius statement each plan with ONE spark.sql call
+    and no DataFrame-builder call: every builder call is a py4j round
+    trip that re-analyzes the growing plan."""
+    from pyspark.sql import DataFrame
+
+    engine.execute(CREATE)
+    engine.execute(INSERT)
+    for method in ("withColumn", "filter", "where", "orderBy", "sort", "limit", "select"):
+        monkeypatch.setattr(DataFrame, method, lambda *a, **k: pytest.fail("DataFrame builder call"))
+    real_sql, texts = engine.spark.sql, []
+    monkeypatch.setattr(engine.spark, "sql", lambda text, *a, **k: texts.append(text) or real_sql(text, *a, **k))
+    knn = engine.execute("SELECT url, hash @ 0b00001011 AS distance FROM photos_seen ORDER BY distance LIMIT 10")
+    assert len(texts) == 1 and [r["distance"] for r in knn.collect()] == [3]
+    radius = engine.execute(FLAGSHIP)
+    assert len(texts) == 2 and [r["distance"] for r in radius.collect()] == [3]
+
+
 def test_order_by_desc_and_limit_zero(engine):
     engine.execute(CREATE)
     engine.execute(INSERT)
@@ -288,6 +307,17 @@ def test_order_by_desc_and_limit_zero(engine):
         "SELECT url, width FROM photos_seen ORDER BY width DESC"
     ).collect()
     assert rows[0]["width"] == 1280
+
+
+def test_order_by_puts_nulls_first_ascending_last_descending(engine):
+    """Spark's default NULL placement, as the DataFrame `asc()`/`desc()`
+    the dialect used to sort with: first for ASC, last for DESC."""
+    engine.execute("CREATE TABLE nulls_t (id UINT32 PRIMARY KEY, x NULLABLE(FLOAT64))")
+    engine.execute("INSERT INTO nulls_t (id, x) VALUES (1, 2.5), (2, NULL), (3, -1.0)")
+    asc = engine.execute("SELECT id FROM nulls_t ORDER BY x").collect()
+    desc = engine.execute("SELECT id FROM nulls_t ORDER BY x DESC").collect()
+    assert [r["id"] for r in asc] == [2, 3, 1]
+    assert [r["id"] for r in desc] == [1, 3, 2]
 
 
 def test_percentile_approx_tracks_exact(spark):
@@ -336,3 +366,85 @@ def test_pca_explained_variance_contract(spark):
     ev = list(model.explainedVariance)
     assert all(a >= b for a, b in zip(ev, ev[1:])), ev
     assert sum(ev) <= 1.000001
+
+
+# -- SELECT compilation: aliases, temp columns, literals ----------------------
+
+CREATE_RT5 = """
+CREATE TABLE rt5 (
+    hash UINT8 METRIC KEY USING mtree(hamming),
+    url STRING(2048) PRIMARY KEY,
+    width UINT32
+)
+"""
+
+
+def test_alias_shadowing_metric_column_rejected(engine):
+    """`@` binds the DDL-declared METRIC KEY column while plain
+    comparisons bind a same-named alias (alias-shadows-base is the WHERE
+    contract) — one name meaning two columns inside one predicate is
+    rejected, not silently split (r4 advisor low)."""
+    e = engine
+    e.execute(CREATE_RT5)
+    e.execute("INSERT INTO rt5 (hash, url, width) VALUES (3, 'u1', 10)")
+    with pytest.raises(EmdriveValidationError, match="shadows METRIC KEY"):
+        e.execute("SELECT width AS hash FROM rt5 WHERE hash @ 0b1 < 4")
+    # non-shadowing aliases keep the README flagship behavior
+    rows = e.execute(
+        "SELECT url, hash @ 0b00000001 AS distance FROM rt5 WHERE distance < 4"
+    ).collect()
+    assert [(r["url"], r["distance"]) for r in rows] == [("u1", 1)]
+
+
+def test_at_right_operand_sees_alias(engine):
+    """The right side of `@` resolves aliases like any other WHERE
+    reference (rename threading is symmetric, not left-only)."""
+    e = engine
+    e.execute(CREATE_RT5)
+    e.execute("INSERT INTO rt5 (hash, url, width) VALUES (3, 'u1', 1)")
+    rows = e.execute(
+        "SELECT url, width AS probe FROM rt5 WHERE hash @ probe = 1"
+    ).collect()
+    assert [(r["url"], r["probe"]) for r in rows] == [("u1", 1)]
+
+
+def test_alias_of_nonmetric_name_gets_accurate_at_error(engine):
+    """Round-5 review: an alias left of '@' that shadows NO metric
+    column must produce the accurate 'does not exist' error, not a
+    bogus 'shadows METRIC KEY column' message."""
+    e = engine
+    e.execute(CREATE_RT5)
+    with pytest.raises(EmdriveValidationError, match="does not exist"):
+        e.execute("SELECT width AS d FROM rt5 WHERE d @ 3 < 4")
+    # and an alias shadowing a NON-metric column reports no-metric
+    with pytest.raises(EmdriveValidationError, match="METRIC KEY"):
+        e.execute("SELECT url AS width FROM rt5 WHERE width @ 3 < 4")
+    # the true shadow case still rejects explicitly
+    with pytest.raises(EmdriveValidationError, match="shadows"):
+        e.execute("SELECT url AS hash FROM rt5 WHERE hash @ 3 < 4")
+
+
+def test_select_alias_cannot_clobber_base_column(spark):
+    """'SELECT <expr> AS <existing-col>, <existing-col>' must return the
+    expr under the alias AND the untouched base column (r4 review: the
+    old withColumn-by-alias destroyed the base column silently)."""
+    from emdrive_spark.engine import Engine
+
+    eng = Engine(spark)
+    eng.execute("CREATE TABLE r4_alias (id UINT32 PRIMARY KEY, w UINT32)")
+    eng.execute("INSERT INTO r4_alias (id, w) VALUES (1, 100), (2, 200)")
+    out = eng.execute("SELECT w AS id, id FROM r4_alias ORDER BY id")
+    rows = out.collect()
+    assert out.columns == ["id", "id"]
+    # first output column carries w's values, second the real ids —
+    # ORDER BY id resolves to the ALIAS (alias-in-scope contract)
+    assert [(r[0], r[1]) for r in rows] == [(100, 1), (200, 2)]
+
+
+def test_negative_literal_in_where(engine):
+    engine.execute_script(
+        "CREATE TABLE signed_t (id UINT32 PRIMARY KEY, x FLOAT64);"
+        "INSERT INTO signed_t (id, x) VALUES (1, 0.5), (2, 3.0);"
+    )
+    rows = engine.execute("SELECT id FROM signed_t WHERE x > -1").collect()
+    assert {r["id"] for r in rows} == {1, 2}

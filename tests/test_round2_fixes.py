@@ -123,15 +123,6 @@ def test_hamming_at_uint128_range(engine):
 # -- unary minus ----------------------------------------------------------
 
 
-def test_negative_literal_in_where(engine):
-    engine.execute_script(
-        "CREATE TABLE signed_t (id UINT32 PRIMARY KEY, x FLOAT64);"
-        "INSERT INTO signed_t (id, x) VALUES (1, 0.5), (2, 3.0);"
-    )
-    rows = engine.execute("SELECT id FROM signed_t WHERE x > -1").collect()
-    assert {r["id"] for r in rows} == {1, 2}
-
-
 def test_negative_value_on_unsigned_column_rejected(engine):
     engine.execute("CREATE TABLE unsigned_t (id UINT32 PRIMARY KEY)")
     with pytest.raises(EmdriveValidationError, match="unsigned"):
@@ -254,41 +245,6 @@ def test_dedup_lsh_verified_plan_has_no_cartesian(spark):
 
 
 # -- BINARY hash columns (the >DECIMAL(38,0) edge) -------------------------
-
-
-def test_hamming_binary_full_128_bit(engine):
-    a = (1 << 127) | 0b1011
-    q = (1 << 127) | 0b0001
-    engine.execute_script(
-        "CREATE TABLE hashes_bin ("
-        " h BINARY METRIC KEY USING mtree(hamming),"
-        " id UINT32 PRIMARY KEY);"
-        f"INSERT INTO hashes_bin (h, id) VALUES ({a}, 1);"
-    )
-    rows = engine.execute(f"SELECT h @ {q} AS d FROM hashes_bin").collect()
-    assert rows[0]["d"] == 2  # bits 3 and 1 differ; bit 127 matches
-    rows = engine.execute("SELECT h @ 1 AS d FROM hashes_bin").collect()
-    assert rows[0]["d"] == 3  # XOR clears bit 0 → bits 127, 3, 1 remain
-
-
-def test_hamming_binary_matches_python_popcount(spark):
-    from pyspark.sql import functions as F
-
-    from emdrive_spark.functions.distance import hamming_binary
-
-    pairs = [
-        (0, 0),
-        ((1 << 128) - 1, 0),
-        ((1 << 127) | 12345, 54321),
-        ((1 << 100) | 3, (1 << 100) | 1),
-    ]
-    df = spark.createDataFrame(
-        [(a.to_bytes(16, "big"), b.to_bytes(16, "big")) for a, b in pairs],
-        "a binary, b binary",
-    )
-    got = [r["d"] for r in df.select(hamming_binary("a", "b").alias("d")).collect()]
-    want = [bin(a ^ b).count("1") for a, b in pairs]
-    assert got == want
 
 
 def test_binary_hash_roundtrip(engine):

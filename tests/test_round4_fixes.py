@@ -84,23 +84,6 @@ def test_keyword_extract_rank_exact_top3(spark):
     assert per_doc.filter(F.col("count") != 3).count() == 0
 
 
-def test_select_alias_cannot_clobber_base_column(spark):
-    """'SELECT <expr> AS <existing-col>, <existing-col>' must return the
-    expr under the alias AND the untouched base column (r4 review: the
-    old withColumn-by-alias destroyed the base column silently)."""
-    from emdrive_spark.engine import Engine
-
-    eng = Engine(spark)
-    eng.execute("CREATE TABLE r4_alias (id UINT32 PRIMARY KEY, w UINT32)")
-    eng.execute("INSERT INTO r4_alias (id, w) VALUES (1, 100), (2, 200)")
-    out = eng.execute("SELECT w AS id, id FROM r4_alias ORDER BY id")
-    rows = out.collect()
-    assert out.columns == ["id", "id"]
-    # first output column carries w's values, second the real ids —
-    # ORDER BY id resolves to the ALIAS (alias-in-scope contract)
-    assert [(r[0], r[1]) for r in rows] == [(100, 1), (200, 2)]
-
-
 def test_nullable_primary_key_rejected(spark):
     from emdrive_spark.engine import Engine
     from emdrive_spark.sql.errors import EmdriveValidationError

@@ -1,58 +1,10 @@
 """Round-5 advisor fixes, pinned as regressions (ADVICE.md r4):
-negative Content-Length framing and alias-shadows-METRIC-KEY rejection
-for `@`."""
+negative Content-Length framing. (The alias-shadows-METRIC-KEY tests
+moved to test_engine.py.)"""
 
 from __future__ import annotations
 
 import pytest
-
-from emdrive_spark.engine import Engine
-from emdrive_spark.sql.errors import EmdriveValidationError
-
-CREATE = """
-CREATE TABLE rt5 (
-    hash UINT8 METRIC KEY USING mtree(hamming),
-    url STRING(2048) PRIMARY KEY,
-    width UINT32
-)
-"""
-
-
-def test_alias_shadowing_metric_column_rejected(engine_factory):
-    """`@` binds the DDL-declared METRIC KEY column while plain
-    comparisons bind a same-named alias (alias-shadows-base is the WHERE
-    contract) — one name meaning two columns inside one predicate is
-    rejected, not silently split (r4 advisor low)."""
-    e = engine_factory()
-    e.execute(CREATE)
-    e.execute("INSERT INTO rt5 (hash, url, width) VALUES (3, 'u1', 10)")
-    with pytest.raises(EmdriveValidationError, match="shadows METRIC KEY"):
-        e.execute("SELECT width AS hash FROM rt5 WHERE hash @ 0b1 < 4")
-    # non-shadowing aliases keep the README flagship behavior
-    rows = e.execute(
-        "SELECT url, hash @ 0b00000001 AS distance FROM rt5 WHERE distance < 4"
-    ).collect()
-    assert [(r["url"], r["distance"]) for r in rows] == [("u1", 1)]
-
-
-def test_at_right_operand_sees_alias(engine_factory):
-    """The right side of `@` resolves aliases like any other WHERE
-    reference (rename threading is symmetric, not left-only)."""
-    e = engine_factory()
-    e.execute(CREATE)
-    e.execute("INSERT INTO rt5 (hash, url, width) VALUES (3, 'u1', 1)")
-    rows = e.execute(
-        "SELECT url, width AS probe FROM rt5 WHERE hash @ probe = 1"
-    ).collect()
-    assert [(r["url"], r["probe"]) for r in rows] == [("u1", 1)]
-
-
-@pytest.fixture()
-def engine_factory(spark):
-    def make() -> Engine:
-        return Engine(spark)
-
-    return make
 
 
 def test_negative_content_length_is_typed_400(spark):
@@ -104,22 +56,6 @@ def test_edit_dedup_hybrid_paths_equal_selfjoin(spark, monkeypatch):
     all_hot = run()
     assert all_small == all_hot
     assert len(all_small) > 0  # perturbed twins must survive the verifier
-
-
-def test_alias_of_nonmetric_name_gets_accurate_at_error(engine_factory):
-    """Round-5 review: an alias left of '@' that shadows NO metric
-    column must produce the accurate 'does not exist' error, not a
-    bogus 'shadows METRIC KEY column' message."""
-    e = engine_factory()
-    e.execute(CREATE)
-    with pytest.raises(EmdriveValidationError, match="does not exist"):
-        e.execute("SELECT width AS d FROM rt5 WHERE d @ 3 < 4")
-    # and an alias shadowing a NON-metric column reports no-metric
-    with pytest.raises(EmdriveValidationError, match="METRIC KEY"):
-        e.execute("SELECT url AS width FROM rt5 WHERE width @ 3 < 4")
-    # the true shadow case still rejects explicitly
-    with pytest.raises(EmdriveValidationError, match="shadows"):
-        e.execute("SELECT url AS hash FROM rt5 WHERE hash @ 3 < 4")
 
 
 def test_stalled_body_read_times_out_with_408(spark, monkeypatch):
