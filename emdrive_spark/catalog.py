@@ -24,17 +24,21 @@ PK check of the next INSERT) folds a table past that size into a new
 base (``_compact``).
 
 A durable catalog (``save``/``restore``) keeps the same two leaves. On
-disk a table is base files plus delta files: ``save()`` appends the
-local rows not yet on disk as one ``delta-<ulid>.parquet`` (written on
-the driver by pyarrow, no Spark job), so a durable INSERT writes
-O(batch) bytes, like the reference writing the page it touches. Once
-the local rows pass ``_LOCAL_ROWS_MAX`` the next save *folds*: it
-rewrites base + deltas as ``defaultParallelism`` PK-range-partitioned,
+disk a table is a *generation* ``<table>/g-<ulid>/`` of base files and
+delta files, and ``_catalog.json`` names each table's live one.
+``save()`` appends the local rows not yet on disk to it as one
+``delta-<ulid>.parquet`` (written on the driver by pyarrow, no Spark
+job), so a durable INSERT writes O(batch) bytes, like the reference
+writing the page it touches. Once the local rows pass
+``_LOCAL_ROWS_MAX`` the next save *folds*: it writes base + deltas as
+a new generation of ``defaultParallelism`` PK-range-partitioned,
 PK-sorted files and reads them back as the new base, so a durable table
-never compacts. Both a fold and ``restore()`` load a table's directory
-one way (``Catalog._load``): the base files are the base, and the delta
-files' rows are the local rows, so a restored table is in the state
-its last save left it in, and its next INSERT appends.
+never compacts. No file is renamed or deleted under a frame: a retired
+generation outlives its fold by ``_RETIRED_KEEP_S``. A fold and
+``restore()`` load a generation one way (``Catalog._load``): the base
+files are the base, and the delta files' rows are the local rows, so a
+restored table is in the state its last save left, and its next INSERT
+appends.
 
 The PK check of an INSERT prunes like the reference's B+tree descent:
 each entry keeps its base's PK ``[min, max]`` (read from the fold's
@@ -46,7 +50,12 @@ ascending keys (the time-ordered ``ULID()`` default) runs no Spark job.
 from __future__ import annotations
 
 import datetime as _dt
+import json
 import math
+import os
+import shutil
+import threading
+import time
 from dataclasses import dataclass
 from decimal import Decimal
 
@@ -59,10 +68,10 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from emdrive_spark.functions.ckpt import ckpt
-from emdrive_spark.functions.generators import ulid
+from emdrive_spark.functions.generators import ulid, ulid_ms
 from emdrive_spark.sql import ast
 from emdrive_spark.sql.errors import EmdriveValidationError
-from emdrive_spark.types import EmdriveType
+from emdrive_spark.types import EmdriveType, parse_type
 
 DEFAULT_SCHEMA = "main"
 
@@ -85,6 +94,11 @@ _LOCAL_ROWS_MAX = 2_000
 # list cost more than the build job.
 _PK_IN_LIST_MAX = 1_000
 
+# Seconds a durable table's retired generation outlives the fold that
+# retired it (Catalog._sweep): a frame planned over it before the fold
+# can still read its files for that long.
+_RETIRED_KEEP_S = 60
+
 
 @dataclass
 class TableEntry:
@@ -101,26 +115,21 @@ class TableEntry:
     # df's compacted leaf (a checkpoint or a parquet scan); None while
     # every row the table holds is in local_rows.
     base: DataFrame | None = None
-    # Root of THIS entry's last successful write or restore: the files
-    # flushed counts are at this root only, so a save to any other root
-    # folds. A save to a different root that throws midway leaves the
-    # entries it wrote pointing at that root, so a later save to the
-    # original root rewrites them instead of skipping them (a skip there
-    # would publish a _catalog.json over a snapshot missing
-    # acknowledged inserts).
-    saved_root: str | None = None
-    # How many of local_rows (a prefix) are on disk at saved_root as
-    # delta files beside the files base reads; None while base is not
-    # exactly those files (never saved at this root, or compacted), so
-    # the next save() folds. The table is clean at saved_root when all
-    # of them are.
+    # The generation directory (<root>/<schema>/<table>/g-<ulid>) base
+    # reads and appends go to; None before a save or restore. A save to
+    # a root it is not under folds, even after a save elsewhere threw
+    # midway (a skip would publish a _catalog.json missing acked rows).
+    gen_path: str | None = None
+    # How many of local_rows (a prefix) are on disk in gen_path as delta
+    # files (it is clean when all are); None while base is not exactly
+    # gen_path's base files (never saved, or compacted): save() folds.
     flushed: int | None = None
     # [min, max] of base's primary key, () while base holds no rows (or
     # there is none), None when not known: a base with rows whose key
     # type has a Python order that is not Spark's (_ordered_key), a
     # parquet row group without min/max statistics. _pk_taken probes the
     # base only for batch keys inside it. Set by _load from the footers
-    # of the base files (None from before a fold's swap until then) and
+    # of the base files (None from the start of a fold until then) and
     # widened by _compact with the local rows it folds in, so it is
     # exact, never stale.
     pk_range: tuple | None = None
@@ -146,10 +155,11 @@ class TableEntry:
 
 
 def _entry_meta(e: TableEntry) -> dict:
-    """The _catalog.json record for one table (DDL metadata Spark's
-    parquet footer can't carry: PK, metric, defaults, nullability)."""
+    """The _catalog.json record for one table: its live generation, and
+    DDL metadata parquet can't carry (PK, metric, defaults, nullability)."""
     return {
         "schema_name": e.schema_name,
+        "generation": os.path.basename(e.gen_path),
         "columns": [
             {
                 "name": c.name,
@@ -196,8 +206,6 @@ class Catalog:
         # writer would silently drop the other's rows). The reference
         # gets the same guarantee from its single executor loop
         # (bounded mpsc channel, executor/mod.rs:19).
-        import threading
-
         self._write_lock = threading.Lock()
         # SQL-queryable from session start, like the reference's
         # bootstrap (system.rs:5-91): the system relations exist (empty)
@@ -436,112 +444,96 @@ class Catalog:
     # filesystem.rs:11-15; blank-file bootstrap write.rs:12-38) --------
 
     def save(self, root: str) -> None:
-        """Persist every table under ``<root>/<schema>/<table>/`` plus a
-        ``_catalog.json`` with the DDL metadata Spark can't store (PK,
-        metric, defaults, emdrive nullability). A table's directory
-        holds base files and delta files, and each table takes one of
-        three paths:
+        """Persist every table as a generation directory
+        ``<root>/<schema>/<table>/g-<ulid>/`` of base files and delta
+        files, plus a ``_catalog.json`` naming each table's live
+        generation, with the DDL metadata Spark can't store (PK, metric,
+        defaults, emdrive nullability). Each table takes one of three
+        paths:
 
-        - Skip: it is clean at this root. Its last write or restore was
-          here (``saved_root``) and every local row is on disk
+        - Skip: it is clean at this root. Its live generation is under
+          this root (``gen_path``) and every local row is on disk there
           (``flushed``).
-        - Append: its base reads exactly this root's base files
+        - Append: its base reads exactly that generation's base files
           (``flushed`` is set) and its local rows are within
           ``_LOCAL_ROWS_MAX``. The local rows not yet on disk become one
-          delta file (``_append_delta``): O(batch) bytes, no Spark job.
+          delta file in it (``_append_delta``): O(batch) bytes, no Spark
+          job.
         - Fold, otherwise: a new table, another root, a table that
           ``_compact`` replaced, or past the limit. Base + deltas are
-          rewritten as one new base (``_fold``).
+          written as a new generation (``_fold``).
 
-        Runs UNDER the catalog write lock (an unlocked save racing a
-        concurrent INSERT read a pre-union entry.df and persisted a
-        snapshot missing acknowledged rows; two concurrent saves also
-        corrupted each other's writes and the json). The metadata json
-        is published via temp-file + os.replace (atomic)."""
-        import json
-        import os
-        import shutil
-
+        The json is published via temp-file + os.replace (atomic), then
+        each folded table's directory is swept (``_sweep``). Runs UNDER
+        the catalog write lock (an unlocked save racing a concurrent
+        INSERT read a pre-union entry.df and persisted a snapshot missing
+        acknowledged rows; two concurrent saves also corrupted each
+        other's writes and the json)."""
         with self._write_lock:
-            meta = {}
+            meta, folded = {}, []
             for e in self.tables.values():
-                path = os.path.join(root, e.schema_name, e.name)
-                at_root = e.saved_root == root and os.path.exists(path)
-                if at_root and e.flushed == len(e.local_rows):
-                    meta[e.name] = _entry_meta(e)
-                    continue
-                # what a crash mid-fold leaves; never read or published
-                shutil.rmtree(path + "__tmp", ignore_errors=True)
-                if at_root and e.flushed is not None and not e.oversized:
-                    self._append_delta(e, path)
+                table_dir = os.path.join(root, e.schema_name, e.name)
+                at_root = os.path.dirname(e.gen_path or "") == table_dir
+                must_fold = e.flushed is None or (e.oversized and e.flushed < len(e.local_rows))
+                if must_fold or not (at_root and os.path.exists(e.gen_path)):
+                    self._fold(e, table_dir)
+                    folded.append(e)
                 else:
-                    self._fold(e, path)
-                e.saved_root = root
+                    self._append_delta(e)  # no file if every local row is on disk
                 meta[e.name] = _entry_meta(e)
             os.makedirs(root, exist_ok=True)
             tmp_json = os.path.join(root, "_catalog.json.tmp")
             with open(tmp_json, "w") as f:
                 json.dump(meta, f, indent=2)
             os.replace(tmp_json, os.path.join(root, "_catalog.json"))
+            for e in folded:
+                _sweep(e.gen_path)
 
-    def _append_delta(self, e: TableEntry, path: str) -> None:
+    def _append_delta(self, e: TableEntry) -> None:
         """Write the local rows not yet on disk as ``delta-<ulid>.parquet``
-        in the table's directory: the slice of ``local_rows`` past
+        in the live generation: the slice of ``local_rows`` past
         ``flushed``, the same arrays the live local relation was built
         from, so any row the live table holds can be written. pyarrow
         writes it on the driver under a hidden ``.delta-<ulid>.tmp``
         name that Spark's reader skips, and ``os.rename`` publishes it
         atomically. Deletes no file, so a read planned over the live
         frame never loses one."""
-        import os
-
         rows = e.local_rows.slice(e.flushed)
         if rows:
             tag = ulid()
-            tmp = os.path.join(path, f".delta-{tag}.tmp")
+            tmp = os.path.join(e.gen_path, f".delta-{tag}.tmp")
             pq.write_table(rows, tmp)
-            os.rename(tmp, os.path.join(path, f"delta-{tag}.parquet"))
+            os.rename(tmp, os.path.join(e.gen_path, f"delta-{tag}.parquet"))
         e.flushed = len(e.local_rows)
 
-    def _fold(self, e: TableEntry, path: str) -> None:
-        """Rewrite the whole table as its new base: ``defaultParallelism``
-        files, range-partitioned and sorted by PK (the layout contract:
-        parquet min/max row-group stats make PK lookups prune like the
+    def _fold(self, e: TableEntry, table_dir: str) -> None:
+        """Write the whole table as the base of a new generation,
+        ``<table_dir>/g-<ulid>``: ``defaultParallelism`` files,
+        range-partitioned and sorted by PK (the layout contract: parquet
+        min/max row-group stats make PK lookups prune like the
         reference's B+tree, and the base's PK range is read from those
-        footers on the driver), written to ``<table>__tmp`` and swapped in
-        only after the write commits, so a crash mid-write loses no
-        committed row; ``restore()`` takes the table back from
-        ``<table>__old`` if a crash lands between the two renames.
-
-        The live entry is then loaded from the files just written
-        (``_load``): its old lineage scanned files the swap deleted."""
-        import os
-        import shutil
-
-        tmp, old = path + "__tmp", path + "__old"
+        footers on the driver), then loaded as the live entry
+        (``_load``). Renames and deletes no committed file: a restore
+        reads the generation the json names, and the retired one stays
+        for the frames planned over it (``_sweep``)."""
+        gen_path = os.path.join(table_dir, f"g-{ulid()}")
         pk = e.pk.name
-        parallelism = self.spark.sparkContext.defaultParallelism
+        parts = self.spark.sparkContext.defaultParallelism
         # unknown until the new footers are read: if that read fails,
         # the old range must not stand for a base holding the rows folded
         # in, which are then no longer local rows either
         e.pk_range = None
-        (
-            e.df.repartitionByRange(parallelism, pk)
-            .sortWithinPartitions(pk)
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.exists(path):
-            os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old, ignore_errors=True)
-        self._load(e, path)
+        try:
+            e.df.repartitionByRange(parts, pk).sortWithinPartitions(pk).write.parquet(gen_path)
+        except Exception:  # its name would date the live one's retirement (_sweep)
+            shutil.rmtree(gen_path, ignore_errors=True)
+            raise
+        self._load(e, gen_path)
 
     def _load(self, e: TableEntry, path: str) -> None:
-        """Point ``e`` at the table saved in ``path``, in the state its
-        saves left: the base reads the ``part-*`` files, listed one by
-        one, so it never picks up a delta file appended beside them
+        """Point ``e`` at the generation saved in ``path``, in the state
+        its saves left: the base reads the ``part-*`` files, listed one
+        by one, so it never picks up a delta file appended beside them
         later; the local rows are the delta files' tables, read on the
         driver by pyarrow in name (ULID) order in the table's Arrow
         schema and combined into one chunk, all of them on disk
@@ -549,8 +541,6 @@ class Catalog:
         footers. Hidden ``.delta-*.tmp`` files that a crash mid-append
         left are not read. An append happens only within
         ``_LOCAL_ROWS_MAX``, so the delta rows are bounded."""
-        import os
-
         names = sorted(os.listdir(path))
         files = [os.path.join(path, f) for f in names if f.startswith("part-")]
         deltas = [os.path.join(path, f) for f in names if f.startswith("delta-")]
@@ -563,24 +553,22 @@ class Catalog:
         e.df = e.base.unionByName(self._local_frame(local_rows, schema)) if local_rows else e.base
         e.df.createOrReplaceTempView(e.name)
         e.local_rows = local_rows
+        e.gen_path = path
         e.flushed = len(local_rows)
         e.pk_range = _footer_pk_range(files, e.pk.name, e.pk.etype.spark_type)
 
     def restore(self, root: str) -> int:
         """Load a saved catalog: re-register every table (schema from
         the metadata file — nullability/PK/metric survive the
-        round-trip, which plain Parquet alone would lose). Each table is
-        loaded as a fold loads it (``_load``), so it is clean at
-        ``root``: a save there skips it until an INSERT, which then
-        appends. Runs under the write lock (it mutates
-        self.tables); if a crash interrupted a fold between its two
-        directory renames, the table's data survives under
-        ``<table>__old`` and is swapped back here."""
-        import json
-        import os
-
-        from emdrive_spark.types import parse_type
-
+        round-trip, which plain Parquet alone would lose) from the
+        generation the file names, loaded as a fold loads it
+        (``_load``), so it is clean at ``root``: a save there skips it
+        until an INSERT, which then appends. A record without one (the
+        flat layout of older saves) names ``<table>/`` itself, whose
+        empty last part ``save`` reads back as no generation. A ``g-*``
+        newer than the named one is deleted: only a crash mid-fold
+        leaves one, and no frame was planned over it. Runs under the
+        write lock (it mutates self.tables)."""
         with open(os.path.join(root, "_catalog.json")) as f:
             meta = json.load(f)
         with self._write_lock:
@@ -596,18 +584,19 @@ class Catalog:
                     )
                     for c in t["columns"]
                 )
-                path = os.path.join(root, t["schema_name"], name)
-                if not os.path.exists(path) and os.path.exists(path + "__old"):
-                    os.rename(path + "__old", path)
+                table_dir = os.path.join(root, t["schema_name"], name)
+                gen = t.get("generation", "")
+                for g in os.listdir(table_dir):
+                    if g.startswith("g-") and g > gen:
+                        shutil.rmtree(os.path.join(table_dir, g), ignore_errors=True)
                 entry = TableEntry(
                     name=name,
                     schema_name=t["schema_name"],
                     columns=columns,
                     df=None,  # set by _load, as is local_rows
                     local_rows=None,
-                    saved_root=root,
                 )
-                self._load(entry, path)
+                self._load(entry, os.path.join(table_dir, gen))
                 self.tables[name] = entry
             self.refresh_system_views()
         return len(meta)
@@ -808,8 +797,6 @@ def _footer_pk_range(files: list[str], pk: str, dtype: T.DataType) -> tuple | No
     whatever the key type; None if rows are held and a ``dtype`` key is
     not ``_ordered_key``, or a row group holding rows has no min/max
     (parquet-mr leaves them out for long strings)."""
-    import pyarrow.parquet as pq
-
     ordered = _ordered_key(dtype)
     rng: tuple = ()
     for f in files:
@@ -826,6 +813,19 @@ def _footer_pk_range(files: list[str], pk: str, dtype: T.DataType) -> tuple | No
                 return None
             rng = _widen(rng, [stats.min, stats.max])
     return rng
+
+
+def _sweep(gen_path: str) -> None:
+    """Delete each generation beside the live ``gen_path`` whose
+    successor (the next ``g-*`` by name) was made more than
+    ``_RETIRED_KEEP_S`` ago: a generation's ULID dates the fold that
+    retired the one before it. Keeps the live and the newest one."""
+    table_dir, live = os.path.split(gen_path)
+    gens = sorted(g for g in os.listdir(table_dir) if g.startswith("g-"))
+    cutoff = time.time_ns() // 1_000_000 - _RETIRED_KEEP_S * 1000
+    for gen, successor in zip(gens, gens[1:]):
+        if gen != live and ulid_ms(successor[2:]) < cutoff:
+            shutil.rmtree(os.path.join(table_dir, gen), ignore_errors=True)
 
 
 def _default_to_json(expr: ast.Expr | None) -> dict | None:

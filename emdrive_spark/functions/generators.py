@@ -19,6 +19,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 _CROCKFORD = "0123456789ABCDEFGHJKMNPQRSTVWXYZ"
+_FROM_CROCKFORD = str.maketrans(_CROCKFORD, "0123456789ABCDEFGHIJKLMNOPQRSTUV")
 
 
 def _b32(value: int, width: int) -> str:
@@ -38,6 +39,11 @@ def ulid(ms: int | None = None, entropy: bytes | None = None) -> str:
         entropy = os.urandom(10)
     rand80 = int.from_bytes(entropy, "big")
     return _b32(ms, 10) + _b32(rand80, 16)
+
+
+def ulid_ms(value: str) -> int:
+    """The ms timestamp a ULID string was made at (its first 10 digits)."""
+    return int(value[:10].translate(_FROM_CROCKFORD), 32)
 
 
 # NOW() as Spark SQL text (functions.rs:19): the current UTC timestamp.

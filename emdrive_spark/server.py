@@ -25,7 +25,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 # Same id also rides the X-Request-Id response header.
 log = logging.getLogger("emdrive_spark.server")
 
-from pyspark.errors import AnalysisException
+from pyspark.errors import AnalysisException, PySparkException
 from pyspark.sql import SparkSession
 
 from emdrive_spark.config import Config
@@ -118,9 +118,13 @@ def make_handler(engine: Engine, max_result_rows: int | None = None):
                 # paths — never ship that to a client. Analysis errors
                 # escaping the lazy plan (they surface at collect time)
                 # are user-input problems → 400 validation, like the
-                # engine's own eager wrapping.
+                # engine's own eager wrapping. So are data exceptions
+                # (SQLSTATE class 22: a bad cast, a division by zero),
+                # which only a job raises.
                 first = str(exc).strip().splitlines()[0] if str(exc).strip() else repr(exc)
-                if isinstance(exc, AnalysisException):
+                if isinstance(exc, AnalysisException) or (
+                    isinstance(exc, PySparkException) and (exc.getSqlState() or "").startswith("22")
+                ):
                     body = json.dumps({"type": "validation", "message": first})
                     code = 400
                 else:

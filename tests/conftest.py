@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import json
 import os
 import sys
 
@@ -38,6 +39,14 @@ def spark_jobs(spark, group: str, run) -> int:
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _live_dir(root: str, table: str) -> str:
+    """The live generation directory of ``table`` in the durable
+    catalog saved at ``root``, as its ``_catalog.json`` names it."""
+    with open(os.path.join(root, "_catalog.json")) as f:
+        record = json.load(f)[table]
+    return os.path.join(root, record["schema_name"], table, record["generation"])
 
 
 def _rows(df):

@@ -1,21 +1,25 @@
-"""The catalog's durable save/restore: the crash windows of a fold's
-atomic directory swap (a table left under ``<table>__old``, a stale
-``<table>__tmp``) and of an append (a stale hidden ``.delta-*.tmp``),
-saves across engines and roots (skips of clean tables, a failed save
-to another root), restores into the state the saves left (base files
-as the base, delta rows as local rows), and the types a delta file
-carries. The PK check against the base, the local rows and the batch,
-and its pruning by the base's PK range at each key type's edges. Reads
-racing appends. And the compaction of an in-memory table before a
-read: exact under concurrent INSERTs, skipped on the durable path, and
-answers equal to a Python popcount whether or not it compacted. And
-the values an INSERT takes: every literal kind into every column type
-is accepted or rejected alike in memory and durable, reads back alike
-live and restored, and lands as a local relation."""
+"""The catalog's durable save/restore: the crash windows of a fold (a
+generation written but never named in ``_catalog.json``, a stale
+unpublished ``g-*``) and of an append (a stale hidden
+``.delta-*.tmp``), a pre-generation flat layout that still restores,
+when a retired generation is deleted, saves across engines and roots
+(skips of clean tables, a failed save to another root), restores into
+the state the saves left (base files as the base, delta rows as local
+rows), and the types a delta file carries. The PK check against the
+base, the local rows and the batch, and its pruning by the base's PK
+range at each key type's edges. Reads racing appends and folds, and a
+frame planned before a fold read after it. And the compaction of an
+in-memory table before a read: exact under concurrent INSERTs, skipped
+on the durable path, and answers equal to a Python popcount whether or
+not it compacted. And the values an INSERT takes: every literal kind
+into every column type is accepted or rejected alike in memory and
+durable, reads back alike live and restored, and lands as a local
+relation."""
 
 from __future__ import annotations
 
 import datetime as dt
+import json
 import os
 import random
 import sys
@@ -23,12 +27,14 @@ import threading
 import warnings
 
 import pytest
+from pyspark.sql import DataFrameWriter
 
 from emdrive_spark import catalog, types
 from emdrive_spark.engine import Engine
+from emdrive_spark.functions.generators import ulid
 from emdrive_spark.sql.errors import EmdriveValidationError
 
-from .conftest import spark_jobs
+from .conftest import _live_dir, spark_jobs
 
 # A three-column table with a METRIC KEY.
 CREATE_RT5 = """
@@ -40,24 +46,31 @@ CREATE TABLE rt5 (
 """
 
 
-# -- crash windows of save()'s directory swap ----------------------------------
+# -- crash windows of a fold and generations ----------------------------------
 
 
 def _saved_rt5(engine, root):
-    """rt5 with three rows, saved at ``root``; returns the table dir."""
+    """rt5 with three rows, saved at ``root``; returns its live generation."""
     engine.execute(CREATE_RT5)
     engine.execute(
         "INSERT INTO rt5 (hash, url, width) VALUES (1, 'u1', 10), (2, 'u2', 20), (3, 'u3', 30)"
     )
     engine.catalog.save(root)
-    return os.path.join(root, "main", "rt5")
+    return _live_dir(root, "rt5")
 
 
-def _leave_stale_tmp(path):
-    """What a crash mid-write leaves: a ``__tmp`` dir with a junk part-file."""
-    os.makedirs(path + "__tmp")
-    with open(os.path.join(path + "__tmp", "part-00000-stale.parquet"), "wb") as f:
+def _generations(root, table="rt5"):
+    return sorted(g for g in os.listdir(os.path.join(root, "main", table)) if g.startswith("g-"))
+
+
+def _leave_stale_gen(root):
+    """What a crash mid-fold leaves: a newer ``g-*`` that ``_catalog.json``
+    does not name, holding a junk part-file."""
+    path = os.path.join(root, "main", "rt5", f"g-{ulid()}")
+    os.makedirs(path)
+    with open(os.path.join(path, "part-00000-stale.parquet"), "wb") as f:
         f.write(b"not parquet")
+    return path
 
 
 def _urls(spark, root):
@@ -66,31 +79,141 @@ def _urls(spark, root):
     return sorted(r["url"] for r in fresh.execute("SELECT url FROM rt5").collect())
 
 
-def test_restore_recovers_table_left_under_old(engine, spark, tmp_path):
-    """A crash between save()'s two renames leaves the committed data
-    only under ``<table>__old``; restore() must swap it back and return
-    every row."""
+def test_restore_drops_a_fold_left_unpublished(engine, spark, tmp_path, monkeypatch):
+    """A crash between a fold writing its generation and save()
+    publishing the json that names it loses no committed row and
+    publishes no uncommitted one: restore() reads the generation the
+    json names, and deletes the unpublished one."""
     root = str(tmp_path / "cat")
-    path = _saved_rt5(engine, root)
-    os.rename(path, path + "__old")
+    published = _saved_rt5(engine, root)
+    engine.execute("INSERT INTO rt5 (hash, url, width) VALUES (4, 'u4', 40)")
+    monkeypatch.setattr(catalog, "_LOCAL_ROWS_MAX", 0)  # the save folds
+
+    def crash(*args):
+        raise OSError("crash before publishing (simulated)")
+
+    monkeypatch.setattr(catalog.os, "replace", crash)
+    with pytest.raises(OSError, match="simulated"):
+        engine.catalog.save(root)
+    monkeypatch.undo()
+    assert len(_generations(root)) == 2
+    assert _live_dir(root, "rt5") == published
     assert _urls(spark, root) == ["u1", "u2", "u3"]
-    assert os.path.isdir(path) and not os.path.exists(path + "__old")
+    assert _generations(root) == [os.path.basename(published)]
 
 
-def test_stale_tmp_dir_does_not_leak_into_save_or_restore(engine, spark, tmp_path):
-    """A crash mid-write leaves a stale ``<table>__tmp``: the next
-    save() must replace it rather than publish or append to it, and a
-    restore() beside a stale one must read only the committed table."""
+def test_stale_unpublished_generation_does_not_leak_into_save_or_restore(engine, spark, tmp_path):
+    """A crash mid-fold leaves a stale ``g-*`` that the json does not
+    name: the next save() appends to the live generation, not to it,
+    and never reads it; a restore() beside a stale one reads only the
+    committed table."""
     root = str(tmp_path / "cat")
-    path = _saved_rt5(engine, root)
-    _leave_stale_tmp(path)
+    live = _saved_rt5(engine, root)
+    stale = _leave_stale_gen(root)
     engine.execute("INSERT INTO rt5 (hash, url, width) VALUES (4, 'u4', 40)")
     engine.catalog.save(root)
-    assert not os.path.exists(path + "__tmp")
+    assert _live_dir(root, "rt5") == live
+    assert os.listdir(stale) == ["part-00000-stale.parquet"]
     assert _urls(spark, root) == ["u1", "u2", "u3", "u4"]
 
-    _leave_stale_tmp(path)
+    _leave_stale_gen(root)
     assert _urls(spark, root) == ["u1", "u2", "u3", "u4"]
+    assert _generations(root) == [os.path.basename(live)]
+
+
+def test_frame_planned_before_a_fold_reads_after_it(spark, tmp_path, monkeypatch):
+    """A kNN planned over a durable table's base, then run after an
+    INSERT whose save folds the table into a new generation, still
+    finds every file it lists: the retired generation is kept."""
+    monkeypatch.setattr(catalog, "_LOCAL_ROWS_MAX", 100)
+    root = str(tmp_path / "data")
+    engine = Engine(spark, data_directory=root)
+    engine.execute(CREATE_PHOTOS)
+    engine.execute(_insert_sql((i, i * 7919) for i in range(500)))  # folds
+    knn = "SELECT id, hash @ 3 AS d FROM photos ORDER BY d LIMIT 5"
+    planned = engine.execute(knn)
+    before = _generations(root, "photos")
+    engine.execute(_insert_sql((i, i * 7919) for i in range(500, 650)))  # folds
+    nearest = sorted(bin(i * 7919 ^ 3).count("1") for i in range(500))[:5]
+    assert [r["d"] for r in planned.collect()] == nearest
+    assert len(_generations(root, "photos")) == len(before) + 1
+
+
+def test_retired_generation_is_deleted_only_once_old(spark, tmp_path, monkeypatch):
+    """A fold's sweep keeps a generation its successor retired less than
+    ``_RETIRED_KEEP_S`` ago; with that age at 0 the next fold's sweep
+    deletes every retired one. The live generation, which the json
+    names, is never deleted."""
+    monkeypatch.setattr(catalog, "_LOCAL_ROWS_MAX", 0)  # every save folds
+    root = str(tmp_path / "data")
+    engine = Engine(spark, data_directory=root)
+    engine.execute(CREATE_RT5)
+    first = _generations(root)
+    assert first == [os.path.basename(_live_dir(root, "rt5"))]
+    _append_rows(engine, root, [(1, "u1", 10)])
+    kept = _generations(root)
+    assert len(kept) == 2 and kept[0] == first[0]
+    assert kept[1] == os.path.basename(_live_dir(root, "rt5"))
+    monkeypatch.setattr(catalog, "_RETIRED_KEEP_S", 0)
+    _append_rows(engine, root, [(2, "u2", 20)])
+    live = _live_dir(root, "rt5")
+    assert _generations(root) == [os.path.basename(live)]
+    assert engine.catalog.get("rt5").gen_path == live
+    assert _urls(spark, root) == ["u1", "u2"]
+
+
+def test_fold_whose_write_fails_leaves_no_generation(engine, spark, tmp_path, monkeypatch):
+    """A fold whose Spark write fails midway deletes what it wrote: a
+    generation that never held the table would otherwise count as the
+    live one's successor, and date its retirement (``_sweep``)."""
+    root = str(tmp_path / "cat")
+    live = _saved_rt5(engine, root)
+    engine.execute("INSERT INTO rt5 (hash, url, width) VALUES (4, 'u4', 40)")
+    monkeypatch.setattr(catalog, "_LOCAL_ROWS_MAX", 0)  # the save folds
+    real = DataFrameWriter.parquet
+
+    def write_then_fail(self, path, *args, **kwargs):
+        real(self, path, *args, **kwargs)
+        raise OSError("write failed (simulated)")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", write_then_fail)
+    with pytest.raises(OSError, match="simulated"):
+        engine.catalog.save(root)
+    assert _generations(root) == [os.path.basename(live)]
+    assert engine.catalog.get("rt5").gen_path == live
+
+
+def test_flat_layout_without_generation_still_restores(engine, spark, tmp_path, monkeypatch):
+    """A ``_catalog.json`` record without ``"generation"`` (the flat
+    layout of saves before generations) names the table directory
+    itself: it restores every row, takes appends there, and its first
+    fold writes a generation, leaving the flat files where they are."""
+    root = str(tmp_path / "cat")
+    gen = _saved_rt5(engine, root)
+    _append_rows(engine, root, [(4, "u4", 40)])
+    table_dir = os.path.dirname(gen)
+    for f in os.listdir(gen):
+        os.rename(os.path.join(gen, f), os.path.join(table_dir, f))
+    os.rmdir(gen)
+    meta_path = os.path.join(root, "_catalog.json")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    del meta["rt5"]["generation"]
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+    flat = sorted(f for f in os.listdir(table_dir) if f.endswith(".parquet"))
+    assert _urls(spark, root) == ["u1", "u2", "u3", "u4"]
+
+    fresh = Engine(spark)
+    fresh.catalog.restore(root)
+    _append_rows(fresh, root, [(5, "u5", 50)])  # appended beside the flat files
+    assert not _generations(root)
+    assert _urls(spark, root) == ["u1", "u2", "u3", "u4", "u5"]
+    monkeypatch.setattr(catalog, "_LOCAL_ROWS_MAX", 1)
+    _append_rows(fresh, root, [(6, "u6", 60)])  # folds into a generation
+    assert _generations(root) == [os.path.basename(_live_dir(root, "rt5"))]
+    assert set(flat) <= set(os.listdir(table_dir))
+    assert _urls(spark, root) == ["u1", "u2", "u3", "u4", "u5", "u6"]
 
 
 def test_insert_after_restore_keeps_restored_rows(engine, spark, tmp_path):
@@ -162,7 +285,7 @@ def test_incremental_save_skips_clean_tables(spark, tmp_path):
     e.catalog.save(root)
 
     def table_files(tbl):
-        return sorted(os.listdir(os.path.join(root, "main", tbl)))
+        return sorted(os.listdir(_live_dir(root, tbl)))
 
     b_before = table_files("rt5b")
     e.execute("INSERT INTO rt5 (hash, url, width) VALUES (9, 'u2', 300)")
@@ -186,7 +309,7 @@ def test_failed_save_to_second_root_does_not_poison_first(spark, tmp_path, monke
     later table. The table's rows are then all on disk, but at B, so
     save(A) must not skip it: that would publish a _catalog.json at A
     whose snapshot misses the acknowledged INSERT. The skip keys on the
-    per-entry saved_root, which the interrupted save(B) left at B, so
+    entry's live generation, which the interrupted save(B) left under B, so
     save(A) rewrites the table."""
     root_a = str(tmp_path / "rootA")
     root_b = str(tmp_path / "rootB")
@@ -332,8 +455,8 @@ def test_knn_and_radius_over_inserts_match_popcount(engine, monkeypatch, compact
 # -- delta files: crash windows, folds and type fidelity ------------------------
 
 
-def _rt5_files(path, prefix):
-    return sorted(f for f in os.listdir(path) if f.startswith(prefix))
+def _rt5_files(root, prefix, table="rt5"):
+    return sorted(f for f in os.listdir(_live_dir(root, table)) if f.startswith(prefix))
 
 
 def _append_rows(engine, root, rows):
@@ -345,11 +468,11 @@ def _append_rows(engine, root, rows):
 
 def test_stale_hidden_delta_tmp_is_ignored_and_gone_after_fold(engine, spark, tmp_path, monkeypatch):
     """A crash mid-append leaves a hidden ``.delta-<ulid>.tmp``: restore()
-    reads past it, and the next fold's directory swap removes it."""
+    reads past it, and the next fold's new generation holds no delta."""
     root = str(tmp_path / "cat")
     path = _saved_rt5(engine, root)
     _append_rows(engine, root, [(4, "u4", 40)])
-    assert len(_rt5_files(path, "delta-")) == 1
+    assert len(_rt5_files(root, "delta-")) == 1
     with open(os.path.join(path, ".delta-01STALE0000000000000000000.tmp"), "wb") as f:
         f.write(b"not parquet")
     assert _urls(spark, root) == ["u1", "u2", "u3", "u4"]
@@ -358,7 +481,7 @@ def test_stale_hidden_delta_tmp_is_ignored_and_gone_after_fold(engine, spark, tm
     fresh.catalog.restore(root)
     monkeypatch.setattr(catalog, "_LOCAL_ROWS_MAX", 1)
     _append_rows(fresh, root, [(5, "u5", 50)])  # two local rows: the save folds
-    assert not [f for f in os.listdir(path) if "delta" in f]
+    assert not [f for f in os.listdir(_live_dir(root, "rt5")) if "delta" in f]
     assert _urls(spark, root) == ["u1", "u2", "u3", "u4", "u5"]
 
 
@@ -369,12 +492,12 @@ def test_restore_of_base_and_deltas_returns_every_row_then_folds(engine, spark, 
     already on disk. So its first save is skipped, its next INSERT
     appends a delta, and a save past the local-row limit folds."""
     root = str(tmp_path / "cat")
-    path = _saved_rt5(engine, root)
-    base = _rt5_files(path, "part-")
+    _saved_rt5(engine, root)
+    base = _rt5_files(root, "part-")
     for i in range(4, 8):
         _append_rows(engine, root, [(i, f"u{i}", 10 * i)])
-    assert len(_rt5_files(path, "delta-")) == 4
-    assert _rt5_files(path, "part-") == base  # appends rewrite no base file
+    assert len(_rt5_files(root, "delta-")) == 4
+    assert _rt5_files(root, "part-") == base  # appends rewrite no base file
     assert _urls(spark, root) == [f"u{i}" for i in range(1, 8)]
 
     fresh = Engine(spark)
@@ -383,18 +506,18 @@ def test_restore_of_base_and_deltas_returns_every_row_then_folds(engine, spark, 
     assert entry.flushed == len(entry.local_rows) == 4
     assert entry.pk_range == ("u1", "u3")
     fresh.catalog.save(root)  # clean: skipped, nothing rewritten
-    assert len(_rt5_files(path, "delta-")) == 4
+    assert len(_rt5_files(root, "delta-")) == 4
     _append_rows(fresh, root, [(8, "u8", 80)])
-    assert len(_rt5_files(path, "delta-")) == 5 and _rt5_files(path, "part-") == base
+    assert len(_rt5_files(root, "delta-")) == 5 and _rt5_files(root, "part-") == base
     assert entry.flushed == 5
     assert _urls(spark, root) == [f"u{i}" for i in range(1, 9)]
     # past the limit the save folds, and the live entry keeps appending
     monkeypatch.setattr(catalog, "_LOCAL_ROWS_MAX", 5)
     _append_rows(fresh, root, [(9, "u9", 90)])
-    assert not _rt5_files(path, "delta-") and _rt5_files(path, "part-") != base
+    assert not _rt5_files(root, "delta-") and _rt5_files(root, "part-") != base
     assert entry.flushed == 0
     _append_rows(fresh, root, [(10, "u10", 100)])
-    assert len(_rt5_files(path, "delta-")) == 1
+    assert len(_rt5_files(root, "delta-")) == 1
     assert fresh.execute("SELECT COUNT(*) AS n FROM rt5").collect()[0]["n"] == 10
     assert _urls(spark, root) == sorted(f"u{i}" for i in range(1, 11))
 
@@ -411,7 +534,7 @@ def test_save_to_second_root_after_appends_is_complete(engine, spark, tmp_path):
     engine.catalog.save(root_b)
     every = ["u1", "u2", "u3", "u4", "u5", "u6"]
     assert _urls(spark, root_b) == every
-    assert not _rt5_files(os.path.join(root_b, "main", "rt5"), "delta-")
+    assert not _rt5_files(root_b, "delta-")
     assert _urls(spark, root_a) == every[:5]
     engine.catalog.save(root_a)
     assert _urls(spark, root_a) == every
@@ -460,8 +583,7 @@ def test_delta_file_types_round_trip(spark, tmp_path):
         f"{2**128 - 1}, NOW(), '2024-02-29T23:59:59.123456'), "
         f"(2, 0, 0, 0, 0, {2**32 - 1}, 'n', '', 0, NOW(), '1970-01-01T00:00:00.000001')"
     )
-    path = os.path.join(root, "main", "typed")
-    assert _rt5_files(path, "delta-"), "the rows must have been appended"
+    assert _rt5_files(root, "delta-", "typed"), "the rows must have been appended"
     live = engine.execute(f"SELECT {cols} FROM typed")
     fresh = Engine(spark)
     fresh.catalog.restore(root)
@@ -892,7 +1014,7 @@ def test_restored_table_catches_a_clash_at_its_max_key(engine, spark, tmp_path, 
             with pytest.raises(EmdriveValidationError, match="already exists"):
                 e.execute(_insert_sql([(key, 0)]))
     saver.execute(_insert_sql([(8, 8)]))  # two local rows: appended
-    path = os.path.join(root, "main", "photos")
+    path = _live_dir(root, "photos")
     assert len([f for f in os.listdir(path) if f.startswith("delta-")]) == 2
     assert saver.catalog.get("photos").pk_range == (0, 2)
 
@@ -908,7 +1030,7 @@ def test_restored_timestamp_key_in_a_delta_clashes(spark, tmp_path, durable):
     saver = Engine(spark, data_directory=root)
     saver.execute("CREATE TABLE events (at TIMESTAMP PRIMARY KEY, n UINT8)")
     saver.execute(f"INSERT INTO events (at, n) VALUES ({at}, 1)")
-    assert _rt5_files(os.path.join(root, "main", "events"), "delta-")
+    assert _rt5_files(root, "delta-", "events")
     engine = Engine(spark, data_directory=root if durable else None)
     engine.catalog.restore(root)
     with pytest.raises(EmdriveValidationError, match="already exists"):
@@ -933,19 +1055,16 @@ def test_base_without_footer_stats_falls_back_to_the_probe(spark, tmp_path, monk
     assert len(_stored_keys(engine)) == 4
 
 
-# -- reads racing appends --------------------------------------------------------
+# -- reads racing appends and folds ---------------------------------------------
 
 
-def test_reads_racing_appends_never_fail(spark, tmp_path, monkeypatch):
-    """A reader running kNN while durable 50-row INSERTs land sees no
-    error: an append deletes no file, so a read planned over the frame
-    before it still finds every file it lists. The local-row limit is
-    raised so no fold (which does delete the old base) lands."""
-    monkeypatch.setattr(catalog, "_LOCAL_ROWS_MAX", 10**6)
-    root = str(tmp_path / "data")
+def _race_reads_with_inserts(spark, root, inserts):
+    """Durable 50-row INSERTs into a fresh photos table at ``root``
+    while a reader runs kNN; returns the reader's errors and the row
+    counts of its reads."""
+    per_insert = 50
     engine = Engine(spark, data_directory=root)
     engine.execute(CREATE_PHOTOS)
-    inserts, per_insert = 12, 50
     errors, reads = [], []
     done = threading.Event()
 
@@ -954,7 +1073,7 @@ def test_reads_racing_appends_never_fail(spark, tmp_path, monkeypatch):
             while not done.is_set():
                 rows = engine.execute("SELECT id, hash @ 3 AS d FROM photos ORDER BY d LIMIT 5").collect()
                 reads.append(len(rows))
-        except Exception as exc:  # surfaced by the assert below
+        except Exception as exc:  # surfaced by the caller's assert
             errors.append(exc)
 
     reader = threading.Thread(target=read)
@@ -967,9 +1086,34 @@ def test_reads_racing_appends_never_fail(spark, tmp_path, monkeypatch):
         done.set()
         reader.join(timeout=300)
     assert not reader.is_alive()
-    assert not errors, errors
-    assert len(reads) > 1
-    path = os.path.join(root, "main", "photos")
-    assert len([f for f in os.listdir(path) if f.startswith("delta-")]) == inserts
     n = inserts * per_insert
     assert engine.execute("SELECT COUNT(*) AS n FROM photos").collect()[0]["n"] == n
+    return errors, reads
+
+
+def test_reads_racing_appends_never_fail(spark, tmp_path, monkeypatch):
+    """A reader running kNN while durable 50-row INSERTs land sees no
+    error: an append deletes no file, so a read planned over the frame
+    before it still finds every file it lists. The local-row limit is
+    raised so that every save appends."""
+    monkeypatch.setattr(catalog, "_LOCAL_ROWS_MAX", 10**6)
+    root = str(tmp_path / "data")
+    errors, reads = _race_reads_with_inserts(spark, root, inserts=12)
+    assert not errors, errors
+    assert len(reads) > 1
+    path = _live_dir(root, "photos")
+    assert len([f for f in os.listdir(path) if f.startswith("delta-")]) == 12
+
+
+def test_reads_racing_folds_never_fail(spark, tmp_path, monkeypatch):
+    """The same reader sees no error while folds land: a fold writes a
+    new generation and the retired one outlives it, so a read planned
+    over the old base still finds every file it lists. The local-row
+    limit is lowered so that every third INSERT folds, and the
+    generations left on disk count the folds."""
+    monkeypatch.setattr(catalog, "_LOCAL_ROWS_MAX", 100)
+    root = str(tmp_path / "data")
+    errors, reads = _race_reads_with_inserts(spark, root, inserts=12)
+    assert not errors, errors
+    assert len(reads) > 1
+    assert len(_generations(root, "photos")) >= 1 + 3  # CREATE's, then the folds

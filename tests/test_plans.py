@@ -14,7 +14,7 @@ from emdrive_spark.engine import Engine
 from emdrive_spark.server import _rows_json, serve
 from emdrive_spark.sources.tables import load
 
-from .conftest import SF_SMOKE, spark_jobs
+from .conftest import SF_SMOKE, _live_dir, spark_jobs
 
 registry.load_all()
 
@@ -643,8 +643,7 @@ def test_compacted_table_has_default_parallelism_partitions(engine, spark):
 
 
 def _part_files(root):
-    path = os.path.join(root, "main", "photos")
-    return sorted(f for f in os.listdir(path) if f.startswith("part-"))
+    return sorted(f for f in os.listdir(_live_dir(root, "photos")) if f.startswith("part-"))
 
 
 def _durable_insert_jobs(spark, root, base_ids, first_ids, timed_ids, restart=False) -> int:
@@ -720,14 +719,14 @@ def test_fold_leaves_default_parallelism_files(spark, tmp_path):
     _insert(engine, range(200, catalog._LOCAL_ROWS_MAX + 1))
     n = spark.sparkContext.defaultParallelism
     assert len(_part_files(root)) == n
-    assert not [f for f in os.listdir(os.path.join(root, "main", "photos")) if "delta" in f]
+    assert not [f for f in os.listdir(_live_dir(root, "photos")) if "delta" in f]
     df = engine.catalog.scan("photos")
     assert df.rdd.getNumPartitions() == n
     assert df.count() == catalog._LOCAL_ROWS_MAX + 1
     # the layout contract: each file sorted by PK, the files' PK ranges disjoint
     ranges = []
     for f in _part_files(root):
-        ids = pq.read_table(os.path.join(root, "main", "photos", f), columns=["id"])["id"].to_pylist()
+        ids = pq.read_table(os.path.join(_live_dir(root, "photos"), f), columns=["id"])["id"].to_pylist()
         assert ids == sorted(ids)
         ranges.append((ids[0], ids[-1]))
     ranges.sort()

@@ -15,7 +15,7 @@ import string
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from emdrive_spark.functions.generators import ulid
+from emdrive_spark.functions.generators import ulid, ulid_ms
 from emdrive_spark.sql import ast
 from emdrive_spark.sql.parser import parse_statement
 from emdrive_spark.sql.tokenizer import KEYWORDS, tokenize
@@ -77,9 +77,11 @@ def test_hamming_popcount_xor_model(a, b):
 @settings(max_examples=200)
 def test_ulid_shape_and_time_order(ms, entropy):
     """functions.rs:16-21 / README.md:115-117: 26-char Crockford
-    base32, lexicographic order follows the ms timestamp."""
+    base32, lexicographic order follows the ms timestamp, which
+    ``ulid_ms`` reads back."""
     u = ulid(ms=ms, entropy=entropy)
     assert len(u) == 26
+    assert ulid_ms(u) == ms
     assert re.fullmatch(r"[0-9ABCDEFGHJKMNPQRSTVWXYZ]{26}", u)
     later = ulid(ms=ms + 1, entropy=entropy)
     assert u < later

@@ -74,6 +74,28 @@ def test_get_is_read_only(endpoint):
     assert "read-only" in body["message"]
 
 
+@pytest.mark.parametrize(
+    "sql, error",
+    [
+        ("SELECT id FROM dx WHERE name < 5", "CAST_INVALID_INPUT"),
+        ("SELECT id, 1/0 AS x FROM dx GROUP BY id", "DIVIDE_BY_ZERO"),
+    ],
+    ids=["bad_cast", "divide_by_zero"],
+)
+def test_data_error_at_collect_is_400(endpoint, sql, error):
+    """A statement that plans but whose job raises a data exception
+    (SQLSTATE class 22) is the client's error: a typed 400, not a 500."""
+    _post(endpoint, "CREATE TABLE IF NOT EXISTS dx (id UINT32 PRIMARY KEY, name STRING)")
+    _post(endpoint, "INSERT INTO dx (id, name) VALUES (1, 'abc')")
+    try:
+        with urllib.request.urlopen(f"{endpoint}/?query={urllib.parse.quote(sql)}") as resp:
+            status, body = resp.status, json.loads(resp.read())
+    except urllib.error.HTTPError as e:
+        status, body = e.code, json.loads(e.read())
+    assert (status, body["type"]) == (400, "validation"), body
+    assert error in body["message"]
+
+
 def test_get_select(endpoint):
     q = urllib.parse.quote("SELECT name FROM ht WHERE id = 1")
     with urllib.request.urlopen(f"{endpoint}/?query={q}") as resp:
